@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -19,11 +21,16 @@ object Audit {
     date_format(ts, "yyyyMMddHHmmss").cast("long") * 100
 
   /** Append the audit columns. `runId` should come from `runIdFrom`
-    * over a data-derived timestamp when determinism matters. */
+    * over a data-derived timestamp when determinism matters. An input
+    * column with an audit column's name is replaced in place, as by
+    * `withColumn`. One projection: chained `withColumn`s re-analyze
+    * the growing plan once per column. */
   def withAuditColumns(df: DataFrame, runId: Column, user: String): DataFrame =
-    df.withColumn("RUN_ID", runId)
-      .withColumn("ROW_INSERT_TSP", current_timestamp())
-      .withColumn("ROW_UPDT_TSP", current_timestamp())
-      .withColumn("INSERT_USER_ID", lit(user))
-      .withColumn("UPDT_USER_ID", lit(user))
+    // ListMap: `withColumns` appends new columns in the map's order
+    df.withColumns(ListMap(
+      "RUN_ID" -> runId,
+      "ROW_INSERT_TSP" -> current_timestamp(),
+      "ROW_UPDT_TSP" -> current_timestamp(),
+      "INSERT_USER_ID" -> lit(user),
+      "UPDT_USER_ID" -> lit(user)))
 }

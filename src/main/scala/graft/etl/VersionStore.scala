@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.io.FooterSchema
+
 /** Physical versioned-table store over plain parquet — the concrete
   * analog of the reference's Delta operations: append-a-version
   * ("time travels over its data with a retention period of 30 days",
@@ -17,11 +19,14 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: version metadata is directory listings — O(versions +
   * files), dimension-sized, via the Hadoop FileSystem API (any
-  * scheme: file://, hdfs://, abfss://...). Data moves only in
-  * `write`/`optimize`, and those are ordinary distributed parquet
-  * writes. Readers of version N are isolated from vacuum of other
-  * versions (directory granularity — nothing rewrites in place except
-  * `optimize`, which writes a NEW version).
+  * scheme: file://, hdfs://, abfss://...) — plus one parquet footer
+  * per version whose schema is needed ([[graft.io.FooterSchema]]),
+  * read on the driver: reads, schema checks and `history` start no
+  * Spark job. Data moves only in `write`/`optimize`, and those are
+  * ordinary distributed parquet writes. Readers of version N are
+  * isolated from vacuum of other versions (directory granularity —
+  * nothing rewrites in place except `optimize`, which writes a NEW
+  * version).
   */
 object VersionStore {
 
@@ -67,15 +72,27 @@ object VersionStore {
   private def dir(root: String, v: Long) = s"$root/v=$v"
   private def claim(root: String, v: Long) = new Path(root, s"_claim_v=$v")
 
-  /** Whether version `v` holds any data file. An empty-DataFrame
-    * append commits only `_SUCCESS` — no parquet footers — so schema
-    * inference on that directory throws; schema-sensitive paths must
-    * skip such versions. */
+  private def listing(f: org.apache.hadoop.fs.FileSystem, root: String,
+                      v: Long): Seq[org.apache.hadoop.fs.FileStatus] =
+    f.listStatus(new Path(dir(root, v))).toSeq
+
+  /** Whether version `v` holds any data file. An external writer's
+    * empty commit holds only `_SUCCESS` — no parquet footers — so it
+    * has no schema; schema-sensitive paths must skip such versions. */
   private def hasData(f: org.apache.hadoop.fs.FileSystem, root: String,
                       v: Long): Boolean =
-    f.listStatus(new Path(dir(root, v)))
-      .exists(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        s.getLen > 0)
+    FooterSchema.dataFiles(listing(f, root, v)).nonEmpty
+
+  /** Version `v` read with its schema pinned from one footer (no
+    * inference job; the directory is listed once); None for a
+    * footerless version. */
+  private def footered(spark: SparkSession,
+                       f: org.apache.hadoop.fs.FileSystem, root: String,
+                       v: Long): Option[DataFrame] = {
+    val ls = listing(f, root, v)
+    if (FooterSchema.dataFiles(ls).isEmpty) None
+    else Some(FooterSchema.read(spark, dir(root, v), ls))
+  }
 
   /** Append `df` as the next version; returns its number.
     *
@@ -175,9 +192,10 @@ object VersionStore {
                              root: String, committed: Seq[Long],
                              df: DataFrame, evolve: Boolean,
                              who: String): Unit = {
-    committed.reverse.find(hasData(f, root, _)).foreach { last =>
-      // schema read = parquet footers of one version, driver-side
-      val cur = spark.read.parquet(dir(root, last)).schema
+    val lastFootered = committed.reverse.iterator
+      .map(v => v -> footered(spark, f, root, v))
+      .collectFirst { case (v, Some(read)) => (v, read.schema) }
+    lastFootered.foreach { case (last, cur) =>
       val curT = cur.fields.map(fd => fd.name -> fd.dataType).toMap
       val newT = df.schema.fields.map(fd => fd.name -> fd.dataType).toMap
       val clash = curT.keySet.intersect(newT.keySet)
@@ -218,9 +236,9 @@ object VersionStore {
     val vdir = dir(root, next)
     // commit through the ONE audited crash-window implementation
     // (io.MarkerCommit, shared with PqIndexStore/SketchStore): the
-    // version lands fully under a temp sibling, its job-committer
-    // _SUCCESS is stripped (it would ride the directory move and make
-    // the version visible at move time instead of marker time), then
+    // version lands fully under a temp sibling with no job-committer
+    // _SUCCESS (it would ride the directory move and make the version
+    // visible at move time instead of marker time), then
     // commitSwap moves the directory in and writes the visibility
     // marker LAST. A crash mid-write strands only `v=N.building`; a
     // crash between move and marker leaves a marker-less `v=N` —
@@ -230,8 +248,9 @@ object VersionStore {
         s"directory at $vdir — claim protocol violated")
     val tmp = vdir + ".building"
     graft.io.MarkerCommit.deleteRecursively(tmp)
-    df.write.mode("errorifexists").parquet(tmp)
-    f.delete(new Path(tmp, "_SUCCESS"), false)
+    df.write.mode("errorifexists")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(tmp)
     info.foreach { case (base, action) =>
       graft.io.MarkerCommit.touch(s"$tmp/$InfoFile",
         s"""{"base": $base, "action": "$action"}""")
@@ -524,16 +543,14 @@ object VersionStore {
   private def readVersion(spark: SparkSession, root: String,
                           version: Long): DataFrame = {
     val f = fs(spark, root)
-    if (hasData(f, root, version)) spark.read.parquet(dir(root, version))
-    else {
-      val donor = versions(spark, root).filter(_ <= version).reverse
-        .find(hasData(f, root, _))
+    footered(spark, f, root, version).getOrElse {
+      val donor = versions(spark, root).filter(_ < version).reverse
+        .iterator.flatMap(footered(spark, f, root, _)).nextOption()
         .getOrElse(throw new IllegalStateException(
           s"version $version of $root has no parquet footers and no " +
             "earlier version does either — schema unknowable"))
-      val schema = spark.read.parquet(dir(root, donor)).schema
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
+        spark.sparkContext.emptyRDD[Row], donor.schema)
     }
   }
 
@@ -591,15 +608,17 @@ object VersionStore {
   def history(spark: SparkSession, root: String): DataFrame = {
     val f = fs(spark, root)
     val rows = versions(spark, root).map { v =>
-      val files = f.listStatus(new Path(dir(root, v)))
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+      val ls = listing(f, root, v)
+      // data files only: checksum sidecars (`.part-*.crc`) and markers
+      // are not the version's data
+      val files = FooterSchema.dataFiles(ls)
       Row(v, files.length.toLong, files.map(_.getLen).sum,
         java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(
           files.map(_.getModificationTime).maxOption.getOrElse(0L))),
-        // empty version (no footers) ⇒ no inferable schema; "" keeps
-        // history listable instead of throwing on the whole table
-        if (hasData(f, root, v))
-          spark.read.parquet(dir(root, v)).schema.toDDL
+        // empty version (no footers) ⇒ no schema; "" keeps history
+        // listable instead of throwing on the whole table
+        if (files.nonEmpty)
+          FooterSchema.read(spark, dir(root, v), ls).schema.toDDL
         else "")
     }
     spark.createDataFrame(

@@ -288,7 +288,7 @@ object DataSkipping {
   def collectStats(spark: SparkSession, dir: String,
                    cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "declare at least one stats column")
-    val dataSchema = spark.read.parquet(dir).schema
+    val dataSchema = FooterSchema.read(spark, dir).schema
     val typed = cols.map { c =>
       val f = dataSchema.find(_.name == c).getOrElse(
         sys.error(s"stats column '$c' not in data schema " +
@@ -369,7 +369,7 @@ object DataSkipping {
     // list every root would otherwise pay discovery/inference setup,
     // which measurably rivaled the prune's win on small tables
     MarkerCommit.touch(s"$tmp/$SchemaFile",
-      spark.read.parquet(dir).schema.json)
+      FooterSchema.read(spark, dir).schema.json)
     MarkerCommit.commitSwap(out, tmp, StatsMarker)
   }
 

@@ -6,9 +6,9 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-
-import graft.etl.Snapshot
+import org.apache.spark.sql.types.TimestampType
 
 /** Connector seam for the reference's file-pull control flow: list a
   * remote folder, keep items modified after the last processed
@@ -55,31 +55,44 @@ object FileSource {
 }
 
 /** The watermark-gated incremental pull, reference's loop re-expressed
-  * with the library's own pieces: the *gate* is `Snapshot.newerThan`
-  * (the same 1-row broadcast watermark every incremental query uses —
-  * including its bootstrap-on-empty behavior), the *listing* is a
-  * bounded driver collect (names + timestamps only — the watermark cut
-  * needs a total order), and the *payload fetch* runs on executors:
-  * the gated (name, ts) list is parallelized and each task calls
-  * `source.fetch` for its slice, so a 10k-file drop loads through the
-  * cluster, not one JVM (the reference loops `requests.get` on the
-  * driver, download_from_sharepoint.py:104-124 — per-file unit of work
-  * kept, driver funnel not). Parsing/landing is distributed as before
-  * (`XlsxIngest` / `CsvIngest` over the fetched payloads).
+  * with the library's own pieces: the *gate* is the processed log's
+  * max `last_modified` (one scalar action) applied on the driver to
+  * the listing it already holds — `Snapshot.newerThan`'s contract,
+  * bootstrap-on-empty included, without its broadcast-join jobs; the
+  * *listing* is a bounded driver collect (names + timestamps only —
+  * the watermark cut needs a total order); and the *payload fetch*
+  * runs on executors: the gated (name, ts) list is parallelized and
+  * each task calls `source.fetch` for its slice, so a 10k-file drop
+  * loads through the cluster, not one JVM (the reference loops
+  * `requests.get` on the driver, download_from_sharepoint.py:104-124 —
+  * per-file unit of work kept, driver funnel not). Parsing/landing is
+  * distributed as before (`XlsxIngest` / `CsvIngest` over the fetched
+  * payloads).
   */
 object FileSync {
 
   /** Listing entries newer than the max `last_modified` recorded in
     * `processedLog` (schema: at least `last_modified` timestamp).
-    * Empty log ⇒ everything (first run processes the full folder). */
+    * Empty log ⇒ everything (first run processes the full folder).
+    * The comparison is a strict `>` at Spark's microsecond precision,
+    * as `Snapshot.newerThan` over the listing would make it; the
+    * result is a local frame of (name, last_modified). */
   def newEntries(spark: SparkSession, source: FileSource,
                  processedLog: DataFrame): DataFrame = {
-    val entries = spark.createDataFrame(
-      source.list().map(e =>
-        (e.name, java.sql.Timestamp.from(e.lastModified))))
-      .toDF("name", "last_modified")
-    Snapshot.newerThan(entries, col("last_modified"),
-      processedLog, col("last_modified"))
+    // the max as a top-1 (one job; a global aggregate's shuffle is two)
+    val top = processedLog
+      .select(col("last_modified").cast(TimestampType).as("wm"))
+      .orderBy(col("wm").desc_nulls_last).limit(1).collect()
+    val wm = top.headOption.flatMap(r => Option(r.get(0))).map {
+      case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+      case i: Instant            => DateTimeUtils.instantToMicros(i)
+      case o => throw new IllegalStateException(s"unexpected ts type: $o")
+    }
+    val kept = source.list()
+      .map(e => (e.name, java.sql.Timestamp.from(e.lastModified)))
+      .filter { case (_, ts) =>
+        wm.forall(DateTimeUtils.fromJavaTimestamp(ts) > _) }
+    spark.createDataFrame(kept).toDF("name", "last_modified")
   }
 
   /** Fetch the gated delta: (name, last_modified, content) rows, bytes

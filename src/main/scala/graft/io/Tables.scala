@@ -119,8 +119,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     // task's scheduling cost. Production layouts are unaffected twice
     // over — the est<cores gate already no-ops there, and any input
     // past cores×64 KB (a few MB) still widens to all cores.
-    val minTaskBytes = math.max(1L,
-      sys.env.getOrElse("SPARK_GRAFT_WIDE_TASK_BYTES", "65536").toLong)
+    val minTaskBytes = Tables.wideTaskBytes
     val bytes = files.map(_.getLen).sum
     if (est > 0 && est < cores) {
       val width = math.max(est,
@@ -129,4 +128,24 @@ final case class Tables(spark: SparkSession, dir: String) {
       if (width > est) df.repartition(width) else df
     } else df
   }
+}
+
+object Tables {
+
+  /** The `*Wide` accessors' bytes-per-task floor:
+    * `SPARK_GRAFT_WIDE_TASK_BYTES`, default 64 KB. */
+  private[graft] def wideTaskBytes: Long =
+    positiveLong("SPARK_GRAFT_WIDE_TASK_BYTES",
+      sys.env.get("SPARK_GRAFT_WIDE_TASK_BYTES"), 65536L)
+
+  /** `raw` as a positive count; `default` when unset. A malformed or
+    * non-positive value fails here, naming the variable, instead of
+    * as a `NumberFormatException` inside a read path. */
+  private[graft] def positiveLong(name: String, raw: Option[String],
+                                   default: Long): Long =
+    raw.fold(default) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
 }

@@ -28,18 +28,22 @@ object RollingWindow {
     when(end < start, end + expr("INTERVAL 1 DAY")).otherwise(end)
 
   /** Full zone explosion: one row per (zone, day in 0..window) with
-    * start/end shifted by the day offset and overnight-wrapped. */
+    * start/end shifted by the day offset and overnight-wrapped, as
+    * columns `z_start`, `z_end` after the zone's own. One projection:
+    * `inline` expands one (z_start, z_end) struct per offset. A chain
+    * of `withColumn`s re-analyzes the growing plan at every step,
+    * which dominated this call on daily-drop zones; the offsets are
+    * literal (the window is a few days), so the structs stay in
+    * generated code, where a `transform` lambda would be interpreted
+    * per row. */
   def explodeZones(zones: DataFrame, start: Column, end: Column,
                    window: Int): DataFrame = {
-    val wrapped = zones
-      .withColumn("__start", start)
-      .withColumn("__end", wrapOvernight(start, end))
-    wrapped
-      .withColumn("__off", explode(sequence(lit(0), lit(window))))
-      .withColumn("z_start",
-        col("__start") + col("__off") * expr("INTERVAL 1 DAY"))
-      .withColumn("z_end",
-        col("__end") + col("__off") * expr("INTERVAL 1 DAY"))
-      .drop("__start", "__end", "__off")
+    val wrapped = wrapOvernight(start, end)
+    val day = expr("INTERVAL 1 DAY")
+    // the offsets of sequence(0, window), a negative window included
+    val offsets = 0 to window by (if (window >= 0) 1 else -1)
+    zones.select(col("*"), inline(array(offsets.map(off => struct(
+      (start + lit(off) * day).as("z_start"),
+      (wrapped + lit(off) * day).as("z_end"))): _*)))
   }
 }

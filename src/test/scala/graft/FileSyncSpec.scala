@@ -4,6 +4,7 @@ import java.nio.file.attribute.FileTime
 import java.nio.file.{Files, Path}
 import java.time.Instant
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.{FileSource, FileSync, XlsxIngest}
@@ -23,9 +24,17 @@ private class CountingSource(entries: Seq[FileSource.Entry],
   }
 }
 
+/** A fixed listing; the gate never fetches. */
+private class ListedSource(entries: Seq[(String, Instant)]) extends FileSource {
+  def list(): Seq[FileSource.Entry] =
+    entries.map { case (n, t) => FileSource.Entry(n, t) }
+  def fetch(name: String): Array[Byte] =
+    throw new UnsupportedOperationException(name)
+}
+
 /** Drives the reference's SharePoint watermark loop end-to-end against
   * a local FileSource: list → gate on last-modified vs the processed
-  * log (Snapshot.newerThan underneath, bootstrap included) → fetch →
+  * log (the log's max mtime, bootstrap included) → fetch →
   * parse (xlsx payloads through XlsxIngest) → append the log →
   * re-run is a no-op. */
 class FileSyncSpec extends GraftSuite {
@@ -70,6 +79,54 @@ class FileSyncSpec extends GraftSuite {
     // reference's gate)
     val log2 = log1.union(FileSync.logEntries(pull2))
     assert(FileSync.fetchNew(spark, src, log2).isEmpty)
+  }
+
+  test("newEntries matches the Snapshot.newerThan gate it replaced") {
+    // the gate newEntries used to build: a broadcast join of the
+    // listing against the log's max last_modified
+    def reference(src: FileSource, log: DataFrame) =
+      graft.etl.Snapshot.newerThan(
+        spark.createDataFrame(src.list().map(e =>
+          (e.name, java.sql.Timestamp.from(e.lastModified))))
+          .toDF("name", "last_modified"),
+        col("last_modified"), log, col("last_modified"))
+    def check(src: FileSource, log: DataFrame, expect: Seq[String]): Unit = {
+      val got = FileSync.newEntries(spark, src, log)
+      val ref = reference(src, log)
+      assert(got.schema == ref.schema)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        ref.collect().map(_.toString).sorted.toSeq)
+      assert(got.select("name").as[String].collect().sorted.toSeq == expect)
+    }
+    def logAt(ts: Instant*) = ts.zipWithIndex
+      .map { case (t, i) => (s"old$i", java.sql.Timestamp.from(t)) }
+      .toDF("name", "last_modified")
+    val wm = at(5)
+    // sub-millisecond mtimes: nanos truncate to Spark's microseconds
+    // before the strict > compare
+    val src = new ListedSource(Seq(
+      "before" -> wm.minusNanos(1000),
+      "equal" -> wm,
+      "equal_sub_micro" -> wm.plusNanos(999),
+      "one_micro" -> wm.plusNanos(1000),
+      "sub_milli" -> wm.plusNanos(250000),
+      "later" -> at(6)))
+    // empty log: everything passes
+    check(src, emptyLog, Seq("before", "equal", "equal_sub_micro", "later",
+      "one_micro", "sub_milli"))
+    // equal-mtime boundary: strict >, at microsecond precision
+    check(src, logAt(at(1), wm), Seq("later", "one_micro", "sub_milli"))
+    // a sub-millisecond watermark
+    check(src, logAt(wm.plusNanos(250000)), Seq("later"))
+    // a log built from Instants, collected as Instants (java8 API)
+    val instantLog = Seq(("old", wm.plusNanos(1000))).toDF("name", "last_modified")
+    val key = "spark.sql.datetime.java8API.enabled"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      check(src, instantLog, Seq("later", "sub_milli"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    check(src, instantLog, Seq("later", "sub_milli"))
   }
 
   test("payload fetch runs on executors, never the driver") {

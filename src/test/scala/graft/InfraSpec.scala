@@ -60,13 +60,28 @@ class InfraSpec extends GraftSuite {
     val bytes = fs.listStatus(p).filter(f => f.isFile &&
       !f.getPath.getName.startsWith("_")).map(_.getLen).sum
     val cores = spark.sparkContext.defaultParallelism
+    // the floor the accessor itself reads (SPARK_GRAFT_WIDE_TASK_BYTES)
+    val floor = graft.io.Tables.wideTaskBytes
     val expect = math.max(1L,
-      math.min(cores.toLong, (bytes + 65535) / 65536)).toInt
-    assume(bytes > 65536 && expect < cores,
+      math.min(cores.toLong, (bytes + floor - 1) / floor)).toInt
+    assume(bytes > floor && expect < cores,
       s"corpus came out $bytes bytes — resize the generator")
     val wide = graft.io.Tables(spark, dir).documentsWide
     assert(wide.rdd.getNumPartitions == expect,
-      s"width should be ceil($bytes/64K)=$expect, not cores=$cores")
+      s"width should be ceil($bytes/$floor)=$expect, not cores=$cores")
+  }
+
+  test("a malformed or non-positive wide-task floor fails early, named") {
+    import graft.io.Tables.positiveLong
+    val name = "SPARK_GRAFT_WIDE_TASK_BYTES"
+    assert(positiveLong(name, None, 65536L) == 65536L)
+    assert(positiveLong(name, Some("4096"), 65536L) == 4096L)
+    Seq("64k", "", "0", "-5", "1e6", "99999999999999999999").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        positiveLong(name, Some(v), 65536L))
+      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$v'"),
+        e.getMessage)
+    }
   }
 
   test("documentsWide is a no-op when one task's work fits the floor") {

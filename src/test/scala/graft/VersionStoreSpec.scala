@@ -383,6 +383,28 @@ class VersionStoreSpec extends GraftSuite {
     assert(f.exists(new org.apache.hadoop.fs.Path(s"$root/v=1/_PIGGYBACK")))
   }
 
+  test("no job-committer _SUCCESS in the temp: the version stays invisible until the marker lands") {
+    val root = Files.createTempDirectory("vs").toString
+    VersionStore.write(Seq((1, "a")).toDF("id", "x"), root)
+    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // the hook runs after the data landed in the temp, before commitSwap
+    var atHook: Option[(Boolean, Boolean, Boolean)] = None
+    val v = VersionStore.tryCommit(Seq((2, "b")).toDF("id", "x"), root,
+      base = 0L, onBuilt = Some((tmp, _) => {
+        atHook = Some((
+          f.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")),
+          f.listStatus(new org.apache.hadoop.fs.Path(tmp))
+            .exists(_.getPath.getName.endsWith(".parquet")),
+          VersionStore.versions(spark, root).contains(1L)))
+      }))
+    assert(v == Right(1L))
+    assert(atHook == Some((false, true, false)),
+      "temp must hold data but no _SUCCESS, and v1 must not be visible yet")
+    assert(f.exists(new org.apache.hadoop.fs.Path(s"$root/v=1/_SUCCESS")))
+    assert(VersionStore.latest(spark, root).count() == 1)
+  }
+
   test("commitRetry waits out a slow healthy writer instead of declaring a stall") {
     val root = Files.createTempDirectory("vs").toString
     VersionStore.write(Seq((1L, "base")).toDF("id", "x"), root)
