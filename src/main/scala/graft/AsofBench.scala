@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsofJoin
@@ -30,53 +28,27 @@ import graft.operators.AsofJoin
   * union row count, and the hot key's share. */
 object AsofBench {
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val runs = Harness.positiveInt("SPARK_GRAFT_BENCH_RUNS", 3)
     // defaults keep the naive arm's pair blowup ~13M rows (hot key
     // 5k x 5k / 2 + uniform tail) — decisive but minutes-bounded;
     // raise LEFT/RIGHT/HOTPCT to watch it diverge quadratically
-    val nLeft = sys.env.getOrElse("SPARK_GRAFT_ASOF_LEFT", "50000").toLong
-    val nRight = sys.env.getOrElse("SPARK_GRAFT_ASOF_RIGHT", "50000").toLong
-    val keys = sys.env.getOrElse("SPARK_GRAFT_ASOF_KEYS", "1000").toLong
-    val hotPct = sys.env.getOrElse("SPARK_GRAFT_ASOF_HOTPCT", "10").toInt
+    val nLeft = Harness.positiveLong("SPARK_GRAFT_ASOF_LEFT", 50000L)
+    val nRight = Harness.positiveLong("SPARK_GRAFT_ASOF_RIGHT", 50000L)
+    val keys = Harness.positiveLong("SPARK_GRAFT_ASOF_KEYS", 1000L)
+    val hotPct = Harness.percent("SPARK_GRAFT_ASOF_HOTPCT", 10)
     // the naive arm's join output is quadratic in the hot-key share;
     // past ~20% hot it stops being minutes-bounded — the high rungs
     // of the skew ladder run asof-vs-salted only (NAIVE=0)
-    val withNaive = sys.env.getOrElse("SPARK_GRAFT_ASOF_NAIVE", "1") == "1"
-    val slices = sys.env.getOrElse("SPARK_GRAFT_ASOF_SLICES", "32").toInt
+    val withNaive = Harness.flag("SPARK_GRAFT_ASOF_NAIVE", true)
+    val slices = Harness.positiveInt("SPARK_GRAFT_ASOF_SLICES", 32)
+    val streamMode = Harness.oneOf("SPARK_GRAFT_ASOF_MODE", "batch",
+      Seq("batch", "stream")) == "stream"
+    val batchSize = Harness.positiveInt("SPARK_GRAFT_STREAM_BATCH", 20000)
     val spanSec = 30L * 24 * 3600
+    val cpus = Harness.cpus
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(logLevel = "ERROR")
 
     // deterministic synthetic sides: user 0 is the hot key on both
     def side(n: Long, idOffset: Long, withValue: Boolean): DataFrame = {
@@ -103,6 +75,15 @@ object AsofBench {
     val left = spark.read.parquet(ldir)
     val right = spark.read.parquet(rdir)
 
+    // event_id -> matched click (-1 for none): the identity every arm
+    // is checked against before any clock is believed
+    def matches(df: DataFrame): Map[Long, Long] = df.collect().map(r =>
+      r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
+    def asofArm(): DataFrame =
+      AsofJoin.asof(left, right, Seq("user_id"), "ts", "ts",
+        Seq("click_id", "click_value"), "click_id")
+        .select("event_id", "asof_click_id")
+
     // SPARK_GRAFT_ASOF_MODE=stream: per-micro-batch latency of the
     // stream-STREAM as-of (EventPipelines.streamAsofTagged) over the
     // same synthetic sides, delivered in event-time order (the
@@ -110,13 +91,11 @@ object AsofBench {
     // per-trigger price the batch arms never measure. The emitted
     // match set is asserted equal to the batch operator's (identity
     // first, then the clock), exactly like the batch arms.
-    if (sys.env.getOrElse("SPARK_GRAFT_ASOF_MODE", "batch") == "stream") {
+    if (streamMode) {
       import graft.streaming.EventPipelines
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import spark.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val batchSize =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "20000").toInt
       // event-time delivery order computed by SPARK (global sort —
       // ordering by the timestamp column is ordering by its micros)
       // and streamed to the driver batch-by-batch via
@@ -135,9 +114,9 @@ object AsofBench {
         .as[EventPipelines.AsofUnion]
         .orderBy(col("ts"), col("side"), col("id"))
         .toLocalIterator().asScala.grouped(batchSize)
-      StallProbe.start()
-      val loadBefore = loadavg
-      val stall0 = StallProbe.totalSec
+      Harness.StallProbe.start()
+      val loadBefore = Harness.loadavg
+      val stall0 = Harness.StallProbe.totalSec
       val mem = MemoryStream[EventPipelines.AsofUnion]
       val q = EventPipelines.streamAsofTagged(mem.toDS())
         .writeStream.format("memory").queryName("asof_stream_bench")
@@ -145,60 +124,37 @@ object AsofBench {
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
       try {
         batchIt.zipWithIndex.foreach { case (b, k) =>
-          val t0 = System.nanoTime()
-          mem.addData(b.toSeq: _*)
-          q.processAllAvailable()
-          perBatch += (System.nanoTime() - t0) / 1e9
+          perBatch += Harness.timed {
+            mem.addData(b.toSeq: _*)
+            q.processAllAvailable()
+          }
           System.err.println(f"[asof-bench] stream batch $k " +
             f"(${b.size} rows) ${perBatch.last}%.2f s")
         }
-        val got = spark.table("asof_stream_bench").collect().map(r =>
-          r.getLong(1) -> (if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
-        val want = AsofJoin.asof(left, right, Seq("user_id"), "ts", "ts",
-            Seq("click_id", "click_value"), "click_id")
-          .select("event_id", "asof_click_id").collect().map(r =>
-            r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
-          .toMap
-        if (got != want) {
-          System.err.println(s"[asof-bench] STREAM ARM MISMATCH: " +
-            s"${got.size} vs ${want.size}")
+        val got = spark.table("asof_stream_bench")
+          .select("left_id", "asof_right_id")
+        if (matches(got) != matches(asofArm())) {
+          System.err.println("[asof-bench] STREAM ARM MISMATCH")
           sys.exit(1)
         }
       } finally q.stop()
-      val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
+      val stallSec = Harness.StallProbe.totalSec - stall0
       val warm = if (perBatch.size > 1) perBatch.drop(1).toSeq
                  else perBatch.toSeq
-      val json =
-        s"""{"metric":"stream_asof_batch_median","value":${med(warm)}""" +
+      Harness.emit("AsofBench",
+        s"""{"metric":"stream_asof_batch_median","value":${Harness.median(warm)}""" +
           s""","unit":"sec","cold_first_batch_sec":${
             perBatch.headOption.getOrElse(-1.0)}""" +
-          s""","per_batch_sec":${perBatch.map(x =>
-            math.round(x * 1000) / 1000.0).mkString("[", ",", "]")}""" +
+          s""","per_batch_sec":${Harness.jarr(perBatch.toSeq)}""" +
           s""","batches":${perBatch.size},"batch_rows":$batchSize""" +
           s""","n_left":$nLeft,"n_right":$nRight,"keys":$keys""" +
           s""","hot_pct":$hotPct""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "bench_asof_stream.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[asof-bench] write $out failed: $e") }
+          s""","stall_sec":${Harness.r2(stallSec)}""" +
+          s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
+          s""","cpus":"$cpus"}""", kind = "stream")
       spark.stop()
       return
     }
-
-    def asofArm(): DataFrame =
-      AsofJoin.asof(left, right, Seq("user_id"), "ts", "ts",
-        Seq("click_id", "click_value"), "click_id")
-        .select("event_id", "asof_click_id")
 
     def saltedArm(): DataFrame =
       AsofJoin.asofSalted(left, right, Seq("user_id"), "ts", "ts",
@@ -221,97 +177,47 @@ object AsofBench {
     }
 
     // semantics identity (price comparison of one semantics)
-    val a = asofArm().collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val sMap = saltedArm().collect().map(r =>
-      r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    if (a != sMap) {
-      System.err.println(
-        s"[asof-bench] SALTED ARM MISMATCH: ${a.size} vs ${sMap.size}")
-      sys.exit(1)
-    }
-    if (withNaive) {
-      val n = naiveArm().collect().map(r =>
-        r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-      if (a != n) {
+    val a = matches(asofArm())
+    val arms = Seq("asof" -> (() => asofArm()),
+        "salted" -> (() => saltedArm())) ++
+      (if (withNaive) Seq("naive" -> (() => naiveArm())) else Nil)
+    arms.tail.foreach { case (name, arm) =>
+      val m = matches(arm())
+      if (a != m) {
         System.err.println(
-          s"[asof-bench] ARM MISMATCH: ${a.size} vs ${n.size}")
+          s"[asof-bench] ${name.toUpperCase} ARM MISMATCH: ${a.size} vs ${m.size}")
         sys.exit(1)
       }
     }
     val blowup = if (withNaive) naiveJoin().count() else -1L
     val unionRows = nLeft + nRight
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache(); System.gc()
-    }
-    StallProbe.start()
-    val loadBefore = loadavg
-    val asofT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val saltT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val naiveT = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val stalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (r <- 0 until runs) {
-      val s0 = StallProbe.totalSec
-      val arms: Seq[(String, () => Double)] = Seq(
-        "asof" -> (() => timed(
-          asofArm().write.format("noop").mode("overwrite").save())),
-        "salted" -> (() => timed(
-          saltedArm().write.format("noop").mode("overwrite").save()))) ++
-        (if (withNaive) Seq("naive" -> (() => timed(
-          naiveArm().write.format("noop").mode("overwrite").save())))
-         else Nil)
-      val order = if (r % 2 == 0) arms else arms.reverse
-      val got = order.map { case (nm, f) => val t = f(); sweep(); nm -> t }
-        .toMap
-      asofT += got("asof"); saltT += got("salted")
-      naiveT += got.getOrElse("naive", -1.0)
-      stalls += StallProbe.totalSec - s0
-      System.err.println(f"[asof-bench] run $r asof=${got("asof")}%.2f s " +
-        f"salted=${got("salted")}%.2f s " +
-        f"naive=${got.getOrElse("naive", -1.0)}%.2f s " +
-        f"stall=${stalls.last}%.2f s")
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def jarr(xs: Seq[Double]) =
-      xs.map(x => math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
+    val loadBefore = Harness.loadavg
+    val res = Harness.alternate("asof-bench", runs,
+      arms.map { case (name, arm) => name -> (() =>
+        arm().write.format("noop").mode("overwrite").save()) },
+      () => Harness.sweep(spark))
+    def m(arm: String) = res.median(arm)
     // a skipped naive arm must publish null, not a -1 sentinel: a
     // consumer trending "speedup" across rungs would silently ingest
     // a negative garbage ratio (caught on the r12 h50/h90/h100
     // artifacts and fixed by regeneration)
-    val naiveMedianJson =
-      if (withNaive) median(naiveT.toSeq).toString else "null"
-    val speedupJson =
-      if (withNaive) (median(naiveT.toSeq) / median(asofT.toSeq)).toString
-      else "null"
-    val naiveRunsJson = if (withNaive) jarr(naiveT.toSeq) else "null"
-    val blowupJson = if (withNaive) blowup.toString else "null"
-    val json =
-      s"""{"metric":"asof_vs_naive_median","value":${median(asofT.toSeq)}""" +
-        s""","unit":"sec","naive_median":$naiveMedianJson""" +
-        s""","salted_median":${median(saltT.toSeq)},"slices":$slices""" +
-        s""","speedup":$speedupJson""" +
-        s""","salted_over_asof":${median(asofT.toSeq) / median(saltT.toSeq)}""" +
-        s""","asof_runs":${jarr(asofT.toSeq)},"naive_runs":$naiveRunsJson""" +
-        s""","salted_runs":${jarr(saltT.toSeq)}""" +
-        s""","naive_join_rows":$blowupJson,"asof_union_rows":$unionRows""" +
+    def ifNaive(v: => Any): String = if (withNaive) v.toString else "null"
+    Harness.emit("AsofBench",
+      s"""{"metric":"asof_vs_naive_median","value":${m("asof")}""" +
+        s""","unit":"sec","naive_median":${ifNaive(m("naive"))}""" +
+        s""","salted_median":${m("salted")},"slices":$slices""" +
+        s""","speedup":${ifNaive(m("naive") / m("asof"))}""" +
+        s""","salted_over_asof":${m("asof") / m("salted")}""" +
+        s""","asof_runs":${Harness.jarr(res.times("asof"))}""" +
+        s""","naive_runs":${ifNaive(Harness.jarr(res.times("naive")))}""" +
+        s""","salted_runs":${Harness.jarr(res.times("salted"))}""" +
+        s""","naive_join_rows":${ifNaive(blowup)},"asof_union_rows":$unionRows""" +
         s""","n_left":$nLeft,"n_right":$nRight,"keys":$keys""" +
         s""","hot_pct":$hotPct,"with_naive":$withNaive""" +
-        s""","stall_sec":${jarr(stalls.toSeq)}""" +
-        s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-        s""","cpus":"$cpus"}"""
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_asof.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[asof-bench] write $out failed: $e") }
+        s""","stall_sec":${Harness.jarr(res.stalls)}""" +
+        s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
+        s""","cpus":"$cpus"}""")
     spark.stop()
   }
 }

@@ -52,8 +52,8 @@ object Bench {
     catch { case _: Throwable => "" }
 
   /** Host-stall probe: a daemon thread sleeps 100 ms in a loop and,
-    * whenever the sleep actually took over 250 ms, accumulates the
-    * oversleep — time the guest simply did not run. On this class of VM (Firecracker) host CPU
+    * whenever it oversleeps by more than 150 ms (the 100 ms sleep took
+    * over 250 ms), accumulates the oversleep — time the guest simply did not run. On this class of VM (Firecracker) host CPU
     * oversubscription is INVISIBLE to every guest metric (steal stays
     * 0 — the steal-time MSR isn't exposed — loadavg/PSI only see
     * guest-side queuing), yet it freely multiplies wall-clock

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-data scaler: replicates a driver-generated sf directory K×
@@ -52,15 +52,7 @@ object ScaleUp {
     val dst = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
     require(replicas >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def stride(t: String, key: String): Long =

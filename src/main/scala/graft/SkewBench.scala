@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -41,52 +39,18 @@ import graft.operators.Dedup
   * identical on every arm. */
 object SkewBench {
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/bench_data/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val hotFrac = sys.env.getOrElse("SPARK_GRAFT_SKEW_HOTFRAC", "0.05")
-      .toDouble
-    val headerTokens =
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_HEADER_TOKENS", "30").toInt
+    val sfDir = Harness.sfDir("bench_data/sf1")
+    val runs = Harness.positiveInt("SPARK_GRAFT_BENCH_RUNS", 3)
+    val hotFrac = Harness.fraction("SPARK_GRAFT_SKEW_HOTFRAC", 0.05)
+    val headerTokens = Harness.positiveInt("SPARK_GRAFT_SKEW_HEADER_TOKENS", 30)
     val numHashes = 32
     val threshold = 0.5
     val nPlants = 20
-    val cap = sys.env.getOrElse("SPARK_GRAFT_SKEW_CAP", "64").toInt
-    val saltS = sys.env.getOrElse("SPARK_GRAFT_SKEW_SALT", "8").toInt
+    val cap = Harness.positiveInt("SPARK_GRAFT_SKEW_CAP", 64)
+    val saltS = Harness.positiveInt("SPARK_GRAFT_SKEW_SALT", 8)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val header = (1 to headerTokens).map(i => s"lichdr$i").mkString(" ")
@@ -135,15 +99,6 @@ object SkewBench {
       Dedup.containmentFromSignatures(sigs, numHashes, thr,
         maxBucketSize = capOpt, salt = salt)
 
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge
-        .unpersistAll(spark, blocking = true)
-      System.gc()
-    }
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
     spark.range(1000).selectExpr("sum(id)").count() // warmup
     sigs.count()
 
@@ -159,23 +114,11 @@ object SkewBench {
       hits.toDouble / nPlants
     }
 
-    val loadBefore = loadavg
-    StallProbe.start()
-    val times = arms.map(_._1 -> scala.collection.mutable
-      .ArrayBuffer.empty[Double]).toMap
-    val stalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (r <- 0 until runs) {
-      val s0 = StallProbe.totalSec
-      val order = if (r % 2 == 0) arms else arms.reverse
-      order.foreach { case (name, c, s) =>
-        val t = timed(run(c, s, threshold)
-          .write.format("noop").mode("overwrite").save())
-        sweep()
-        times(name) += t
-        System.err.println(f"[skew-bench] run $r $name%-9s $t%6.2f s")
-      }
-      stalls += StallProbe.totalSec - s0
-    }
+    val loadBefore = Harness.loadavg
+    val res = Harness.alternate("skew-bench", runs,
+      arms.map { case (name, c, s) => name -> (() =>
+        run(c, s, threshold).write.format("noop").mode("overwrite").save()) },
+      () => Harness.sweep(spark))
     // witnesses, once per arm (counts, not times)
     val witness = arms.map { case (name, c, s) =>
       val candidates = run(c, s, thr = 0.0).count()
@@ -184,12 +127,12 @@ object SkewBench {
       val rClean = recall(out, cleanBase)
       val rHot = recall(out, hotBase)
       out.unpersist()
-      sweep()
+      Harness.sweep(spark)
       System.err.println(f"[skew-bench] $name%-9s candidates=$candidates%,d " +
         f"recall_clean=$rClean%.2f recall_hot=$rHot%.2f")
       name -> ((candidates, rClean, rHot))
     }.toMap
-    val loadAfter = loadavg
+    val loadAfter = Harness.loadavg
 
     // The contract under test, asserted. Baseline recall is measured
     // RELATIVE to the unvalved arm: the estimator itself misses a
@@ -211,35 +154,23 @@ object SkewBench {
       violations ::= "cap dropped CLEAN plants (their buckets are small)"
     violations.foreach(v => System.err.println(s"[skew-bench] VIOLATION: $v"))
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     def jArm(name: String): String = {
       val (cands, rc, rh) = witness(name)
-      s""""$name":{"median_sec":${median(times(name).toSeq)}""" +
+      s""""$name":{"median_sec":${res.median(name)}""" +
         s""","candidates":$cands,"recall_clean":$rc,"recall_hot":$rh}"""
     }
-    val json =
+    Harness.emit("SkewBench",
       s"""{"metric":"containment_skew","unit":"sec","runs":$runs""" +
         s""","arms":{${arms.map(a => jArm(a._1)).mkString(",")}}""" +
         s""","corpus_rows":$corpusRows,"hot_frac":$hotFrac""" +
         s""","header_tokens":$headerTokens,"cap":$cap,"salt":$saltS""" +
         s""","num_hashes":$numHashes,"threshold":$threshold""" +
         s""","planted_pairs_per_family":$nPlants""" +
-        s""","stall_sec":${stalls.map(s => math.round(s * 100) / 100.0)
-          .mkString("[", ",", "]")}""" +
+        s""","stall_sec":${res.stalls.map(Harness.r2).mkString("[", ",", "]")}""" +
         s""","violations":${violations.map("\"" + _ + "\"")
           .mkString("[", ",", "]")}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"""" +
-        s""","cpus":"$cpus","shuffle":"$shuffle","sf":"$sfDir"}"""
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "bench_skew.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[skew-bench] write $out failed: $e") }
+        s""","cpus":"${Harness.cpus}","shuffle":"${Harness.shuffle}","sf":"$sfDir"}""")
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -63,50 +61,12 @@ import graft.operators.Dedup
   */
 object StoreBench {
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      "/root/repo/bench_data/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val warehouse = sys.env.getOrElse("SPARK_GRAFT_STORE_WAREHOUSE",
+    val sfDir = Harness.sfDir("bench_data/sf1")
+    val runs = Harness.positiveInt("SPARK_GRAFT_BENCH_RUNS", 3)
+    val warehouse = Harness.text("SPARK_GRAFT_STORE_WAREHOUSE",
       "/tmp/graft_store_bench/warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val storeScale = sys.env.getOrElse("SPARK_GRAFT_STORE_SCALE", "10").toInt
+    val storeScale = Harness.positiveInt("SPARK_GRAFT_STORE_SCALE", 10)
     // which store layout to price: "sig" = minhash band index over
     // documents (the q57 shape), "signband" = hyperplane sign-band
     // index over embeddings (the q71 shape), "ivf" = the
@@ -114,9 +74,68 @@ object StoreBench {
     // the claim is READ SUPPRESSION via partition pruning rather
     // than shuffle elision) — same harness, same arms, so all three
     // stored layouts carry SYMMETRIC measured numbers instead of one
-    // priced store and two plan-spec analogies
-    val kind = sys.env.getOrElse("SPARK_GRAFT_STORE_KIND", "sig")
+    // priced store and two plan-spec analogies. The other kinds
+    // price their own claims, each described at its branch below.
+    val kind = Harness.oneOf("SPARK_GRAFT_STORE_KIND", "sig", Seq("sig",
+      "signband", "ivf", "pq", "opq", "cdc", "shingle", "gram",
+      "stream_spans", "sketch", "dfp", "cachescope", "zorder"))
+    val days = Harness.positiveInt("SPARK_GRAFT_STORE_DAYS", 5)
+    val dayMaxFragments = Harness.positiveInt("SPARK_GRAFT_STORE_MAXFRAG", 4)
+    val streamBatch = Harness.positiveInt("SPARK_GRAFT_STREAM_BATCH", 250)
+    val files = Harness.positiveInt("SPARK_GRAFT_SKIP_FILES", 128)
+    val dfpBatches = Harness.positiveInt("SPARK_GRAFT_DFP_BATCHES", 256)
+    val rounds = Harness.positiveInt("SPARK_GRAFT_CACHE_ROUNDS", 4)
+    // the retained-arm growth check compares last vs head, which is
+    // vacuous (and always fails) with a single round
+    require(rounds >= 2,
+      s"SPARK_GRAFT_CACHE_ROUNDS must be >= 2 (got $rounds): the " +
+        "retained-arm growth witness needs at least two rounds")
+    val retainedFirst = Harness.oneOf("SPARK_GRAFT_CACHE_ORDER",
+      "released_first", Seq("released_first", "retained_first")) ==
+      "retained_first"
+    val numCentroids = Harness.positiveInt("SPARK_GRAFT_IVF_CENTROIDS", 64)
+    val nProbe = Harness.positiveInt("SPARK_GRAFT_IVF_PROBE", 4)
+    val nQueries = Harness.positiveInt("SPARK_GRAFT_IVF_QUERIES", 8)
+    val numSub = Harness.positiveInt("SPARK_GRAFT_PQ_NUMSUB", 16)
+    val numCodewords = Harness.positiveInt("SPARK_GRAFT_PQ_CODEWORDS", 64)
+    // tabulated ADC is the serving default (the measured 7–12× at
+    // serving-budget codebooks); the literal path stays reachable
+    val tabulated = Harness.flag("SPARK_GRAFT_PQ_TABULATED", true)
+
+    val spark = Harness.session(
+      conf = Map("spark.sql.warehouse.dir" -> warehouse))
+    val shuffle = Harness.shuffle
     val plainDir = s"$warehouse/plain_ctl"
+    // lazy: reading a table runs a schema-inference job, which would
+    // shift the RDD-id-seeded range sampling of the kinds that never
+    // read it (their file boundaries)
+    lazy val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text")
+
+    // 95/5 split on a hash, not id ranges: ids correlate with
+    // generation order, and a contiguous "new batch" would share
+    // boilerplate unrepresentatively. Hash bucket 0 is the increment
+    // batch; bucket d is day d's append slice.
+    def isNew(id: String): Column = pmod(xxhash64(col(id)), lit(20)) === 0
+    // Distinct-id copies: same signature/bit DISTRIBUTION as a larger
+    // corpus, and ref×ref never meets in the incremental join, so the
+    // copies only do what they're for — give the store volume.
+    def replicate(df: DataFrame, id: String): DataFrame =
+      (0 until storeScale).map(i =>
+          df.withColumn(id, col(id) + lit(i.toLong * 10000000L)))
+        .reduce(_ unionByName _)
+    def daySlice(df: DataFrame, id: String, d: Int): DataFrame =
+      df.where(pmod(xxhash64(col(id)), lit(20)) === d)
+        .withColumn(id, col(id) + lit(900000000L + d * 10000000L))
+    // trained artifacts (IVF centroids, PQ codebooks) are built once
+    // and shared by every arm, and may be local checkpoints: the sweep
+    // keeps checkpoint blocks
+    def sweep(): Unit = Harness.sweep(spark, checkpoints = false)
+    // the fields every kind's JSON line ends with
+    def jsonTail(loadBefore: String, stallSec: Double): String =
+      s""","stall_sec":${Harness.r2(stallSec)}""" +
+        s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
+        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}"""
 
     // "stream_spans" prices the STREAMING ExactSubstr gate (the q120
     // contract's deployment shape): micro-batches of new documents
@@ -124,36 +143,25 @@ object StoreBench {
     // gram-count frame — the per-batch latency the re-batching
     // invariance contract implies, which the batch arms never
     // measure. Its own arm structure (a latency series, not
-    // bucketed-vs-plain), so it branches before the generic harness.
-    if (kind == "stream_spans") {
+    // bucketed-vs-plain).
+    def streamSpans(): String = {
       import spark.implicits._
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.streaming.EventPipelines
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
       spark.sql("DROP TABLE IF EXISTS store_bench_stream")
-      val t0 = System.nanoTime()
-      graft.io.Bucketing.writeBucketed(
-        Dedup.gramCounts(
-          (0 until storeScale).map(i =>
-              docs.where(!isNew).select(
-                (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-                col("text")))
-            .reduce(_ unionByName _),
+      val tWrite = Harness.timed(graft.io.Bucketing.writeBucketed(
+        Dedup.gramCounts(replicate(docs.where(!isNew("doc_id")), "doc_id"),
           col("doc_id"), col("text"), minRun = 10),
-        "store_bench_stream", Seq("h"), buckets = shuffle.toInt)
-      val tWrite = (System.nanoTime() - t0) / 1e9
+        "store_bench_stream", Seq("h"), buckets = shuffle))
       val store = spark.table("store_bench_stream")
       val storeRows = store.count()
-      val streamDocs = docs.where(isNew).select("doc_id", "text")
+      val streamDocs = docs.where(isNew("doc_id"))
         .as[(Long, String)].collect().toSeq
-      val batchSize =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "250").toInt
-      val batches = streamDocs.grouped(batchSize).toSeq
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
+      val batches = streamDocs.grouped(streamBatch).toSeq
+      val loadBefore = Harness.loadavg
+      Harness.StallProbe.start()
+      val stall0 = Harness.StallProbe.totalSec
       val mem = MemoryStream[EventPipelines.DocEvent]
       val q = EventPipelines.streamRepeatedSpans(mem.toDS(), store,
           minRun = 10, watermark = "3650 days",
@@ -162,49 +170,32 @@ object StoreBench {
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
       try {
         batches.zipWithIndex.foreach { case (b, k) =>
-          val bt0 = System.nanoTime()
-          mem.addData(b.map { case (id, tx) =>
-            EventPipelines.DocEvent(id,
-              new java.sql.Timestamp(3600L * 1000 * (k + 1)), tx) }: _*)
-          q.processAllAvailable()
-          perBatch += (System.nanoTime() - bt0) / 1e9
+          perBatch += Harness.timed {
+            mem.addData(b.map { case (id, tx) =>
+              EventPipelines.DocEvent(id,
+                new java.sql.Timestamp(3600L * 1000 * (k + 1)), tx) }: _*)
+            q.processAllAvailable()
+          }
           System.err.println(
             f"[store-bench] stream batch $k (${b.size} docs) " +
               f"${perBatch.last}%.2f s")
         }
       } finally q.stop()
-      val stallSec = StallProbe.totalSec - stall0
+      val stallSec = Harness.StallProbe.totalSec - stall0
       spark.sql("DROP TABLE IF EXISTS store_bench_stream")
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
       // batch 0 pays stream-start + first store scan; the steady
       // state the contract prices is the warm median
       val warm = if (perBatch.size > 1) perBatch.drop(1).toSeq
                  else perBatch.toSeq
-      val json =
-        s"""{"metric":"stream_spans_batch_median","value":${med(warm)}""" +
-          s""","unit":"sec","kind":"stream_spans"""" +
-          s""","per_batch_sec":${perBatch.map(x =>
-            math.round(x * 1000) / 1000.0).mkString("[", ",", "]")}""" +
-          s""","cold_first_batch_sec":${perBatch.headOption.getOrElse(-1.0)}""" +
-          s""","batches":${batches.size},"batch_docs":$batchSize""" +
-          s""","stream_docs":${streamDocs.size}""" +
-          s""","store_rows":$storeRows,"store_scale":$storeScale""" +
-          s""","write_bucketed_sec":${math.round(tWrite * 100) / 100.0}""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","buckets":"$shuffle","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
+      s"""{"metric":"stream_spans_batch_median","value":${Harness.median(warm)}""" +
+        s""","unit":"sec","kind":"stream_spans"""" +
+        s""","per_batch_sec":${Harness.jarr(perBatch.toSeq)}""" +
+        s""","cold_first_batch_sec":${perBatch.headOption.getOrElse(-1.0)}""" +
+        s""","batches":${batches.size},"batch_docs":$streamBatch""" +
+        s""","stream_docs":${streamDocs.size}""" +
+        s""","store_rows":$storeRows,"store_scale":$storeScale""" +
+        s""","write_bucketed_sec":${Harness.r2(tWrite)}""" +
+        s""","buckets":"$shuffle"""" + jsonTail(loadBefore, stallSec)
     }
 
     // "sketch" prices the SketchStore maintenance claim: day-N
@@ -216,18 +207,11 @@ object StoreBench {
     // timed through a scratch successor commit (same read + scan +
     // merge + marker-last write as appendMerged) so repeated runs
     // never fold the day batch twice into the artifact of record.
-    if (kind == "sketch") {
+    def sketch(): String = {
       import graft.io.SketchStore
       import graft.operators.{Bloom, Hdr, Hll, Sketch}
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
-      def refCorpus: DataFrame = (0 until storeScale).map(i =>
-          docs.where(!isNew).select(
-            (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-            col("text")))
-        .reduce(_ unionByName _)
-      def dayCorpus: DataFrame = docs.where(isNew)
+      def refCorpus: DataFrame = replicate(docs.where(!isNew("doc_id")), "doc_id")
+      def dayCorpus: DataFrame = docs.where(isNew("doc_id"))
       val families: Seq[(String, DataFrame => DataFrame,
           (DataFrame, DataFrame) => DataFrame)] = Seq(
         ("cms", d => Sketch.countMinCells(d, col("text"), 4, 8192),
@@ -237,24 +221,13 @@ object StoreBench {
         ("bloom", d => Bloom.bloomBits(d, col("text"), 1 << 20, 3),
           Bloom.bloomMerge),
         ("hdr", d => Hdr.tokenLengthFrame(d, col("text")), Hdr.merge))
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      def sweep(): Unit = {
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-      }
+      val loadBefore = Harness.loadavg
+      Harness.StallProbe.start()
+      val stall0 = Harness.StallProbe.totalSec
       val parts = families.map { case (fam, build, merge) =>
         val dir = s"$warehouse/sketch_$fam"
         val scratch = s"$warehouse/sketch_${fam}_scratch"
-        val tBuild = timed(SketchStore.write(dir, build(refCorpus)))
+        val tBuild = Harness.timed(SketchStore.write(dir, build(refCorpus)))
         sweep()
         // the identity the append arm rides, checked in-harness once
         // (spec-pinned in SketchStoreSpec; this guards the BENCHED
@@ -268,369 +241,24 @@ object StoreBench {
           sys.exit(1)
         }
         sweep()
-        val appendT = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val rebuildT = scala.collection.mutable.ArrayBuffer.empty[Double]
-        for (r <- 0 until runs) {
-          val arms: Seq[(String, () => Double)] = Seq(
-            "append" -> (() => timed(SketchStore.write(scratch,
-              merge(SketchStore.read(spark, dir), build(dayCorpus))))),
-            "rebuild" -> (() => timed(
-              build(refCorpus.unionByName(dayCorpus)).coalesce(1)
-                .write.format("noop").mode("overwrite").save())))
-          val order = if (r % 2 == 0) arms else arms.reverse
-          val got = order.map { case (nm, f) =>
-            val t = f(); sweep(); nm -> t }.toMap
-          appendT += got("append"); rebuildT += got("rebuild")
-          System.err.println(f"[store-bench] $fam run $r " +
-            f"append=${got("append")}%.2f s rebuild=${got("rebuild")}%.2f s")
-        }
+        val res = Harness.alternate(s"store-bench $fam", runs, Seq(
+          "append" -> (() => SketchStore.write(scratch,
+            merge(SketchStore.read(spark, dir), build(dayCorpus)))),
+          "rebuild" -> (() =>
+            build(refCorpus.unionByName(dayCorpus)).coalesce(1)
+              .write.format("noop").mode("overwrite").save())),
+          () => sweep())
         val frameRows = SketchStore.read(spark, dir).count()
-        s""""$fam":{"append_median":${med(appendT.toSeq)}""" +
-          s""","rebuild_median":${med(rebuildT.toSeq)}""" +
-          s""","speedup":${med(rebuildT.toSeq) / med(appendT.toSeq)}""" +
+        s""""$fam":{"append_median":${res.median("append")}""" +
+          s""","rebuild_median":${res.median("rebuild")}""" +
+          s""","speedup":${res.median("rebuild") / res.median("append")}""" +
           s""","build_sec":${math.round(tBuild * 1000) / 1000.0}""" +
           s""","frame_rows":$frameRows}"""
       }
-      val stallSec = StallProbe.totalSec - stall0
-      val json =
-        s"""{"metric":"sketch_store_append_vs_rebuild","unit":"sec"""" +
-          s""","kind":"sketch",${parts.mkString(",")}""" +
-          s""","store_scale":$storeScale,"runs":$runs""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
-    }
-
-    // "merge" prices the keyed-MERGE maintenance claim (r13): day-N
-    // upsert of a change batch (updates + deletes + inserts over a
-    // replicated orders table) into a stored keyed table, three ways:
-    //  versioned   — Merge.mergeVersioned: table-atomic full rewrite
-    //                per day through the shared MarkerCommit window;
-    //  partitioned — Merge.mergePartitioned over a key-RANGE partCol
-    //                (pure function of the key): only the partitions
-    //                the batch touches are read and rewritten — the
-    //                100 TB form, whose cost tracks the BATCH's
-    //                partition footprint, not the table;
-    //  replay      — the no-store control: rebuild the final table
-    //                from the base + the FULL change log so far (the
-    //                reference's append + latest-run-snapshot
-    //                pattern), whose cost GROWS with history.
-    // Each day's batch is persisted before the timers (derivation
-    // identical across arms); arm order alternates per day; all
-    // three finals are fingerprint-asserted identical before any
-    // number is reported.
-    if (kind == "merge") {
-      import graft.etl.{Merge, VersionStore}
-      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      val days = sys.env.getOrElse("SPARK_GRAFT_STORE_DAYS", "5").toInt
-      val ranges = sys.env.getOrElse("SPARK_GRAFT_MERGE_RANGES", "8").toInt
-      val okMax = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val rangeSize = okMax / ranges + 1
-      val keySpan = rangeSize * ranges // replicas tile ranges exactly
-      def withP(df: DataFrame): DataFrame =
-        df.withColumn("p", expr(s"k div ${rangeSize}L"))
-      def baseTable: DataFrame = withP(
-        (0 until storeScale).map(i =>
-            orders.select((col("o_orderkey") + lit(i * keySpan)).as("k"),
-              col("o_custkey").as("ck"), col("o_orderstatus").as("st"),
-              col("o_totalprice").cast("decimal(18,2)").as("total"),
-              to_date(col("o_orderdate")).as("day")))
-          .reduce(_ unionByName _))
-      // day d churns ONE replica (updates ~5%, deletes ~1%) and
-      // inserts a fresh key range — the recent-keys-churn CDC shape
-      // the partition pruning exists for
-      def dayBatch(d: Int): DataFrame = {
-        val r = (d - 1) % storeScale
-        val rep = orders.select(
-          (col("o_orderkey") + lit(r.toLong * keySpan)).as("k"),
-          col("o_orderkey").as("ok"), col("o_custkey").as("ck"),
-          col("o_orderstatus").as("st"),
-          to_date(col("o_orderdate")).as("day"))
-        val ups = rep.where(col("ok") % 20 === d % 20)
-          .select(col("k"), col("ck"), col("st"),
-            ((col("k") % 1000) + lit(d)).cast("decimal(18,2)").as("total"),
-            col("day"), lit(d).as("ts"), lit(1).as("gen"),
-            lit(false).as("is_delete"))
-        val dels = rep.where(col("ok") % 97 === d % 97)
-          .select(col("k"), col("ck"), col("st"),
-            lit(null).cast("decimal(18,2)").as("total"), col("day"),
-            lit(d).as("ts"), lit(2).as("gen"), lit(true).as("is_delete"))
-        val ins = orders.where(col("o_orderkey") % 50 === 0)
-          .select((col("o_orderkey") +
-              lit((storeScale + d).toLong * keySpan)).as("k"),
-            col("o_custkey").as("ck"), col("o_orderstatus").as("st"),
-            col("o_totalprice").cast("decimal(18,2)").as("total"),
-            to_date(col("o_orderdate")).as("day"),
-            lit(d).as("ts"), lit(1).as("gen"), lit(false).as("is_delete"))
-        withP(ups.unionByName(dels).unionByName(ins))
-      }
-      val vroot = s"$warehouse/merge_versioned"
-      val ppath = s"$warehouse/merge_partitioned"
-      val replayDir = s"$warehouse/merge_replay"
-      val baseDir = s"$warehouse/merge_base"
-      Seq(vroot, ppath, replayDir, baseDir).foreach(
-        graft.io.MarkerCommit.deleteRecursively)
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      def sweep(): Unit = {
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-      }
-      val tBase = timed {
-        baseTable.write.mode("overwrite").parquet(baseDir)
-        VersionStore.write(spark.read.parquet(baseDir), vroot)
-        graft.io.PartitionedStore.write(
-          spark.read.parquet(baseDir), ppath, "p")
-      }
-      val batchDirs = (1 to days).map { d =>
-        val bd = s"$warehouse/merge_batch_$d"
-        dayBatch(d).write.mode("overwrite").parquet(bd); d -> bd
-      }.toMap
-      sweep()
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      val vT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val pT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val rT = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val touchedPerDay = scala.collection.mutable.ArrayBuffer.empty[Int]
-      for (d <- 1 to days) {
-        val batch = spark.read.parquet(batchDirs(d))
-        var touched = 0
-        val arms: Seq[(String, () => Double)] = Seq(
-          "versioned" -> (() => timed(
-            Merge.mergeVersioned(spark, vroot, batch, Seq("k"),
-              col("ts"), col("gen"), Some("is_delete")))),
-          "partitioned" -> (() => timed {
-            touched = Merge.mergePartitioned(spark, ppath, batch,
-              Seq("k"), col("ts"), col("gen"), "p",
-              Some("is_delete")).size
-          }),
-          "replay" -> (() => timed {
-            val log = (1 to d).map(i =>
-              spark.read.parquet(batchDirs(i))).reduce(_ unionByName _)
-            Merge.merge(spark.read.parquet(baseDir), log, Seq("k"),
-                col("ts"), col("gen"), Some("is_delete"))
-              .write.mode("overwrite").parquet(replayDir)
-          }))
-        val order = if (d % 2 == 1) arms else arms.reverse
-        val got = order.map { case (nm, f) =>
-          val t = f(); sweep(); nm -> t }.toMap
-        vT += got("versioned"); pT += got("partitioned")
-        rT += got("replay"); touchedPerDay += touched
-        // retention upkeep, untimed (the realistic deployment keeps a
-        // bounded history; unbounded versions would also exhaust /tmp)
-        VersionStore.vacuum(spark, vroot, keepLast = 2)
-        System.err.println(f"[store-bench] merge day $d " +
-          f"versioned=${got("versioned")}%.2f s " +
-          f"partitioned=${got("partitioned")}%.2f s " +
-          f"replay=${got("replay")}%.2f s touched=$touched")
-      }
-      // identity across all three commit paths, BEFORE the numbers.
-      // p is cast to a canonical BIGINT: the partitioned table reads
-      // it back as an INFERRED hive partition column (IntegerType),
-      // and xxhash64 hashes equal int and long values differently —
-      // without the cast, row-identical tables fingerprint-diverge
-      // (observed on this arm's first run; DuckDB row-diff was empty)
-      def fp(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)),
-          expr("bit_xor(xxhash64(k, ck, st, total, day, " +
-            "cast(p as bigint)))")).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-      val fps = Seq(fp(VersionStore.latest(spark, vroot)),
-        fp(spark.read.parquet(ppath)), fp(spark.read.parquet(replayDir)))
-      if (fps.distinct.size != 1) {
-        System.err.println(s"[store-bench] MERGE ARM MISMATCH: $fps")
-        sys.exit(1)
-      }
-      val tableRows = fps.head._1
-      val partTotal = graft.io.PartitionedStore
-        .filesPerPartition(spark, ppath, "p").size
-      val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def jarr(xs: Seq[Double]) = xs.map(x =>
-        math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-      val json =
-        s"""{"metric":"merge_day_median","value":${med(pT.toSeq)}""" +
-          s""","unit":"sec","kind":"merge"""" +
-          s""","versioned_median":${med(vT.toSeq)}""" +
-          s""","partitioned_median":${med(pT.toSeq)}""" +
-          s""","replay_median":${med(rT.toSeq)}""" +
-          s""","versioned_per_day":${jarr(vT.toSeq)}""" +
-          s""","partitioned_per_day":${jarr(pT.toSeq)}""" +
-          s""","replay_per_day":${jarr(rT.toSeq)}""" +
-          s""","replay_over_partitioned":${med(rT.toSeq) / med(pT.toSeq)}""" +
-          s""","versioned_over_partitioned":${med(vT.toSeq) / med(pT.toSeq)}""" +
-          s""","touched_partitions":${touchedPerDay.mkString("[", ",", "]")}""" +
-          s""","total_partitions":$partTotal""" +
-          s""","table_rows":$tableRows,"days":$days""" +
-          s""","store_scale":$storeScale,"ranges_per_replica":$ranges""" +
-          s""","base_build_sec":${math.round(tBase * 100) / 100.0}""" +
-          s""","identity_ok":true""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
-    }
-
-    // "skip" prices FILE-LEVEL MIN/MAX DATA SKIPPING (r14): the same
-    // replicated orders table committed two ways — SORTED by day
-    // (writeSortedWithStats: near-disjoint per-file date ranges) and
-    // HASH-distributed (same file count, same stats frame, but every
-    // file spans the full seven-year range — the stats exist and
-    // prune nothing, isolating LAYOUT as the thing that makes stats
-    // selective). A one-year aggregate then runs four ways per run:
-    //   skip_sorted — prunedRead on the sorted store (file list cut
-    //                 ~7x BEFORE any skipped footer opens; the prune
-    //                 decision itself is inside the timer);
-    //   scan_sorted — full scan of the sorted store (row-group stats
-    //                 inside each file still help: sorted layout
-    //                 alone, no file pruning);
-    //   skip_hash   — prunedRead on the hash store (stats consulted,
-    //                 nothing prunable — prices the skipping
-    //                 machinery's overhead when it cannot win);
-    //   scan_hash   — the no-layout, no-skipping control.
-    // All four aggregate rows are asserted identical (order-proof
-    // cents-LONG sum + key xor) before any number is reported.
-    if (kind == "skip") {
-      import graft.io.DataSkipping
-      import graft.io.DataSkipping.RangePred
-      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      def table: DataFrame = (0 until storeScale).map(i =>
-          orders.select(
-            (col("o_orderkey") + lit(i.toLong * 10000000L)).as("k"),
-            col("o_custkey").as("ck"),
-            col("o_totalprice").cast("double").as("total"),
-            to_date(col("o_orderdate")).as("day")))
-        .reduce(_ unionByName _)
-      val sortedDir = s"$warehouse/skip_sorted"
-      val hashDir = s"$warehouse/skip_hash"
-      Seq(sortedDir, hashDir).foreach(
-        graft.io.MarkerCommit.deleteRecursively)
-      val files = sys.env.getOrElse("SPARK_GRAFT_SKIP_FILES", "128").toInt
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      def sweep(): Unit = {
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-      }
-      val tSorted = timed(DataSkipping.writeSortedWithStats(
-        table, sortedDir, Seq("day"), files, Seq("day")))
-      val tHash = timed {
-        table.repartition(files, col("k"))
-          .write.parquet(hashDir)
-        DataSkipping.writeStats(spark, hashDir, Seq("day"))
-      }
-      sweep()
-      val pred = RangePred("day", java.sql.Date.valueOf("1996-01-01"),
-        java.sql.Date.valueOf("1996-12-31"))
-      def year(df: DataFrame): DataFrame = df.where(
-        col("day").between(lit("1996-01-01"), lit("1996-12-31")))
-      // order-proof identity row: count + cents-LONG sum + key xor
-      // (a double sum would wobble with partition order)
-      def fpRow(df: DataFrame): (Long, Long, Long) = {
-        val r = year(df).agg(count(lit(1)),
-          sum((col("total") * 100).cast("long")),
-          expr("bit_xor(xxhash64(k))")).head()
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      val arms0: Seq[(String, () => DataFrame)] = Seq(
-        "skip_sorted" -> (() => DataSkipping.prunedRead(spark, sortedDir, pred)),
-        // r15: the CATALYST-integrated path — no explicit prune call;
-        // the year filter (inside fpRow's `year`) is pushed into
-        // SkippingFileIndex.listFiles at plan time. Prices the
-        // plan-time in-memory prune against prunedRead's stats JOB —
-        // the index is rebuilt per read here (worst case: stats
-        // collect per query; a serving deployment holds the index)
-        "fidx_sorted" -> (() =>
-          graft.io.SkippingFileIndex.read(spark, sortedDir)),
-        "scan_sorted" -> (() => spark.read.parquet(sortedDir)),
-        "skip_hash" -> (() => DataSkipping.prunedRead(spark, hashDir, pred)),
-        "scan_hash" -> (() => spark.read.parquet(hashDir)))
-      val fps = arms0.map { case (nm, rd) => nm -> fpRow(rd()) }
-      if (fps.map(_._2).distinct.size != 1) {
-        System.err.println(s"[store-bench] SKIP ARM MISMATCH: $fps")
-        sys.exit(1)
-      }
-      sweep()
-      val (keptSorted, totSorted) =
-        DataSkipping.skipFiles(spark, sortedDir, pred)
-      val (keptHash, totHash) =
-        DataSkipping.skipFiles(spark, hashDir, pred)
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      val times = arms0.map(_._1 -> scala.collection.mutable
-        .ArrayBuffer.empty[Double]).toMap
-      for (r <- 0 until runs) {
-        val order = if (r % 2 == 0) arms0 else arms0.reverse
-        order.foreach { case (nm, rd) =>
-          val t = timed(fpRow(rd()): Unit)
-          sweep()
-          times(nm) += t
-        }
-        System.err.println(f"[store-bench] skip run $r " + arms0.map {
-          case (nm, _) => f"$nm=${times(nm).last}%.2f s" }.mkString(" "))
-      }
-      val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def jarr(xs: Seq[Double]) = xs.map(x =>
-        math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-      val m = arms0.map { case (nm, _) => nm -> med(times(nm).toSeq) }.toMap
-      val json =
-        s"""{"metric":"skip_year_agg_median","value":${m("skip_sorted")}""" +
-          s""","unit":"sec","kind":"skip"""" +
-          arms0.map { case (nm, _) =>
-            s""","${nm}_median":${m(nm)},"${nm}_runs":${jarr(times(nm).toSeq)}"""
-          }.mkString +
-          s""","scan_over_skip_sorted":${m("scan_sorted") / m("skip_sorted")}""" +
-          s""","scan_over_fidx_sorted":${m("scan_sorted") / m("fidx_sorted")}""" +
-          s""","scan_over_skip_hash":${m("scan_hash") / m("skip_hash")}""" +
-          s""","files_kept_sorted":${keptSorted.size}""" +
-          s""","files_total_sorted":$totSorted""" +
-          s""","files_kept_hash":${keptHash.size}""" +
-          s""","files_total_hash":$totHash""" +
-          s""","table_rows":${orders.count() * storeScale}""" +
-          s""","year_rows":${fps.head._2._1}""" +
-          s""","write_sorted_sec":${math.round(tSorted * 100) / 100.0}""" +
-          s""","write_hash_sec":${math.round(tHash * 100) / 100.0}""" +
-          s""","files_per_layout":$files,"runs":$runs""" +
-          s""","store_scale":$storeScale,"identity_ok":true""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
+      s"""{"metric":"sketch_store_append_vs_rebuild","unit":"sec"""" +
+        s""","kind":"sketch",${parts.mkString(",")}""" +
+        s""","store_scale":$storeScale,"runs":$runs""" +
+        jsonTail(loadBefore, Harness.StallProbe.totalSec - stall0)
     }
 
     // "dfp" prices DYNAMIC FILE PRUNING (r16): the star-join shape
@@ -658,25 +286,16 @@ object StoreBench {
     //                 (one per replica), so one [min,max] envelope
     //                 spans nearly the whole domain — the generality
     //                 gap DPP's per-file verdicts don't have.
-    if (kind == "dfp") {
+    def dfp(): String = {
       import graft.io.{DataSkipping, SkipScan}
       val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      def factTable: DataFrame = (0 until storeScale).map(i =>
-          lineitem.select(
-            (col("l_orderkey") + lit(i.toLong * 10000000L)).as("k"),
-            col("l_extendedprice").cast("double").as("price")))
-        .reduce(_ unionByName _)
+      def factTable: DataFrame = replicate(lineitem.select(
+        col("l_orderkey").as("k"),
+        col("l_extendedprice").cast("double").as("price")), "k")
       val factDir = s"$warehouse/dfp_fact"
       graft.io.MarkerCommit.deleteRecursively(factDir)
-      val files = sys.env.getOrElse("SPARK_GRAFT_SKIP_FILES", "128").toInt
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      def sweep(): Unit = {
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-      }
-      val tWrite = timed(DataSkipping.writeSortedWithStats(
+      val tWrite = Harness.timed(DataSkipping.writeSortedWithStats(
         factTable, factDir, Seq("k"), files, Seq("k")))
       sweep()
       // batch from the PER-REPLICA original key (the replicated key
@@ -692,10 +311,8 @@ object StoreBench {
       // still cut 128→19 files but the subquery + 100MB broadcast
       // cost more than the locally page-cached scan it saved
       // (scan_over_dfp 0.66, bench_store_sf1_dfp_x10_fat16.json)
-      val batches = sys.env.getOrElse("SPARK_GRAFT_DFP_BATCHES",
-        "256").toInt
       val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = math.max(1L, math.ceil((mx + 1).toDouble / batches).toLong)
+      val w = math.max(1L, math.ceil((mx + 1).toDouble / dfpBatches).toLong)
       // the manifest is a STORED table (what an ingest pipeline
       // keeps), batch-sorted so the per-query batch filter prunes its
       // row groups — otherwise every arm pays a full 10×orders union
@@ -704,11 +321,8 @@ object StoreBench {
       // join arms ≈ 0.8 s with the fact side nearly free)
       val dimDir = s"$warehouse/dfp_manifest"
       graft.io.MarkerCommit.deleteRecursively(dimDir)
-      (0 until storeScale).map(i =>
-          orders.select(
-            (col("o_orderkey") + lit(i.toLong * 10000000L)).as("dk"),
-            floor(col("o_orderkey") / lit(w)).cast("long").as("batch")))
-        .reduce(_ unionByName _)
+      replicate(orders.select(col("o_orderkey").as("dk"),
+          floor(col("o_orderkey") / lit(w)).cast("long").as("batch")), "dk")
         .repartitionByRange(64, col("batch"), col("dk"))
         .sortWithinPartitions("batch", "dk")
         .write.parquet(dimDir)
@@ -772,61 +386,38 @@ object StoreBench {
         sys.exit(1)
       }
       sweep()
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      val times = arms0.map(_._1 -> scala.collection.mutable
-        .ArrayBuffer.empty[Double]).toMap
-      for (r <- 0 until runs) {
-        val order = if (r % 2 == 0) arms0 else arms0.reverse
-        order.foreach { case (nm, rd) =>
-          val t = timed(fpRow(rd()): Unit)
-          sweep()
-          times(nm) += t
-        }
-        System.err.println(f"[store-bench] dfp run $r " + arms0.map {
-          case (nm, _) => f"$nm=${times(nm).last}%.2f s" }.mkString(" "))
-      }
-      val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def jarr(xs: Seq[Double]) = xs.map(x =>
-        math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-      val m = arms0.map { case (nm, _) => nm -> med(times(nm).toSeq) }.toMap
-      val json =
-        s"""{"metric":"dfp_star_join_median","value":${m("dfp_join")}""" +
-          s""","unit":"sec","kind":"dfp"""" +
-          arms0.map { case (nm, _) =>
-            s""","${nm}_median":${m(nm)},"${nm}_runs":${jarr(times(nm).toSeq)}"""
-          }.mkString +
-          s""","scan_over_dfp":${m("scan_join") / m("dfp_join")}""" +
-          s""","fidx_over_dfp":${m("fidx_join") / m("dfp_join")}""" +
-          s""","manual_over_dfp":${m("manual_range") / m("dfp_join")}""" +
-          s""","files_kept_runtime":${prune.keptRuntime}""" +
-          s""","files_kept_static":${prune.keptStatic}""" +
-          s""","files_total":${prune.total}""" +
-          s""","runtime_keys_declined":${prune.runtimeKeysDeclined}""" +
-          s""","fact_rows":${lineitem.count() * storeScale}""" +
-          s""","join_rows":${fps.head._2._1}""" +
-          s""","dim_batches":$batches""" +
-          s""","write_sorted_sec":${math.round(tWrite * 100) / 100.0}""" +
-          s""","files_per_layout":$files,"runs":$runs""" +
-          s""","store_scale":$storeScale,"identity_ok":true""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
+      val loadBefore = Harness.loadavg
+      val res = fingerprintRuns(arms0, fpRow)
+      def m(nm: String) = res.median(nm)
+      s"""{"metric":"dfp_star_join_median","value":${m("dfp_join")}""" +
+        s""","unit":"sec","kind":"dfp"""" + armsJson(arms0, res) +
+        s""","scan_over_dfp":${m("scan_join") / m("dfp_join")}""" +
+        s""","fidx_over_dfp":${m("fidx_join") / m("dfp_join")}""" +
+        s""","manual_over_dfp":${m("manual_range") / m("dfp_join")}""" +
+        s""","files_kept_runtime":${prune.keptRuntime}""" +
+        s""","files_kept_static":${prune.keptStatic}""" +
+        s""","files_total":${prune.total}""" +
+        s""","runtime_keys_declined":${prune.runtimeKeysDeclined}""" +
+        s""","fact_rows":${lineitem.count() * storeScale}""" +
+        s""","join_rows":${fps.head._2._1}""" +
+        s""","dim_batches":$dfpBatches""" +
+        s""","write_sorted_sec":${Harness.r2(tWrite)}""" +
+        s""","files_per_layout":$files,"runs":$runs""" +
+        s""","store_scale":$storeScale,"identity_ok":true""" +
+        jsonTail(loadBefore, res.stalls.sum)
     }
+
+    // the alternating timed loop of the fingerprint kinds (dfp,
+    // zorder): each arm's read, aggregated to its identity row
+    def fingerprintRuns(arms0: Seq[(String, () => DataFrame)],
+                        fpRow: DataFrame => Any): Harness.Runs =
+      Harness.alternate(s"store-bench $kind", runs,
+        arms0.map { case (nm, rd) => nm -> (() => { fpRow(rd()); () }) },
+        () => sweep())
+    def armsJson(arms0: Seq[(String, _)], res: Harness.Runs): String =
+      arms0.map { case (nm, _) =>
+        s""","${nm}_median":${res.median(nm)},"${nm}_runs":${Harness.jarr(res.times(nm))}"""
+      }.mkString
 
     // "cachescope" makes util.CacheScope LOAD-BEARING (r16 verdict
     // next-step #6): a long-lived service loop running dedup-family
@@ -844,16 +435,8 @@ object StoreBench {
     // The witness is measured storage (persistent-RDD count + cached
     // bytes), never plan text; wall per round is recorded to show
     // the release path costs nothing material.
-    if (kind == "cachescope") {
+    def cacheScope(): String = {
       import graft.util.CacheScope
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select("doc_id", "text")
-      val rounds = sys.env.getOrElse("SPARK_GRAFT_CACHE_ROUNDS", "4").toInt
-      // the retained-arm growth check compares last vs head, which is
-      // vacuous (and always fails) with a single round
-      require(rounds >= 2,
-        s"SPARK_GRAFT_CACHE_ROUNDS must be >= 2 (got $rounds): the " +
-          "retained-arm growth witness needs at least two rounds")
       def slice(r: Int): DataFrame = docs.select(
         (col("doc_id") + lit(r.toLong * 10000000L)).as("doc_id"),
         col("text"))
@@ -870,12 +453,9 @@ object StoreBench {
       // warm-up outside the measurement (JIT + page cache), then a
       // clean baseline
       pipelineRound(-1)
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
+      val loadBefore = Harness.loadavg
+      Harness.StallProbe.start()
+      val stall0 = Harness.StallProbe.totalSec
       // arm order is REVERSIBLE (r17 judge what's-wrong #2: the
       // released arm always ran first and cold, so a skimming reader
       // attributed its JIT warm-up to the release path). Default
@@ -883,8 +463,6 @@ object StoreBench {
       // retained_first flips it — the committed artifact pair (one
       // per order) is the de-confounded wall story. Each arm starts
       // from a clean cache state and its own frame baseline.
-      val retainedFirst = sys.env.getOrElse("SPARK_GRAFT_CACHE_ORDER",
-        "released_first") == "retained_first"
       var armBase = 0
       def resetArm(): Unit = {
         CacheScope.releaseAll(blocking = true)
@@ -898,7 +476,7 @@ object StoreBench {
       var relLeakMb = 0.0
       def runReleased(): Unit = {
         for (r <- 0 until rounds) {
-          relWall += timed {
+          relWall += Harness.timed {
             relCounts += pipelineRound(r)
             relReleased += CacheScope.releaseAll(blocking = true)
           }
@@ -915,7 +493,7 @@ object StoreBench {
       var retFinal = 0
       def runRetained(): Unit = {
         for (r <- 0 until rounds) {
-          retWall += timed { retCounts += pipelineRound(r) }
+          retWall += Harness.timed { retCounts += pipelineRound(r) }
           retFrames += frames - armBase
           System.err.println(f"[store-bench] cachescope retained r$r " +
             f"${retWall.last}%.2f s, frames=${retFrames.last}")
@@ -927,7 +505,7 @@ object StoreBench {
       if (retainedFirst) { runRetained(); resetArm(); runReleased() }
       else { runReleased(); resetArm(); runRetained() }
       CacheScope.releaseAll(blocking = true) // leave the JVM clean
-      val stallSec = StallProbe.totalSec - stall0
+      val stallSec = Harness.StallProbe.totalSec - stall0
       // identity: the same slices produce the same counts on both arms
       if (relCounts.toSeq != retCounts.toSeq) {
         System.err.println(
@@ -947,42 +525,24 @@ object StoreBench {
           s"[store-bench] RETAINED ARM DID NOT GROW: $retFrames")
         sys.exit(1)
       }
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def jarr(xs: Seq[Double]) = xs.map(x =>
-        math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
       def jarrI(xs: Seq[Int]) = xs.mkString("[", ",", "]")
-      val json =
-        s"""{"metric":"cachescope_round_median","value":${med(relWall.toSeq)}""" +
-          s""","unit":"sec","kind":"cachescope"""" +
-          s""","released_runs":${jarr(relWall.toSeq)}""" +
-          s""","retained_runs":${jarr(retWall.toSeq)}""" +
-          s""","released_frames_after_round":${jarrI(relFrames.toSeq)}""" +
-          s""","retained_frames_after_round":${jarrI(retFrames.toSeq)}""" +
-          s""","released_total":$relReleased""" +
-          s""","retained_final_frames":$retFinal""" +
-          s""","released_leak_mb":${math.round(relLeakMb * 100) / 100.0}""" +
-          s""","retained_leak_mb":${math.round(retLeakMb * 100) / 100.0}""" +
-          s""","released_over_retained":${
-            med(relWall.toSeq) / med(retWall.toSeq)}""" +
-          s""","swallowed":${CacheScope.swallowedCount}""" +
-          s""","arm_order":"${if (retainedFirst) "retained_first"
-            else "released_first"}"""" +
-          s""","rounds":$rounds,"identity_ok":true""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
+      s"""{"metric":"cachescope_round_median","value":${Harness.median(relWall.toSeq)}""" +
+        s""","unit":"sec","kind":"cachescope"""" +
+        s""","released_runs":${Harness.jarr(relWall.toSeq)}""" +
+        s""","retained_runs":${Harness.jarr(retWall.toSeq)}""" +
+        s""","released_frames_after_round":${jarrI(relFrames.toSeq)}""" +
+        s""","retained_frames_after_round":${jarrI(retFrames.toSeq)}""" +
+        s""","released_total":$relReleased""" +
+        s""","retained_final_frames":$retFinal""" +
+        s""","released_leak_mb":${Harness.r2(relLeakMb)}""" +
+        s""","retained_leak_mb":${Harness.r2(retLeakMb)}""" +
+        s""","released_over_retained":${
+          Harness.median(relWall.toSeq) / Harness.median(retWall.toSeq)}""" +
+        s""","swallowed":${CacheScope.swallowedCount}""" +
+        s""","arm_order":"${if (retainedFirst) "retained_first"
+          else "released_first"}"""" +
+        s""","rounds":$rounds,"identity_ok":true""" +
+        jsonTail(loadBefore, stallSec)
     }
 
     // "zorder" prices the MULTI-COLUMN layout: the same table
@@ -992,33 +552,23 @@ object StoreBench {
     // `day` on the sorted one. Arms per run (order alternating,
     // identity fingerprint-asserted first): skip_sorted / skip_zorder
     // (pruned reads) and scan_sorted / scan_zorder (full scans).
-    if (kind == "zorder") {
+    def zorder(): String = {
       import graft.io.DataSkipping
       import graft.io.DataSkipping.{AndPred, RangePred}
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      def table: DataFrame = (0 until storeScale).map(i =>
-          orders.select(
-            (col("o_orderkey") + lit(i.toLong * 10000000L)).as("k"),
-            col("o_custkey").as("ck"),
-            col("o_totalprice").cast("double").as("total"),
-            to_date(col("o_orderdate")).as("day")))
-        .reduce(_ unionByName _)
+      def table: DataFrame = replicate(orders.select(
+        col("o_orderkey").as("k"), col("o_custkey").as("ck"),
+        col("o_totalprice").cast("double").as("total"),
+        to_date(col("o_orderdate")).as("day")), "k")
       val sortedDir = s"$warehouse/z_day_sorted"
       val zDir = s"$warehouse/z_zordered"
       Seq(sortedDir, zDir).foreach(
         graft.io.MarkerCommit.deleteRecursively)
-      val files = sys.env.getOrElse("SPARK_GRAFT_SKIP_FILES", "128").toInt
-      def timed(body: => Unit): Double = {
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }
-      def sweep(): Unit = {
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-      }
       val ckMax = orders.agg(max(col("o_custkey"))).head().getLong(0)
       val ckHi = ckMax / 10 // bottom customer decile
-      val tSorted = timed(DataSkipping.writeSortedWithStats(
+      val tSorted = Harness.timed(DataSkipping.writeSortedWithStats(
         table, sortedDir, Seq("day"), files, Seq("day", "ck")))
-      val tZ = timed(DataSkipping.writeZOrderedWithStats(
+      val tZ = Harness.timed(DataSkipping.writeZOrderedWithStats(
         table, zDir, Seq("day", "ck"), files))
       sweep()
       val pred = AndPred(
@@ -1047,66 +597,31 @@ object StoreBench {
       sweep()
       val (keptS, totS) = DataSkipping.skipFiles(spark, sortedDir, pred)
       val (keptZ, totZ) = DataSkipping.skipFiles(spark, zDir, pred)
-      val loadBefore = loadavg
-      StallProbe.start()
-      val stall0 = StallProbe.totalSec
-      val times = arms0.map(_._1 -> scala.collection.mutable
-        .ArrayBuffer.empty[Double]).toMap
-      for (r <- 0 until runs) {
-        val order = if (r % 2 == 0) arms0 else arms0.reverse
-        order.foreach { case (nm, rd) =>
-          val t = timed(fpRow(rd()): Unit)
-          sweep()
-          times(nm) += t
-        }
-        System.err.println(f"[store-bench] zorder run $r " + arms0.map {
-          case (nm, _) => f"$nm=${times(nm).last}%.2f s" }.mkString(" "))
-      }
-      val stallSec = StallProbe.totalSec - stall0
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      def jarr(xs: Seq[Double]) = xs.map(x =>
-        math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-      val m = arms0.map { case (nm, _) => nm -> med(times(nm).toSeq) }.toMap
-      val json =
-        s"""{"metric":"zorder_2d_slice_median","value":${m("skip_zorder")}""" +
-          s""","unit":"sec","kind":"zorder"""" +
-          arms0.map { case (nm, _) =>
-            s""","${nm}_median":${m(nm)},"${nm}_runs":${jarr(times(nm).toSeq)}"""
-          }.mkString +
-          s""","files_kept_sorted":${keptS.size}""" +
-          s""","files_kept_zorder":${keptZ.size}""" +
-          s""","files_total":$totZ,"files_total_sorted":$totS""" +
-          s""","slice_rows":${fps.head._2._1}""" +
-          s""","table_rows":${orders.count() * storeScale}""" +
-          s""","ck_hi":$ckHi""" +
-          s""","write_sorted_sec":${math.round(tSorted * 100) / 100.0}""" +
-          s""","write_zorder_sec":${math.round(tZ * 100) / 100.0}""" +
-          s""","files_per_layout":$files,"runs":$runs""" +
-          s""","store_scale":$storeScale,"identity_ok":true""" +
-          s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-          s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-          s""","cpus":"$cpus","sf":"$sfDir"}"""
-      println(json)
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "store_bench.json")
-      try Files.writeString(Paths.get(out), json + "\n")
-      catch { case e: Throwable =>
-        System.err.println(s"[store-bench] write $out failed: $e") }
-      spark.stop()
-      return
+      val loadBefore = Harness.loadavg
+      val res = fingerprintRuns(arms0, fpRow)
+      s"""{"metric":"zorder_2d_slice_median","value":${res.median("skip_zorder")}""" +
+        s""","unit":"sec","kind":"zorder"""" + armsJson(arms0, res) +
+        s""","files_kept_sorted":${keptS.size}""" +
+        s""","files_kept_zorder":${keptZ.size}""" +
+        s""","files_total":$totZ,"files_total_sorted":$totS""" +
+        s""","slice_rows":${fps.head._2._1}""" +
+        s""","table_rows":${orders.count() * storeScale}""" +
+        s""","ck_hi":$ckHi""" +
+        s""","write_sorted_sec":${Harness.r2(tSorted)}""" +
+        s""","write_zorder_sec":${Harness.r2(tZ)}""" +
+        s""","files_per_layout":$files,"runs":$runs""" +
+        s""","store_scale":$storeScale,"identity_ok":true""" +
+        jsonTail(loadBefore, res.stalls.sum)
     }
 
     /** One bench-able store layout: the index frames it stores, the
       * increment joined against them, and the store lifecycle — the
-      * bucketed-table defaults serve sig/signband; the ivf kind
-      * overrides with the directory-partitioned store. (An abstract
-      * class, not a trait: local-trait default methods and their
-      * anonymous subclasses each capture the enclosing `spark`,
-      * which scalac 2.13 emits as a duplicate field.) */
+      * bucketed-table defaults serve sig/signband/cdc/shingle/gram;
+      * [[PartitionedKind]] overrides with the directory-partitioned
+      * store. (An abstract class, not a trait: local-trait default
+      * methods and their anonymous subclasses each capture the
+      * enclosing `spark`, which scalac 2.13 emits as a duplicate
+      * field.) */
     abstract class StoreKind {
       def keys: Seq[String]
       /** Index of the replicated reference corpus (the store body). */
@@ -1124,18 +639,18 @@ object StoreBench {
         * once, outside the increment timers. */
       def refreshDayN(): Option[Double] = None
       def writeMain(): Unit = graft.io.Bucketing.writeBucketed(
-        refIndex(), "store_bench_main", keys, buckets = shuffle.toInt)
+        refIndex(), "store_bench_main", keys, buckets = shuffle)
       def readMain(): DataFrame = spark.table("store_bench_main")
       /** Fair control: same rows, same file count, no layout. */
-      def writePlain(): Unit = refIndex().repartition(shuffle.toInt)
+      def writePlain(): Unit = refIndex().repartition(shuffle)
         .write.mode("overwrite").parquet(plainDir)
       def readPlain(): DataFrame = spark.read.parquet(plainDir)
       def buildDayN(): Unit = graft.io.Bucketing.writeBucketed(
-        refIndex(), "store_bench_dayn", keys, buckets = shuffle.toInt)
+        refIndex(), "store_bench_dayn", keys, buckets = shuffle)
       /** One daily maintenance cycle; true if it compacted. */
       def appendDay(d: Int, maxFragments: Int): Boolean =
         graft.io.Bucketing.appendAndMaintain(dayIndex(d),
-          "store_bench_dayn", keys, buckets = shuffle.toInt,
+          "store_bench_dayn", keys, buckets = shuffle,
           maxFragments = maxFragments)
       def readDayN(): DataFrame = spark.table("store_bench_dayn")
       def dayNFragMax(): Int = graft.io.Bucketing
@@ -1148,118 +663,12 @@ object StoreBench {
       def cleanup(): Unit = setup()
     }
 
-    // 95/5 split on a hash, not id ranges: ids correlate with
-    // generation order, and a contiguous "new batch" would share
-    // boilerplate unrepresentatively. Distinct-id copies: same
-    // signature/bit DISTRIBUTION as a larger corpus, and ref×ref
-    // never meets in the incremental join, so the copies only do
-    // what they're for — give the store volume.
-    val sigKind = new StoreKind {
-      private val numHashes = 32
-      private val bands = 8
-      private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      private def sigsOf(d: DataFrame): DataFrame =
-        Dedup.minhashSignatures(d, col("doc_id"), col("text"),
-          n = 3, numHashes = numHashes)
-      private val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
-      def keys: Seq[String] = Seq("band", "bk")
-      def refIndex(): DataFrame = Dedup.bandIndex(sigsOf(
-        (0 until storeScale).map(i =>
-            docs.where(!isNew).select(
-              (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-              col("text")))
-          .reduce(_ unionByName _)), numHashes, bands)
-      def dayIndex(d: Int): DataFrame = Dedup.bandIndex(sigsOf(
-        docs.where(pmod(xxhash64(col("doc_id")), lit(20)) === d)
-          .select((col("doc_id") + lit(900000000L + d * 10000000L))
-            .as("doc_id"), col("text"))), numHashes, bands)
-      def prepIncrement(): (DataFrame => Unit, Long) = {
-        // signatures to parquet, not a cache — the between-arm sweep
-        // clears caches; identical work on both arms either way
-        val dir = s"$warehouse/new_sigs"
-        sigsOf(docs.where(isNew)).write.mode("overwrite").parquet(dir)
-        val newSigs = spark.read.parquet(dir)
-        (refIndex => Dedup.incrementalLshPairsFromIndex(newSigs,
-            refIndex, numHashes, bands, threshold = 0.5)
-          .write.format("noop").mode("overwrite").save(),
-          newSigs.count())
-      }
-    }
-
-    val signBandKind = new StoreKind {
-      import graft.operators.Similarity
-      private val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-      private val dim = emb.select(size(col("embedding"))).head().getInt(0)
-      private val refRows =
-        emb.where(pmod(xxhash64(col("vec_id")), lit(20)) =!= 0)
-          .count() * storeScale
-      // the rung self-configures from the store size, exactly as a
-      // real deployment's would
-      private val (planes, bits) = Similarity.autoPlanes(refRows, dim)
-      private val isNew = pmod(xxhash64(col("vec_id")), lit(20)) === 0
-      private def refVecs: DataFrame =
-        (0 until storeScale).map(i =>
-            emb.where(!isNew).select(
-              (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
-              col("embedding")))
-          .reduce(_ unionByName _)
-      def keys: Seq[String] = Seq("band", "bits")
-      def refIndex(): DataFrame = Similarity.signBandIndex(refVecs,
-        planes, bits)
-      def dayIndex(d: Int): DataFrame = Similarity.signBandIndex(
-        emb.where(pmod(xxhash64(col("vec_id")), lit(20)) === d)
-          .select((col("vec_id") + lit(900000000L + d * 10000000L))
-            .as("vec_id"), col("embedding")), planes, bits)
-      def prepIncrement(): (DataFrame => Unit, Long) = {
-        // the verify step re-scans the raw ref vectors (by design —
-        // candidates ≪ corpus); materialize BOTH sides to parquet so
-        // neither arm's timer pays the 10-way union lineage
-        val refDir = s"$warehouse/ref_vecs"
-        val newDir = s"$warehouse/new_vecs"
-        refVecs.write.mode("overwrite").parquet(refDir)
-        emb.where(isNew).select(col("vec_id"), col("embedding"))
-          .write.mode("overwrite").parquet(newDir)
-        val refV = spark.read.parquet(refDir)
-        val newV = spark.read.parquet(newDir)
-        (refIndex => Similarity.incrementalNearDupPairsFromIndex(
-            newV, refV, refIndex, threshold = 0.9, planes, bits)
-          .write.format("noop").mode("overwrite").save(),
-          newV.count())
-      }
-    }
-
-    val ivfKind = new StoreKind {
-      import graft.operators.Similarity
-      private val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-      private val numCentroids =
-        sys.env.getOrElse("SPARK_GRAFT_IVF_CENTROIDS", "64").toInt
-      private val nProbe = sys.env.getOrElse("SPARK_GRAFT_IVF_PROBE", "4").toInt
-      private val isNew = pmod(xxhash64(col("vec_id")), lit(20)) === 0
-      // the layout is trained ONCE on the unscaled reference slice
-      // and frozen (q73's contract) — distinct-id copies share
-      // vectors, so training on the copies would find the same
-      // centroids at storeScale× the cost
-      private lazy val cents = Similarity.ivfCentroids(emb.where(!isNew),
-        numCentroids, lloydIters = 0, seedKey = c => md5(c.cast("string")))
-      private def refVecs: DataFrame =
-        (0 until storeScale).map(i =>
-            emb.where(!isNew).select(
-              (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
-              col("embedding")))
-          .reduce(_ unionByName _)
-      private val mainPath = s"$warehouse/ivf_main"
-      private val dayNPath = s"$warehouse/ivf_dayn"
+    /** A directory-partitioned (by `c_id`) IVF store, main and day-N
+      * under `<warehouse>/<name>_main` and `<name>_dayn`. */
+    abstract class PartitionedKind(name: String) extends StoreKind {
+      private val mainPath = s"$warehouse/${name}_main"
+      private val dayNPath = s"$warehouse/${name}_dayn"
       def keys: Seq[String] = Seq("c_id")
-      def refIndex(): DataFrame = Similarity.ivfAssignments(refVecs, cents)
-      def dayIndex(d: Int): DataFrame = Similarity.ivfAssignments(
-        emb.where(pmod(xxhash64(col("vec_id")), lit(20)) === d)
-          .select((col("vec_id") + lit(900000000L + d * 10000000L))
-            .as("vec_id"), col("embedding")), cents)
-      override def extraJson: String =
-        s""","num_centroids":$numCentroids,"n_probe":$nProbe""" +
-          s""","n_queries":${sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8")}"""
       override def writeMain(): Unit =
         graft.io.PartitionedStore.write(refIndex(), mainPath, "c_id")
       override def readMain(): DataFrame = spark.read.parquet(mainPath)
@@ -1272,22 +681,112 @@ object StoreBench {
       override def dayNFragMax(): Int = graft.io.PartitionedStore
         .filesPerPartition(spark, dayNPath, "c_id")
         .values.maxOption.getOrElse(0)
+      override def extraJson: String =
+        s""","num_centroids":$numCentroids,"n_probe":$nProbe""" +
+          s""","n_queries":$nQueries"""
+    }
+
+    val sigKind = new StoreKind {
+      private val numHashes = 32
+      private val bands = 8
+      private def sigsOf(d: DataFrame): DataFrame =
+        Dedup.minhashSignatures(d, col("doc_id"), col("text"),
+          n = 3, numHashes = numHashes)
+      def keys: Seq[String] = Seq("band", "bk")
+      def refIndex(): DataFrame = Dedup.bandIndex(sigsOf(
+        replicate(docs.where(!isNew("doc_id")), "doc_id")), numHashes, bands)
+      def dayIndex(d: Int): DataFrame = Dedup.bandIndex(sigsOf(
+        daySlice(docs, "doc_id", d)), numHashes, bands)
       def prepIncrement(): (DataFrame => Unit, Long) = {
-        // the timed body is the PROBE in its SERVING shape: a small
-        // query batch, so the union of probed clusters stays well
-        // under numCentroids and dynamic partition pruning has
-        // something to prune. (A day-batch of ~1000 queries probes
-        // every cluster collectively — first-shot lesson: partsRead
-        // was 64/64 and the "pruned" arm was just a full scan with
-        // more files.) Read suppression is the claim priced:
-        // nQueries × nProbe directories read instead of the store.
-        val nQueries =
-          sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8").toInt
-        val qDir = s"$warehouse/query_vecs"
-        emb.where(isNew).select(col("vec_id"), col("embedding"))
-          .orderBy("vec_id").limit(nQueries)
-          .write.mode("overwrite").parquet(qDir)
-        val qV = spark.read.parquet(qDir)
+        // signatures to parquet, not a cache — the between-arm sweep
+        // clears caches; identical work on both arms either way
+        val dir = s"$warehouse/new_sigs"
+        sigsOf(docs.where(isNew("doc_id"))).write.mode("overwrite").parquet(dir)
+        val newSigs = spark.read.parquet(dir)
+        (refIndex => Dedup.incrementalLshPairsFromIndex(newSigs,
+            refIndex, numHashes, bands, threshold = 0.5)
+          .write.format("noop").mode("overwrite").save(),
+          newSigs.count())
+      }
+    }
+
+    lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
+      .select("vec_id", "embedding")
+    def refVecs: DataFrame = replicate(emb.where(!isNew("vec_id")), "vec_id")
+
+    lazy val signBandKind = new StoreKind {
+      import graft.operators.Similarity
+      private val dim = emb.select(size(col("embedding"))).head().getInt(0)
+      private val refRows =
+        emb.where(!isNew("vec_id")).count() * storeScale
+      // the rung self-configures from the store size, exactly as a
+      // real deployment's would
+      private val (planes, bits) = Similarity.autoPlanes(refRows, dim)
+      def keys: Seq[String] = Seq("band", "bits")
+      def refIndex(): DataFrame = Similarity.signBandIndex(refVecs,
+        planes, bits)
+      def dayIndex(d: Int): DataFrame = Similarity.signBandIndex(
+        daySlice(emb, "vec_id", d), planes, bits)
+      def prepIncrement(): (DataFrame => Unit, Long) = {
+        // the verify step re-scans the raw ref vectors (by design —
+        // candidates ≪ corpus); materialize BOTH sides to parquet so
+        // neither arm's timer pays the 10-way union lineage
+        val refDir = s"$warehouse/ref_vecs"
+        val newDir = s"$warehouse/new_vecs"
+        refVecs.write.mode("overwrite").parquet(refDir)
+        emb.where(isNew("vec_id")).write.mode("overwrite").parquet(newDir)
+        val refV = spark.read.parquet(refDir)
+        val newV = spark.read.parquet(newDir)
+        (refIndex => Similarity.incrementalNearDupPairsFromIndex(
+            newV, refV, refIndex, threshold = 0.9, planes, bits)
+          .write.format("noop").mode("overwrite").save(),
+          newV.count())
+      }
+    }
+
+    // the timed body of the IVF-family kinds is the PROBE in its
+    // SERVING shape: a small query batch, so the union of probed
+    // clusters stays well under numCentroids and dynamic partition
+    // pruning has something to prune. (A day-batch of ~1000 queries
+    // probes every cluster collectively — first-shot lesson:
+    // partsRead was 64/64 and the "pruned" arm was just a full scan
+    // with more files.) Read suppression is the claim priced:
+    // nQueries × nProbe directories read instead of the store.
+    def queryVecs(vecs: DataFrame, dir: String): DataFrame = {
+      vecs.where(isNew("vec_id")).orderBy("vec_id").limit(nQueries)
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    // the pq/opq probe: it dispatches on the store's schema (code ⇒
+    // ADC over the coded store, ec ⇒ exact cosine over the
+    // full-vector control)
+    def pqProbe(cents: DataFrame, books: DataFrame,
+                qV: DataFrame): (DataFrame => Unit, Long) =
+      (store => {
+        val out =
+          if (store.columns.contains("code"))
+            graft.operators.Pq.annIvfPqTopKFromIndex(cents, store, books,
+              qV, nProbe = nProbe, k = 5, tabulated = tabulated)
+          else graft.operators.Similarity.annIvfTopKFromIndex(cents,
+            store, qV, nProbe = nProbe, k = 5)
+        out.write.format("noop").mode("overwrite").save()
+      }, qV.count())
+
+    lazy val ivfKind = new PartitionedKind("ivf") {
+      import graft.operators.Similarity
+      // the layout is trained ONCE on the unscaled reference slice
+      // and frozen (q73's contract) — distinct-id copies share
+      // vectors, so training on the copies would find the same
+      // centroids at storeScale× the cost
+      private lazy val cents = Similarity.ivfCentroids(
+        emb.where(!isNew("vec_id")), numCentroids, lloydIters = 0,
+        seedKey = c => md5(c.cast("string")))
+      def refIndex(): DataFrame = Similarity.ivfAssignments(refVecs, cents)
+      def dayIndex(d: Int): DataFrame =
+        Similarity.ivfAssignments(daySlice(emb, "vec_id", d), cents)
+      def prepIncrement(): (DataFrame => Unit, Long) = {
+        val qV = queryVecs(emb, s"$warehouse/query_vecs")
         (store => Similarity.annIvfTopKFromIndex(cents, store, qV,
             nProbe = nProbe, k = 5)
           .write.format("noop").mode("overwrite").save(),
@@ -1300,14 +799,14 @@ object StoreBench {
         // directory (the PartitionedStore.write discipline — an
         // in-place overwrite loses files under a lazy reader)
         val succ = s"$warehouse/ivf_dayn_refreshed"
-        val t0 = System.nanoTime()
-        val store = readDayN()
-        val cents2 = Similarity.ivfRefreshCentroids(store, lloydIters = 1)
-        val vecs = store.select(col("n_id").as("vec_id"),
-          col("ec").as("embedding"))
-        graft.io.PartitionedStore.write(
-          Similarity.ivfAssignments(vecs, cents2), succ, "c_id")
-        Some((System.nanoTime() - t0) / 1e9)
+        Some(Harness.timed {
+          val store = readDayN()
+          val cents2 = Similarity.ivfRefreshCentroids(store, lloydIters = 1)
+          val vecs = store.select(col("n_id").as("vec_id"),
+            col("ec").as("embedding"))
+          graft.io.PartitionedStore.write(
+            Similarity.ivfAssignments(vecs, cents2), succ, "c_id")
+        })
       }
     }
 
@@ -1316,89 +815,34 @@ object StoreBench {
     // by c_id and probed with the same routing + static pruning, so
     // the only difference the timer sees is what PQ claims: ~numSub
     // small ints read (and ADC'd) per stored vector instead of dim
-    // floats (and exact cosine). The shared probe body dispatches on
-    // the store's schema (code ⇒ ADC, ec ⇒ cosine).
-    val pqKind = new StoreKind {
+    // floats (and exact cosine).
+    lazy val pqKind = new PartitionedKind("pq") {
       import graft.operators.{Pq, Similarity}
-      private val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-      private val numCentroids =
-        sys.env.getOrElse("SPARK_GRAFT_IVF_CENTROIDS", "64").toInt
-      private val nProbe = sys.env.getOrElse("SPARK_GRAFT_IVF_PROBE", "4").toInt
-      private val numSub = sys.env.getOrElse("SPARK_GRAFT_PQ_NUMSUB", "16").toInt
-      private val numCodewords =
-        sys.env.getOrElse("SPARK_GRAFT_PQ_CODEWORDS", "64").toInt
-      // tabulated ADC is the serving default (the measured 7–12× at
-      // serving-budget codebooks); the literal path stays reachable
-      private val tabulated =
-        sys.env.getOrElse("SPARK_GRAFT_PQ_TABULATED", "true").toBoolean
-      private val isNew = pmod(xxhash64(col("vec_id")), lit(20)) === 0
       // layout + codebooks trained once on the unscaled slice
       // (distinct-id copies share vectors; the ivf kind's argument)
-      private lazy val cents = Similarity.ivfCentroids(emb.where(!isNew),
-        numCentroids, lloydIters = 0, seedKey = c => md5(c.cast("string")))
-      private lazy val books = Pq.pqCodebooks(emb.where(!isNew),
+      private lazy val cents = Similarity.ivfCentroids(
+        emb.where(!isNew("vec_id")), numCentroids, lloydIters = 0,
+        seedKey = c => md5(c.cast("string")))
+      private lazy val books = Pq.pqCodebooks(emb.where(!isNew("vec_id")),
         numSub, numCodewords, lloydIters = 1)
-      private def refVecs: DataFrame =
-        (0 until storeScale).map(i =>
-            emb.where(!isNew).select(
-              (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
-              col("embedding")))
-          .reduce(_ unionByName _)
       private def codedOf(vecs: DataFrame): DataFrame =
         Similarity.ivfAssignments(vecs, cents).select("c_id", "n_id")
           .join(Pq.pqEncode(vecs, books).withColumnRenamed("vec_id", "n_id"),
             "n_id")
-      private val mainPath = s"$warehouse/pq_main"
-      private val dayNPath = s"$warehouse/pq_dayn"
       private val fullPath = s"$warehouse/pq_full_ctl"
-      def keys: Seq[String] = Seq("c_id")
       def refIndex(): DataFrame = codedOf(refVecs)
-      def dayIndex(d: Int): DataFrame = codedOf(
-        emb.where(pmod(xxhash64(col("vec_id")), lit(20)) === d)
-          .select((col("vec_id") + lit(900000000L + d * 10000000L))
-            .as("vec_id"), col("embedding")))
-      override def extraJson: String =
-        s""","num_centroids":$numCentroids,"n_probe":$nProbe""" +
-          s""","pq_num_sub":$numSub,"pq_codewords":$numCodewords""" +
-          s""","pq_tabulated":$tabulated""" +
-          s""","n_queries":${sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8")}"""
-      override def writeMain(): Unit =
-        graft.io.PartitionedStore.write(refIndex(), mainPath, "c_id")
-      override def readMain(): DataFrame = spark.read.parquet(mainPath)
-      override def buildDayN(): Unit =
-        graft.io.PartitionedStore.write(refIndex(), dayNPath, "c_id")
-      override def appendDay(d: Int, maxFragments: Int): Boolean =
-        graft.io.PartitionedStore.appendAndMaintain(dayIndex(d),
-          dayNPath, "c_id", maxFragments = maxFragments).nonEmpty
-      override def readDayN(): DataFrame = spark.read.parquet(dayNPath)
-      override def dayNFragMax(): Int = graft.io.PartitionedStore
-        .filesPerPartition(spark, dayNPath, "c_id")
-        .values.maxOption.getOrElse(0)
+      def dayIndex(d: Int): DataFrame = codedOf(daySlice(emb, "vec_id", d))
+      override def extraJson: String = super.extraJson +
+        s""","pq_num_sub":$numSub,"pq_codewords":$numCodewords""" +
+        s""","pq_tabulated":$tabulated"""
       // "plain" control = the FULL-VECTOR inverted file, same
       // partitioning: not an unbucketed copy of the same rows (the
       // sig/signband control) but the same layout carrying fat rows
       override def writePlain(): Unit = graft.io.PartitionedStore.write(
         Similarity.ivfAssignments(refVecs, cents), fullPath, "c_id")
       override def readPlain(): DataFrame = spark.read.parquet(fullPath)
-      def prepIncrement(): (DataFrame => Unit, Long) = {
-        val nQueries =
-          sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8").toInt
-        val qDir = s"$warehouse/pq_query_vecs"
-        emb.where(isNew).select(col("vec_id"), col("embedding"))
-          .orderBy("vec_id").limit(nQueries)
-          .write.mode("overwrite").parquet(qDir)
-        val qV = spark.read.parquet(qDir)
-        (store => {
-          val out =
-            if (store.columns.contains("code"))
-              Pq.annIvfPqTopKFromIndex(cents, store, books, qV,
-                nProbe = nProbe, k = 5, tabulated = tabulated)
-            else Similarity.annIvfTopKFromIndex(cents, store, qV,
-              nProbe = nProbe, k = 5)
-          out.write.format("noop").mode("overwrite").save()
-        }, qV.count())
-      }
+      def prepIncrement(): (DataFrame => Unit, Long) =
+        pqProbe(cents, books, queryVecs(emb, s"$warehouse/pq_query_vecs"))
     }
 
     // opq kind: the OPQ-rotated IVF-PQ store — pqKind's arms (coded
@@ -1410,25 +854,13 @@ object StoreBench {
     // re-encodes, and commits the whole serving artifact through
     // PqIndexStore — the ivfRefresh analog for the learned rotation,
     // priced end to end including the artifact write.
-    val opqKind = new StoreKind {
+    lazy val opqKind = new PartitionedKind("opq") {
       import graft.operators.{Pq, Similarity}
-      private val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-      private val numCentroids =
-        sys.env.getOrElse("SPARK_GRAFT_IVF_CENTROIDS", "64").toInt
-      private val nProbe = sys.env.getOrElse("SPARK_GRAFT_IVF_PROBE", "4").toInt
-      private val numSub = sys.env.getOrElse("SPARK_GRAFT_PQ_NUMSUB", "16").toInt
-      private val numCodewords =
-        sys.env.getOrElse("SPARK_GRAFT_PQ_CODEWORDS", "64").toInt
-      private val tabulated =
-        sys.env.getOrElse("SPARK_GRAFT_PQ_TABULATED", "true").toBoolean
-      private val nDays = sys.env.getOrElse("SPARK_GRAFT_STORE_DAYS", "5").toInt
-      private val isNew = pmod(xxhash64(col("vec_id")), lit(20)) === 0
       // rotation + codebooks + layout trained once on the unscaled
       // slice (the pq kind's argument: distinct-id copies share
       // vectors)
       private lazy val trained: (Seq[Seq[Double]], DataFrame) = {
-        val slice = emb.where(!isNew)
+        val slice = emb.where(!isNew("vec_id"))
         Pq.opqTrain(slice, numSub, numCodewords, opqIters = 1,
           lloydIters = 1,
           initRotation = Some(Pq.eigenAllocationInit(slice, numSub)))
@@ -1436,74 +868,30 @@ object StoreBench {
       private lazy val rot = trained._1
       private lazy val books = trained._2
       private lazy val cents = Similarity.ivfCentroids(
-        Pq.rotate(emb.where(!isNew), rot), numCentroids,
+        Pq.rotate(emb.where(!isNew("vec_id")), rot), numCentroids,
         lloydIters = 0, seedKey = c => md5(c.cast("string")))
-      private def refVecs: DataFrame =
-        (0 until storeScale).map(i =>
-            emb.where(!isNew).select(
-              (col("vec_id") + lit(i.toLong * 10000000L)).as("vec_id"),
-              col("embedding")))
-          .reduce(_ unionByName _)
-      private def dayVecs(d: Int): DataFrame =
-        emb.where(pmod(xxhash64(col("vec_id")), lit(20)) === d)
-          .select((col("vec_id") + lit(900000000L + d * 10000000L))
-            .as("vec_id"), col("embedding"))
       private def codedOf(vecs: DataFrame): DataFrame = {
         val rx = Pq.rotate(vecs, rot)
         Similarity.ivfAssignments(rx, cents).select("c_id", "n_id")
           .join(Pq.pqEncode(rx, books).withColumnRenamed("vec_id", "n_id"),
             "n_id")
       }
-      private val mainPath = s"$warehouse/opq_main"
-      private val dayNPath = s"$warehouse/opq_dayn"
       private val fullPath = s"$warehouse/opq_full_ctl"
-      def keys: Seq[String] = Seq("c_id")
       def refIndex(): DataFrame = codedOf(refVecs)
-      def dayIndex(d: Int): DataFrame = codedOf(dayVecs(d))
-      override def extraJson: String =
-        s""","num_centroids":$numCentroids,"n_probe":$nProbe""" +
-          s""","pq_num_sub":$numSub,"pq_codewords":$numCodewords""" +
-          s""","pq_tabulated":$tabulated,"opq_rotated":true""" +
-          s""","n_queries":${sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8")}"""
-      override def writeMain(): Unit =
-        graft.io.PartitionedStore.write(refIndex(), mainPath, "c_id")
-      override def readMain(): DataFrame = spark.read.parquet(mainPath)
-      override def buildDayN(): Unit =
-        graft.io.PartitionedStore.write(refIndex(), dayNPath, "c_id")
-      override def appendDay(d: Int, maxFragments: Int): Boolean =
-        graft.io.PartitionedStore.appendAndMaintain(dayIndex(d),
-          dayNPath, "c_id", maxFragments = maxFragments).nonEmpty
-      override def readDayN(): DataFrame = spark.read.parquet(dayNPath)
-      override def dayNFragMax(): Int = graft.io.PartitionedStore
-        .filesPerPartition(spark, dayNPath, "c_id")
-        .values.maxOption.getOrElse(0)
+      def dayIndex(d: Int): DataFrame = codedOf(daySlice(emb, "vec_id", d))
+      override def extraJson: String = super.extraJson +
+        s""","pq_num_sub":$numSub,"pq_codewords":$numCodewords""" +
+        s""","pq_tabulated":$tabulated,"opq_rotated":true"""
       // control: the full-ROTATED-vector inverted file, same layout
       // and same routing metric (orthogonal R preserves cosine)
       override def writePlain(): Unit = graft.io.PartitionedStore.write(
         Similarity.ivfAssignments(Pq.rotate(refVecs, rot), cents),
         fullPath, "c_id")
       override def readPlain(): DataFrame = spark.read.parquet(fullPath)
-      def prepIncrement(): (DataFrame => Unit, Long) = {
-        val nQueries =
-          sys.env.getOrElse("SPARK_GRAFT_IVF_QUERIES", "8").toInt
-        val qDir = s"$warehouse/opq_query_vecs"
-        // queries stored ROTATED: rotation cost is the same tiny
-        // projection on both arms, paid outside the timers
-        Pq.rotate(emb.where(isNew), rot)
-          .select(col("vec_id"), col("embedding"))
-          .orderBy("vec_id").limit(nQueries)
-          .write.mode("overwrite").parquet(qDir)
-        val qV = spark.read.parquet(qDir)
-        (store => {
-          val out =
-            if (store.columns.contains("code"))
-              Pq.annIvfPqTopKFromIndex(cents, store, books, qV,
-                nProbe = nProbe, k = 5, tabulated = tabulated)
-            else Similarity.annIvfTopKFromIndex(cents, store, qV,
-              nProbe = nProbe, k = 5)
-          out.write.format("noop").mode("overwrite").save()
-        }, qV.count())
-      }
+      // queries stored ROTATED: rotation cost is the same tiny
+      // projection on both arms, paid outside the timers
+      def prepIncrement(): (DataFrame => Unit, Long) = pqProbe(cents, books,
+        queryVecs(Pq.rotate(emb, rot), s"$warehouse/opq_query_vecs"))
       override def refreshDayN(): Option[Double] = {
         // one rotation-maintenance cycle, end to end: refit R from
         // the store's decoded codes vs the CURRENT vectors, retrain
@@ -1512,25 +900,26 @@ object StoreBench {
         // codebooks + centroids + partitioned codes) through
         // PqIndexStore's ready-marker discipline
         val succ = s"$warehouse/opq_dayn_refreshed"
-        val allVecs = (Seq(refVecs) ++ (1 to nDays).map(dayVecs))
+        val allVecs = (Seq(refVecs) ++ (1 to days).map(daySlice(emb, "vec_id", _)))
           .reduce(_ unionByName _)
-        val t0 = System.nanoTime()
-        val store = readDayN()
-        val rot2 = Pq.opqRefreshRotation(allVecs,
-          store.select(col("n_id").as("vec_id"), col("code")), books)
-        val books2 = Pq.pqCodebooks(Pq.rotate(emb.where(!isNew), rot2),
-          numSub, numCodewords, lloydIters = 1)
-        val rx2 = Pq.rotate(allVecs, rot2)
-        val cents2 = Similarity.ivfCentroids(
-          Pq.rotate(emb.where(!isNew), rot2), numCentroids,
-          lloydIters = 0, seedKey = c => md5(c.cast("string")))
-        val coded2 = Similarity.ivfAssignments(rx2, cents2)
-          .select("c_id", "n_id")
-          .join(Pq.pqEncode(rx2, books2)
-            .withColumnRenamed("vec_id", "n_id"), "n_id")
-        graft.io.PqIndexStore.write(succ, books2, coded2,
-          Some(rot2), Some(cents2))
-        Some((System.nanoTime() - t0) / 1e9)
+        Some(Harness.timed {
+          val store = readDayN()
+          val rot2 = Pq.opqRefreshRotation(allVecs,
+            store.select(col("n_id").as("vec_id"), col("code")), books)
+          val books2 = Pq.pqCodebooks(
+            Pq.rotate(emb.where(!isNew("vec_id")), rot2),
+            numSub, numCodewords, lloydIters = 1)
+          val rx2 = Pq.rotate(allVecs, rot2)
+          val cents2 = Similarity.ivfCentroids(
+            Pq.rotate(emb.where(!isNew("vec_id")), rot2), numCentroids,
+            lloydIters = 0, seedKey = c => md5(c.cast("string")))
+          val coded2 = Similarity.ivfAssignments(rx2, cents2)
+            .select("c_id", "n_id")
+            .join(Pq.pqEncode(rx2, books2)
+              .withColumnRenamed("vec_id", "n_id"), "n_id")
+          graft.io.PqIndexStore.write(succ, books2, coded2,
+            Some(rot2), Some(cents2))
+        })
       }
     }
 
@@ -1542,8 +931,6 @@ object StoreBench {
     // chunking is identical scan algebra on both arms and would
     // drown the store delta (the sig-kind first-shot lesson).
     val cdcKind = new StoreKind {
-      private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      private val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
       private def chunksOf(d: DataFrame): DataFrame =
         Dedup.cdcChunks(d, col("doc_id"), col("text"), k = 3,
           divisor = 16)
@@ -1551,22 +938,16 @@ object StoreBench {
         chunksOf(d).where(col("eligible")).select("ctext").distinct()
       def keys: Seq[String] = Seq("ctext")
       def refIndex(): DataFrame = distinctChunks(
-        (0 until storeScale).map(i =>
-            docs.where(!isNew).select(
-              (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-              col("text")))
-          .reduce(_ unionByName _))
-      def dayIndex(d: Int): DataFrame = distinctChunks(
-        docs.where(pmod(xxhash64(col("doc_id")), lit(20)) === d)
-          .select((col("doc_id") + lit(900000000L + d * 10000000L))
-            .as("doc_id"), col("text")))
+        replicate(docs.where(!isNew("doc_id")), "doc_id"))
+      def dayIndex(d: Int): DataFrame =
+        distinctChunks(daySlice(docs, "doc_id", d))
       def prepIncrement(): (DataFrame => Unit, Long) = {
         // the batch's eligible chunk rows, materialized once — the
         // timed body is q100's store-facing stage: LEFT ANTI against
         // the stored distinct chunks + the canonical-occurrence
         // aggregate over survivors
         val dir = s"$warehouse/new_chunks"
-        chunksOf(docs.where(isNew)).where(col("eligible"))
+        chunksOf(docs.where(isNew("doc_id"))).where(col("eligible"))
           .select("id", "chunk_id", "ctext")
           .write.mode("overwrite").parquet(dir)
         val newChunks = spark.read.parquet(dir)
@@ -1590,24 +971,15 @@ object StoreBench {
     // identical on both arms (it feeds the post-increment append
     // either way) and would drown the store delta.
     val shingleKind = new StoreKind {
-      private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      private val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
       private def idxOf(d: DataFrame): DataFrame =
         Dedup.shingleIndex(d, col("doc_id"), col("text"), n = 3)
       def keys: Seq[String] = Seq("shingle")
-      def refIndex(): DataFrame = idxOf(
-        (0 until storeScale).map(i =>
-            docs.where(!isNew).select(
-              (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-              col("text")))
-          .reduce(_ unionByName _))
-      def dayIndex(d: Int): DataFrame = idxOf(
-        docs.where(pmod(xxhash64(col("doc_id")), lit(20)) === d)
-          .select((col("doc_id") + lit(900000000L + d * 10000000L))
-            .as("doc_id"), col("text")))
+      def refIndex(): DataFrame =
+        idxOf(replicate(docs.where(!isNew("doc_id")), "doc_id"))
+      def dayIndex(d: Int): DataFrame = idxOf(daySlice(docs, "doc_id", d))
       def prepIncrement(): (DataFrame => Unit, Long) = {
         val dir = s"$warehouse/new_shingle_idx"
-        idxOf(docs.where(isNew)).write.mode("overwrite").parquet(dir)
+        idxOf(docs.where(isNew("doc_id"))).write.mode("overwrite").parquet(dir)
         val newIdx = spark.read.parquet(dir)
         (store => Dedup.incrementalContainmentPairsFromIndexes(
             newIdx, store, threshold = 0.8, maxShingleDf = Some(64))
@@ -1628,21 +1000,12 @@ object StoreBench {
     // recompute is skipping the reference text re-scan, which the
     // writeMain timer prices as the one-time build).
     val gramKind = new StoreKind {
-      private val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      private val isNew = pmod(xxhash64(col("doc_id")), lit(20)) === 0
       private def countsOf(d: DataFrame): DataFrame =
         Dedup.gramCounts(d, col("doc_id"), col("text"), minRun = 10)
       def keys: Seq[String] = Seq("h")
-      def refIndex(): DataFrame = countsOf(
-        (0 until storeScale).map(i =>
-            docs.where(!isNew).select(
-              (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-              col("text")))
-          .reduce(_ unionByName _))
-      def dayIndex(d: Int): DataFrame = countsOf(
-        docs.where(pmod(xxhash64(col("doc_id")), lit(20)) === d)
-          .select((col("doc_id") + lit(900000000L + d * 10000000L))
-            .as("doc_id"), col("text")))
+      def refIndex(): DataFrame =
+        countsOf(replicate(docs.where(!isNew("doc_id")), "doc_id"))
+      def dayIndex(d: Int): DataFrame = countsOf(daySlice(docs, "doc_id", d))
       // counts SUM under appends: append-day rows for the same h
       // coexist until compaction; the increment's left join must
       // therefore aggregate store rows per h — readMain below does
@@ -1651,8 +1014,7 @@ object StoreBench {
       // the same join, which is the honest day-N cost
       def prepIncrement(): (DataFrame => Unit, Long) = {
         val dir = s"$warehouse/new_docs_gram"
-        docs.where(isNew).select("doc_id", "text")
-          .write.mode("overwrite").parquet(dir)
+        docs.where(isNew("doc_id")).write.mode("overwrite").parquet(dir)
         val newDocs = spark.read.parquet(dir)
         (store => Dedup.incrementalRepeatedSpans(newDocs,
             store.groupBy("h").agg(sum(col("c")).as("c")),
@@ -1662,118 +1024,90 @@ object StoreBench {
       }
     }
 
-    val layout: StoreKind = kind match {
-      case "signband" => signBandKind
-      case "ivf" => ivfKind
-      case "pq" => pqKind
-      case "opq" => opqKind
-      case "cdc" => cdcKind
-      case "shingle" => shingleKind
-      case "gram" => gramKind
-      case _ => sigKind
-    }
+    // the bucketed-vs-plain increment, with its day-N maintenance arm
+    def storeIncrement(layout: StoreKind): String = {
+      spark.range(1000).selectExpr("sum(id)").count() // JVM warmup
 
-    spark.range(1000).selectExpr("sum(id)").count() // JVM warmup
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+      // one-time store writes (the cost the layout front-loads)
+      layout.setup()
+      val tWBucketed = Harness.timed(layout.writeMain())
+      val tWPlain = Harness.timed(layout.writePlain())
+      val storeRows = layout.readMain().count()
 
-    // one-time store writes (the cost the layout front-loads)
-    layout.setup()
-    val tWBucketed = timed(layout.writeMain())
-    val tWPlain = timed(layout.writePlain())
-    val storeRows = layout.readMain().count()
-
-    // day-N arm: the SAME day-0 rows into a second store, then
-    // `days` daily `appendAndMaintain` cycles of day-sized slices
-    // (distinct ids — never meeting the increment batch, so the only
-    // difference the timer can see on this arm vs day-1 is what
-    // maintenance is supposed to bound: files-per-bucket/partition
-    // and store volume growth). Appends + compaction run OUTSIDE the
-    // timers — they are the maintenance cost `write_*_sec` style
-    // numbers price, not the per-increment join this harness times.
-    val days = sys.env.getOrElse("SPARK_GRAFT_STORE_DAYS", "5").toInt
-    val dayMaxFragments =
-      sys.env.getOrElse("SPARK_GRAFT_STORE_MAXFRAG", "4").toInt
-    layout.buildDayN()
-    var compactions = 0
-    val tAppends = timed {
-      (1 to days).foreach { d =>
-        if (layout.appendDay(d, dayMaxFragments)) compactions += 1
+      // day-N arm: the SAME day-0 rows into a second store, then
+      // `days` daily `appendAndMaintain` cycles of day-sized slices
+      // (distinct ids — never meeting the increment batch, so the only
+      // difference the timer can see on this arm vs day-1 is what
+      // maintenance is supposed to bound: files-per-bucket/partition
+      // and store volume growth). Appends + compaction run OUTSIDE the
+      // timers — they are the maintenance cost `write_*_sec` style
+      // numbers price, not the per-increment join this harness times.
+      layout.buildDayN()
+      var compactions = 0
+      val tAppends = Harness.timed {
+        (1 to days).foreach { d =>
+          if (layout.appendDay(d, dayMaxFragments)) compactions += 1
+        }
       }
-    }
-    val dayNFragMax = layout.dayNFragMax()
-    val dayNRows = layout.readDayN().count()
-    val refreshSec = layout.refreshDayN()
+      val dayNFragMax = layout.dayNFragMax()
+      val dayNRows = layout.readDayN().count()
+      val refreshSec = layout.refreshDayN()
 
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // the increment's inputs, materialized OUTSIDE the timers —
-    // identical work on both arms, not part of the claim under test
-    val (increment, batchRows) = layout.prepIncrement()
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache(); System.gc()
-    }
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      // the increment's inputs, materialized OUTSIDE the timers —
+      // identical work on both arms, not part of the claim under test
+      val (increment, batchRows) = layout.prepIncrement()
 
-    val loadBefore = loadavg
-    StallProbe.start()
-    val bucketed = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val plain = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val dayN = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val stalls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (r <- 0 until runs) {
-      val s0 = StallProbe.totalSec
-      val arms: Seq[(String, () => Double)] = Seq(
-        "bucketed" -> (() => timed(increment(layout.readMain()))),
-        "dayN" -> (() => timed(increment(layout.readDayN()))),
-        "plain" -> (() => timed(increment(layout.readPlain()))))
-      val order = if (r % 2 == 0) arms else arms.reverse
-      val got = order.map { case (n, f) =>
-        val t = f(); sweep(); n -> t }.toMap
-      bucketed += got("bucketed"); plain += got("plain")
-      dayN += got("dayN")
-      stalls += StallProbe.totalSec - s0
-      System.err.println(f"[store-bench] run $r bucketed=${got("bucketed")}%.2f s " +
-        f"dayN=${got("dayN")}%.2f s " +
-        f"plain=${got("plain")}%.2f s stall=${stalls.last}%.2f s")
-    }
-    val loadAfter = loadavg
-    layout.cleanup()
+      val loadBefore = Harness.loadavg
+      val res = Harness.alternate("store-bench", runs, Seq(
+        "bucketed" -> (() => increment(layout.readMain())),
+        "dayN" -> (() => increment(layout.readDayN())),
+        "plain" -> (() => increment(layout.readPlain()))),
+        () => sweep())
+      val loadAfter = Harness.loadavg
+      layout.cleanup()
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def jarr(xs: Seq[Double]) =
-      xs.map(x => math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"store_increment_median","value":${median(bucketed.toSeq)}""" +
-        s""","unit":"sec","kind":"$kind","plain_median":${median(plain.toSeq)}""" +
-        s""","ratio":${median(bucketed.toSeq) / median(plain.toSeq)}""" +
-        s""","bucketed_runs":${jarr(bucketed.toSeq)}""" +
-        s""","plain_runs":${jarr(plain.toSeq)}""" +
-        s""","dayn_median":${median(dayN.toSeq)}""" +
-        s""","dayn_runs":${jarr(dayN.toSeq)}""" +
-        s""","dayn_vs_day1":${median(dayN.toSeq) / median(bucketed.toSeq)}""" +
-        s""","days":$days,"day_appends_sec":${math.round(tAppends * 100) / 100.0}""" +
+      def m(arm: String) = res.median(arm)
+      s"""{"metric":"store_increment_median","value":${m("bucketed")}""" +
+        s""","unit":"sec","kind":"$kind","plain_median":${m("plain")}""" +
+        s""","ratio":${m("bucketed") / m("plain")}""" +
+        s""","bucketed_runs":${Harness.jarr(res.times("bucketed"))}""" +
+        s""","plain_runs":${Harness.jarr(res.times("plain"))}""" +
+        s""","dayn_median":${m("dayN")}""" +
+        s""","dayn_runs":${Harness.jarr(res.times("dayN"))}""" +
+        s""","dayn_vs_day1":${m("dayN") / m("bucketed")}""" +
+        s""","days":$days,"day_appends_sec":${Harness.r2(tAppends)}""" +
         s""","day_compactions":$compactions,"dayn_frag_max":$dayNFragMax""" +
         s""","dayn_rows":$dayNRows""" +
         refreshSec.map(r =>
-          s""","refresh_sec":${math.round(r * 100) / 100.0}""").getOrElse("") +
-        s""","stall_sec":${jarr(stalls.toSeq)}""" +
-        s""","write_bucketed_sec":${math.round(tWBucketed * 100) / 100.0}""" +
-        s""","write_plain_sec":${math.round(tWPlain * 100) / 100.0}""" +
+          s""","refresh_sec":${Harness.r2(r)}""").getOrElse("") +
+        s""","stall_sec":${Harness.jarr(res.stalls)}""" +
+        s""","write_bucketed_sec":${Harness.r2(tWBucketed)}""" +
+        s""","write_plain_sec":${Harness.r2(tWPlain)}""" +
         s""","store_rows":$storeRows,"batch_rows":$batchRows""" +
         s""","store_scale":$storeScale,"buckets":$shuffle""" +
         layout.extraJson +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"""" +
-        s""","cpus":"$cpus","sf":"$sfDir"}"""
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "store_bench.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[store-bench] write $out failed: $e") }
+        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}"""
+    }
+
+    val json = kind match {
+      case "stream_spans" => streamSpans()
+      case "sketch" => sketch()
+      case "dfp" => dfp()
+      case "cachescope" => cacheScope()
+      case "zorder" => zorder()
+      case "signband" => storeIncrement(signBandKind)
+      case "ivf" => storeIncrement(ivfKind)
+      case "pq" => storeIncrement(pqKind)
+      case "opq" => storeIncrement(opqKind)
+      case "cdc" => storeIncrement(cdcKind)
+      case "shingle" => storeIncrement(shingleKind)
+      case "gram" => storeIncrement(gramKind)
+      case _ => storeIncrement(sigKind)
+    }
+    Harness.emit("StoreBench", json, kind = kind)
     spark.stop()
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.EventPipelines
@@ -58,66 +56,21 @@ object StreamBench {
   final case class ChangeEvent(k: Long, ck: Long, total: Double,
                                ts: Int, gen: Int, is_delete: Boolean)
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
-  private def med(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    if (s.isEmpty) -1.0
-    else if (s.size % 2 == 1) s(s.size / 2)
-    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-  }
-
-  private def jarr(xs: Seq[Double]): String =
-    xs.map(x => math.round(x * 1000) / 1000.0).mkString("[", ",", "]")
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val arm = sys.env.getOrElse("SPARK_GRAFT_STREAM_ARM", "all")
-    val evBatch = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCH", "20000").toInt
-    val docBatch =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_DOC_BATCH", "2000").toInt
+    val sfDir = Harness.sfDir()
+    val arm = Harness.oneOf("SPARK_GRAFT_STREAM_ARM", "all", Seq("all",
+      "sessionize", "session_stats", "spans", "merge_versioned"))
+    val evBatch = Harness.positiveInt("SPARK_GRAFT_STREAM_BATCH", 20000)
+    val docBatch = Harness.positiveInt("SPARK_GRAFT_STREAM_DOC_BATCH", 2000)
+    val days = Harness.positiveInt("SPARK_GRAFT_STREAM_MERGE_DAYS", 8)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface, as every
-      // other graft session builder since r18 (StreamBench was the
-      // one harness still on the 100-entry default)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(logLevel = "ERROR")
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-    StallProbe.start()
-    val loadBefore = loadavg
+    Harness.StallProbe.start()
+    val loadBefore = Harness.loadavg
     // per arm: (per-batch seconds, batch rows, state rows after the
     // last timed batch, codegen compilations across WARM batches) —
     // the r18 verdict's streaming witnesses: state stays watermark-
@@ -132,10 +85,10 @@ object StreamBench {
       val perBatch = scala.collection.mutable.ArrayBuffer.empty[Double]
       var cgCold = -1L
       batches.zipWithIndex.foreach { case (b, k) =>
-        val t0 = System.nanoTime()
-        mem.addData(b: _*)
-        q.processAllAvailable()
-        perBatch += (System.nanoTime() - t0) / 1e9
+        perBatch += Harness.timed {
+          mem.addData(b: _*)
+          q.processAllAvailable()
+        }
         System.err.println(f"[stream-bench] $tag batch $k " +
           f"(${b.size} rows) ${perBatch.last}%.2f s")
         if (k == 0)
@@ -295,8 +248,6 @@ object StreamBench {
 
     if (arm == "all" || arm == "merge_versioned") {
       import graft.etl.{Merge, VersionStore}
-      val days =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_MERGE_DAYS", "8").toInt
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       val root = "/tmp/graft_stream_bench/merge_v"
       graft.io.MarkerCommit.deleteRecursively(root)
@@ -348,28 +299,23 @@ object StreamBench {
         ((times, batchSeqs.map(_.size).max, stateRows, cgWarm))
     }
 
-    val stallSec = StallProbe.totalSec
+    val stallSec = Harness.StallProbe.totalSec
     val armsJson = results.map { case (name, (times, bs, st, cg)) =>
       val warm = if (times.size > 1) times.drop(1) else times
-      s""""$name":{"warm_median_sec":${med(warm)}""" +
+      s""""$name":{"warm_median_sec":${Harness.median(warm)}""" +
         s""","cold_first_batch_sec":${times.headOption.getOrElse(-1.0)}""" +
-        s""","per_batch_sec":${jarr(times)},"batches":${times.size}""" +
+        s""","per_batch_sec":${Harness.jarr(times)},"batches":${times.size}""" +
         s""","batch_rows":$bs,"state_rows":$st,"codegen_warm":$cg}"""
     }.mkString("{", ",", "}")
-    val headline = med(results.values.flatMap { case (t, _, _, _) =>
+    val headline = Harness.median(results.values.flatMap { case (t, _, _, _) =>
       if (t.size > 1) t.drop(1) else t }.toSeq)
-    val json =
+    Harness.emit("StreamBench",
       s"""{"metric":"stream_batch_median","value":$headline""" +
         s""","unit":"sec","arms":$armsJson""" +
         s""","identity_ok":${!failed}""" +
-        s""","stall_sec":${math.round(stallSec * 100) / 100.0}""" +
-        s""","loadavg_before":"$loadBefore","loadavg_after":"$loadavg"""" +
-        s""","cpus":"$cpus","sf":"$sfDir"}"""
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_stream.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[stream-bench] write $out failed: $e") }
+        s""","stall_sec":${Harness.r2(stallSec)}""" +
+        s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
+        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}""", kind = arm)
     spark.stop()
     if (failed) sys.exit(1)
   }

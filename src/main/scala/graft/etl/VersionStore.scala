@@ -198,8 +198,11 @@ object VersionStore {
     lastFootered.foreach { case (last, cur) =>
       val curT = cur.fields.map(fd => fd.name -> fd.dataType).toMap
       val newT = df.schema.fields.map(fd => fd.name -> fd.dataType).toMap
+      // a stored version reads back all-nullable, so nullability is
+      // not a type change: re-appending a frame with a non-nullable
+      // nested type must pass
       val clash = curT.keySet.intersect(newT.keySet)
-        .filter(k => curT(k) != newT(k))
+        .filter(k => nullable(curT(k)) != nullable(newT(k)))
       require(clash.isEmpty,
         s"VersionStore.$who: column type change rejected (v$last -> new): " +
           clash.toSeq.sorted.map(k => s"$k: ${curT(k)} -> ${newT(k)}")
@@ -214,6 +217,16 @@ object VersionStore {
             "pass evolve=true to change columns deliberately")
       }
     }
+  }
+
+  /** `t` with every nested field, element and value nullable. */
+  private[graft] def nullable(t: DataType): DataType = t match {
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 
   /** Write a frame into an already-CLAIMED version number through the

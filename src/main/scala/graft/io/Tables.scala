@@ -133,19 +133,9 @@ final case class Tables(spark: SparkSession, dir: String) {
 object Tables {
 
   /** The `*Wide` accessors' bytes-per-task floor:
-    * `SPARK_GRAFT_WIDE_TASK_BYTES`, default 64 KB. */
-  private[graft] def wideTaskBytes: Long =
-    positiveLong("SPARK_GRAFT_WIDE_TASK_BYTES",
-      sys.env.get("SPARK_GRAFT_WIDE_TASK_BYTES"), 65536L)
-
-  /** `raw` as a positive count; `default` when unset. A malformed or
+    * `SPARK_GRAFT_WIDE_TASK_BYTES`, default 64 KB. A malformed or
     * non-positive value fails here, naming the variable, instead of
     * as a `NumberFormatException` inside a read path. */
-  private[graft] def positiveLong(name: String, raw: Option[String],
-                                   default: Long): Long =
-    raw.fold(default) { v =>
-      v.trim.toLongOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"$name must be a positive integer, got '$v'"))
-    }
+  private[graft] def wideTaskBytes: Long =
+    graft.Harness.positiveLong("SPARK_GRAFT_WIDE_TASK_BYTES", 65536L)
 }

@@ -72,16 +72,35 @@ class InfraSpec extends GraftSuite {
   }
 
   test("a malformed or non-positive wide-task floor fails early, named") {
-    import graft.io.Tables.positiveLong
+    import graft.Harness._
     val name = "SPARK_GRAFT_WIDE_TASK_BYTES"
-    assert(positiveLong(name, None, 65536L) == 65536L)
-    assert(positiveLong(name, Some("4096"), 65536L) == 4096L)
-    Seq("64k", "", "0", "-5", "1e6", "99999999999999999999").foreach { v =>
-      val e = intercept[IllegalArgumentException](
-        positiveLong(name, Some(v), 65536L))
-      assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$v'"),
-        e.getMessage)
-    }
+    def env(v: String): String => Option[String] = Map(name -> v).get
+    val unset: String => Option[String] = _ => None
+    assert(positiveLong(name, 65536L, unset) == 65536L)
+    assert(positiveLong(name, 65536L, env("4096")) == 4096L)
+    assert(positiveLong(name, 65536L, env(" 4096 ")) == 4096L)
+    assert(positiveInt(name, 3, env("7")) == 7)
+    assert(percent(name, 10, env("0")) == 0 && percent(name, 10, env("100")) == 100)
+    assert(fraction(name, 0.05, env("1")) == 1.0)
+    assert(flag(name, true, env("0")) == false && flag(name, false, env("TRUE")))
+    assert(oneOf(name, "a", Seq("a", "b"), env("b")) == "b")
+    assert(text(name, "d", unset) == "d" && text(name, "d", env("x/y")) == "x/y")
+    def rejects(values: Seq[String])(parse: (String => Option[String]) => Any): Unit =
+      values.foreach { v =>
+        val e = intercept[IllegalArgumentException](parse(env(v)))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      }
+    val blank = Seq("", "  ")
+    rejects(Seq("64k", "0", "-5", "1e6", "99999999999999999999") ++ blank)(
+      positiveLong(name, 65536L, _))
+    rejects(Seq("abc", "0", "-1", "3000000000", "2.5") ++ blank)(
+      positiveInt(name, 3, _))
+    rejects(Seq("x", "-1", "101", "5.5") ++ blank)(percent(name, 10, _))
+    rejects(Seq("x", "0", "-0.1", "1.5", "NaN") ++ blank)(fraction(name, 0.05, _))
+    rejects(Seq("yes", "2", "-1") ++ blank)(flag(name, true, _))
+    rejects(Seq("c", "A", "-1") ++ blank)(oneOf(name, "a", Seq("a", "b"), _))
+    rejects(blank)(text(name, "d", _))
   }
 
   test("documentsWide is a no-op when one task's work fits the floor") {

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.etl.VersionStore
 
@@ -69,6 +71,30 @@ class VersionStoreSpec extends GraftSuite {
         Seq(("4", "d", 1.5)).toDF("id", "x", "score"), root, evolve = true)
     }
     assert(clash.getMessage.contains("type change"))
+  }
+
+  test("nullability is not a type change, through struct, array and map") {
+    val root = Files.createTempDirectory("vs").toString
+    def frame(arr: Column = array(lit(1)), b: Column = array(lit("x")),
+              mv: Column = array(lit(2))) =
+      spark.range(2).select(col("id"), arr.as("arr"),
+        struct(lit(1).as("a"), b.as("b")).as("st"), map(lit("k"), mv).as("m"))
+    // the frame's nested types are non-nullable; the stored version
+    // reads back all-nullable
+    assert(!frame().schema("arr").dataType.asInstanceOf[ArrayType].containsNull)
+    assert(VersionStore.write(frame(), root) == 0L)
+    assert(VersionStore.write(frame(), root) == 1L)
+    assert(VersionStore.latest(spark, root).count() == 2)
+    // a real type change inside each container is still rejected
+    Seq("arr" -> frame(arr = array(lit("1"))),
+        "st" -> frame(b = array(lit(1))),
+        "m" -> frame(mv = array(lit(2L)))).foreach { case (c, df) =>
+      val clash = intercept[IllegalArgumentException](
+        VersionStore.write(df, root))
+      assert(clash.getMessage.contains("type change") &&
+        clash.getMessage.contains(s"$c:"), clash.getMessage)
+    }
+    assert(VersionStore.versions(spark, root) == Seq(0L, 1L))
   }
 
   test("footerless version does not brick the store") {
