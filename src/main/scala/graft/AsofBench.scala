@@ -46,7 +46,7 @@ object AsofBench {
       Seq("batch", "stream")) == "stream"
     val batchSize = Harness.positiveInt("SPARK_GRAFT_STREAM_BATCH", 20000)
     val spanSec = 30L * 24 * 3600
-    val cpus = Harness.cpus
+    val cpus = Harness.cpus()
 
     val spark = Harness.session(logLevel = "ERROR")
 

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
 
 /** Benchmark harness. One JVM, `SPARK_GRAFT_BENCH_RUNS` (default 3)
   * back-to-back runs of the full suite, per-query MEDIAN / min / max —
@@ -47,74 +47,68 @@ object Bench {
       "q_bloom_bits_seeded", "q_bloom_membership_seeded",
       "q_decontaminate_bloomframe_seeded")
 
-  private def loadavg: String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim
-    catch { case _: Throwable => "" }
-
-  /** Host-stall probe: a daemon thread sleeps 100 ms in a loop and,
-    * whenever it oversleeps by more than 150 ms (the 100 ms sleep took
-    * over 250 ms), accumulates the oversleep — time the guest simply did not run. On this class of VM (Firecracker) host CPU
-    * oversubscription is INVISIBLE to every guest metric (steal stays
-    * 0 — the steal-time MSR isn't exposed — loadavg/PSI only see
-    * guest-side queuing), yet it freely multiplies wall-clock
-    * timings; a sleeper that oversleeps is the one guest-visible
-    * witness. Per-run deltas land in the bench JSON as `stall_sec`
-    * so a noise-poisoned run is identifiable from the artifact alone
-    * instead of by cross-round forensics (the round-4/5 lesson).
-    */
-  private object StallProbe {
-    @volatile private var stallNanos = 0L
-    def start(): Unit = {
-      val t = new Thread(() => {
-        while (true) {
-          val t0 = System.nanoTime()
-          try Thread.sleep(100) catch { case _: InterruptedException => }
-          val over = System.nanoTime() - t0 - 100000000L
-          if (over > 150000000L) stallNanos += over
-        }
-      }, "graft-stall-probe")
-      t.setDaemon(true)
-      t.start()
-    }
-    def totalSec: Double = stallNanos / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    // every knob is parsed before the session starts; the defaults
+    // (32 cores, the sf0.1 directory, bench_out.json) are the bench
+    // contract's
+    val sfDir = Harness.sfDir("/root/testdata/sf0.1")
+    val cpus = Harness.cpus(32)
+    val runs = Harness.positiveInt("SPARK_GRAFT_BENCH_RUNS", 3)
     // initial shuffle parallelism: defaults to cores (the driver's
     // contract for sf0.1) but overridable for scale runs — partitions
     // sized for sf0.1 spill at sf1+, and AQE only coalesces DOWN from
     // the initial number, it never splits an oversized non-skewed
     // partition, so the initial count must scale with the data
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (static conf,
-      // default 100 entries): a 183-query suite generates ~3-4k
-      // distinct codegen classes, so at the default every query's
-      // classes are evicted before its next execution and EVERY run
-      // re-pays Janino compilation + JIT tier-up (the per-query
-      // codegen witness read the same nonzero count in every run).
-      // Not a toy-scale knob: a production driver hosting this many
-      // distinct queries sizes the compiler cache to its plan
-      // inventory the same way; data-independent, affects no result.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // a >10 s JVM freeze (32 GiB full GC, or the host stalls the
-      // probe documents) breaches the default executor-heartbeat RPC
-      // timeout and kills the whole SparkContext mid-suite — an sf1
-      // run died exactly this way. Stretch the tolerance so a stall
-      // costs a timing, not the harness.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shuffle = Harness.shuffle(cpus)
+    // SPARK_GRAFT_WITNESS=0 disables the per-query witness machinery
+    // entirely (no listener, no bus drain) — the control arm for
+    // pricing the witness's own overhead against a witness-free run
+    val witnessOn = Harness.flag("SPARK_GRAFT_WITNESS", true)
+    // Per-query watchdog (r6, after an sf1 query ate 40+ min of a
+    // single-run probe with NOTHING in the log to name it): the timed
+    // action runs under a job group; if it exceeds
+    // SPARK_GRAFT_QUERY_TIMEOUT_SEC the group's jobs are cancelled,
+    // the query records as failed (-1, dropped from totals like any
+    // error), and the bench MOVES ON instead of silently wedging the
+    // round's artifact. 0 disables. The default is far above any
+    // healthy query (sf0.1 slowest ≈ 7 s; sf1 ≈ 100 s) — this is a
+    // tourniquet for pathology, not a performance gate.
+    val queryTimeoutSec = Harness.nonNegativeInt("SPARK_GRAFT_QUERY_TIMEOUT_SEC", 900)
+    val allNames = SparkEntry.queries.keys.toSeq.sorted
+    val known = allNames.toSet
+    // comma-separated subset for isolating one query's behavior at a
+    // given SF (diagnostics only — artifacts of record run the suite)
+    val picked = allNames.filter(
+      Harness.names("SPARK_GRAFT_BENCH_ONLY", allNames, known).toSet)
+    // perf-iteration toggle (r10 verdict #4): the md5-seeded oracle
+    // twins are verification plumbing, excluded from the headline by
+    // design, yet their one-shot timing pass grew to ~28% of full-run
+    // wall-clock. Skipping them changes NO headline number (they never
+    // enter the medians) — artifacts of record keep them (default
+    // off), and the JSON records the mode so a skipping run can't
+    // masquerade as a full one.
+    val skipOracleOnly = Harness.flag("SPARK_GRAFT_SKIP_ORACLE_ONLY", false)
+    // stall-aware retry (round-5 lesson: BENCH_r05's artifact of
+    // record was poisoned by 20-68 s/run host stalls and only
+    // cross-referencing a committed side artifact exposed it): a run
+    // whose stall_sec exceeds SPARK_GRAFT_STALL_MAX doesn't count
+    // toward the `runs` quiet samples — up to SPARK_GRAFT_STALL_RETRIES
+    // extra runs chase a quiet window. If quiet runs exist, medians use
+    // ONLY those; if none do, all runs are used and the artifact says
+    // so loudly (`stall_poisoned: true`), so a noisy number can never
+    // again masquerade as a clean one.
+    val stallMax = Harness.nonNegative("SPARK_GRAFT_STALL_MAX", 5.0)
+    val maxExtra = Harness.nonNegativeInt("SPARK_GRAFT_STALL_RETRIES", 3)
+    // same-session isolated re-times (SPARK_GRAFT_ISOLATE, comma
+    // list; default the historically divergent iterative query): a
+    // query's suite-median vs isolated-median gap (same JVM, same
+    // data, minutes apart) isolates in-suite interference from
+    // environment drift — also how a cross-round per-query drift
+    // gets attributed to code vs noise without a bisect
+    val isoNames = Harness.names("SPARK_GRAFT_ISOLATE",
+      Seq("q_dedup_clusters_jaccard"), known)
+
+    val spark = Harness.session(cpus = cpus)
     // JVM/scheduler warmup so the first query's number is the query,
     // not classloading + first-scan machinery (parquet reader,
     // broadcast, noop writer, AQE first-use — round-2 finding).
@@ -139,18 +133,6 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
 
-    // between-query hygiene (round-2/3 findings): drop persisted
-    // intermediates, sweep checkpoint blocks clearCache can't see
-    // (blocking — async removal would overlap the next timed query),
-    // and collect the previous query's garbage outside the next
-    // query's timer (a 32 GiB full GC is multi-second).
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge
-        .unpersistAll(spark, blocking = true)
-      System.gc()
-    }
-
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     // ---- per-QUERY witnesses (r13, after the r12 in-suite
     // interference case: q_dedup_embedding_incremental 32.4 s
@@ -162,24 +144,8 @@ object Bench {
     // carries every run's values. A query whose stall≈gc inflated
     // in-suite names the JVM; big spill/peakmem on the PRECEDING
     // query names the interferer (heap pressure it left behind).
-    // SPARK_GRAFT_WITNESS=0 disables the per-query witness machinery
-    // entirely (no listener, no bus drain) — the control arm for
-    // pricing the witness's own overhead against a witness-free run
-    val witnessOn = sys.env.getOrElse("SPARK_GRAFT_WITNESS", "1") != "0"
-    val qSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    val qPeakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    if (witnessOn) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            qSpill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-            qPeakMem.getAndUpdate(cur =>
-              math.max(cur, m.peakExecutionMemory))
-          }
-        }
-      })
+    // Spill and peak memory are charged to the query's job group.
+    val meter = if (witnessOn) Some(graft.obs.Meter(spark.sparkContext)) else None
     def gcSecNow: Double = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -222,43 +188,30 @@ object Bench {
         .map(_.getUsage.getUsed / 1048576.0).sum
     }
     val witJitMs = scala.collection.mutable.Map.empty[String, Double]
-    // Per-query watchdog (r6, after an sf1 query ate 40+ min of a
-    // single-run probe with NOTHING in the log to name it): the timed
-    // action runs under a job group; if it exceeds
-    // SPARK_GRAFT_QUERY_TIMEOUT_SEC the group's jobs are cancelled,
-    // the query records as failed (-1, dropped from totals like any
-    // error), and the bench MOVES ON instead of silently wedging the
-    // round's artifact. 0 disables. The default is far above any
-    // healthy query (sf0.1 slowest ≈ 7 s; sf1 ≈ 100 s) — this is a
-    // tourniquet for pathology, not a performance gate.
-    val queryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "900").toLong
     // noop write, not count(): a count prunes every projection
     // expression out of map-only queries and would time a bare scan
     def timeOne(name: String): Double = {
       val fn = SparkEntry.queries(name)
       System.err.println(s"[bench] > $name")
-      qSpill.set(0L); qPeakMem.set(0L)
       val gc0 = gcSecNow
-      val stall0 = StallProbe.totalSec
+      val stall0 = Harness.StallProbe.totalSec
       val cg0 = org.apache.spark.sql.graft.CodegenBridge.compileCount
       val jit0 = jitMsNow
       val t0 = System.nanoTime()
       def secs = (System.nanoTime() - t0) / 1e9
       def witness(): (Double, Double, Double, Double, Long, Double) = {
         if (!witnessOn) return (0.0, 0.0, 0.0, 0.0, 0L, 0.0)
-        // drain the listener bus so the spill/peakmem counters hold
-        // every task of THIS query before they're read
-        try org.apache.spark.sql.graft.ListenerBridge
-          .waitUntilEmpty(spark.sparkContext)
-        catch { case _: Throwable => () }
-        val w = (gcSecNow - gc0, StallProbe.totalSec - stall0,
-          qSpill.get() / 1048576.0, qPeakMem.get() / 1048576.0,
+        // the meter drains the listener bus first, so the charge holds
+        // every task of THIS query; a drain that times out reads zero
+        val c = try meter.get.take(s"bench-$name")
+          catch { case NonFatal(_) => graft.obs.Meter.Charge() }
+        val w = (gcSecNow - gc0, Harness.StallProbe.totalSec - stall0,
+          c.spillBytes / 1048576.0, c.peakTaskMemBytes / 1048576.0,
           org.apache.spark.sql.graft.CodegenBridge.compileCount - cg0,
           jitMsNow - jit0)
         def mx(m: scala.collection.mutable.Map[String, Double],
                v: Double): Unit = m(name) = math.max(m.getOrElse(name,
-          Double.NegativeInfinity), math.round(v * 100) / 100.0)
+          Double.NegativeInfinity), Harness.r2(v))
         mx(witGc, w._1); mx(witStall, w._2)
         mx(witSpillMb, w._3); mx(witPeakMb, w._4)
         mx(witCodegen, w._5.toDouble); mx(witJitMs, w._6)
@@ -298,45 +251,14 @@ object Bench {
           f"[bench] < $name FAILED after $secs%.1f s: ${e.getMessage}")
         witness()
         errors += name; -1.0
-      } finally sweep()
+      } finally Harness.sweep(spark)
     }
 
-    val allNames = SparkEntry.queries.keys.toSeq.sorted
-    // comma-separated subset for isolating one query's behavior at a
-    // given SF (diagnostics only — artifacts of record run the suite)
-    val picked = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(subset) =>
-        val want = subset.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want -- allNames.toSet
-        require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY unknown: $unknown")
-        allNames.filter(want)
-      case None => allNames
-    }
-    // perf-iteration toggle (r10 verdict #4): the md5-seeded oracle
-    // twins are verification plumbing, excluded from the headline by
-    // design, yet their one-shot timing pass grew to ~28% of full-run
-    // wall-clock. Skipping them changes NO headline number (they never
-    // enter the medians) — artifacts of record keep them (default
-    // off), and the JSON records the mode so a skipping run can't
-    // masquerade as a full one.
-    val skipOracleOnly = sys.env.get("SPARK_GRAFT_SKIP_ORACLE_ONLY")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
     val names = if (skipOracleOnly) picked.filterNot(oracleOnly) else picked
     val headlineNames = names.filterNot(oracleOnly)
     val oracleNames = names.filter(oracleOnly)
-    val loadBefore = loadavg
-    StallProbe.start()
-    // stall-aware retry (round-5 lesson: BENCH_r05's artifact of
-    // record was poisoned by 20-68 s/run host stalls and only
-    // cross-referencing a committed side artifact exposed it): a run
-    // whose stall_sec exceeds SPARK_GRAFT_STALL_MAX doesn't count
-    // toward the `runs` quiet samples — up to SPARK_GRAFT_STALL_RETRIES
-    // extra runs chase a quiet window. If quiet runs exist, medians use
-    // ONLY those; if none do, all runs are used and the artifact says
-    // so loudly (`stall_poisoned: true`), so a noisy number can never
-    // again masquerade as a clean one.
-    val stallMax = sys.env.getOrElse("SPARK_GRAFT_STALL_MAX", "5.0").toDouble
-    val maxExtra = sys.env.getOrElse("SPARK_GRAFT_STALL_RETRIES", "3").toInt
+    val loadBefore = Harness.loadavg
+    Harness.StallProbe.start()
     // GC-time witness next to the stall witness: the probe counts
     // EVERY oversleep, and a stop-the-world collection pauses the
     // probe exactly like a host stall — `gc_sec` (MX-bean collection
@@ -345,22 +267,21 @@ object Bench {
     // the host did it (retry for a quiet window). Added r9 after a
     // full-suite stall chase where neither could be ruled out from
     // the artifact alone.
-    def gcSec: Double = gcSecNow
     val attempts = scala.collection.mutable.ArrayBuffer
       .empty[(Map[String, Double], Double)]
     val gcPerRun = scala.collection.mutable.ArrayBuffer.empty[Double]
     var go = true
     while (go) {
-      val before = StallProbe.totalSec
-      val gcBefore = gcSec
+      val before = Harness.StallProbe.totalSec
+      val gcBefore = gcSecNow
       val m = headlineNames.map(n => n -> timeOne(n)).toMap
-      val stall = StallProbe.totalSec - before
-      val gc = gcSec - gcBefore
+      val stall = Harness.StallProbe.totalSec - before
+      val gc = gcSecNow - gcBefore
       attempts += ((m, stall))
       gcPerRun += gc
       val quiet = attempts.count(_._2 <= stallMax)
       System.err.println(s"[bench] run ${attempts.size} total=" +
-        f"${m.values.filter(_ >= 0).sum}%.1f s loadavg=$loadavg " +
+        f"${m.values.filter(_ >= 0).sum}%.1f s loadavg=${Harness.loadavg} " +
         f"stall=$stall%.1f s gc=$gc%.1f s quiet=$quiet/$runs")
       go = quiet < runs && attempts.size < runs + maxExtra
     }
@@ -381,26 +302,12 @@ object Bench {
     // visible in the artifact.
     val oracleCold = oracleNames.map(n => n -> timeOne(n)).toMap
     val oracleTimes = oracleNames.map(n => n -> timeOne(n)).toMap
-    // same-session isolated re-times (SPARK_GRAFT_ISOLATE, comma
-    // list; default the historically divergent iterative query): a
-    // query's suite-median vs isolated-median gap (same JVM, same
-    // data, minutes apart) isolates in-suite interference from
-    // environment drift — also how a cross-round per-query drift
-    // gets attributed to code vs noise without a bisect
-    val isoNames = sys.env.getOrElse("SPARK_GRAFT_ISOLATE",
-        "q_dedup_clusters_jaccard")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .filter(SparkEntry.queries.contains)
     val iso: Map[String, Seq[Double]] =
       isoNames.map(n => n -> (1 to runs).map(_ => timeOne(n))).toMap
-    val loadAfter = loadavg
+    val loadAfter = Harness.loadavg
 
-    def median(xs: Seq[Double]): Double = {
-      val ok = xs.filter(_ >= 0).sorted
-      if (ok.isEmpty) -1.0
-      else if (ok.size % 2 == 1) ok(ok.size / 2)
-      else (ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2
-    }
+    // failed samples (-1) are dropped before the median
+    def median(xs: Seq[Double]): Double = Harness.median(xs.filter(_ >= 0))
     def series(n: String): Seq[Double] =
       if (oracleOnly(n)) Seq(oracleTimes(n)) else perRun.map(_(n))
     val med = names.map(n => n -> median(series(n))).toMap
@@ -431,10 +338,8 @@ object Bench {
         // raw Doubles: Double.toString is locale-independent, while a
         // locale-sensitive `f"%.2f"` writes `0,52` under comma-decimal
         // JVM locales and breaks the JSON
-        s""","stall_sec":${stallPerRun.map(s => math.round(s * 100) / 100.0)
-          .mkString("[", ",", "]")}""" +
-        s""","gc_sec":${gcPerRun.map(s => math.round(s * 100) / 100.0)
-          .mkString("[", ",", "]")}""" +
+        s""","stall_sec":${stallPerRun.map(Harness.r2).mkString("[", ",", "]")}""" +
+        s""","gc_sec":${gcPerRun.map(Harness.r2).mkString("[", ",", "]")}""" +
         s""","stall_max":$stallMax,"stall_poisoned":$stallPoisoned""" +
         // quiet_runs < runs means retries ran out with a SHORT quiet
         // sample: medians rest on fewer samples than requested even
@@ -463,10 +368,7 @@ object Bench {
         s""","errors":$errs,"cpus":"$cpus","shuffle":"$shuffle","sf":"$sfDir"}"""
     // stdout is full of sbt/log4j noise; also write the line to a file
     // so the driver's parse can't fail silently.
-    println(json)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try Files.writeString(Paths.get(out), json + "\n")
-    catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
+    Harness.emit("bench", json, out = "bench_out.json")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,12 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.graft.ListenerBridge
+import graft.obs.Meter
 
 /** Plan/pushdown audit tool: for each query (args, or all), print the
   * isolated cold and warm wall time, the warm run's job and stage
@@ -20,66 +16,19 @@ import org.apache.spark.sql.graft.ListenerBridge
   */
 object Explain {
 
-  /** Per-stage timings, collected from the listener bus. */
-  private final case class St(var name: String = "", var submitted: Long = 0,
-                              var completed: Long = 0, var tasks: Int = 0,
-                              var taskTime: Long = 0, var inRec: Long = 0,
-                              var srRec: Long = 0, var swRec: Long = 0,
-                              var cpu: Long = 0)
-
-  /** Jobs and stages seen since the last [[reset]]. */
-  private final class StageListener extends SparkListener {
-    val stages = new ConcurrentHashMap[Int, St]
-    val jobs = new ConcurrentHashMap[Int, (Long, Long)]
-    def reset(): Unit = { stages.clear(); jobs.clear() }
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-      val s = stages.computeIfAbsent(e.stageInfo.stageId, _ => St())
-      s.name = e.stageInfo.name.takeWhile(_ != '\n')
-      s.submitted = System.currentTimeMillis()
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val s = stages.computeIfAbsent(e.stageInfo.stageId, _ => St())
-      s.completed = System.currentTimeMillis()
-      s.tasks = e.stageInfo.numTasks
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val s = stages.get(e.stageId)
-      if (s != null && e.taskInfo != null) {
-        s.taskTime += e.taskInfo.duration
-        val m = e.taskMetrics
-        if (m != null) {
-          s.inRec += m.inputMetrics.recordsRead
-          s.srRec += m.shuffleReadMetrics.recordsRead
-          s.swRec += m.shuffleWriteMetrics.recordsWritten
-          s.cpu += m.executorCpuTime / 1000000L
-        }
-      }
-    }
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.put(e.jobId, (System.currentTimeMillis(), 0L))
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      val v = jobs.get(e.jobId)
-      if (v != null) jobs.put(e.jobId, (v._1, System.currentTimeMillis()))
-    }
-
-    /** The summary line and one line per stage. */
-    def table(): Seq[String] = {
-      val js = jobs.asScala.toSeq.sortBy(_._1)
-      val ss = stages.asScala.toSeq.sortBy(_._1)
-      val jobWall = js.map { case (_, (a, b)) => math.max(0L, b - a) }.sum
-      val stageWall = ss.map(s => math.max(0L,
-        s._2.completed - s._2.submitted)).sum
-      val summary =
-        f"jobs=${js.size} jobwall=${jobWall / 1e3}%.2f s stages=${ss.size} " +
-          f"stagewall=${stageWall / 1e3}%.2f s " +
-          f"tasktime=${ss.map(_._2.taskTime).sum / 1e3}%.2f s"
-      summary +: ss.map { case (id, s) =>
-        f"  stage $id%3d ${s.tasks}%4d tasks " +
-          f"wall=${math.max(0L, s.completed - s.submitted) / 1e3}%6.2f s " +
-          f"tasktime=${s.taskTime / 1e3}%6.2f s cpu=${s.cpu / 1e3}%6.2f s " +
-          f"in=${s.inRec}%9d sr=${s.srRec}%9d sw=${s.swRec}%9d " +
-          f"${s.name.take(60)}"
-      }
+  /** The summary line and one line per stage of a query's charge. */
+  private def table(c: Meter.Charge): Seq[String] = {
+    val ss = c.stages.values.toSeq
+    val summary =
+      f"jobs=${c.jobs} jobwall=${c.jobMs / 1e3}%.2f s stages=${ss.size} " +
+        f"stagewall=${ss.map(_.wallMs).sum / 1e3}%.2f s " +
+        f"tasktime=${ss.map(_.taskMs).sum / 1e3}%.2f s"
+    summary +: ss.map { s =>
+      f"  stage ${s.id}%3d ${s.tasks}%4d tasks " +
+        f"wall=${s.wallMs / 1e3}%6.2f s " +
+        f"tasktime=${s.taskMs / 1e3}%6.2f s cpu=${s.cpuNs / 1e9}%6.2f s " +
+        f"in=${s.inputRecords}%9d sr=${s.shuffleReadRecords}%9d " +
+        f"sw=${s.shuffleWriteRecords}%9d ${s.name.take(60)}"
     }
   }
 
@@ -93,8 +42,6 @@ object Explain {
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = Harness.sfDir()
     val spark = Harness.session(logLevel = "ERROR")
-    val probe = new StageListener
-    spark.sparkContext.addSparkListener(probe)
     val sb = new StringBuilder
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -114,11 +61,9 @@ object Explain {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val cold = Harness.timed(run())
       Harness.sweep(spark)
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      probe.reset()
-      val warm = Harness.timed(run())
-      ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val stageTable = probe.table()
+      val (warm, charge) =
+        Meter.measure(spark.sparkContext, s"explain-$name")(Harness.timed(run()))
+      val stageTable = table(charge)
       val n = fn(spark, sfDir).count()
       sb.append(
         f"==== $name%s rows=$n%d cold_sec=$cold%.3f warm_sec=$warm%.3f ====%n")

@@ -7,8 +7,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-/** The kit the by-hand harness mains (AsofBench, SkewBench, StoreBench,
-  * StreamBench, Explain, ScaleUp) share: validated `SPARK_GRAFT_*`
+/** The kit every main (Bench, Verify, AsofBench, SkewBench, StoreBench,
+  * StreamBench, Explain, ScaleUp) shares: validated `SPARK_GRAFT_*`
   * knobs, a profiled local session, the host-stall probe, timing and
   * alternating A/B helpers, and one way to publish a result line.
   *
@@ -46,6 +46,18 @@ object Harness {
     parsed(name, default, env, "an integer in [0, 100]")(
       _.toIntOption.filter(p => p >= 0 && p <= 100))
 
+  /** An integer ≥ 0, for knobs where 0 means off. */
+  def nonNegativeInt(name: String, default: Int,
+                     env: String => Option[String] = processEnv): Int =
+    parsed(name, default, env, "a non-negative integer")(
+      _.toIntOption.filter(_ >= 0))
+
+  /** A finite number ≥ 0. */
+  def nonNegative(name: String, default: Double,
+                  env: String => Option[String] = processEnv): Double =
+    parsed(name, default, env, "a non-negative number")(
+      _.toDoubleOption.filter(x => x >= 0 && !x.isInfinite))
+
   /** A fraction in (0, 1]. */
   def fraction(name: String, default: Double,
                env: String => Option[String] = processEnv): Double =
@@ -71,13 +83,27 @@ object Harness {
            env: String => Option[String] = processEnv): String =
     parsed(name, default, env, "non-blank")(Some(_).filter(_.nonEmpty))
 
-  /** Local cores: `SPARK_GRAFT_CPUS`, default this host's. */
-  lazy val cpus: Int =
-    positiveInt("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
+  /** Comma-separated names, each one of `known`, in the given order
+    * without repeats; empty entries are skipped, and a list with no
+    * name or an unknown one is malformed. */
+  def names(name: String, default: Seq[String], known: String => Boolean,
+            env: String => Option[String] = processEnv): Seq[String] =
+    env(name).fold(default) { v =>
+      val ns = v.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = ns.filterNot(known)
+      if (ns.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
+        s"$name must list known query names, got '$v'" +
+          (if (unknown.isEmpty) "" else unknown.mkString(" (unknown: ", ", ", ")")))
+      ns
+    }
 
-  /** Initial shuffle partitions: `SPARK_GRAFT_SHUFFLE`, default cores.
+  /** Local cores: `SPARK_GRAFT_CPUS`, by default this host's. */
+  def cpus(default: Int = Runtime.getRuntime.availableProcessors): Int =
+    positiveInt("SPARK_GRAFT_CPUS", default)
+
+  /** Initial shuffle partitions: `SPARK_GRAFT_SHUFFLE`, default `cpus`.
     * AQE only coalesces down from it, so scale runs raise it. */
-  lazy val shuffle: Int = positiveInt("SPARK_GRAFT_SHUFFLE", cpus)
+  def shuffle(cpus: Int): Int = positiveInt("SPARK_GRAFT_SHUFFLE", cpus)
 
   /** Scale-factor directory: `SPARK_GRAFT_SF_DIR`, `default` when
     * unset; with no default it must be set. */
@@ -93,11 +119,11 @@ object Harness {
   /** A `local[cpus]` session on [[Session.profile]] with [[shuffle]]
     * partitions plus `conf`. Forces the shared knobs first, so a bad
     * one fails before any Spark start-up. */
-  def session(logLevel: String = "WARN",
-              conf: Map[String, String] = Map.empty): SparkSession = {
+  def session(logLevel: String = "WARN", conf: Map[String, String] = Map.empty,
+              cpus: Int = Harness.cpus()): SparkSession = {
     benchOut
     val spark = Session.profile(SparkSession.builder().master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", shuffle.toString)
+      .config("spark.sql.shuffle.partitions", shuffle(cpus).toString)
       .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
@@ -200,18 +226,18 @@ object Harness {
   // ---------------- output ----------------
 
   /** Prints the one-line JSON result to stdout and writes it to
-    * `SPARK_GRAFT_BENCH_OUT`, by default to
+    * `SPARK_GRAFT_BENCH_OUT`, by default to `out` or else to
     * `.harness_out/<harness>[_<kind>].json` (gitignored, so a run never
     * overwrites a committed record). A failed write is reported, not
     * fatal: the stdout line is the record. */
-  def emit(harness: String, json: String, kind: String = ""): Unit = {
+  def emit(harness: String, json: String, kind: String = "", out: String = ""): Unit = {
     println(json)
-    val out = Paths.get(benchOut.getOrElse(
-      s".harness_out/$harness${if (kind.isEmpty) "" else "_" + kind}.json"))
+    val path = Paths.get(benchOut.getOrElse(if (out.nonEmpty) out
+      else s".harness_out/$harness${if (kind.isEmpty) "" else "_" + kind}.json"))
     try {
-      Option(out.getParent).foreach(Files.createDirectories(_))
-      Files.writeString(out, json + "\n")
+      Option(path.getParent).foreach(Files.createDirectories(_))
+      Files.writeString(path, json + "\n")
     } catch { case NonFatal(e) =>
-      System.err.println(s"[$harness] write $out failed: $e") }
+      System.err.println(s"[$harness] write $path failed: $e") }
   }
 }

@@ -170,7 +170,7 @@ object SkewBench {
         s""","violations":${violations.map("\"" + _ + "\"")
           .mkString("[", ",", "]")}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"""" +
-        s""","cpus":"${Harness.cpus}","shuffle":"${Harness.shuffle}","sf":"$sfDir"}""")
+        s""","cpus":"${Harness.cpus()}","shuffle":"${Harness.shuffle(Harness.cpus())}","sf":"$sfDir"}""")
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

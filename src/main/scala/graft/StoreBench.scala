@@ -104,7 +104,7 @@ object StoreBench {
 
     val spark = Harness.session(
       conf = Map("spark.sql.warehouse.dir" -> warehouse))
-    val shuffle = Harness.shuffle
+    val shuffle = Harness.shuffle(Harness.cpus())
     val plainDir = s"$warehouse/plain_ctl"
     // lazy: reading a table runs a schema-inference job, which would
     // shift the RDD-id-seeded range sampling of the kinds that never
@@ -135,7 +135,7 @@ object StoreBench {
     def jsonTail(loadBefore: String, stallSec: Double): String =
       s""","stall_sec":${Harness.r2(stallSec)}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
-        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}"""
+        s""","cpus":"${Harness.cpus()}","sf":"$sfDir"}"""
 
     // "stream_spans" prices the STREAMING ExactSubstr gate (the q120
     // contract's deployment shape): micro-batches of new documents
@@ -1089,7 +1089,7 @@ object StoreBench {
         s""","store_scale":$storeScale,"buckets":$shuffle""" +
         layout.extraJson +
         s""","loadavg_before":"$loadBefore","loadavg_after":"$loadAfter"""" +
-        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}"""
+        s""","cpus":"${Harness.cpus()}","sf":"$sfDir"}"""
     }
 
     val json = kind match {

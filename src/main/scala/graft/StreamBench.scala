@@ -315,7 +315,7 @@ object StreamBench {
         s""","identity_ok":${!failed}""" +
         s""","stall_sec":${Harness.r2(stallSec)}""" +
         s""","loadavg_before":"$loadBefore","loadavg_after":"${Harness.loadavg}"""" +
-        s""","cpus":"${Harness.cpus}","sf":"$sfDir"}""", kind = arm)
+        s""","cpus":"${Harness.cpus()}","sf":"$sfDir"}""", kind = arm)
     spark.stop()
     if (failed) sys.exit(1)
   }

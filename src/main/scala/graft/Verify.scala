@@ -1,39 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the query surface (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // stall tolerance, as Bench: a >10 s freeze must not kill the
-      // context mid-dump
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val all = SparkEntry.queries
+    // optional dev filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
+    // queries (full runs stay the default)
+    val only = Harness.names("SPARK_GRAFT_ONLY", all.keys.toSeq, all.contains).toSet
+    val selected = all.view.filterKeys(only).toMap
+    // 32 cores unless set, as Bench
+    val spark = Harness.session(cpus = Harness.cpus(32))
     new java.io.File(outDir).mkdirs()
     def deleteRec(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(deleteRec)
       f.delete()
-    }
-    // optional dev filter: SPARK_GRAFT_ONLY=q_a,q_b dumps just those
-    // queries (the driver never sets it; full runs stay the default)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
       // pre-delete: a query that throws before its write must not
@@ -45,10 +27,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries persist intermediates (census slice, IVF centroids,
-      // pipeline stage); keep runs independent. clearCache misses
-      // localCheckpoint blocks — sweep those too (CheckpointBridge).
-      spark.sharedState.cacheManager.clearCache()
-      org.apache.spark.sql.graft.CheckpointBridge.unpersistAll(spark, blocking = true)
+      // pipeline stage) and checkpoint blocks; keep runs independent
+      Harness.sweep(spark)
     }
     // manifest of every declared query, so the gate can flag a
     // rows-only query whose output is missing (no oracle ⇒ no other

@@ -2,10 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 
-/** Bridge to the `private[spark]` listener bus flush — lets tests that
-  * assert on task metrics (skew-guard specs) drain pending
-  * `SparkListener` events deterministically instead of sleeping.
-  * Same access-package pattern as [[ColumnBridge]].
+/** Bridge to the `private[spark]` listener bus flush — lets
+  * `graft.obs.Meter` deliver every pending event before it reports,
+  * instead of sleeping. Same access-package pattern as [[ColumnBridge]].
   */
 object ListenerBridge {
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

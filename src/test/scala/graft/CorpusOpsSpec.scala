@@ -202,52 +202,41 @@ class CorpusOpsSpec extends GraftSuite {
     // a BenchSketch must never re-pay the bench count/build/broadcast.
     // Counted directly: repeated sketch-overload gates spend exactly
     // one job each (their own collect), while each one-shot gate call
-    // spends that PLUS the bench-side count and build jobs.
+    // spends that PLUS the bench-side count and build jobs. Each call
+    // runs under its own job group, so only its own jobs are counted.
     val docs = graft.io.Tables(spark, sfDir).documents
     val train = docs.where(col("doc_id") % 20 =!= 0)
     val bench = docs.where(col("doc_id") % 20 === 0)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    def jobs[T](tag: String)(body: => T): (T, Int) = {
+      val (out, c) = graft.obs.Meter.measure(spark.sparkContext,
+        s"benchsketch-$tag")(body)
+      (out, c.jobs)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def drained(): Int = {
-        org.apache.spark.sql.graft.ListenerBridge
-          .waitUntilEmpty(spark.sparkContext)
-        jobs.get()
-      }
-      val sketch = Decontaminate.buildBenchSketch(bench,
-        col("doc_id"), col("text"), n = 5, fpp = 0.03)
-      val j0 = drained()
-      val a = Decontaminate.overlapStatsBloomStateless(train, sketch,
-        col("doc_id"), col("text"), threshold = 0.5).collect()
-      val j1 = drained()
-      val b = Decontaminate.overlapStatsBloomStateless(train, sketch,
-        col("doc_id"), col("text"), threshold = 0.5).collect()
-      val j2 = drained()
-      assert(a.nonEmpty && a.toSet == b.toSet)
-      val perGate = math.max(j1 - j0, j2 - j1)
-      // the one-shot form against the same bench: pays the gate's own
-      // jobs PLUS count + build
+    val sketch = Decontaminate.buildBenchSketch(bench,
+      col("doc_id"), col("text"), n = 5, fpp = 0.03)
+    val (a, ja) = jobs("a")(Decontaminate.overlapStatsBloomStateless(train,
+      sketch, col("doc_id"), col("text"), threshold = 0.5).collect())
+    val (b, jb) = jobs("b")(Decontaminate.overlapStatsBloomStateless(train,
+      sketch, col("doc_id"), col("text"), threshold = 0.5).collect())
+    assert(a.nonEmpty && a.toSet == b.toSet)
+    val perGate = math.max(ja, jb)
+    // the one-shot form against the same bench: pays the gate's own
+    // jobs PLUS count + build
+    val (_, oneShotJobs) = jobs("oneshot")(
       Decontaminate.overlapStatsBloomStateless(train, bench,
         col("doc_id"), col("text"), n = 5, threshold = 0.5,
-        fpp = 0.03).collect()
-      val j3 = drained()
-      assert(perGate >= 1)
-      assert(j3 - j2 >= perGate + 2,
-        s"one-shot gate spent ${j3 - j2} jobs vs $perGate per prebuilt " +
-          "gate — expected at least count+build on top")
-      // and the prebuilt overload is the SAME math as the one-shot
-      // form (identical sketch parameters → identical deterministic
-      // filter)
-      val oneShot = Decontaminate.overlapStatsBloomStateless(train, bench,
-        col("doc_id"), col("text"), n = 5, threshold = 0.5, fpp = 0.03)
-        .collect().map(_.toSeq).toSet
-      assert(a.map(_.toSeq).toSet == oneShot)
-    } finally spark.sparkContext.removeSparkListener(listener)
+        fpp = 0.03).collect())
+    assert(perGate >= 1)
+    assert(oneShotJobs >= perGate + 2,
+      s"one-shot gate spent $oneShotJobs jobs vs $perGate per prebuilt " +
+        "gate — expected at least count+build on top")
+    // and the prebuilt overload is the SAME math as the one-shot
+    // form (identical sketch parameters → identical deterministic
+    // filter)
+    val oneShot = Decontaminate.overlapStatsBloomStateless(train, bench,
+      col("doc_id"), col("text"), n = 5, threshold = 0.5, fpp = 0.03)
+      .collect().map(_.toSeq).toSet
+    assert(a.map(_.toSeq).toSet == oneShot)
   }
 
   test("overlapStatsStateless equals overlapStats on the corpus split") {

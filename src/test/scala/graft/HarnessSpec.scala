@@ -41,4 +41,36 @@ class HarnessSpec extends GraftSuite {
     assert(Harness.median(Nil) == -1.0)
     assert(Harness.jarr(Seq(1.23456, 2.0)) == "[1.235,2.0]")
   }
+
+  test("Bench and Verify knobs: 0 means off, flags, query lists; bad values fail named") {
+    import Harness._
+    val name = "SPARK_GRAFT_KNOB"
+    def env(v: String): String => Option[String] = Map(name -> v).get
+    val unset: String => Option[String] = _ => None
+    def rejects(values: Seq[String])(parse: (String => Option[String]) => Any): Unit =
+      values.foreach { v =>
+        val e = intercept[IllegalArgumentException](parse(env(v)))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$v'"),
+          e.getMessage)
+      }
+    val blank = Seq("", "  ")
+    assert(nonNegativeInt(name, 900, unset) == 900)
+    assert(nonNegativeInt(name, 900, env("0")) == 0)
+    assert(nonNegativeInt(name, 900, env(" 30 ")) == 30)
+    rejects(Seq("abc", "-1", "1.5", "3000000000") ++ blank)(nonNegativeInt(name, 900, _))
+    assert(nonNegative(name, 5.0, unset) == 5.0)
+    assert(nonNegative(name, 5.0, env("0")) == 0.0)
+    assert(nonNegative(name, 5.0, env("2.5")) == 2.5)
+    rejects(Seq("abc", "-0.5", "NaN", "Infinity") ++ blank)(nonNegative(name, 5.0, _))
+    // only 0/1/true/false: "off" used to leave the witnesses on
+    assert(!flag(name, true, env("false")) && !flag(name, true, env("0")))
+    rejects(Seq("off", "no") ++ blank)(flag(name, true, _))
+
+    val known = Set("q_a", "q_b", "q_c")
+    assert(names(name, Seq("q_a"), known, unset) == Seq("q_a"))
+    assert(names(name, Nil, known, env(" q_c, q_a,q_c ,")) == Seq("q_c", "q_a"))
+    rejects(Seq("q_typo", "q_a,q_typo", ",", " , ") ++ blank)(names(name, Nil, known, _))
+    val e = intercept[IllegalArgumentException](names(name, Nil, known, env("q_a,q_x")))
+    assert(e.getMessage.contains("unknown: q_x"), e.getMessage)
+  }
 }

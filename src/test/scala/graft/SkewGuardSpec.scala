@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
 
+import graft.obs.Meter
 import graft.operators.Dedup
 
 /** The salted bucket self-join is spec-tested for pair-equivalence on
@@ -13,25 +10,13 @@ import graft.operators.Dedup
   * exercises it on an actually *skewed* one — 1000 identical docs
   * forced into a single LSH band, i.e. one hot (band, key) bucket
   * holding the whole corpus — and measures the per-task work with a
-  * SparkListener. The metric is max shuffle-write records per task:
+  * [[Meter]]. The metric is max shuffle-write records per task:
   * the candidate pairs a single join task generates. Unsalted, the
   * hot bucket's ~500k pairs come out of ONE task; with salt=8 the
   * bucket runs as 8 tasks of ~1/8 the pairs each, and the pair set is
   * byte-identical.
   */
 class SkewGuardSpec extends GraftSuite {
-
-  /** Max `shuffleWrite.recordsWritten` over all tasks since reset. */
-  private final class MaxWriteListener extends SparkListener {
-    val maxWrite = new AtomicLong(0)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val w = m.shuffleWriteMetrics.recordsWritten
-        maxWrite.updateAndGet(c => math.max(c, w))
-      }
-    }
-  }
 
   test("salt=8 splits a hot LSH bucket's pair generation ~8 ways, pairs identical") {
     import spark.implicits._
@@ -51,21 +36,18 @@ class SkewGuardSpec extends GraftSuite {
     val saved = Seq("spark.sql.shuffle.partitions",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.enabled").map(k => k -> conf.get(k))
-    val listener = new MaxWriteListener
     try {
       conf.set("spark.sql.shuffle.partitions", "32")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       conf.set("spark.sql.adaptive.enabled", "false")
-      spark.sparkContext.addSparkListener(listener)
 
       def measure(salt: Int): Long = {
-        listener.maxWrite.set(0)
-        Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
-            n = 3, numHashes = 32, bands = 1, threshold = 0.5, salt = salt)
-          .write.format("noop").mode("overwrite").save()
-        ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        val (_, c) = Meter.measure(spark.sparkContext, s"skewguard-$salt")(
+          Dedup.minhashLshPairs(docs, col("doc_id"), col("text"),
+              n = 3, numHashes = 32, bands = 1, threshold = 0.5, salt = salt)
+            .write.format("noop").mode("overwrite").save())
         spark.sharedState.cacheManager.clearCache()
-        listener.maxWrite.get()
+        c.maxTaskShuffleWrites
       }
       val unsaltedMax = measure(1)
       val saltedMax = measure(8)
@@ -80,10 +62,7 @@ class SkewGuardSpec extends GraftSuite {
         s"expected the unsalted hot bucket in one task, saw $unsaltedMax")
       assert(saltedMax * 3 <= unsaltedMax,
         s"salting did not spread the hot bucket: $saltedMax vs $unsaltedMax")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      saved.foreach { case (k, v) => conf.set(k, v) }
-    }
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
 
     // pair sets are identical (run under restored session confs)
     def pairs(salt: Int) =

@@ -1,26 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
 
 import graft.etl.VersionStore
 import graft.io.FooterSchema
-
-/** Counts the Spark jobs started under one job group — the group is
-  * set on the test thread only, so jobs of other suites sharing the
-  * session are not counted. */
-private class GroupJobCounter(group: String) extends SparkListener {
-  val jobs = new AtomicInteger
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    if (Option(e.properties).exists(
-        _.getProperty("spark.jobGroup.id") == group))
-      jobs.incrementAndGet()
-}
+import graft.obs.Meter
 
 /** Store metadata is a driver-side lookup: version schemas come from
   * one footer ([[FooterSchema]]) and equal what Spark's inference
@@ -28,21 +15,13 @@ private class GroupJobCounter(group: String) extends SparkListener {
 class StoreMetadataSpec extends GraftSuite {
   import spark.implicits._
 
+  /** The jobs `body` starts on the test thread: the job group is set
+    * there only, so jobs of other suites sharing the session are not
+    * counted. */
   private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobcount-${java.util.UUID.randomUUID()}"
-    val counter = new GroupJobCounter(group)
-    ListenerBridge.waitUntilEmpty(sc)
-    sc.addSparkListener(counter)
-    sc.setJobGroup(group, "job count", interruptOnCancel = false)
-    try {
-      val out = body
-      ListenerBridge.waitUntilEmpty(sc)
-      (out, counter.jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(counter)
-    }
+    val (out, c) = Meter.measure(spark.sparkContext,
+      s"jobcount-${java.util.UUID.randomUUID()}")(body)
+    (out, c.jobs)
   }
 
   private def fs(dir: String) =
