@@ -5,6 +5,8 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.RunConstant
+
 /** Audit-column conventions of the reference's Delta writers
   * (code/ukg_wrkload_dtl.py:194-203, ukg_dept_bus_strctr.py:74-81):
   * every table carries RUN_ID, ROW_INSERT_TSP, ROW_UPDT_TSP,
@@ -24,13 +26,19 @@ object Audit {
     * over a data-derived timestamp when determinism matters. An input
     * column with an audit column's name is replaced in place, as by
     * `withColumn`. One projection: chained `withColumn`s re-analyze
-    * the growing plan once per column. */
+    * the growing plan once per column.
+    *
+    * `RUN_ID` and the two timestamps are bound as run constants
+    * ([[graft.plans.RunConstant]]): the timestamps are the query's
+    * `current_timestamp()` and `RUN_ID` is `runId`'s value, as
+    * before, but a new run's values do not change the generated
+    * class, so a warm write compiles nothing. */
   def withAuditColumns(df: DataFrame, runId: Column, user: String): DataFrame =
     // ListMap: `withColumns` appends new columns in the map's order
     df.withColumns(ListMap(
-      "RUN_ID" -> runId,
-      "ROW_INSERT_TSP" -> current_timestamp(),
-      "ROW_UPDT_TSP" -> current_timestamp(),
+      "RUN_ID" -> RunConstant(runId),
+      "ROW_INSERT_TSP" -> RunConstant(current_timestamp()),
+      "ROW_UPDT_TSP" -> RunConstant(current_timestamp()),
       "INSERT_USER_ID" -> lit(user),
       "UPDT_USER_ID" -> lit(user)))
 }

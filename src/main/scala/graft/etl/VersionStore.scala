@@ -94,6 +94,16 @@ object VersionStore {
     else Some(FooterSchema.read(spark, dir(root, v), ls))
   }
 
+  /** The schema [[footered]] would read version `v` with, from the
+    * footer alone (no frame is built); None for a footerless version. */
+  private def footeredSchema(spark: SparkSession,
+                             f: org.apache.hadoop.fs.FileSystem,
+                             root: String, v: Long): Option[StructType] = {
+    val ls = listing(f, root, v)
+    if (FooterSchema.dataFiles(ls).isEmpty) None
+    else Some(FooterSchema.schema(spark, dir(root, v), ls))
+  }
+
   /** Append `df` as the next version; returns its number.
     *
     * Schema enforcement (the contract Delta gives the reference's
@@ -193,16 +203,16 @@ object VersionStore {
                              df: DataFrame, evolve: Boolean,
                              who: String): Unit = {
     val lastFootered = committed.reverse.iterator
-      .map(v => v -> footered(spark, f, root, v))
-      .collectFirst { case (v, Some(read)) => (v, read.schema) }
+      .map(v => v -> footeredSchema(spark, f, root, v))
+      .collectFirst { case (v, Some(schema)) => (v, schema) }
     lastFootered.foreach { case (last, cur) =>
       val curT = cur.fields.map(fd => fd.name -> fd.dataType).toMap
       val newT = df.schema.fields.map(fd => fd.name -> fd.dataType).toMap
       // a stored version reads back all-nullable, so nullability is
       // not a type change: re-appending a frame with a non-nullable
       // nested type must pass
-      val clash = curT.keySet.intersect(newT.keySet)
-        .filter(k => nullable(curT(k)) != nullable(newT(k)))
+      val clash = curT.keySet.intersect(newT.keySet).filter(k =>
+        FooterSchema.nullable(curT(k)) != FooterSchema.nullable(newT(k)))
       require(clash.isEmpty,
         s"VersionStore.$who: column type change rejected (v$last -> new): " +
           clash.toSeq.sorted.map(k => s"$k: ${curT(k)} -> ${newT(k)}")
@@ -217,16 +227,6 @@ object VersionStore {
             "pass evolve=true to change columns deliberately")
       }
     }
-  }
-
-  /** `t` with every nested field, element and value nullable. */
-  private[graft] def nullable(t: DataType): DataType = t match {
-    case StructType(fs) => StructType(fs.map(f =>
-      f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
-    case MapType(k, v, _) =>
-      MapType(nullable(k), nullable(v), valueContainsNull = true)
-    case other => other
   }
 
   /** Write a frame into an already-CLAIMED version number through the
@@ -558,12 +558,11 @@ object VersionStore {
     val f = fs(spark, root)
     footered(spark, f, root, version).getOrElse {
       val donor = versions(spark, root).filter(_ < version).reverse
-        .iterator.flatMap(footered(spark, f, root, _)).nextOption()
+        .iterator.flatMap(footeredSchema(spark, f, root, _)).nextOption()
         .getOrElse(throw new IllegalStateException(
           s"version $version of $root has no parquet footers and no " +
             "earlier version does either — schema unknowable"))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], donor.schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], donor)
     }
   }
 
@@ -631,7 +630,7 @@ object VersionStore {
         // empty version (no footers) ⇒ no schema; "" keeps history
         // listable instead of throwing on the whole table
         if (files.nonEmpty)
-          FooterSchema.read(spark, dir(root, v), ls).schema.toDDL
+          FooterSchema.schema(spark, dir(root, v), ls).toDDL
         else "")
     }
     spark.createDataFrame(
@@ -737,7 +736,6 @@ object VersionStore {
                      zOrder: Boolean = false,
                      extraStatsCols: Seq[String] = Nil,
                      minFiles: Int = 1): Long = {
-    import org.apache.spark.sql.functions.col
     require(layoutCols.nonEmpty, "optimizeSorted needs layout columns")
     require(targetFileMB >= 1 && minFiles >= 1,
       "targetFileMB and minFiles must be >= 1")
@@ -759,13 +757,10 @@ object VersionStore {
         require(!src.columns.contains("__z"),
           "column name __z is reserved")
         val typed = layoutCols.map(c => c -> src.schema(c).dataType)
-        src.withColumn("__z",
-            graft.io.DataSkipping.zOrderValue(src, typed))
-          .repartitionByRange(files, col("__z"))
-          .sortWithinPartitions("__z").drop("__z")
-      } else
-        src.repartitionByRange(files, layoutCols.map(col): _*)
-          .sortWithinPartitions(layoutCols.map(col): _*)
+        graft.io.DataSkipping.rangeLayout(src.withColumn("__z",
+            graft.io.DataSkipping.zOrderValue(src, typed)), Seq("__z"), files)
+          .drop("__z")
+      } else graft.io.DataSkipping.rangeLayout(src, layoutCols, files)
     }, action = "rewrite",
       onBuilt = Some((tmp, fin) =>
         graft.io.DataSkipping.writeStatsRelocated(spark, tmp, fin,

@@ -11,7 +11,11 @@ import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Literal, RowOrdering}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, RangeBridge}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -288,7 +292,7 @@ object DataSkipping {
   def collectStats(spark: SparkSession, dir: String,
                    cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "declare at least one stats column")
-    val dataSchema = FooterSchema.read(spark, dir).schema
+    val dataSchema = FooterSchema.schema(spark, dir)
     val typed = cols.map { c =>
       val f = dataSchema.find(_.name == c).getOrElse(
         sys.error(s"stats column '$c' not in data schema " +
@@ -369,7 +373,7 @@ object DataSkipping {
     // list every root would otherwise pay discovery/inference setup,
     // which measurably rivaled the prune's win on small tables
     MarkerCommit.touch(s"$tmp/$SchemaFile",
-      FooterSchema.read(spark, dir).schema.json)
+      FooterSchema.schema(spark, dir).json)
     MarkerCommit.commitSwap(out, tmp, StatsMarker)
   }
 
@@ -411,7 +415,7 @@ object DataSkipping {
         // corruption), and for a data column a silent type fork
         // corrupts every unioning reader.
         val baseSchema = committedSchema(spark, dir)
-          .getOrElse(spark.read.parquet(dir).schema)
+          .getOrElse(FooterSchema.schema(spark, dir))
         val mergedSchema =
           if (fresh.isEmpty) baseSchema
           else {
@@ -612,17 +616,78 @@ object DataSkipping {
     * ranges are near-disjoint (one boundary value may straddle two
     * files) and parquet row-group stats inside each file are
     * selective too. A range predicate over the lead sort column then
-    * keeps O(matching range) files. The range exchange samples keys
-    * (one extra pass over the batch) — the usual price of a sorted
-    * layout, paid at write time where it belongs. */
+    * keeps O(matching range) files. The boundaries are sampled from
+    * the input (one extra pass over the batch, see [[rangeLayout]]) —
+    * the usual price of a sorted layout, paid at write time where it
+    * belongs. */
   def writeSorted(df: DataFrame, dir: String, sortCols: Seq[String],
                   numFiles: Int,
                   mode: SaveMode = SaveMode.Overwrite): Unit = {
     require(sortCols.nonEmpty && numFiles >= 1,
       "writeSorted needs sort columns and a positive file count")
-    df.repartitionByRange(numFiles, sortCols.map(col): _*)
+    rangeLayout(df, sortCols, numFiles).write.mode(mode).parquet(dir)
+  }
+
+  /** Reservoir points per output file for [[rangeLayout]]'s sample:
+    * ten times `repartitionByRange`'s default, so an evenly split
+    * input of up to 3,000 rows per file is taken whole and gets exact
+    * quantile boundaries. */
+  private val SamplePointsPerFile = 1000
+  private val LayoutSeed = 42
+  private val SlotCol = "__range_slot"
+
+  /** `df` range-partitioned on `sortCols` (ascending, nulls first)
+    * into `numFiles` partitions, in key order, and sorted within
+    * each. The boundaries come from the input alone: a reservoir
+    * sample under a fixed seed ([[RangeBridge.bounds]], the
+    * boundaries `repartitionByRange` would pick), where
+    * `repartitionByRange` seeds its sample with the RDD id, so the
+    * same input laid out its files differently depending on how many
+    * RDDs the session had made before. Each row's range index picks
+    * an int key that Spark's hash partitioning sends to exactly that
+    * partition, so range k lands in partition k. */
+  private[graft] def rangeLayout(df: DataFrame, sortCols: Seq[String],
+                                 numFiles: Int): DataFrame = {
+    require(!df.columns.contains(SlotCol), s"column name $SlotCol is reserved")
+    // one struct key for any column count: its comparison orders
+    // null fields first, as the sort and the range exchange do
+    val key = struct(sortCols.map(col): _*)
+    val keys = df.select(key)
+    val keyType = keys.schema.head.dataType
+    val bounds = RangeBridge.bounds(
+      keys.queryExecution.toRdd.map(_.copy()), numFiles,
+      SamplePointsPerFile, LayoutSeed)(
+      RowOrdering.createNaturalAscendingOrdering(Seq(keyType)),
+      scala.reflect.classTag[InternalRow])
+      .map(r => ColumnBridge.column(Literal(r.get(0, keyType), keyType)))
+    val slots = slotKeys(numFiles)
+    // binary search over the boundaries: a key above bounds(mid) lies
+    // in a range past mid
+    def slot(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(slots(lo))
+      else {
+        val mid = (lo + hi) / 2
+        when(key > bounds(mid), slot(mid + 1, hi)).otherwise(slot(lo, mid))
+      }
+    df.withColumn(SlotCol, slot(0, bounds.length))
+      .repartition(numFiles, col(SlotCol))
       .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(mode).parquet(dir)
+      .drop(SlotCol)
+  }
+
+  /** For each of `n` partitions, an int that Spark's hash
+    * partitioning into `n` partitions sends to exactly it. */
+  private def slotKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var found = 0
+    var v = 0
+    while (found < n) {
+      val p = HashPartitioning(Seq(Literal(v)), n).partitionIdExpression
+        .eval().asInstanceOf[Int]
+      if (keys(p) < 0) { keys(p) = v; found += 1 }
+      v += 1
+    }
+    keys
   }
 
   /** Sorted write + committed stats in one call — the full
@@ -728,9 +793,7 @@ object DataSkipping {
     }
     require(!df.columns.contains("__z"), "column name __z is reserved")
     val z = zOrderValue(df, typed)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
+    rangeLayout(df.withColumn("__z", z), Seq("__z"), numFiles)
       .drop("__z")
       .write.mode(SaveMode.Overwrite).parquet(dir)
     writeStats(df.sparkSession, dir, (zCols ++ extraStatsCols).distinct)

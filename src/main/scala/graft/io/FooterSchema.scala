@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Schema-pinned reads of a flat parquet directory, without Spark's
   * schema-inference job.
@@ -19,6 +19,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * unchanged. So on the driver one footer read gives the same schema,
   * and `spark.read.schema(s).parquet(dir)` skips the job. For a
   * daily-drop-sized table that job is a visible share of the day.
+  * Where only the schema is needed, [[schema]] gives it without
+  * building the frame at all.
   *
   * The pin applies only where it provably equals inference: a flat
   * directory (no visible subdirectory, so no partition columns), no
@@ -54,29 +56,63 @@ object FooterSchema {
     finally reader.close()
   }
 
+  /** The footer-recorded schema of `dir` when the pin applies (see
+    * the object doc), as written; None where inference must run. */
+  private def pinned(spark: SparkSession,
+                     listing: Seq[FileStatus]): Option[StructType] = {
+    val flat = !listing.exists { s =>
+      val n = s.getPath.getName
+      (s.isDirectory && !hidden(n)) ||
+        n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    }
+    if (!flat) None
+    else dataFiles(listing).headOption.flatMap(
+      recorded(spark.sparkContext.hadoopConfiguration, _))
+  }
+
+  /** The schema of [[read]]`(spark, dir, listing)` without building
+    * the frame: the footer's recorded schema, made nullable throughout
+    * as a file source reads it, or Spark's inference where [[read]]
+    * falls back to it. Building the frame costs a file-index listing
+    * and an analysis, tens of milliseconds for a schema check. */
+  def schema(spark: SparkSession, dir: String,
+             listing: Seq[FileStatus]): StructType =
+    pinned(spark, listing).fold(spark.read.parquet(dir).schema)(
+      nullable(_).asInstanceOf[StructType])
+
+  /** [[schema]], listing `dir` itself. */
+  def schema(spark: SparkSession, dir: String): StructType =
+    schema(spark, dir, list(spark, dir))
+
   /** `dir` read with its schema pinned from one footer, given the
     * directory's `listing` (callers that already listed it pass that
     * listing, so the directory is listed once). Falls back to
     * `spark.read.parquet(dir)` where the pin would not equal
     * inference (see the object doc). */
   def read(spark: SparkSession, dir: String,
-           listing: Seq[FileStatus]): DataFrame = {
-    val flat = !listing.exists { s =>
-      val n = s.getPath.getName
-      (s.isDirectory && !hidden(n)) ||
-        n.startsWith("_metadata") || n.startsWith("_common_metadata")
-    }
-    val pinned =
-      if (!flat) None
-      else dataFiles(listing).headOption.flatMap(
-        recorded(spark.sparkContext.hadoopConfiguration, _))
-    pinned.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
-  }
+           listing: Seq[FileStatus]): DataFrame =
+    pinned(spark, listing).fold(spark.read)(s => spark.read.schema(s))
+      .parquet(dir)
 
   /** [[read]], listing `dir` itself. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
+  def read(spark: SparkSession, dir: String): DataFrame =
+    read(spark, dir, list(spark, dir))
+
+  private def list(spark: SparkSession, dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    read(spark, dir, fs.listStatus(p).toSeq)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
+  }
+
+  /** `t` with every field, element and value nullable — the form a
+    * file source gives a stored schema, so comparing two schemas
+    * through it ignores nullability. */
+  private[graft] def nullable(t: DataType): DataType = t match {
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
   }
 }

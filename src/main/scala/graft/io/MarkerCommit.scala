@@ -1,9 +1,11 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{FileVisitResult, Files, LinkOption, Paths, SimpleFileVisitor, StandardCopyOption, StandardOpenOption, Path => JPath}
+import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 
 import org.apache.spark.sql.SparkSession
 
@@ -25,20 +27,41 @@ import org.apache.spark.sql.SparkSession
   * holds via content-addressed successor paths + marker-last (see
   * the PqIndexStore scaladoc).
   *
-  * Filesystem resolution follows the DATA path: every operation goes
-  * through Hadoop [[FileContext]] under the active Spark session's
-  * Hadoop configuration, so a schemeless path lands on the SAME
-  * filesystem `spark.read.parquet`/`df.write.parquet` resolve it to.
-  * (The previous java.nio implementation wrote markers on the
-  * driver-LOCAL fs while the frames went through `fs.defaultFS` — a
-  * divergence invisible on `local[*]`, where both are the local disk,
-  * but real on a cluster whose default is HDFS/ABFS: the store would
-  * commit data remotely and markers locally, and every other reader
-  * host would see an uncommitted artifact forever.) FileContext's
-  * `Rename.NONE` gives the fail-if-destination-exists rename the race
-  * absorption below depends on — `FileSystem.rename` has posix-mv
-  * move-INTO-directory semantics that would silently nest the
-  * successor instead of failing. */
+  * Filesystem resolution follows the DATA path: a path resolves under
+  * the active Spark session's Hadoop configuration, so a schemeless
+  * path lands on the SAME filesystem `spark.read.parquet`/
+  * `df.write.parquet` resolve it to (`fs.defaultFS`). Markers written
+  * on the driver-local disk while the frames went to HDFS/ABFS would
+  * leave every other reader host an uncommitted artifact forever.
+  *
+  * Two implementations of the four operations (exists, move, touch,
+  * delete), chosen by the resolved scheme:
+  *   - `file://` goes through java.nio. Hadoop's local filesystem
+  *     starts a `chmod` process on every create and a `readlink`
+  *     process on every rename when libhadoop is absent (about 25 ms
+  *     per commit); java.nio does the same work in system calls.
+  *     `move` is `Files.move` without `ATOMIC_MOVE`: it refuses an
+  *     existing target, where `rename(2)` would silently replace an
+  *     empty directory. `touch` writes a hidden temp sibling and
+  *     renames it into place, so a reader sees the old content or the
+  *     new, never a partial file; it drops the `.<name>.crc` sidecar a
+  *     Hadoop write may have left, which would otherwise fail the
+  *     next checksummed read.
+  *   - Every other scheme goes through Hadoop [[FileContext]], whose
+  *     `Rename.NONE` is the fail-if-destination-exists rename
+  *     (`FileSystem.rename` has posix-mv move-INTO-directory semantics
+  *     that would silently nest the successor instead of failing).
+  *
+  * Either way a move onto an existing target throws Hadoop's
+  * [[FileAlreadyExistsException]], which the race absorption below
+  * depends on.
+  *
+  * Fsync policy: none, on either path. A commit survives a process
+  * crash at any step (each step is a rename or a whole-file write),
+  * but not necessarily a power loss: the data files Spark's local
+  * writer lands are not synced either, so syncing the marker alone
+  * would not make the commit durable. Power-loss durability is the
+  * filesystem's (HDFS replication, an object store's PUT). */
 private[graft] object MarkerCommit {
 
   private def conf: Configuration =
@@ -49,29 +72,71 @@ private[graft] object MarkerCommit {
   private def ctx(p: Path): FileContext =
     FileContext.getFileContext(p.toUri, conf)
 
+  /** `p` as a java.nio path when it resolves to the local filesystem
+    * (a `file:` URI, or a schemeless path under a `file:` default). */
+  private def local(p: Path): Option[JPath] = {
+    val uri = p.toUri
+    val scheme = Option(uri.getScheme)
+      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme == "file") Some(Paths.get(uri.getPath)) else None
+  }
+
   /** Marker-gated visibility check — the ONE reader gate. */
   def markerExists(dir: String, marker: String): Boolean =
     fileExists(new Path(dir, marker).toString)
 
   def fileExists(path: String): Boolean = {
     val p = new Path(path)
-    ctx(p).util().exists(p)
+    local(p) match {
+      case Some(l) => Files.exists(l)
+      case None => ctx(p).util().exists(p)
+    }
   }
 
   /** Create/overwrite a small marker/flag file with `content`. */
   def touch(path: String, content: String): Unit = {
     val p = new Path(path)
-    val out = ctx(p).create(p,
-      java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val bytes = content.getBytes(StandardCharsets.UTF_8)
+    local(p) match {
+      case Some(l) =>
+        val dir = l.getParent
+        Files.createDirectories(dir)
+        val name = l.getFileName.toString
+        val tmp = dir.resolve(s".$name.${java.util.UUID.randomUUID}.tmp")
+        try {
+          Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW,
+            StandardOpenOption.WRITE)
+          Files.deleteIfExists(dir.resolve(s".$name.crc"))
+          Files.move(tmp, l, StandardCopyOption.REPLACE_EXISTING,
+            StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
+      case None =>
+        val out = ctx(p).create(p,
+          java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+          Options.CreateOpts.createParent())
+        try out.write(bytes)
+        finally out.close()
+    }
   }
 
   /** Fail-if-destination-exists move (file or directory). */
-  private def move(src: String, dst: String): Unit =
-    ctx(new Path(src)).rename(new Path(src), new Path(dst),
-      Options.Rename.NONE)
+  private[graft] def move(src: String, dst: String): Unit = {
+    val (s, d) = (new Path(src), new Path(dst))
+    (local(s), local(d)) match {
+      case (Some(ls), Some(ld)) =>
+        try Files.move(ls, ld)
+        catch {
+          // the target check and the rename are two system calls: a
+          // target that lands between them fails the rename as a
+          // non-empty directory, not as an existing file
+          case e: java.nio.file.FileSystemException
+              if Files.exists(ld, LinkOption.NOFOLLOW_LINKS) =>
+            throw new FileAlreadyExistsException(
+              s"move $src -> $dst: target exists").initCause(e)
+        }
+      case _ => ctx(s).rename(s, d, Options.Rename.NONE)
+    }
+  }
 
   /** WRITER-path recovery: a prior crash can leave `dir + ".old"`
     * holding the ONLY committed artifact (predecessor renamed
@@ -126,7 +191,7 @@ private[graft] object MarkerCommit {
       if (fileExists(dir)) move(dir, old)
       try { move(tmp, dir); landed = true }
       catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        case e: FileAlreadyExistsException =>
           // a racing reader restored `.old` into `dir` between our
           // rename-aside and move-in; it is the committed predecessor
           // again — loop: re-aside it and land the successor
@@ -141,7 +206,24 @@ private[graft] object MarkerCommit {
 
   def deleteRecursively(dir: String): Unit = {
     val p = new Path(dir)
-    val c = ctx(p)
-    if (c.util().exists(p)) c.delete(p, true)
+    local(p) match {
+      case Some(l) =>
+        // a file's checksum sidecar goes with it, as in Hadoop's delete
+        if (Files.isRegularFile(l, LinkOption.NOFOLLOW_LINKS))
+          Files.deleteIfExists(l.resolveSibling(s".${l.getFileName}.crc"))
+        if (Files.exists(l, LinkOption.NOFOLLOW_LINKS))
+          Files.walkFileTree(l, new SimpleFileVisitor[JPath] {
+            override def visitFile(f: JPath, a: BasicFileAttributes) = {
+              Files.delete(f); FileVisitResult.CONTINUE
+            }
+            override def postVisitDirectory(d: JPath, e: java.io.IOException) = {
+              if (e != null) throw e
+              Files.delete(d); FileVisitResult.CONTINUE
+            }
+          })
+      case None =>
+        val c = ctx(p)
+        if (c.util().exists(p)) c.delete(p, true)
+    }
   }
 }

@@ -75,6 +75,34 @@ class DataSkippingSpec extends GraftSuite {
     }
   }
 
+  test("sorted and z-ordered layouts depend on the input alone") {
+    // per file: (rows, min id, max id), in file-name order
+    def layout(dir: String) = spark.read.parquet(dir)
+      .groupBy(regexp_extract(col("_metadata.file_path"), "[^/]+$", 0)
+        .as("file"))
+      .agg(count(lit(1)), min("id"), max("id"))
+      .orderBy("file").collect()
+      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    def sorted() = {
+      val dir = tmpDir("layout_sorted")
+      writeSorted(corpus, dir, Seq("id"), numFiles = 16)
+      layout(dir)
+    }
+    def zordered() = {
+      val dir = tmpDir("layout_z")
+      writeZOrderedWithStats(corpus, dir, Seq("id", "v"), numFiles = 8)
+      layout(dir)
+    }
+    val (s1, z1) = (sorted(), zordered())
+    // RDDs made between the writes must not move a boundary
+    (1 to 7).foreach(i => spark.sparkContext.parallelize(1 to i).count())
+    assert(sorted() == s1)
+    assert(zordered() == z1)
+    // the 10k-row input fits the sample: exact quantiles, 625 rows a
+    // file in id order, disjoint
+    assert(s1 == (0 until 16).map(k => (625L, 625L * k, 625L * k + 624)))
+  }
+
   test("range prune keeps fewer files and the pruned read is exact") {
     val dir = tmpDir("range")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,

@@ -73,6 +73,53 @@ class EtlCoreSpec extends GraftSuite {
     }.size + 1)
   }
 
+  test("an audited write compiles nothing when warm; stamps keep their values") {
+    import java.nio.file.Files
+    import java.sql.Timestamp
+    // a file-backed scan: a local relation would be evaluated without
+    // codegen and hide the compiles
+    val src = Files.createTempDirectory("audit_src").resolve("t").toString
+    spark.range(40).select(col("id"),
+      timestamp_seconds(lit(1709251200L) + col("id") * 3601L).as("ts"))
+      .write.parquet(src)
+    def micros(c: String) = unix_micros(col(c))
+    // writes `runTs`'s audited frame; the stamps and the wall-clock
+    // interval (in micros) the write ran in
+    def write(runTs: Timestamp): (Seq[(Long, Long, Long)], Long, Long) = {
+      val out = Files.createTempDirectory("audit_out").resolve("t").toString
+      val before = System.currentTimeMillis() * 1000
+      Audit.withAuditColumns(spark.read.parquet(src),
+        Audit.runIdFrom(lit(runTs)), "svc").write.parquet(out)
+      val after = (System.currentTimeMillis() + 1) * 1000
+      val stamps = spark.read.parquet(out)
+        .select(col("RUN_ID"), micros("ROW_INSERT_TSP"), micros("ROW_UPDT_TSP"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      (stamps, before, after)
+    }
+    write(Timestamp.valueOf("2024-03-01 06:00:00"))
+    Thread.sleep(5) // a later clock
+    val run2 = Timestamp.valueOf("2024-03-02 06:00:07")
+    val cg0 = org.apache.spark.sql.graft.CodegenBridge.compileCount
+    val (stamps, before, after) = write(run2)
+    val compiles = org.apache.spark.sql.graft.CodegenBridge.compileCount - cg0
+    assert(compiles == 0, s"the warm audited write compiled $compiles classes")
+    assert(stamps.size == 40)
+    val runId = spark.range(1).select(Audit.runIdFrom(lit(run2))).head().getLong(0)
+    assert(stamps.map(_._1).toSet == Set(runId))
+    assert(stamps.forall { case (_, ins, upd) => ins == upd })
+    val tsp = stamps.head._2
+    assert(stamps.map(_._2).toSet == Set(tsp))
+    assert(before <= tsp && tsp < after,
+      s"ROW_INSERT_TSP $tsp outside the write's interval [$before, $after)")
+    // a data-dependent run id is not a run constant: it varies per row
+    val perRow = Audit.withAuditColumns(spark.read.parquet(src),
+      Audit.runIdFrom(col("ts")), "svc")
+      .select(col("RUN_ID"), Audit.runIdFrom(col("ts")).as("want"))
+      .collect()
+    assert(perRow.forall(r => r.getLong(0) == r.getLong(1)))
+    assert(perRow.map(_.getLong(0)).distinct.length == 40)
+  }
+
   test("Snapshot.latest keeps only max-version rows") {
     val li = t.lineitem.select("l_orderkey", "l_shipdate")
     val out = Snapshot.latest(li, to_date(col("l_shipdate")))

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One mechanism per job, checked over the sources: knobs are read by
-  * the kit alone, the job-group meter is the only Spark listener, and
-  * every session is built on graft's profile. Comment lines are skipped,
-  * so a doc comment may name what the code may not do. */
+  * the kit alone, the job-group meter is the only Spark listener, every
+  * session is built on graft's profile, and every per-run stamp is bound
+  * as a run constant. Comment lines are skipped, so a doc comment may
+  * name what the code may not do. */
 class SourceRulesSpec extends AnyFunSuite {
 
   /** (path from the repo root, code lines) of every Scala file under `dir`. */
@@ -53,5 +54,19 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(matching("src", profiled).toSet == Set(
       "src/main/scala/graft/Harness.scala",
       "src/test/scala/graft/SparkSessionTestBase.scala"))
+  }
+
+  test("every per-run stamp goes through the run-constant binder") {
+    // a stamp the optimizer folds into a fresh literal per query, which
+    // codegen would write into the class source: a new class every run
+    val stamp = """(?i)(?:\bcurrent_(?:timestamp|date)|(?<![\w.])now)\s*\("""
+    val bound = """\bRunConstant\(\s*(?:[\w.]+\.)?""" + stamp
+    val unbound = sources("src/main").filter { case (_, code) =>
+      stamp.r.findAllIn(code).size != bound.r.findAllIn(code).size
+    }.map(_._1)
+    assert(unbound.isEmpty)
+    // the rule is not vacuous: the audit columns bind their stamps
+    assert(matching("src/main", bound) ==
+      Seq("src/main/scala/graft/etl/Audit.scala"))
   }
 }

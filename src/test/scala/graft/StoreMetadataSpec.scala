@@ -48,7 +48,7 @@ class StoreMetadataSpec extends GraftSuite {
     // v2: footerless (an external writer's empty commit): reads borrow
     // the donor v1's schema. The marker goes through the Hadoop local
     // FS, so a `._SUCCESS.crc` sidecar sits beside it — not data.
-    graft.io.MarkerCommit.touch(s"$root/v=2/_SUCCESS", "")
+    fs(root).create(new Path(s"$root/v=2/_SUCCESS")).close()
     VersionStore.write(richFrame, root, evolve = true)                   // v3
     val inferred = (0 to 3).map(v =>
       if (v == 2) spark.read.parquet(s"$root/v=1").schema
@@ -58,6 +58,12 @@ class StoreMetadataSpec extends GraftSuite {
         s"v$v schema")
     }
     assert(VersionStore.latest(spark, root).schema == inferred(3))
+    // the schema alone, without a frame, is the same
+    Seq(0, 1, 3).foreach { v =>
+      val vdir = s"$root/v=$v"
+      assert(FooterSchema.schema(spark, vdir,
+        fs(root).listStatus(new Path(vdir)).toSeq) == inferred(v), s"v$v")
+    }
     assert(VersionStore.asOf(spark, root, 2).isEmpty)
     val ddl = VersionStore.history(spark, root).orderBy("version")
       .select("schema_ddl").as[String].collect().toSeq
@@ -129,6 +135,7 @@ class StoreMetadataSpec extends GraftSuite {
       file).isEmpty)
     val inferred = spark.read.parquet(vdir).schema
     assert(FooterSchema.read(spark, vdir).schema == inferred)
+    assert(FooterSchema.schema(spark, vdir) == inferred)
     val latest = VersionStore.latest(spark, root)
     assert(latest.schema == inferred)
     assert(latest.orderBy("id").as[(Long, String)].collect().toSeq ==
@@ -141,6 +148,7 @@ class StoreMetadataSpec extends GraftSuite {
       .write.partitionBy("k").parquet(dir)
     val pinned = FooterSchema.read(spark, dir)
     assert(pinned.schema == spark.read.parquet(dir).schema)
+    assert(FooterSchema.schema(spark, dir) == pinned.schema)
     assert(pinned.columns.toSeq == Seq("id", "x", "k"))
   }
 }
