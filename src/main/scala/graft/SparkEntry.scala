@@ -8,6 +8,7 @@ import graft.etl.{Audit, Backfill, Batching, Compaction, Scd, Snapshot}
 import graft.functions.{PathFns, TextFns}
 import graft.io.{Cleanser, Tables}
 import graft.operators._
+import graft.util.CacheScope
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
@@ -23,18 +24,6 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     CensusPipeline.censusCount(Tables(spark, "/root/testdata/sf0.001"))
-
-  /** Query-local MEMORY_AND_DISK persist, registered with
-    * [[graft.util.CacheScope]] (the repo's cache-lifecycle contract):
-    * for query bodies that build a "stored" reference frame from text
-    * inline and then consume it more than once — the persist
-    * materializes the store build exactly once per query execution,
-    * as a real deployment's write-once store would. Intra-query only;
-    * Bench/Verify clear it between queries, long-lived callers free
-    * it with `CacheScope.releaseAll()`. */
-  private def scopedCache(df: DataFrame): DataFrame =
-    graft.util.CacheScope.track(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -400,24 +389,15 @@ object SparkEntry {
     // store — v0 = the target, v1 = the merged table, committed via
     // VersionStore's shared MarkerCommit crash window; later calls
     // serve the committed v1, so the STORE round-trip itself is
-    // oracle-checked (the q168 pattern). Path carries the target
-    // fingerprint so a regenerated corpus rebuilds instead of
-    // serving stale rows. Single-writer by the sequential-harness
-    // contract (as q_cms_cells_stored) (r13)
+    // oracle-checked (the q168 pattern) (r13)
     "q_merge_versioned" -> ((s, dir) => {
       import graft.etl.{Merge, VersionStore}
-      val target = mergeDemoTarget(s, dir)
-      val fpRow = target.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(o_orderkey, o_custkey))")).head()
-      val fp = java.lang.Long.toHexString(fpRow.getLong(0) ^
-        (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
-      val root = s"/tmp/graft_serving_idx/merge1_$fp"
-      if (VersionStore.versions(s, root).isEmpty)
-        VersionStore.write(target, root)
-      if (VersionStore.versions(s, root).size < 2)
+      val root = servingStore("merge1", dir) { root =>
+        VersionStore.write(mergeDemoTarget(s, dir), root)
         Merge.mergeVersioned(s, root, mergeDemoChanges(s, dir),
           Seq("o_orderkey"), col("change_ts"), col("gen"),
           deleteFlag = Some("is_delete"))
+      }
       // store keeps DECIMAL; the SURFACE casts (decimal-portability
       // discipline — see q_merge_upsert)
       VersionStore.latest(s, root)
@@ -436,22 +416,9 @@ object SparkEntry {
       import graft.etl.Merge
       def withP(df: DataFrame): DataFrame =
         df.withColumn("p", (col("o_orderkey") % 8).cast("int"))
-      val target = withP(mergeDemoTarget(s, dir))
-      val fpRow = target.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(o_orderkey, o_custkey))")).head()
-      val fp = java.lang.Long.toHexString(fpRow.getLong(0) ^
-        (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
-      val path = s"/tmp/graft_serving_idx/mergep_$fp"
-      // marker-gated bootstrap: a crash during the initial write
-      // must not leave a partial directory that later runs treat as
-      // the complete base table (File.exists alone would). The
-      // marker lands AFTER the write; a marker-less directory is a
-      // detected half-bootstrap and is rebuilt (r14, advisor find)
-      if (!graft.io.MarkerCommit.markerExists(path, "_BOOTSTRAPPED")) {
-        graft.io.MarkerCommit.deleteRecursively(path)
-        graft.io.PartitionedStore.write(target, path, "p")
-        graft.io.MarkerCommit.touch(s"$path/_BOOTSTRAPPED", "v1")
-      }
+      val path = servingStore("mergep", dir)(
+        graft.io.PartitionedStore.write(withP(mergeDemoTarget(s, dir)),
+          _, "p"))
       Merge.mergePartitioned(s, path, withP(mergeDemoChanges(s, dir)),
         Seq("o_orderkey"), col("change_ts"), col("gen"), "p",
         deleteFlag = Some("is_delete"))
@@ -480,17 +447,8 @@ object SparkEntry {
     // skipped footer opens, and the surface REQUIRES files-kept <
     // files-present so the pruning itself is gated every run. The
     // data predicate still applies on top (superset contract)
-    "q_store_skip" -> ((s, dir) => {
-      import graft.io.DataSkipping
-      val path = s"/tmp/graft_serving_idx/skip_${skipDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
-        DataSkipping.writeSortedWithStats(skipDemoFrame(s, dir), path,
-          Seq("order_day"), numFiles = 32,
-          statsCols = Seq("order_day", "o_orderkey"))
-      }
-      skipDemoRead(s, path)
-    }),
+    "q_store_skip" -> ((s, dir) =>
+      skipDemoRead(s, skipDemoStore(s, dir))),
 
     // oracle-checked: the same skipping attached to a VERSIONED
     // commit — stats ride INSIDE the committed v=N directory (an
@@ -504,15 +462,13 @@ object SparkEntry {
     "q_store_skip_versioned" -> ((s, dir) => {
       import graft.io.DataSkipping
       import graft.etl.VersionStore
-      val root = s"/tmp/graft_serving_idx/skipv_${skipDemoFp(s, dir)}"
-      if (VersionStore.versions(s, root).isEmpty)
-        VersionStore.write(skipDemoFrame(s, dir)
+      val root = servingStore("skipv", dir) { root =>
+        val v = VersionStore.write(skipDemoFrame(s, dir)
           .repartitionByRange(32, col("order_day"))
           .sortWithinPartitions("order_day"), root)
-      val vdir = s"$root/v=${VersionStore.versions(s, root).max}"
-      if (!DataSkipping.statsCommitted(s, vdir))
-        DataSkipping.writeStats(s, vdir, Seq("order_day"))
-      skipDemoRead(s, vdir)
+        DataSkipping.writeStats(s, s"$root/v=$v", Seq("order_day"))
+      }
+      skipDemoRead(s, s"$root/v=${VersionStore.versions(s, root).max}")
     }),
 
     // oracle-checked: Z-ORDER clustering (the OPTIMIZE ZORDER
@@ -528,12 +484,9 @@ object SparkEntry {
     "q_store_skip_zorder" -> ((s, dir) => {
       import graft.io.DataSkipping
       import graft.io.DataSkipping.{AndPred, RangePred}
-      val path = s"/tmp/graft_serving_idx/skipz_${skipDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
+      val path = servingStore("skipz", dir)(
         DataSkipping.writeZOrderedWithStats(skipDemoFrame(s, dir),
-          path, Seq("order_day", "o_custkey"), numFiles = 32)
-      }
+          _, Seq("order_day", "o_custkey"), numFiles = 32))
       val pred = AndPred(
         RangePred("order_day", java.sql.Date.valueOf("1996-01-01"),
           java.sql.Date.valueOf("1996-12-31")),
@@ -560,22 +513,12 @@ object SparkEntry {
     // same oracle, verbatim (the fromindex-twin pattern)
     "q_store_skip_fileindex" -> ((s, dir) => {
       import graft.io.{DataSkipping, SkippingFileIndex}
-      val path = s"/tmp/graft_serving_idx/skip_${skipDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
-        DataSkipping.writeSortedWithStats(skipDemoFrame(s, dir), path,
-          Seq("order_day"), numFiles = 32,
-          statsCols = Seq("order_day", "o_orderkey"))
-      }
+      val path = skipDemoStore(s, dir)
       val df = SkippingFileIndex.read(s, path)
         .where(col("order_day").between(
           lit(java.sql.Date.valueOf("1996-01-01")),
           lit(java.sql.Date.valueOf("1996-12-31"))))
-      val scan = df.queryExecution.sparkPlan.collectLeaves()
-        .collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.getOrElse(sys.error("q_store_skip_fileindex: no file scan"))
-      val kept = scan.selectedPartitions.totalNumberOfFiles.toInt
+      val kept = scannedFiles(df, "q_store_skip_fileindex")
       val total = DataSkipping.listDataFiles(s, path).size
       require(kept > 0 && kept < total,
         s"fileindex skipping degenerate: scan lists $kept of $total files")
@@ -595,9 +538,7 @@ object SparkEntry {
     // compose is also spec-pinned strictly (DataSkippingSpec)
     "q_store_skip_partitioned" -> ((s, dir) => {
       import graft.io.{DataSkipping, SkippingFileIndex}
-      val path = s"/tmp/graft_serving_idx/skipp_${skipDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
+      val path = servingStore("skipp", dir) { path =>
         skipDemoFrame(s, dir)
           .withColumn("p", pmod(col("o_custkey"), lit(4L)).cast("int"))
           .repartitionByRange(32, col("p"), col("o_orderkey"))
@@ -606,10 +547,7 @@ object SparkEntry {
         DataSkipping.writeStats(s, path, Seq("o_orderkey"))
       }
       def files(df: DataFrame): Int =
-        df.queryExecution.sparkPlan.collectLeaves().collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.selectedPartitions.totalNumberOfFiles.toInt
-        }.getOrElse(sys.error("q_store_skip_partitioned: no file scan"))
+        scannedFiles(df, "q_store_skip_partitioned")
       val both = SkippingFileIndex.readPartitioned(s, path)
         .where(col("p") === 1 &&
           col("o_orderkey").between(1000L, 50000L))
@@ -660,17 +598,14 @@ object SparkEntry {
     // and REQUIREs the runtime filter fired and kept < total files,
     // so the prune is gated every run, by measured file count
     "q_store_skip_dynamic" -> ((s, dir) => {
-      import graft.io.{DataSkipping, SkipScan}
-      val path = s"/tmp/graft_serving_idx/skipd_${dfpDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
+      import graft.io.DataSkipping
+      val path = servingStore("skipd", dir)(
         DataSkipping.writeSortedWithStats(
           Tables(s, dir).lineitem.select(col("l_orderkey"),
             col("l_quantity").cast("decimal(18,2)").as("qty"),
             col("l_extendedprice").cast("decimal(18,2)").as("price")),
-          path, Seq("l_orderkey"), numFiles = 32,
-          statsCols = Seq("l_orderkey"))
-      }
+          _, Seq("l_orderkey"), numFiles = 32,
+          statsCols = Seq("l_orderkey")))
       val mx = Tables(s, dir).orders.agg(max("o_orderkey"))
         .head().getLong(0)
       val w = math.max(1L, math.ceil((mx + 1) / 16.0).toLong)
@@ -694,26 +629,7 @@ object SparkEntry {
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n_items"))
       }
-      // gate the prune: one execution under the fallback ratio, on a
-      // CLONED session so the useStats flip is invisible to `s` (r17
-      // advice #4 — the old in-place set/restore opened a window any
-      // concurrent query in the shared session could plan under).
-      // The witness reads off THIS dataset's own executed scan
-      // instance (SkipScan.prunesIn — executing the gated frame's own
-      // QueryExecution; count() would derive a new one and a fresh
-      // scan). Executed via toRdd.foreach, NOT collect(): the gate
-      // only needs the scan to run — the aggregate is one row per
-      // join key, which collect() would pull to the driver,
-      // driver-sized at 100 TB (r18 verdict #5; guide §5).
-      val gateS = org.apache.spark.sql.graft.SessionBridge.cloneSession(s)
-      gateS.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-      val gated = build(gateS)
-      gated.queryExecution.toRdd.foreach(_ => ())
-      val prune = SkipScan.prunesIn(gated).collectFirst {
-        case (d, p) if d == path => p
-      }.getOrElse(sys.error(
-        "q_store_skip_dynamic: no SkipScan in the executed plan"))
+      val prune = dfpGate(s, path, "q_store_skip_dynamic")(build)
       require(prune.runtimeFilterSeen,
         "dynamic file pruning: runtime filter never reached the scan")
       require(prune.keptRuntime > 0 &&
@@ -733,10 +649,8 @@ object SparkEntry {
     // The builder REQUIREs each level removed files by measured
     // count (graded: tiny fuzz corpora land few-file directories)
     "q_store_skip_dynamic_part" -> ((s, dir) => {
-      import graft.io.{DataSkipping, SkipScan}
-      val path = s"/tmp/graft_serving_idx/skipdp_${dfpDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
+      import graft.io.DataSkipping
+      val path = servingStore("skipdp", dir) { path =>
         Tables(s, dir).lineitem.select(col("l_orderkey"),
             col("l_quantity").cast("decimal(18,2)").as("qty"),
             pmod(col("l_orderkey"), lit(4L)).cast("int").as("p"))
@@ -765,20 +679,7 @@ object SparkEntry {
           .agg(sum("qty").cast("double").as("sum_qty"),
             count(lit(1)).as("n_items"))
       }
-      // gate on a CLONED session, as q_store_skip_dynamic: the
-      // useStats flip never touches the shared session's conf; the
-      // gate executes the frame's own QueryExecution without driver
-      // materialization (toRdd.foreach — the aggregate is join-key-
-      // sized, r18 verdict #5)
-      val gateS = org.apache.spark.sql.graft.SessionBridge.cloneSession(s)
-      gateS.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-      val gated = build(gateS)
-      gated.queryExecution.toRdd.foreach(_ => ())
-      val prune = SkipScan.prunesIn(gated).collectFirst {
-        case (d, p) if d == path => p
-      }.getOrElse(sys.error(
-        "q_store_skip_dynamic_part: no SkipScan in the executed plan"))
+      val prune = dfpGate(s, path, "q_store_skip_dynamic_part")(build)
       require(prune.runtimeFilterSeen,
         "partitioned DFP: runtime filter never reached the scan")
       require(prune.keptRuntime > 0,
@@ -906,21 +807,14 @@ object SparkEntry {
     // same oracle, verbatim
     "q_backfill_range_store" -> ((s, dir) => {
       import graft.io.DataSkipping
-      val path = s"/tmp/graft_serving_idx/bfr_${skipDemoFp(s, dir)}"
-      if (!DataSkipping.statsCommitted(s, path)) {
-        graft.io.MarkerCommit.deleteRecursively(path)
+      val path = servingStore("bfr", dir)(
         DataSkipping.writeSortedWithStats(
           Tables(s, dir).orders.select("o_orderkey", "o_orderdate"),
-          path, Seq("o_orderdate"), numFiles = 32,
-          statsCols = Seq("o_orderdate"))
-      }
+          _, Seq("o_orderdate"), numFiles = 32,
+          statsCols = Seq("o_orderdate")))
       val df = Backfill.rangeStore(s, path, "o_orderdate",
         "1996-01-01 00:00:00", "1997-01-01 00:00:00")
-      val scan = df.queryExecution.sparkPlan.collectLeaves()
-        .collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.getOrElse(sys.error("q_backfill_range_store: no file scan"))
-      val kept = scan.selectedPartitions.totalNumberOfFiles.toInt
+      val kept = scannedFiles(df, "q_backfill_range_store")
       val total = DataSkipping.listDataFiles(s, path).size
       require(kept > 0 && kept < total,
         s"backfill skipping degenerate: scan lists $kept of $total files")
@@ -1020,7 +914,7 @@ object SparkEntry {
       // deployment would; (id, shingle, n_sh) longs, never text.
       Dedup.incrementalJaccardPairsFromIndex(
         docs.where(col("doc_id") % 3 =!= 0),
-        scopedCache(Dedup.shingleIndex(docs.where(col("doc_id") % 3 === 0),
+        CacheScope.persist(Dedup.shingleIndex(docs.where(col("doc_id") % 3 === 0),
           col("doc_id"), col("text"), n = 3)),
         col("doc_id"), col("text"), n = 3, threshold = 0.5,
         maxShingleDf = Some(64))
@@ -1031,7 +925,7 @@ object SparkEntry {
       // persisted (r19): see q_dedup_incremental_fromindex
       Dedup.incrementalContainmentPairsFromIndex(
         docs.where(col("doc_id") % 3 =!= 0),
-        scopedCache(Dedup.shingleIndex(docs.where(col("doc_id") % 3 === 0),
+        CacheScope.persist(Dedup.shingleIndex(docs.where(col("doc_id") % 3 === 0),
           col("doc_id"), col("text"), n = 3)),
         col("doc_id"), col("text"), n = 3, threshold = 0.8,
         maxShingleDf = Some(64))
@@ -1393,9 +1287,7 @@ object SparkEntry {
     // on first call; every later call LOADS and probes, so serving
     // cost is KBs of artifact + the probed partitions, never the
     // trainer's corpus pass (the measured reason the in-surface
-    // probes scale ~3x at sf1). The artifact path carries a content
-    // fingerprint of the embeddings table — a regenerated table can
-    // never serve a stale index.
+    // probes scale ~3x at sf1)
     "q_ann_opq_store" -> ((s, dir) => {
       val idx = opqServingIndex(s, dir)
       val emb = Tables(s, dir).embeddings
@@ -1533,7 +1425,7 @@ object SparkEntry {
       // lineage packing callers (q_pack_sequences etc.) deliberately
       // skip this: a persist there costs more storage than the
       // recompute it saves.
-      val withTok = scopedCache(scored.join(
+      val withTok = CacheScope.persist(scored.join(
         docs.select(col("doc_id").as("id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens")),
         "id"))
@@ -1729,7 +1621,7 @@ object SparkEntry {
       // (the combined df-cap aggregate + the cross-candidate join) —
       // uncached, the reference winnowing text pass ran per consumer;
       // at scale this frame is a stored parquet artifact read once.
-      val refFps = scopedCache(Dedup.winnowFingerprints(
+      val refFps = CacheScope.persist(Dedup.winnowFingerprints(
           docs.where(col("doc_id") % 3 === 0), col("doc_id"), col("text"),
           k = 5, w = 4, hashKey = QualityModel.seededKey)
         .select(col("id"), col("fp")).distinct())
@@ -2060,23 +1952,11 @@ object SparkEntry {
     // single-file frame on every later call; identical oracle to
     // q_cms_cells_seeded, so the STORE itself is oracle-checked:
     // what parquet round-trips is cell-for-cell what the engine
-    // computed. Artifact path carries the documents fingerprint (a
-    // regenerated table rebuilds instead of serving stale cells) (r12).
-    // SINGLE-WRITER assumption: getOrBuild runs destructive writer
-    // recovery on this shared path — fine for the sequential harness
-    // (one Verify/Bench process at a time); concurrent harness
-    // invocations would need a per-run path (r12 ADVICE note)
-    "q_cms_cells_stored" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val fpRow = docs.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(doc_id, text))")).head()
-      val fp = java.lang.Long.toHexString(fpRow.getLong(0) ^
-        (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
-      graft.io.SketchStore.getOrBuild(s,
-        s"/tmp/graft_serving_idx/cms1_$fp")(
-        Sketch.countMinCells(docs, col("text"),
-          depth = 4, width = 8192, QualityModel.seededKey))
-    }),
+    // computed (r12)
+    "q_cms_cells_stored" -> ((s, dir) =>
+      graft.io.SketchStore.getOrBuild(s, storePath("cms1", dir))(
+        Sketch.countMinCells(Tables(s, dir).documents, col("text"),
+          depth = 4, width = 8192, QualityModel.seededKey))),
 
     // oracle-checked: sketch-estimated top-50 heavy hitters — the
     // vocabulary probes the broadcast sketch, est = min over depth
@@ -2587,20 +2467,12 @@ object SparkEntry {
     * given sf dir's embeddings — trained ONCE (same parameters as
     * q_ann_opq_probe: parametric eigen-allocation OPQ on a 1-in-16
     * hash sample, 16 md5-seeded coarse centroids over the rotated
-    * corpus) and re-served from disk on every later call. The
-    * artifact path embeds a content fingerprint (row count ⊕ summed
-    * row hash) so a regenerated embeddings table rebuilds instead of
-    * serving stale codes. */
+    * corpus) and re-served from disk on every later call. */
   private def opqServingIndex(s: SparkSession, dir: String)
       : graft.io.PqIndexStore.PqIndex = {
     val emb = Tables(s, dir).embeddings
       .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-    val fpRow = emb.agg(count(lit(1)),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head()
-    val fp = java.lang.Long.toHexString(fpRow.getLong(0) ^
-      (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
-    val idxDir = s"/tmp/graft_serving_idx/opq1_$fp"
-    graft.io.PqIndexStore.getOrBuild(s, idxDir) {
+    graft.io.PqIndexStore.getOrBuild(s, storePath("opq1", dir)) {
       val sample = emb.where(pmod(xxhash64(col("vec_id")), lit(16)) === 0)
       val (rot, books) = Pq.opqTrain(sample, numSub = 8,
         numCodewords = 16, opqIters = 1, lloydIters = 1,
@@ -2620,18 +2492,13 @@ object SparkEntry {
     * residual-coded (IVFADC) index for the sf dir's embeddings —
     * q_ann_ivfpq_residual's exact training (16 md5-seeded coarse
     * centroids, residual codebooks numSub 8 × 32, one Lloyd step),
-    * persisted once and served from disk thereafter. Same
-    * content-fingerprint path discipline as [[opqServingIndex]]. */
+    * persisted once and served from disk thereafter. */
   private def residualServingIndex(s: SparkSession, dir: String)
       : graft.io.PqIndexStore.PqIndex = {
     val emb = Tables(s, dir).embeddings
       .where(graft.functions.VectorFns.l2Norm(col("embedding")) > 0)
-    val fpRow = emb.agg(count(lit(1)),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head()
-    val fp = java.lang.Long.toHexString(fpRow.getLong(0) ^
-      (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
-    val idxDir = s"/tmp/graft_serving_idx/res1_$fp"
-    graft.io.PqIndexStore.getOrBuild(s, idxDir, residual = true) {
+    graft.io.PqIndexStore.getOrBuild(s, storePath("res1", dir),
+        residual = true) {
       val cents = Similarity.ivfCentroids(emb, numCentroids = 16,
         lloydIters = 0, seedKey = c => md5(c.cast("string")))
       val asg = Similarity.ivfAssignments(emb, cents)
@@ -2743,23 +2610,72 @@ object SparkEntry {
       col("o_totalprice").cast("double").as("total"),
       to_date(col("o_orderdate")).as("order_day"))
 
-  /** Corpus fingerprint for the /tmp skip stores — a regenerated
-    * testdata dir rebuilds instead of serving stale rows (the
-    * mergep_/merge1_ pattern). */
-  private def skipDemoFp(s: SparkSession, dir: String): String = {
-    val fpRow = Tables(s, dir).orders.agg(count(lit(1)),
-      expr("bit_xor(xxhash64(o_orderkey, o_custkey))")).head()
-    java.lang.Long.toHexString(fpRow.getLong(0) ^
-      (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
+  /** Where the serving store `kind` of sf dir `dir` lives: under the
+    * running SparkContext's SparkFiles root, a driver temp directory
+    * Spark deletes when the context stops (and at JVM exit). The key
+    * is the kind and the `dir` string, never the data, so a store is
+    * served only by the context that built it, with the code that
+    * built it. Read on every call, so a restarted context gets a
+    * fresh root. The root is driver-local: the harnesses that serve
+    * these stores run in local mode. */
+  private[graft] def storePath(kind: String, dir: String): String =
+    s"${org.apache.spark.SparkFiles.getRootDirectory()}/graft_serving/" +
+      f"$kind%s_${dir.hashCode}%08x"
+
+  /** [[storePath]], built once: `build` writes the store at the path
+    * it is given, and a `_BUILT` marker lands after it returns. The
+    * marker is the one "already built" gate; a marker-less directory
+    * is a build that died part-way, dropped and built again. */
+  private def servingStore(kind: String, dir: String)(
+      build: String => Unit): String = {
+    import graft.io.MarkerCommit
+    val path = storePath(kind, dir)
+    if (!MarkerCommit.markerExists(path, "_BUILT")) {
+      MarkerCommit.deleteRecursively(path)
+      build(path)
+      MarkerCommit.touch(s"$path/_BUILT", "built\n")
+    }
+    path
   }
 
-  /** Corpus fingerprint for the dynamic-pruning store (lineitem is
-    * the fact there — fingerprint the table the store holds). */
-  private def dfpDemoFp(s: SparkSession, dir: String): String = {
-    val fpRow = Tables(s, dir).lineitem.agg(count(lit(1)),
-      expr("bit_xor(xxhash64(l_orderkey, l_linenumber))")).head()
-    java.lang.Long.toHexString(fpRow.getLong(0) ^
-      (if (fpRow.isNullAt(1)) 0L else fpRow.getLong(1)))
+  /** The sorted, stats-committed orders store that q_store_skip and
+    * q_store_skip_fileindex both read. */
+  private def skipDemoStore(s: SparkSession, dir: String): String =
+    servingStore("skip", dir)(
+      graft.io.DataSkipping.writeSortedWithStats(skipDemoFrame(s, dir), _,
+        Seq("order_day"), numFiles = 32,
+        statsCols = Seq("order_day", "o_orderkey")))
+
+  /** How many files the planned scan of `df` selects — the prune
+    * witness the catalyst-integrated skip surfaces gate on. */
+  private def scannedFiles(df: DataFrame, query: String): Int =
+    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.selectedPartitions.totalNumberOfFiles.toInt
+    }.getOrElse(sys.error(s"$query: no file scan"))
+
+  /** The dynamic-pruning surfaces' gate: the prune that SkipScan saw
+    * on the store at `path` when `build`'s frame ran once under the
+    * DPP fallback ratio. The frame is built on a CLONED session so
+    * the useStats flip is invisible to `s` (r17 advice #4 — an
+    * in-place set/restore opens a window any concurrent query in the
+    * shared session could plan under). The witness reads off THIS
+    * dataset's own executed scan instance (SkipScan.prunesIn —
+    * executing the gated frame's own QueryExecution; count() would
+    * derive a new one and a fresh scan). Executed via toRdd.foreach,
+    * NOT collect(): the gate only needs the scan to run — the
+    * aggregate is one row per join key, which collect() would pull to
+    * the driver, driver-sized at 100 TB (r18 verdict #5; guide §5). */
+  private def dfpGate(s: SparkSession, path: String, query: String)(
+      build: SparkSession => DataFrame): graft.io.SkipScan.Prune = {
+    val gateS = org.apache.spark.sql.graft.SessionBridge.cloneSession(s)
+    gateS.conf.set(
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
+    val gated = build(gateS)
+    gated.queryExecution.toRdd.foreach(_ => ())
+    graft.io.SkipScan.prunesIn(gated).collectFirst {
+      case (d, p) if d == path => p
+    }.getOrElse(sys.error(s"$query: no SkipScan in the executed plan"))
   }
 
   /** The skip surfaces' one-year pruned read: assert the prune

@@ -3,7 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.util.CacheScope
 
 /** Fixed-size batch assignment.
   *
@@ -59,7 +60,7 @@ object Batching {
       .withColumn("__mid", monotonically_increasing_id())
       .withColumn("__pid", shiftright(col("__mid"), 33))
       .withColumn("__idx", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheScope.persist(_))
     val offsets = partitionOffsets(ranged, count(lit(1)))
     ranged
       .join(broadcast(offsets), col("__pid") === col("__opid"))
@@ -151,9 +152,7 @@ object Batching {
     * moves data; offsets are a ≤`partitions`-row aggregate broadcast
     * back.
     *
-    * Caching: persists the ranged input (MEMORY_AND_DISK) for the two
-    * passes and does not auto-unpersist (the caller owns the result's
-    * lifetime) — see `takeByBudgetPerKey`'s caching note.
+    * Caching: as `takeByBudgetPerKey`.
     */
   /** Keep rows while a PER-KEY running weight stays within `budget` —
     * the training-data "token budget per language/domain" mixing step:
@@ -183,11 +182,9 @@ object Batching {
     * non-floating) key type.
     *
     * Caching: the ranged input persists (MEMORY_AND_DISK) to back the
-    * two passes; the library cannot know when the caller is done with
-    * the result, so the cache is NOT auto-unpersisted — long-lived
-    * pipelines issuing many calls should `spark.sharedState
-    * .cacheManager.clearCache()` (or unpersist via the catalog)
-    * between calls, as Bench's sweep does.
+    * two passes, registered with [[graft.util.CacheScope]]; a caller
+    * done acting on the result frees it with `CacheScope.releaseAll()`.
+    * `assignScalable` caches the same way.
     */
   def takeByBudgetPerKey(df: DataFrame, key: Column, order: Column,
                          weight: Column, budget: Long, partitions: Int,
@@ -229,7 +226,7 @@ object Batching {
       .withColumn("__w", coalesce(weight.cast("long"), lit(0L)))
       .withColumn("__pid",
         shiftright(monotonically_increasing_id(), 33))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheScope.persist(_))
     val schema = ranged.schema.add("__cum",
       org.apache.spark.sql.types.LongType, nullable = false)
     val wAt = ranged.schema.fieldIndex("__w")
@@ -275,7 +272,7 @@ object Batching {
       .withColumn("__w", coalesce(weight.cast("long"), lit(0L)))
       .withColumn("__pid",
         shiftright(monotonically_increasing_id(), 33))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(CacheScope.persist(_))
     // running sum INCLUDING the current row, accumulated in partition
     // order (rows are already sorted by `order` within partitions)
     val schema = ranged.schema.add("__cum", org.apache.spark.sql.types.LongType,

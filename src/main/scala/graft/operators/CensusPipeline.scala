@@ -55,8 +55,7 @@ object CensusPipeline {
       .join(dep, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("c_mktsegment"),
         to_date(col("o_orderdate")).as("o_day"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.util.CacheScope.track(_))
+      .transform(graft.util.CacheScope.persist(_))
     // Latest file analog: keep only the most recent day in the slice
     // (reference: ltst_file CTE, ukg_open_census.py:344-346).
     val latest = facts.agg(max(col("o_day")).as("max_day"))

@@ -238,11 +238,9 @@ object CorpusStats {
     * distinct (doc, term) pair), so at 100 TB this is a deliberate
     * cache-vs-recompute trade: MEMORY_AND_DISK spills rather than
     * evicts, costing local disk instead of two extra corpus scans.
-    * As with `takeByBudgetPerKey`/`packByWeight`, the library cannot
-    * know when the caller is done with the result, so the cache is
-    * NOT auto-unpersisted — long-lived pipelines issuing many calls
-    * should `spark.sharedState.cacheManager.clearCache()` (or
-    * unpersist via the catalog) between calls, as Bench's sweep does.
+    * As with `takeByBudgetPerKey`/`packByWeight`, the cache is
+    * registered with [[graft.util.CacheScope]]: a caller done acting
+    * on the result frees it with `CacheScope.releaseAll()`.
     * Pipelines that cannot afford the cache should checkpoint the tf
     * frame to their own store and call the df/N/score stages over
     * the checkpoint instead. */
@@ -280,8 +278,7 @@ object CorpusStats {
         explode(split(graft.io.Cleanser.normalized(text), " ")).as("term"))
     val tf = occ.groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.util.CacheScope.track(_))
+      .transform(graft.util.CacheScope.persist(_))
     val dfreq = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df")) // tf is already distinct (id, term)
     val n = tf.select(count_distinct(col("id")).as("__n"))

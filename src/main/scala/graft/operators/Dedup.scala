@@ -7,6 +7,7 @@ import org.apache.spark.sql.graft.CheckpointBridge
 import graft.functions.TextFns
 import graft.io.Cleanser
 import graft.plans.HashExpressions
+import graft.util.CacheScope
 
 /** Document deduplication for the training-data pipeline: exact,
   * n-gram Jaccard, MinHash+LSH, and SimHash near-dup detection.
@@ -19,18 +20,6 @@ import graft.plans.HashExpressions
   * hot-bucket cap bound the worst buckets.
   */
 object Dedup {
-
-  /** Operator-internal MEMORY_AND_DISK persist, registered with
-    * [[graft.util.CacheScope]]: the one-pass-lineage caches (the r15
-    * fix for the ~5× text re-derivation) live in the CacheManager
-    * until released — GC never frees a Dataset-level cache — so a
-    * long-lived caller releases them deterministically with
-    * `CacheScope.releaseAll()` after its consuming actions; the
-    * documented cache-lifecycle contract (r16, spec-pinned in
-    * CacheScopeSpec). */
-  private def cached(df: DataFrame): DataFrame =
-    graft.util.CacheScope.track(
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Exact dedup: one row per distinct normalized-text fingerprint,
     * carrying the canonical (minimum) id and the duplicate count.
@@ -109,7 +98,7 @@ object Dedup {
       .select(col("id"),
         explode(HashExpressions.hashedShingles(col("__w"), n)).as("shingle"))
       .distinct()
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val sh = maxShingleDf.fold(sh0) { cap =>
       // document frequency per shingle is a dimension-sized aggregate
       val dfreq = sh0.groupBy("shingle").agg(count(lit(1)).as("__df"))
@@ -121,7 +110,7 @@ object Dedup {
       // the cap join and its shingle-keyed exchange re-execute per
       // consumer (measured at sf0.1: the same 224k-row map stage ran
       // 4× back to back, ~40% of the query's task time)
-      cached(sh0.join(dfreq, "shingle"))
+      CacheScope.persist(sh0.join(dfreq, "shingle"))
     }
     val cnt = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val a = sh.select(col("id").as("id_a"), col("shingle"))
@@ -252,7 +241,7 @@ object Dedup {
     // recomputed post-cap anyway; uncapped, the core aggregates them
     // the same way the one-shot operator does)
     val refIdx = rawShingleIndex(refDocs, id, text, n)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     incrementalShingleOverlapFromIndexes(
       rawShingleIndex(newDocs, id, text, n), refIdx, maxShingleDf)
   }
@@ -302,7 +291,7 @@ object Dedup {
     // and both sides of the self-join (batch-sized — tiny next to the
     // store); the caller owns cache lifetime
     val newIdx = newIndex
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     maxShingleDf match {
       case None if carried =>
         // stamped n_sh (the store shape): no per-doc aggregate at all
@@ -340,7 +329,7 @@ object Dedup {
           .where(coalesce(col("__rdf"), lit(0L)) +
             coalesce(col("__ndf"), lit(0L)) <= cap)
           .select("shingle")
-          .transform(cached)
+          .transform(CacheScope.persist(_))
         // persisted (r19): the capped STORE-side index feeds BOTH the
         // post-cap count union and the candidate join's reference
         // side — uncached, the store-vs-ok join (and everything above
@@ -353,11 +342,11 @@ object Dedup {
         // MEMORY_AND_DISK so scale corpora spill instead of OOM.
         val refCapped = refIndex.join(ok, "shingle")
           .select("id", "shingle")
-          .transform(cached)
+          .transform(CacheScope.persist(_))
         // batch-sized and consumed four times (both self-join sides,
         // the store join's probe side, the count union)
         val newCapped = newIdx.join(ok, "shingle")
-          .transform(cached)
+          .transform(CacheScope.persist(_))
         // post-cap per-doc sizes over the union, recomputed exactly
         // as the one-shot run counts them (slim (id) longs — the
         // text pass is gone), joined under both pair sides
@@ -583,7 +572,7 @@ object Dedup {
     // store); the caller owns cache lifetime, as the other pair
     // generators
     val newIdx0 = bandIndex(newSigs, numHashes, bands)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val (newIdx, refIdx) = maxBucketSize.fold((newIdx0, refIndex)) { c =>
       val ok = newIdx0.select("band", "bk")
         .unionByName(refIndex.select("band", "bk"))
@@ -705,7 +694,7 @@ object Dedup {
                                maxBucketSize: Option[Int],
                                salt: Int): DataFrame = {
     val sig = sig0
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val banded = capBuckets(sig.select(
         (Seq(col("id")) ++ carry.map(col) :+
           explode(array((0 until bands).map(bi =>
@@ -1204,7 +1193,7 @@ object Dedup {
       .select(col("id"), col("seg_id").cast("long").as("seg_id"),
         array_join(col("__p"), " ").as("ptext"),
         (size(col("__p")) === k).as("eligible"))
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     // one surviving (id, seg_id) per distinct full-length passage —
     // the aggregate output is the survivor set, no join back. The
     // grouping key leads with xxhash64(ptext) (r7): the 8-byte prefix
@@ -1326,7 +1315,7 @@ object Dedup {
     // re-hash the whole corpus text (the reassembly previously
     // re-evaluated cdcChunkList on base just for n_chunks)
     val seg = cdcChunks(df, id, text, k, divisor, hashKey, minChunk)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val keptEligible = seg.where(col("eligible"))
       .groupBy(xxhash64(col("ctext")).as("__h"), col("ctext"))
       .agg(min(struct(col("id"), col("chunk_id"))).as("__min"))
@@ -1357,7 +1346,7 @@ object Dedup {
                           minChunk: Option[Int] = None): DataFrame = {
     val base = batch.select(id.as("id"), text.as("__txt"))
     val seg = cdcChunks(batch, id, text, k, divisor, hashKey, minChunk)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val keptEligible = seg.where(col("eligible"))
       .join(refChunks.select(col("ctext")), Seq("ctext"), "left_anti")
       .groupBy(xxhash64(col("ctext")).as("__h"), col("ctext"))
@@ -1518,7 +1507,7 @@ object Dedup {
     // from text
     val fps = winnowFingerprints(df, id, text, k, w, hashKey)
       .select(col("id"), col("fp")).distinct()
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val kept = maxFpDf match {
       case None => fps
       case Some(cap) =>
@@ -1528,7 +1517,7 @@ object Dedup {
         // so exchange reuse never fires and the df-cap aggregate +
         // join re-executed per side (the r18 shingleOverlap finding,
         // same fix). Two longs per row.
-        cached(fps.join(
+        CacheScope.persist(fps.join(
           fps.groupBy("fp").agg(count(lit(1)).as("__df"))
             .where(col("__df") <= cap).select("fp"),
           "fp"))
@@ -1674,9 +1663,9 @@ object Dedup {
     require(runFloor >= k,
       s"minRun must be at least k=$k (shorter runs share no k-gram)")
     val kgBase = kgramHashes(df, id, text, k, hashKey, None)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val fps = winnowFingerprintsFromKgrams(kgBase, w)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val kept = maxFpDf match {
       case None => fps
       case Some(cap) =>
@@ -1684,7 +1673,7 @@ object Dedup {
         // persisted (r19): both candidate self-join sides consume the
         // capped frame under different canonicalization — see
         // winnowCandidatePairs
-        cached(fps.join(
+        CacheScope.persist(fps.join(
           fps.groupBy("fp").agg(count(lit(1)).as("__df"))
             .where(col("__df") <= cap).select("fp"),
           "fp"))
@@ -1798,7 +1787,7 @@ object Dedup {
     // carry, and winnowVerifiedPairs' kgBase). (id, pos, 8-byte hash)
     // ≈ a fifth of corpus text bytes, MEMORY_AND_DISK.
     val kg = kgramHashes(df, id, text, minRun, hashKey)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val dup = kg.groupBy("h").agg(count(lit(1)).as("__c"))
       .where(col("__c") >= 2).select("h")
     mergeAnchorSpans(kg.join(dup, "h").select("id", "pos"), minRun)
@@ -1974,7 +1963,7 @@ object Dedup {
     require(Seq("h", "c").forall(refGramCounts.columns.contains),
       "refGramCounts must be a gramCounts frame: (h, c)")
     val kg = kgramHashes(docs, id, text, minRun, hashKey)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val within = kg.groupBy("id", "h").agg(count(lit(1)).as("__wc"))
     val anchors = kg.join(within, Seq("id", "h"))
       .join(refGramCounts.select(col("h"), col("c").as("__rc")),
@@ -1994,7 +1983,7 @@ object Dedup {
     // persisted: the batch grams feed the count aggregate and the
     // anchor join (batch-sized)
     val kg = kgramHashes(newDocs, id, text, minRun, hashKey)
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val dup = kg.groupBy("h").agg(count(lit(1)).as("__bc"))
       .join(refGramCounts.select(col("h"), col("c").as("__rc")),
         Seq("h"), "left")
@@ -2050,14 +2039,14 @@ object Dedup {
                              maxFpDf: Option[Int] = None): DataFrame = {
     val newFps = winnowFingerprints(batch, id, text, k, w, hashKey)
       .select(col("id"), col("fp")).distinct()
-      .transform(cached)
+      .transform(CacheScope.persist(_))
     val ref = refFps.select(col("id"), col("fp"))
     // persisted (r19): the combined-df survivor set gates BOTH the
     // reference and the batch side — uncached, the ref ∪ new count
     // aggregate (reference-sized) executed once per gated side
     val dfOk = maxFpDf.map { cap =>
       require(cap >= 2, "maxFpDf must be at least 2")
-      cached(ref.unionByName(newFps)
+      CacheScope.persist(ref.unionByName(newFps)
         .groupBy("fp").agg(count(lit(1)).as("__df"))
         .where(col("__df") <= cap).select("fp"))
     }
@@ -2066,7 +2055,7 @@ object Dedup {
     // the cross join's right side and both within-batch sides
     // (batch-sized); uncapped, newFps itself is already cached
     val keptNew =
-      if (dfOk.isDefined) cached(capped(newFps)) else newFps
+      if (dfOk.isDefined) CacheScope.persist(capped(newFps)) else newFps
     val cross = capped(ref).select(col("fp"), col("id").as("id_a"))
       .join(keptNew.select(col("fp"), col("id").as("id_b")), "fp")
     val within = keptNew.select(col("fp"), col("id").as("id_a"))

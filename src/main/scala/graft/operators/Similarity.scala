@@ -613,12 +613,11 @@ object Similarity {
     // ONE matrix-bound sign_bands node (r8): posexplode's position IS
     // the band index, and the plane coefficients appear once per
     // plan, not once per band.
-    val banded = graft.util.CacheScope.track(
+    val banded = graft.util.CacheScope.persist(
       v.select(col("id"),
         posexplode(graft.plans.PlaneExpressions
           .signBands(col("e"), planes, bitsPerBand))
-          .as(Seq("band", "bits")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .as(Seq("band", "bits"))))
     (v, banded)
   }
 

@@ -62,8 +62,7 @@ object TrainingPipeline {
     // exchange reuse happens to fire. With the cache, decontamination
     // really does cost one more pass over the survivors.
     val prepped = prepareWith(docs, id, text, cfg, pairGen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.util.CacheScope.track(_))
+      .transform(graft.util.CacheScope.persist(_))
     val benchConformed = bench.select(benchId.as("id"), benchText.as("text"))
     val contaminated = Decontaminate.overlapStats(prepped, benchConformed,
         col("id"), col("text"), benchN, maxOverlap)
@@ -86,8 +85,7 @@ object TrainingPipeline {
       : DataFrame = {
     // same single-extra-pass caching argument as prepareDecontaminatedWith
     val prepped = prepareWith(docs, id, text, cfg, pairGen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.util.CacheScope.track(_))
+      .transform(graft.util.CacheScope.persist(_))
     val contaminated = Decontaminate.overlapStatsBloom(prepped, sketch,
         col("id"), col("text"), maxOverlap)
       .where(col("contaminated") === 1).select("id")
@@ -118,8 +116,7 @@ object TrainingPipeline {
       .where(col("n_tokens") >= cfg.minTokens &&
         col("stop_ratio") <= cfg.maxStopRatio &&
         col("lang_pred").isInCollection(cfg.langs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.util.CacheScope.track(_))
+      .transform(graft.util.CacheScope.persist(_))
     // exact dedup: keep the canonical (minimum) id per fingerprint
     val canonical = Dedup.exact(staged, col("id"), col("text"))
       .select(col("canonical_id").as("id"))

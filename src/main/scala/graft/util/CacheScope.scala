@@ -47,6 +47,12 @@ object CacheScope {
   private val live = new ConcurrentLinkedQueue[Dataset[_]]
   private val swallowed = new java.util.concurrent.atomic.AtomicLong
 
+  /** Persist `ds` MEMORY_AND_DISK and register it: the one way an
+    * operator-internal intermediate is cached. Lazy like `persist`,
+    * so it starts no job. */
+  private[graft] def persist[T](ds: Dataset[T]): Dataset[T] =
+    track(ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
   /** Register an operator-persisted intermediate; returns it. Each
     * registration first purges entries whose cache entry no longer
     * exists — a caller that freed blocks with its own

@@ -59,6 +59,25 @@ class CacheScopeSpec extends GraftSuite {
     assert(CacheScope.releaseAll(blocking = true) >= 0) // idempotent
   }
 
+  test("assignScalable's ranged input is registered, and releaseAll frees it") {
+    CacheScope.releaseAll(blocking = true)
+    val baseline = spark.sparkContext.getPersistentRDDs.keySet
+    val out = graft.etl.Batching.assignScalable(spark.range(100).toDF("k"),
+      col("k"), size = 10, partitions = 4)
+    // the cached scans a fresh plan over `out` reads: the CacheManager
+    // substitutes every frame it holds an entry for
+    def cachedIn(df: org.apache.spark.sql.DataFrame) =
+      df.select("*").queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r }
+    assert(out.select("batch_id").distinct().count() == 10)
+    assert(CacheScope.liveCount > 0, "assignScalable registered no cache")
+    assert(cachedIn(out).nonEmpty)
+    CacheScope.releaseAll(blocking = true)
+    assert(cachedIn(out).isEmpty, "the ranged input is still cached")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(baseline).isEmpty)
+    assert(out.count() == 100) // released, still correct
+  }
+
   test("an out-of-band clearCache does not leave the registry retaining dead plans (r17)") {
     CacheScope.releaseAll(blocking = true)
     val cached = graft.util.CacheScope.track(

@@ -981,4 +981,17 @@ class PqSpec extends GraftSuite {
         queries, k = 5)),
       "rotated IVF-PQ probe with nProbe=all diverged from brute ADC")
   }
+
+  test("eigenAllocationInit rejects ragged vectors with the moment aggregate's error") {
+    import spark.implicits._
+    // lengths 8 and 4 alternate, so every partition holds both
+    val ragged = (0 until 40).map { i =>
+      (i.toLong, Array.fill(if (i % 2 == 0) 8 else 4)(1.0 + i))
+    }.toDF("vec_id", "embedding")
+    val e = intercept[Exception](Pq.eigenAllocationInit(ragged, numSub = 4))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("outer_product_sum: ragged input")),
+      s"not the ragged-input error: $e")
+  }
 }

@@ -69,4 +69,19 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(matching("src/main", bound) ==
       Seq("src/main/scala/graft/etl/Audit.scala"))
   }
+
+  test("serving stores live under the one per-process root") {
+    // no store outlives its process, and none is keyed by a scan of its data
+    assert(matching("src/main", "/tmp/graft_serving_idx").isEmpty)
+    val entry = sources("src/main")
+      .collectFirst { case (f, code) if f.endsWith("/SparkEntry.scala") => code }
+      .getOrElse(fail("no SparkEntry.scala"))
+    assert(!entry.contains("bit_xor(xxhash64("))
+    // the rule is not vacuous: every store kind takes its path from the
+    // helper
+    val kinds = """(?:servingStore|storePath)\(\s*"(\w+)"""".r
+      .findAllMatchIn(entry).map(_.group(1)).toSet
+    assert(kinds == Set("merge1", "mergep", "skip", "skipv", "skipz", "skipp",
+      "skipd", "skipdp", "bfr", "cms1", "opq1", "res1"))
+  }
 }
