@@ -443,19 +443,19 @@ object SparkEntry {
     // by order_day (writeSorted: range-exchange + within-file sort,
     // so per-file date ranges are near-disjoint) with a footer-
     // derived per-file stats frame committed marker-last beside the
-    // data; the one-year read prunes the FILE LIST before any
-    // skipped footer opens, and the surface REQUIRES files-kept <
-    // files-present so the pruning itself is gated every run. The
-    // data predicate still applies on top (superset contract)
-    "q_store_skip" -> ((s, dir) =>
-      skipDemoRead(s, skipDemoStore(s, dir))),
+    // data; the one-year read through graft.io.SkipDataSource prunes
+    // the FILE LIST before any skipped footer opens, and the surface
+    // REQUIRES the scan's files-kept < files-present so the pruning
+    // itself is gated every run. The data predicate still applies on
+    // top (superset contract)
+    "q_store_skip" -> skipDemo,
 
     // oracle-checked: the same skipping attached to a VERSIONED
     // commit — stats ride INSIDE the committed v=N directory (an
     // underscore dir, invisible to data reads), so time travel keeps
     // per-version stats and vacuum drops them with the version; the
-    // lakehouse read path (VersionStore + MarkerCommit + file
-    // skipping) in one oracle-gated surface. Same output as
+    // lakehouse read path (VersionStore + MarkerCommit + the
+    // skipping read) in one oracle-gated surface. Same output as
     // q_store_skip, so it carries the same oracle verbatim (the
     // fromindex-twin pattern — the STORE code path earns its own
     // rows+schema+hash row)
@@ -482,62 +482,41 @@ object SparkEntry {
     // can only cost selectivity, never rows. The surface REQUIREs a
     // 2-D prune that kept fewer files than present (r14)
     "q_store_skip_zorder" -> ((s, dir) => {
-      import graft.io.DataSkipping
-      import graft.io.DataSkipping.{AndPred, RangePred}
       val path = servingStore("skipz", dir)(
-        DataSkipping.writeZOrderedWithStats(skipDemoFrame(s, dir),
+        graft.io.DataSkipping.writeZOrderedWithStats(skipDemoFrame(s, dir),
           _, Seq("order_day", "o_custkey"), numFiles = 32))
-      val pred = AndPred(
-        RangePred("order_day", java.sql.Date.valueOf("1996-01-01"),
-          java.sql.Date.valueOf("1996-12-31")),
-        RangePred("o_custkey", 1L, 100L))
-      val (kept, total) = DataSkipping.skipFiles(s, path, pred)
-      require(kept.nonEmpty && kept.size < total,
-        s"z-order skipping degenerate: ${kept.size} of $total files")
-      DataSkipping.readFiles(s, path, kept)
+      val df = skipRead(s, path)
         .where(col("order_day").between(
           lit("1996-01-01"), lit("1996-12-31")) &&
           col("o_custkey").between(1, 100))
-    }),
-
-    // oracle-checked: the SAME sorted store served through the
-    // CATALYST-integrated index (io.SkippingFileIndex) — spark.read
-    // shaped, no explicit prune call: the scan's pushed data filters
-    // reach SkippingFileIndex.listFiles at plan time and the file
-    // listing comes back stats-pruned, composing with parquet
-    // row-group pruning and column pruning in ONE plan (VERDICT r14
-    // ask #2). The require reads the PLANNED scan's selected file
-    // count — the skipped files literally never appear in the scan's
-    // file listing — and gates it < total every run (the q73
-    // measured-suppression discipline). Same rows as q_store_skip:
-    // same oracle, verbatim (the fromindex-twin pattern)
-    "q_store_skip_fileindex" -> ((s, dir) => {
-      import graft.io.{DataSkipping, SkippingFileIndex}
-      val path = skipDemoStore(s, dir)
-      val df = SkippingFileIndex.read(s, path)
-        .where(col("order_day").between(
-          lit(java.sql.Date.valueOf("1996-01-01")),
-          lit(java.sql.Date.valueOf("1996-12-31"))))
-      val kept = scannedFiles(df, "q_store_skip_fileindex")
-      val total = DataSkipping.listDataFiles(s, path).size
-      require(kept > 0 && kept < total,
-        s"fileindex skipping degenerate: scan lists $kept of $total files")
+      val prune = scanPrune(df, path, "q_store_skip_zorder")
+      require(prune.keptStatic > 0 && prune.keptStatic < prune.total,
+        s"z-order skipping degenerate: ${prune.keptStatic} of " +
+          s"${prune.total} files")
       df
     }),
+
+    // oracle-checked: the spark.read-shaped entry to the same sorted
+    // store (the r14 VERDICT ask #2: no explicit prune call — the
+    // pushed data filters prune the scan's file listing at plan time,
+    // composing with parquet row-group and column pruning in ONE
+    // plan). Since every pruned read goes through
+    // graft.io.SkipDataSource this IS q_store_skip's read of the same
+    // store: one body, same rows, same oracle verbatim
+    "q_store_skip_fileindex" -> skipDemo,
 
     // oracle-checked: the HIVE-PARTITIONED two-level prune — the
     // store lays out `p = o_custkey % 4` directories with files
     // range-sorted on o_orderkey inside, stats committed at the
-    // root; one readPartitioned plan then prunes DIRECTORIES on the
-    // partition filter (Spark's own pruning, inherited) and FILES on
-    // the o_orderkey range (the committed stats) — the Delta read
-    // shape. REQUIREs: overall kept < total always; the composed
-    // prune strictly under the partition-only prune whenever the
-    // kept directory holds >= 4 files (graded SFs — tiny fuzz
-    // corpora legitimately land 1-file directories). The file-level
-    // compose is also spec-pinned strictly (DataSkippingSpec)
+    // root; one graft.io.SkipDataSource scan then prunes DIRECTORIES
+    // on the partition filter and FILES on the o_orderkey range (the
+    // committed stats) — the Delta read shape — and its one witness
+    // carries both levels. REQUIREs: overall kept < total always;
+    // each level keeps exactly what the committed stats allow. The
+    // file-level compose is also spec-pinned strictly
+    // (DataSkippingSpec)
     "q_store_skip_partitioned" -> ((s, dir) => {
-      import graft.io.{DataSkipping, SkippingFileIndex}
+      import graft.io.DataSkipping
       val path = servingStore("skipp", dir) { path =>
         skipDemoFrame(s, dir)
           .withColumn("p", pmod(col("o_custkey"), lit(4L)).cast("int"))
@@ -546,15 +525,12 @@ object SparkEntry {
           .write.partitionBy("p").parquet(path)
         DataSkipping.writeStats(s, path, Seq("o_orderkey"))
       }
-      def files(df: DataFrame): Int =
-        scannedFiles(df, "q_store_skip_partitioned")
-      val both = SkippingFileIndex.readPartitioned(s, path)
+      val both = skipRead(s, path)
         .where(col("p") === 1 &&
           col("o_orderkey").between(1000L, 50000L))
-      val keptBoth = files(both)
-      val keptPart = files(SkippingFileIndex.readPartitioned(s, path)
-        .where(col("p") === 1))
-      val total = DataSkipping.listDataFiles(s, path).size
+      val prune = scanPrune(both, path, "q_store_skip_partitioned")
+      val (total, keptPart, keptBoth) =
+        (prune.total, prune.keptPartition, prune.keptStatic)
       require(keptBoth > 0 && keptBoth < total,
         s"partitioned skipping degenerate: $keptBoth of $total files")
       // EXACT prune expectations from the committed stats, not a
@@ -606,9 +582,7 @@ object SparkEntry {
             col("l_extendedprice").cast("decimal(18,2)").as("price")),
           _, Seq("l_orderkey"), numFiles = 32,
           statsCols = Seq("l_orderkey")))
-      val mx = Tables(s, dir).orders.agg(max("o_orderkey"))
-        .head().getLong(0)
-      val w = math.max(1L, math.ceil((mx + 1) / 16.0).toLong)
+      val w = ingestBatchWidth(s, dir)
       // explicit broadcast: the dim's post-filter slice is
       // broadcast-sized at every SF, but plan-stat estimates don't
       // shrink through the batch filter, so past ~sf0.1 auto-broadcast
@@ -621,7 +595,7 @@ object SparkEntry {
             floor(col("o_orderkey") / lit(w)).cast("long")
               .as("ingest_batch"))
           .where(col("ingest_batch") === 7)
-        val fact = sess.read.format("graft.io.SkipDataSource").load(path)
+        val fact = skipRead(sess, path)
         fact.join(broadcast(dim),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy("l_orderkey")
@@ -659,9 +633,7 @@ object SparkEntry {
           .write.partitionBy("p").parquet(path)
         DataSkipping.writeStats(s, path, Seq("l_orderkey"))
       }
-      val mx = Tables(s, dir).orders.agg(max("o_orderkey"))
-        .head().getLong(0)
-      val w = math.max(1L, math.ceil((mx + 1) / 16.0).toLong)
+      val w = ingestBatchWidth(s, dir)
       // p = 1: directory prune; l_orderkey < 12w: a static stats
       // range KEEPING batch 7 (7w..8w) so the runtime level still
       // has keys to deliver; broadcast(dim): the q182 star shape
@@ -671,7 +643,7 @@ object SparkEntry {
             floor(col("o_orderkey") / lit(w)).cast("long")
               .as("ingest_batch"))
           .where(col("ingest_batch") === 7)
-        val fact = sess.read.format("graft.io.SkipDataSource").load(path)
+        val fact = skipRead(sess, path)
           .where(col("p") === 1 && col("l_orderkey") < lit(12L * w))
         fact.join(broadcast(dim),
             col("l_orderkey") === col("o_orderkey"))
@@ -801,7 +773,7 @@ object SparkEntry {
     // SKIPPED read (VERDICT r14 ask #5, the fromindex-twin pattern):
     // the (o_orderkey, o_orderdate) table commits SORTED on
     // o_orderdate with footer stats, Backfill.rangeStore reads it
-    // through the Catalyst FileIndex, and the pushed [start, end)
+    // through graft.io.SkipDataSource, and the pushed [start, end)
     // literals prune out-of-range files from the scan's listing —
     // gated kept < total every run. Same rows as q_backfill_range:
     // same oracle, verbatim
@@ -814,10 +786,10 @@ object SparkEntry {
           statsCols = Seq("o_orderdate")))
       val df = Backfill.rangeStore(s, path, "o_orderdate",
         "1996-01-01 00:00:00", "1997-01-01 00:00:00")
-      val kept = scannedFiles(df, "q_backfill_range_store")
-      val total = DataSkipping.listDataFiles(s, path).size
-      require(kept > 0 && kept < total,
-        s"backfill skipping degenerate: scan lists $kept of $total files")
+      val prune = scanPrune(df, path, "q_backfill_range_store")
+      require(prune.keptStatic > 0 && prune.keptStatic < prune.total,
+        s"backfill skipping degenerate: scan lists ${prune.keptStatic} " +
+          s"of ${prune.total} files")
       df
     }),
 
@@ -2638,21 +2610,43 @@ object SparkEntry {
     path
   }
 
-  /** The sorted, stats-committed orders store that q_store_skip and
-    * q_store_skip_fileindex both read. */
+  /** q_store_skip and q_store_skip_fileindex: the one-year read of
+    * the sorted, stats-committed orders store. */
+  private def skipDemo: (SparkSession, String) => DataFrame =
+    (s, dir) => skipDemoRead(s, skipDemoStore(s, dir))
+
+  /** The sorted, stats-committed orders store [[skipDemo]] reads. */
   private def skipDemoStore(s: SparkSession, dir: String): String =
     servingStore("skip", dir)(
       graft.io.DataSkipping.writeSortedWithStats(skipDemoFrame(s, dir), _,
         Seq("order_day"), numFiles = 32,
         statsCols = Seq("order_day", "o_orderkey")))
 
-  /** How many files the planned scan of `df` selects — the prune
-    * witness the catalyst-integrated skip surfaces gate on. */
-  private def scannedFiles(df: DataFrame, query: String): Int =
-    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.totalNumberOfFiles.toInt
-    }.getOrElse(sys.error(s"$query: no file scan"))
+  /** The skipping read of the store at `path`. */
+  private def skipRead(s: SparkSession, path: String): DataFrame =
+    s.read.format("graft.io.SkipDataSource").load(path)
+
+  /** The prune witness of `df`'s scan over the store at `path`
+    * (SkipScan.prunesIn). Its plan-time counts need no action; its
+    * runtime fields are set once `df`'s own execution ran. */
+  private def scanPrune(df: DataFrame, path: String,
+                        query: String): graft.io.SkipScan.Prune =
+    graft.io.SkipScan.prunesIn(df).collectFirst {
+      case (d, p) if d == path => p
+    }.getOrElse(sys.error(s"$query: no SkipScan over $path in the plan"))
+
+  /** The DFP surfaces' ingest-batch width: orders' key span cut into
+    * 16 batches. The max key comes from the orders footers on the
+    * driver, so sizing runs no job; the aggregate runs only when a
+    * footer carries no max. */
+  private def ingestBatchWidth(s: SparkSession, dir: String): Long = {
+    val mx = graft.io.DataSkipping.footerMax(s, s"$dir/orders.parquet",
+        "o_orderkey", org.apache.spark.sql.types.LongType)
+      .map(_.asInstanceOf[Long])
+      .getOrElse(Tables(s, dir).orders.agg(max("o_orderkey"))
+        .head().getLong(0))
+    math.max(1L, math.ceil((mx + 1) / 16.0).toLong)
+  }
 
   /** The dynamic-pruning surfaces' gate: the prune that SkipScan saw
     * on the store at `path` when `build`'s frame ran once under the
@@ -2673,29 +2667,25 @@ object SparkEntry {
       "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
     val gated = build(gateS)
     gated.queryExecution.toRdd.foreach(_ => ())
-    graft.io.SkipScan.prunesIn(gated).collectFirst {
-      case (d, p) if d == path => p
-    }.getOrElse(sys.error(s"$query: no SkipScan in the executed plan"))
+    scanPrune(gated, path, query)
   }
 
-  /** The skip surfaces' one-year pruned read: assert the prune
-    * REMOVED files (the q73 measured-suppression discipline — the
-    * row is red if skipping silently stops working), then read only
-    * the survivors and apply the real predicate on top. */
+  /** The skip surfaces' one-year pruned read: the skipping read with
+    * the real predicate pushed into its scan, and a require that the
+    * planned scan REMOVED files (the q73 measured-suppression
+    * discipline — the row is red if skipping silently stops
+    * working). */
   private def skipDemoRead(s: SparkSession, path: String): DataFrame = {
-    import graft.io.DataSkipping
     // 1996: inside the corpus's 1995..2001 span — kept must be BOTH
     // nonempty (a year that exists; guards the vacuous empty==empty
     // oracle pass) and smaller than the file count (pruning worked)
-    val pred = DataSkipping.RangePred("order_day",
-      java.sql.Date.valueOf("1996-01-01"),
-      java.sql.Date.valueOf("1996-12-31"))
-    val (kept, total) = DataSkipping.skipFiles(s, path, pred)
-    require(kept.nonEmpty && kept.size < total,
-      s"data skipping degenerate: kept ${kept.size} of $total files")
-    DataSkipping.readFiles(s, path, kept)
-      .where(col("order_day").between(
-        lit("1996-01-01"), lit("1996-12-31")))
+    val df = skipRead(s, path).where(col("order_day").between(
+      lit("1996-01-01"), lit("1996-12-31")))
+    val prune = scanPrune(df, path, "q_store_skip")
+    require(prune.keptStatic > 0 && prune.keptStatic < prune.total,
+      s"data skipping degenerate: kept ${prune.keptStatic} of " +
+        s"${prune.total} files")
+    df
   }
 
   /** The MERGE surface's target: the even-keyed half of orders, the

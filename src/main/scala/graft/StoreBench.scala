@@ -131,6 +131,8 @@ object StoreBench {
     // and shared by every arm, and may be local checkpoints: the sweep
     // keeps checkpoint blocks
     def sweep(): Unit = Harness.sweep(spark, checkpoints = false)
+    def skipRead(dir: String): DataFrame =
+      spark.read.format("graft.io.SkipDataSource").load(dir)
     // the fields every kind's JSON line ends with
     def jsonTail(loadBefore: String, stallSec: Double): String =
       s""","stall_sec":${Harness.r2(stallSec)}""" +
@@ -271,10 +273,6 @@ object StoreBench {
     //   scan_join   — plain spark.read fact ⋈ dim: the control; the
     //                 fact scans ALL files despite the dim selecting
     //                 1/16 of the keys;
-    //   fidx_join   — the plan-time SkippingFileIndex fact ⋈ dim:
-    //                 proves a literal-only index CANNOT help this
-    //                 shape (no fact-side literal exists — expected
-    //                 ≈ scan_join);
     //   dfp_join    — graft.io.SkipDataSource fact ⋈ dim: Spark's
     //                 PartitionPruning plants the runtime filter, the
     //                 delivered key set prunes the file list at
@@ -353,10 +351,7 @@ object StoreBench {
       }
       val arms0: Seq[(String, () => DataFrame)] = Seq(
         "scan_join" -> (() => spark.read.parquet(factDir)),
-        "fidx_join" -> (() =>
-          graft.io.SkippingFileIndex.read(spark, factDir)),
-        "dfp_join" -> (() =>
-          spark.read.format("graft.io.SkipDataSource").load(factDir)),
+        "dfp_join" -> (() => skipRead(factDir)),
         "manual_range" -> (() => manualRange))
       val fps = arms0.map { case (nm, rd) => nm -> fpRow(rd()) }
       if (fps.map(_._2).distinct.size != 1) {
@@ -366,9 +361,8 @@ object StoreBench {
       // witness off a dedicated executed dataset (prune records ride
       // the scan INSTANCE since r17 — collect() runs this df's own
       // QueryExecution, so the record read is race-free by shape)
-      val witness = spark.read.format("graft.io.SkipDataSource")
-        .load(factDir).join(broadcast(dim), col("k") === col("dk"))
-        .agg(count(lit(1)))
+      val witness = skipRead(factDir)
+        .join(broadcast(dim), col("k") === col("dk")).agg(count(lit(1)))
       witness.collect()
       val prune = SkipScan.prunesIn(witness).collectFirst {
         case (d, p) if d == factDir => p
@@ -392,7 +386,6 @@ object StoreBench {
       s"""{"metric":"dfp_star_join_median","value":${m("dfp_join")}""" +
         s""","unit":"sec","kind":"dfp"""" + armsJson(arms0, res) +
         s""","scan_over_dfp":${m("scan_join") / m("dfp_join")}""" +
-        s""","fidx_over_dfp":${m("fidx_join") / m("dfp_join")}""" +
         s""","manual_over_dfp":${m("manual_range") / m("dfp_join")}""" +
         s""","files_kept_runtime":${prune.keptRuntime}""" +
         s""","files_kept_static":${prune.keptStatic}""" +
@@ -551,10 +544,10 @@ object StoreBench {
     // customers) then prunes BOTH columns on the z layout but only
     // `day` on the sorted one. Arms per run (order alternating,
     // identity fingerprint-asserted first): skip_sorted / skip_zorder
-    // (pruned reads) and scan_sorted / scan_zorder (full scans).
+    // (graft.io.SkipDataSource reads, the slice pushed into the scan)
+    // and scan_sorted / scan_zorder (full scans).
     def zorder(): String = {
-      import graft.io.DataSkipping
-      import graft.io.DataSkipping.{AndPred, RangePred}
+      import graft.io.{DataSkipping, SkipScan}
       val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       def table: DataFrame = replicate(orders.select(
         col("o_orderkey").as("k"), col("o_custkey").as("ck"),
@@ -571,10 +564,6 @@ object StoreBench {
       val tZ = Harness.timed(DataSkipping.writeZOrderedWithStats(
         table, zDir, Seq("day", "ck"), files))
       sweep()
-      val pred = AndPred(
-        RangePred("day", java.sql.Date.valueOf("1996-01-01"),
-          java.sql.Date.valueOf("1996-03-31")),
-        RangePred("ck", 1L, ckHi))
       def slice(df: DataFrame): DataFrame = df.where(
         col("day").between(lit("1996-01-01"), lit("1996-03-31")) &&
           col("ck").between(1, ckHi))
@@ -585,8 +574,8 @@ object StoreBench {
         (r.getLong(0), r.getLong(1), r.getLong(2))
       }
       val arms0: Seq[(String, () => DataFrame)] = Seq(
-        "skip_sorted" -> (() => DataSkipping.prunedRead(spark, sortedDir, pred)),
-        "skip_zorder" -> (() => DataSkipping.prunedRead(spark, zDir, pred)),
+        "skip_sorted" -> (() => skipRead(sortedDir)),
+        "skip_zorder" -> (() => skipRead(zDir)),
         "scan_sorted" -> (() => spark.read.parquet(sortedDir)),
         "scan_zorder" -> (() => spark.read.parquet(zDir)))
       val fps = arms0.map { case (nm, rd) => nm -> fpRow(rd()) }
@@ -595,15 +584,17 @@ object StoreBench {
         sys.exit(1)
       }
       sweep()
-      val (keptS, totS) = DataSkipping.skipFiles(spark, sortedDir, pred)
-      val (keptZ, totZ) = DataSkipping.skipFiles(spark, zDir, pred)
+      // the slice's plan-time prune, off each layout's planned scan
+      def prune(dir: String): SkipScan.Prune =
+        SkipScan.prunesIn(slice(skipRead(dir))).head._2
+      val (pS, pZ) = (prune(sortedDir), prune(zDir))
       val loadBefore = Harness.loadavg
       val res = fingerprintRuns(arms0, fpRow)
       s"""{"metric":"zorder_2d_slice_median","value":${res.median("skip_zorder")}""" +
         s""","unit":"sec","kind":"zorder"""" + armsJson(arms0, res) +
-        s""","files_kept_sorted":${keptS.size}""" +
-        s""","files_kept_zorder":${keptZ.size}""" +
-        s""","files_total":$totZ,"files_total_sorted":$totS""" +
+        s""","files_kept_sorted":${pS.keptStatic}""" +
+        s""","files_kept_zorder":${pZ.keptStatic}""" +
+        s""","files_total":${pZ.total},"files_total_sorted":${pS.total}""" +
         s""","slice_rows":${fps.head._2._1}""" +
         s""","table_rows":${orders.count() * storeScale}""" +
         s""","ck_hi":$ckHi""" +

@@ -20,10 +20,9 @@ object Backfill {
 
   /** [[range]] over a SKIPPING-enabled store directory (r15, the
     * r14 verdict's ask #5): the frame reads through
-    * [[graft.io.SkippingFileIndex]], so the range filter — a
-    * foldable literal pair, exactly the RangePred shape — is pushed
-    * into the index at plan time and out-of-range files never enter
-    * the scan's file listing. Semantics identical to
+    * [[graft.io.SkipDataSource]], so the range filter — a foldable
+    * literal pair — is pushed into the scan at plan time and
+    * out-of-range files never enter its file listing. Semantics identical to
     * `range(spark.read.parquet(dir), …)`; the store should be
     * committed via `DataSkipping.writeSortedWithStats(…, ts…)` for
     * the prune to bite (without stats it degrades to the plain
@@ -31,8 +30,8 @@ object Backfill {
   def rangeStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                  tsCol: String, startIso: String,
                  endIso: String): DataFrame =
-    range(graft.io.SkippingFileIndex.read(spark, dir), col(tsCol),
-      startIso, endIso)
+    range(spark.read.format("graft.io.SkipDataSource").load(dir),
+      col(tsCol), startIso, endIso)
 
   /** Trailing window ending at the data's own max timestamp. */
   def trailingDays(df: DataFrame, ts: Column, days: Int): DataFrame =

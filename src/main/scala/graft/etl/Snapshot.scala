@@ -50,7 +50,7 @@ object Snapshot {
   /** [[newerThan]] over a SKIPPING-enabled store directory (r15):
     * the watermark — a 1-row aggregate — is collected on the driver
     * so the gate becomes a LITERAL filter over a
-    * [[graft.io.SkippingFileIndex]] read, pushed into the committed
+    * [[graft.io.SkipDataSource]] read, pushed into the committed
     * file stats at plan time: files wholly at-or-before the
     * watermark never enter the scan's listing (the daily-increment
     * read touches O(new files), the point of a watermark). The
@@ -62,7 +62,7 @@ object Snapshot {
                      processed: DataFrame,
                      watermarkCol: Column): DataFrame = {
     val wmRow = processed.agg(max(watermarkCol).as("__wm")).head()
-    val store = graft.io.SkippingFileIndex.read(spark, dir)
+    val store = spark.read.format("graft.io.SkipDataSource").load(dir)
     if (wmRow.isNullAt(0)) store
     else store.where(col(tsCol) > lit(wmRow.get(0)))
   }

@@ -578,33 +578,18 @@ object VersionStore {
     readVersion(spark, root, vs.last)
   }
 
-  /** [[latest]] through the Catalyst skipping index when the latest
-    * version carries a committed [[graft.io.DataSkipping]] stats
-    * frame (an [[optimizeSorted]] output always does): pushed
-    * filters then prune the version's FILE list at plan time. Falls
-    * back to the plain [[latest]] read when no stats are committed
-    * (or the version is footerless) — never an error, never fewer
-    * rows. */
+  /** [[latest]] through the data-skipping read
+    * ([[graft.io.SkipDataSource]]) when the latest version carries a
+    * committed [[graft.io.DataSkipping]] stats frame (an
+    * [[optimizeSorted]] output always does): pushed literal filters
+    * prune the version's FILE list at plan time, and a star join
+    * against a filtered dimension prunes it at runtime (Spark's own
+    * DPP delivers the dim's key set to the scan). Falls back to the
+    * plain [[latest]] read when no stats are committed (or the version
+    * is footerless) — never an error, never fewer rows. The frame
+    * serves the version it was loaded on (the skipping read's
+    * snapshot rule), like every version read. */
   def latestIndexed(spark: SparkSession, root: String): DataFrame = {
-    val vs = versions(spark, root)
-    require(vs.nonEmpty, s"no versions under $root")
-    val vdir = dir(root, vs.last)
-    if (hasData(fs(spark, root), root, vs.last) &&
-        graft.io.DataSkipping.statsCommitted(spark, vdir))
-      graft.io.SkippingFileIndex.read(spark, vdir)
-    else readVersion(spark, root, vs.last)
-  }
-
-  /** [[latestIndexed]]'s JOIN-shaped sibling: the latest
-    * stats-committed version served through
-    * [[graft.io.SkipDataSource]], so a star join against a filtered
-    * dimension prunes this version's FILE list at runtime (Spark's
-    * own DPP delivers the dim's key set to the scan — dynamic file
-    * pruning over the versioned store). Literal predicates prune at
-    * plan time exactly as [[latestIndexed]]; same fallback to the
-    * plain read when no stats are committed. Snapshot-scoped like
-    * every version read (immutable version directories). */
-  def latestDynamic(spark: SparkSession, root: String): DataFrame = {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no versions under $root")
     val vdir = dir(root, vs.last)

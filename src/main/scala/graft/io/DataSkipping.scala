@@ -38,15 +38,17 @@ import org.apache.spark.util.SerializableConfiguration
   *     query would read anyway. The frame commits marker-last under
   *     `dir/_filestats` (underscore prefix: invisible to Spark data
   *     reads of `dir`).
-  *   - [[skipFiles]]/[[prunedRead]] — evaluate a [[SkipPred]] against
-  *     the stats frame and hand Spark the SURVIVING file list (with
-  *     `basePath` so directory-partition columns still resolve).
-  *     Pruning is a SUPERSET contract: every file that may hold a
-  *     matching row survives; the caller still applies its own data
-  *     predicate. Conservatism is structural — a file missing from
-  *     the stats frame (late append, foreign writer), a column whose
-  *     footer carries no usable statistics, or a null min/max all KEEP
-  *     the file. Stats can only remove work, never rows.
+  *   - [[SkipDataSource]] — the read: `spark.read.format(
+  *     "graft.io.SkipDataSource").load(dir)` pushes the query's
+  *     literal filters (and Spark's runtime join filters) into a scan
+  *     that decides them against the stats frame and hands Spark only
+  *     the SURVIVING files. Pruning is a SUPERSET contract: every file
+  *     that may hold a matching row survives, and the engine still
+  *     applies the data predicate on top. Conservatism is structural —
+  *     a file missing from the stats frame (late append, foreign
+  *     writer), a column whose footer carries no usable statistics, or
+  *     a null min/max all KEEP the file. Stats can only remove work,
+  *     never rows.
   *   - [[writeSorted]] — the layout half: range-repartition + sort on
   *     the skipping columns before the write, so per-file value
   *     ranges are near-disjoint and a point/range predicate keeps
@@ -57,10 +59,11 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Scale shape at 100 TB: the stats frame is one row per data file
   * (a 100 TB table at 256 MB files ≈ 400k rows — megabytes), read
-  * once per query on the driver exactly like a Delta log checkpoint;
-  * the skip decision is a stats-frame filter, never a data scan. The
-  * driver-side file list is the same contract every Spark file index
-  * (and [[PartitionedStore.filesPerPartition]]) already carries.
+  * once per `load()` on the driver exactly like a Delta log
+  * checkpoint; the skip decision is an in-memory pass over it, never
+  * a data scan. The driver-side file list is the same contract every
+  * Spark file index (and [[PartitionedStore.filesPerPartition]])
+  * already carries.
   *
   * Supported stats column types: integral, float/double, string,
   * date, timestamp (micros). DECIMAL and nested types are rejected at
@@ -69,22 +72,6 @@ import org.apache.spark.util.SerializableConfiguration
   * carry no parquet stats; such columns collect null stats and simply
   * never prune (conservative, documented). */
 object DataSkipping {
-
-  /** The skip predicate algebra — the subset of data predicates
-    * file-level min/max can decide. Compiled against the stats frame
-    * with keep-if-maybe semantics; anything not expressible here
-    * belongs in the caller's data `.where`, which still runs. */
-  sealed trait SkipPred
-  /** Rows with `lo <= column <= hi` (inclusive; null-valued rows
-    * never match a range, so null counts are irrelevant here). */
-  final case class RangePred(column: String, lo: Any, hi: Any)
-      extends SkipPred
-  /** Rows with `column = v`. */
-  final case class EqPred(column: String, v: Any) extends SkipPred
-  /** Rows with `column IS NULL` — decided by the null count. */
-  final case class IsNullPred(column: String) extends SkipPred
-  final case class AndPred(l: SkipPred, r: SkipPred) extends SkipPred
-  final case class OrPred(l: SkipPred, r: SkipPred) extends SkipPred
 
   private val StatsDir = "_filestats"
   private val StatsMarker = "_STATS_OK"
@@ -349,7 +336,7 @@ object DataSkipping {
     * otherwise every post-move lookup would miss and the structural
     * keep-unknown conservatism would silently disable pruning
     * forever. Paths are compared fully qualified (the form
-    * `listStatus` returns and [[SkippingFileIndex]] looks up). */
+    * `listStatus` returns and [[SkipDataSource]] looks up). */
   def writeStatsRelocated(spark: SparkSession, dataDir: String,
                           finalDir: String, cols: Seq[String]): Unit = {
     val fs = new Path(dataDir).getFileSystem(
@@ -518,98 +505,33 @@ object DataSkipping {
   def statsCommitted(spark: SparkSession, dir: String): Boolean =
     MarkerCommit.markerExists(s"$dir/$StatsDir", StatsMarker)
 
-  /** The committed stats frame, if one exists (marker-gated). */
+  /** The committed stats frame, if one exists (marker-gated). Read
+    * through its data files: Spark ignores a read root whose leaf
+    * name starts with `_` and logs a warning for every such read. */
   def statsFrame(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val out = s"$dir/$StatsDir"
-    if (MarkerCommit.markerExists(out, StatsMarker))
-      Some(spark.read.parquet(out))
-    else None
-  }
-
-  /** A NaN float/double predicate bound: parquet writers EXCLUDE NaN
-    * from min/max stats, but Spark's comparisons treat NaN as equal
-    * to NaN and greater than every other value — so a min/max overlap
-    * test against a NaN bound could prune a file whose NaN rows match
-    * the data predicate. Mirror Spark's own parquet pushdown, which
-    * refuses NaN filters: keep every file. */
-  private def isNaNBound(v: Any): Boolean = v match {
-    case f: Float => f.isNaN
-    case d: Double => d.isNaN
-    case f: java.lang.Float => f.isNaN
-    case d: java.lang.Double => d.isNaN
-    case _ => false
-  }
-
-  /** Compile a [[SkipPred]] to the keep-this-file condition over the
-    * stats frame. Null min/max (no usable stats) keeps the file; a
-    * NaN range/eq bound keeps ALL files (see [[isNaNBound]]). */
-  private[graft] def keepCondition(p: SkipPred): Column = p match {
-    case RangePred(c, lo, hi) if isNaNBound(lo) || isNaNBound(hi) =>
-      lit(true)
-    case RangePred(c, lo, hi) =>
-      // overlap test; a null bound means "unknown" = keep
-      (col(s"max_$c").isNull || col(s"max_$c") >= lit(lo)) &&
-        (col(s"min_$c").isNull || col(s"min_$c") <= lit(hi))
-    case EqPred(c, v) => keepCondition(RangePred(c, v, v))
-    case IsNullPred(c) =>
-      col(s"nulls_$c").isNull || col(s"nulls_$c") > 0
-    case AndPred(l, r) => keepCondition(l) && keepCondition(r)
-    case OrPred(l, r) => keepCondition(l) || keepCondition(r)
-  }
-
-  /** The file-level prune: (surviving files, total data files).
-    * Survivors = stats-frame keeps ∪ files the frame has never seen
-    * (late appends stay visible — conservatism is structural). With
-    * no committed stats frame every file survives. The driver-side
-    * list is one string per data file — the same bound every Spark
-    * file index holds. */
-  def skipFiles(spark: SparkSession, dir: String,
-                pred: SkipPred): (Seq[String], Int) = {
-    val all = listDataFiles(spark, dir)
-    statsFrame(spark, dir) match {
-      case None => (all, all.size)
-      case Some(sf) =>
-        // ONE collect carries both the keep verdicts and the known
-        // set — the skip decision is one small Spark job over a
-        // file-count-sized frame (a second job here measurably
-        // dominated the prune's win on cache-resident tables)
-        val verdicts = sf.select(col("file"),
-            keepCondition(pred).as("__keep")).collect()
-          .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-        (all.filter(f => verdicts.getOrElse(f, true)), all.size)
+    val out = new Path(s"$dir/$StatsDir")
+    if (!MarkerCommit.markerExists(out.toString, StatsMarker)) None
+    else {
+      val files = FooterSchema.dataFiles(out.getFileSystem(
+        spark.sparkContext.hadoopConfiguration).listStatus(out).toSeq)
+      if (files.isEmpty) None
+      else Some(spark.read.parquet(files.map(_.getPath.toString): _*))
     }
   }
 
-  /** Read `dir` with the file list pruned by `pred` BEFORE any
-    * skipped file's footer is opened. SUPERSET contract: the result
-    * contains every row matching `pred` (plus possibly more from
-    * kept files) — apply the real data predicate on top; Catalyst
-    * pushes it into the surviving scans. Directory-partition columns
-    * resolve via `basePath`. An all-files-skipped prune returns the
-    * empty frame with the store's schema. */
-  def prunedRead(spark: SparkSession, dir: String,
-                 pred: SkipPred): DataFrame = {
-    val (kept, total) = skipFiles(spark, dir, pred)
-    // nothing pruned → plain directory read: an explicit N-root file
-    // list pays per-root planning (~2-3 ms each) the directory scan
-    // does not, so handing Spark the full list would make a no-win
-    // prune strictly worse than not pruning (measured in the skip
-    // bench's hash arm)
-    if (kept.size == total) spark.read.parquet(dir)
-    else readFiles(spark, dir, kept)
+  /** The max of `column` (read as Spark type `dt`) over the parquet
+    * footers under `path` (a file or a directory), merged on the
+    * driver — no Spark job, no data page. None when a file's footer
+    * carries no usable max for it. */
+  def footerMax(spark: SparkSession, path: String, column: String,
+                dt: DataType): Option[Any] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val maxes = listDataFiles(spark, path)
+      .map(f => footerStats(conf, f, Seq(column -> dt))._2(column)._2)
+    if (maxes.isEmpty || maxes.exists(_.isEmpty)) None
+    else Some(maxes.flatten.reduce(maxOf(_, _, dt)))
   }
 
-  /** Read an already-pruned file list (the [[skipFiles]] output) —
-    * callers that need the kept/total counts (a measured-suppression
-    * require, a bench report) prune once and read here instead of
-    * paying the stats job twice through [[prunedRead]]. */
-  def readFiles(spark: SparkSession, dir: String,
-                kept: Seq[String]): DataFrame = {
-    val reader = committedSchema(spark, dir)
-      .fold(spark.read)(s => spark.read.schema(s))
-    if (kept.isEmpty) reader.parquet(dir).where(lit(false))
-    else reader.option("basePath", dir).parquet(kept: _*)
-  }
 
   /** The LAYOUT half of skipping: range-repartition on `sortCols`
     * into `numFiles` write tasks and sort within each, so per-file

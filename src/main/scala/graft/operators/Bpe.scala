@@ -109,7 +109,15 @@ object Bpe {
     * sizing the driver) rather than by default — at the old 4M-row
     * default a wide-vocab corpus silently bought multi-GB driver
     * state. The threshold counts ROWS, not bytes: pathological
-    * corpora with huge distinct words should lower it or pass 0. */
+    * corpora with huge distinct words should lower it or pass 0.
+    *
+    * The fits-the-driver probe IS the local collect: `lim + 1` rows
+    * come to the driver on every call with `localFinishMaxVocab > 0`,
+    * including a vocabulary that turns out too big and then takes the
+    * distributed fallback — so that path still pays the full
+    * ~300 MB (at the default) driver spike once before it starts.
+    * Pass 0 when the vocabulary is known to be data-sized: no rows
+    * are collected. */
   def train(df: DataFrame, text: Column, numMerges: Int,
             localFinishMaxVocab: Long = 300000L): Model = {
     require(numMerges >= 1, "at least one merge")

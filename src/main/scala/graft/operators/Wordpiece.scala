@@ -133,7 +133,10 @@ object Wordpiece {
     * `localFinishMaxVocab` rows (~0.5–1 KB driver heap per row), the
     * trainer collects `(w, c)` ONCE and replays every round locally,
     * bit-identical (spec-pinned). Pass 0 to force the distributed
-    * path. */
+    * path. As there, the fits-the-driver probe is the collect itself:
+    * `lim + 1` rows (about 300 MB at the default) reach the driver
+    * even when the vocabulary is too big and the distributed fallback
+    * runs; passing 0 collects nothing. */
   def train(df: DataFrame, text: Column, numMerges: Int,
             localFinishMaxVocab: Long = 300000L): Model = {
     require(numMerges >= 1, "at least one merge")

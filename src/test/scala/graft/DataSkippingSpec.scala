@@ -2,10 +2,10 @@ package graft
 
 import java.sql.Date
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.io.DataSkipping
+import graft.io.{DataSkipping, SkipScan}
 import graft.io.DataSkipping._
 
 /** File-level min/max data-skipping contracts: footer stats equal a
@@ -103,60 +103,64 @@ class DataSkippingSpec extends GraftSuite {
     assert(s1 == (0 until 16).map(k => (625L, 625L * k, 625L * k + 624)))
   }
 
+  private def skipRead(dir: String): DataFrame =
+    spark.read.format("graft.io.SkipDataSource").load(dir)
+
+  /** One pruned-read case: the predicate, the check on the scan's
+    * plan-time (kept, total) file counts, and the exact row count. */
+  private case class Prunes(where: Column, kept: (Int, Int) => Boolean,
+                            rows: Long)
+
+  /** Each case read through the skipping scan of `dir`: the planned
+    * scan's kept count passes the case's check, and the rows are the
+    * unpruned read's, exactly. Returns each case's witness. */
+  private def checkPrunes(dir: String, cases: Prunes*): Seq[SkipScan.Prune] =
+    cases.map { c =>
+      val df = skipRead(dir).where(c.where)
+      val got = df.collect() // df's OWN execution: its witness is read next
+      val p = pruneOf(df, dir)
+      assert(c.kept(p.keptStatic, p.total),
+        s"${c.where}: kept ${p.keptStatic} of ${p.total} files")
+      assert(got.length == c.rows, s"${c.where}: ${got.length} rows")
+      assert(got.toSet ==
+        spark.read.parquet(dir).where(c.where).collect().toSet,
+        s"${c.where}: rows differ from the unpruned read")
+      p
+    }
+
   test("range prune keeps fewer files and the pruned read is exact") {
     val dir = tmpDir("range")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,
       statsCols = Seq("id", "d"))
-    val (kept, total) = skipFiles(spark, dir, RangePred("id", 100L, 400L))
-    assert(total == 16, s"expected 16 files, found $total")
     // a 301-id slice of a 10k corpus over 16 sorted files touches at
     // most 2 (one boundary straddle) — the measured-count discipline
-    assert(kept.size <= 2 && kept.nonEmpty,
-      s"kept ${kept.size} of $total files for a 3% range")
-    val pruned = prunedRead(spark, dir, RangePred("id", 100L, 400L))
-      .where(col("id").between(100, 400))
-    val full = spark.read.parquet(dir).where(col("id").between(100, 400))
-    assert(pruned.collect().toSet == full.collect().toSet)
-    assert(pruned.count() == 301)
+    checkPrunes(dir, Prunes(col("id").between(100, 400),
+      (k, t) => t == 16 && k >= 1 && k <= 2, 301))
   }
 
   test("date and string predicates prune too") {
     val dir = tmpDir("types")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,
       statsCols = Seq("d", "s"))
-    val dPred = RangePred("d", Date.valueOf("2024-01-11"),
-      Date.valueOf("2024-01-20"))
-    val (keptD, totD) = skipFiles(spark, dir, dPred)
-    assert(keptD.size < totD, s"date prune kept ${keptD.size}/$totD")
-    val got = prunedRead(spark, dir, dPred)
-      .where(col("d").between(lit("2024-01-11"), lit("2024-01-20")))
-      .agg(count(lit(1)), min("id"), max("id")).head()
-    assert(got.getLong(0) == 1000 && got.getLong(1) == 1000 &&
-      got.getLong(2) == 1999)
-    val sPred = EqPred("s", "s00042")
-    val (keptS, totS) = skipFiles(spark, dir, sPred)
-    assert(keptS.size == 1, s"point string prune kept ${keptS.size}/$totS")
-    assert(prunedRead(spark, dir, sPred)
-      .where(col("s") === "s00042").count() == 1)
+    checkPrunes(dir,
+      Prunes(col("d").between(lit("2024-01-11"), lit("2024-01-20")),
+        (k, t) => k < t, 1000),
+      Prunes(col("s") === "s00042", (k, _) => k == 1, 1))
   }
 
   test("and/or compose; disjoint range prunes everything, exactly") {
     val dir = tmpDir("compose")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 8,
       statsCols = Seq("id"))
-    val none = prunedRead(spark, dir, RangePred("id", 20000L, 30000L))
-    assert(none.count() == 0)
-    assert(none.schema == spark.read.parquet(dir).schema)
-    val both = OrPred(RangePred("id", 0L, 10L),
-      RangePred("id", 9990L, 9999L))
-    val (kept, total) = skipFiles(spark, dir, both)
-    assert(kept.size == 2 && total == 8)
-    assert(prunedRead(spark, dir, both)
-      .where(col("id") <= 10 || col("id") >= 9990).count() == 21)
-    val and = AndPred(RangePred("id", 0L, 5000L),
-      RangePred("id", 4000L, 9000L))
-    assert(prunedRead(spark, dir, and)
-      .where(col("id").between(4000, 5000)).count() == 1001)
+    checkPrunes(dir,
+      Prunes(col("id").between(20000, 30000), (k, _) => k == 0, 0),
+      Prunes(col("id") <= 10 || col("id") >= 9990,
+        (k, t) => k == 2 && t == 8, 21),
+      Prunes(col("id").between(0, 5000) && col("id").between(4000, 9000),
+        (k, t) => k < t, 1001))
+    // nothing kept still reads back with the store's schema
+    assert(skipRead(dir).where(col("id") > 20000).schema ==
+      spark.read.parquet(dir).schema)
   }
 
   test("IsNull prunes to the files that hold nulls") {
@@ -165,10 +169,7 @@ class DataSkippingSpec extends GraftSuite {
         (col("id") % 100 =!= 0)), dir, Seq("id"), numFiles = 10,
       statsCols = Seq("nv"))
     // nulls (id % 100 == 0) survive only below 250 → first file(s)
-    val (kept, total) = skipFiles(spark, dir, IsNullPred("nv"))
-    assert(kept.size < total, s"IsNull kept ${kept.size}/$total")
-    assert(prunedRead(spark, dir, IsNullPred("nv"))
-      .where(col("nv").isNull).count() == 3)
+    checkPrunes(dir, Prunes(col("nv").isNull, (k, t) => k < t, 3))
   }
 
   test("unknown files are conservatively kept (late append)") {
@@ -178,11 +179,9 @@ class DataSkippingSpec extends GraftSuite {
     // a foreign writer appends out-of-band — stats never saw it
     corpus.where(col("id") >= 9000).coalesce(1)
       .write.mode(SaveMode.Append).parquet(dir)
-    val (kept, total) = skipFiles(spark, dir, RangePred("id", 9500L, 9600L))
-    assert(kept.size == 1 && total == 9,
-      s"the unknown file alone should survive: ${kept.size}/$total")
-    assert(prunedRead(spark, dir, RangePred("id", 9500L, 9600L))
-      .where(col("id").between(9500, 9600)).count() == 101)
+    // the unknown file alone survives
+    checkPrunes(dir, Prunes(col("id").between(9500, 9600),
+      (k, t) => k == 1 && t == 9, 101))
   }
 
   test("refreshStats: appends collect only new footers; vanished files drop") {
@@ -196,15 +195,13 @@ class DataSkippingSpec extends GraftSuite {
       .write.mode(SaveMode.Append).parquet(dir)
     // before refresh: unknown files are kept conservatively — an
     // out-of-range pred still reads them
-    assert(skipFiles(spark, dir, RangePred("id", 0L, 10L))._1.size == 3)
+    checkPrunes(dir, Prunes(col("id").between(0, 10), (k, _) => k == 3, 11))
     val collected = refreshStats(spark, dir, Seq("id"))
     assert(collected == 2, s"collected $collected new files")
     // after refresh: the appended files carry stats and prune
-    val (kept, total) = skipFiles(spark, dir, RangePred("id", 0L, 10L))
-    assert(total == 10 && kept.size == 1,
-      s"post-refresh prune kept ${kept.size}/$total")
-    assert(prunedRead(spark, dir, RangePred("id", 6000L, 6100L))
-      .where(col("id").between(6000, 6100)).count() == 101)
+    checkPrunes(dir,
+      Prunes(col("id").between(0, 10), (k, t) => t == 10 && k == 1, 11),
+      Prunes(col("id").between(6000, 6100), (k, t) => k < t, 101))
     // a no-change refresh is a no-op
     assert(refreshStats(spark, dir, Seq("id")) == 0)
     // vanished files (compaction) drop from the frame
@@ -220,14 +217,15 @@ class DataSkippingSpec extends GraftSuite {
   test("no committed stats frame = no pruning, never an error") {
     val dir = tmpDir("nostats")
     DataSkipping.writeSorted(corpus, dir, Seq("id"), numFiles = 4)
-    val (kept, total) = skipFiles(spark, dir, RangePred("id", 0L, 1L))
-    assert(kept.size == total && total == 4)
+    val keepsAll = Prunes(col("id").between(0, 1),
+      (k, t) => k == t && t == 4, 2)
+    checkPrunes(dir, keepsAll)
     // a marker-less (crashed) stats frame is ignored the same way
     writeStats(spark, dir, Seq("id"))
     graft.io.MarkerCommit.deleteRecursively(
       s"$dir/_filestats/_STATS_OK")
     assert(statsFrame(spark, dir).isEmpty)
-    assert(skipFiles(spark, dir, RangePred("id", 0L, 1L))._1.size == 4)
+    checkPrunes(dir, keepsAll)
   }
 
   test("INT96 timestamps carry no stats and never prune; micros do") {
@@ -246,16 +244,11 @@ class DataSkippingSpec extends GraftSuite {
       writeSortedWithStats(withTs, dirUs, Seq("id"), 8, Seq("ts"))
     } finally
       spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val pred = RangePred("ts",
-      new java.sql.Timestamp((base + 60) * 1000L),
-      new java.sql.Timestamp((base + 120) * 1000L))
-    val (kept96, tot96) = skipFiles(spark, dir96, pred)
-    assert(kept96.size == tot96, "INT96 must keep every file")
-    val (keptUs, totUs) = skipFiles(spark, dirUs, pred)
-    assert(keptUs.size < totUs, "micros timestamps must prune")
-    assert(prunedRead(spark, dirUs, pred).where(col("ts").between(
-        timestamp_seconds(lit(base + 60)),
-        timestamp_seconds(lit(base + 120)))).count() == 61)
+    val minute = col("ts").between(timestamp_seconds(lit(base + 60)),
+      timestamp_seconds(lit(base + 120)))
+    // INT96 must keep every file; micros timestamps must prune
+    checkPrunes(dir96, Prunes(minute, (k, t) => k == t, 61))
+    checkPrunes(dirUs, Prunes(minute, (k, t) => k < t, 61))
   }
 
   test("directory-partitioned store: basePath keeps the layout column") {
@@ -264,13 +257,10 @@ class DataSkippingSpec extends GraftSuite {
     df.repartition(4, col("p")).sortWithinPartitions("id")
       .write.partitionBy("p").parquet(dir)
     writeStats(spark, dir, Seq("id"))
-    val (kept, total) = skipFiles(spark, dir, RangePred("id", 0L, 100L))
-    assert(total > kept.size || total == kept.size, "listing works")
-    val got = prunedRead(spark, dir, RangePred("id", 0L, 100L))
-      .where(col("id") <= 100)
+    checkPrunes(dir, Prunes(col("id") <= 100, (k, t) => k <= t, 101))
+    val got = skipRead(dir).where(col("id") <= 100)
     assert(got.columns.contains("p"), "partition column must survive")
     assert(got.groupBy("p").count().count() == 4)
-    assert(got.count() == 101)
   }
 
   test("decimal stats columns are rejected loudly") {
@@ -283,72 +273,33 @@ class DataSkippingSpec extends GraftSuite {
   }
 
   // -----------------------------------------------------------------
-  // r15: Catalyst-integrated skipping (SkippingFileIndex), the
-  // foreign-timestamp-unit / NTZ / NaN advice fixes, and the
-  // refreshStats schema-evolution contract.
+  // r15: pushed-filter skipping, the foreign-timestamp-unit / NTZ /
+  // NaN advice fixes, and the refreshStats schema-evolution contract.
   // -----------------------------------------------------------------
-
-  private def scanFileCount(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.totalNumberOfFiles.toInt
-    }.getOrElse(sys.error("no FileSourceScanExec in plan"))
 
   test("FileIndex: pushed filters prune the scan's file listing; rows exact") {
     val dir = tmpDir("fidx")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,
       statsCols = Seq("id", "d", "s", "nv"))
-    val total = listDataFiles(spark, dir).size
-    val expect = spark.read.parquet(dir)
-      .where(col("id").between(100, 200)).collect().toSet
-
-    val pruned = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("id").between(100, 200))
-    assert(scanFileCount(pruned) < total,
-      "pushed range must shrink the scan's file listing")
-    assert(pruned.collect().toSet == expect)
-
-    // strings, dates, IN, IsNull all translate and prune/keep right
-    val byDate = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("d") === lit(Date.valueOf("2024-01-15")))
-    assert(scanFileCount(byDate) < total)
-    assert(byDate.count() ==
-      spark.read.parquet(dir)
-        .where(col("d") === lit(Date.valueOf("2024-01-15"))).count())
-    val byIn = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("id").isin(5L, 6L, 9999L))
-    assert(scanFileCount(byIn) < total)
-    assert(byIn.count() == 3)
-    val byNull = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("nv").isNull)
-    assert(byNull.count() == 100)
-
-    // an untranslatable predicate (function of the column) keeps all
-    // files — and still returns exact rows
-    val fn = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(abs(col("id") - 150) <= 50)
-    assert(scanFileCount(fn) == total)
-    assert(fn.collect().toSet == expect)
-
-    // OR: both arms translate => prunes; one arm opaque => keeps all
-    val orBoth = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("id") < 50 || col("id") > 9950)
-    assert(scanFileCount(orBoth) < total)
-    assert(orBoth.count() == 99)
-
-    // prefix LIKE prunes on the string column (UTF-8 prefix bounds):
-    // s is zero-padded so 's0123%' lands in one sorted file
-    val pre = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("s").startsWith("s00123"))
-    assert(scanFileCount(pre) < total)
-    assert(pre.count() == 1)
-    val preWide = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("s").startsWith("s"))
-    assert(preWide.count() == 10000, "all rows share prefix 's'")
-    val orOpaque = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("id") < 50 || abs(col("id")) > 99999)
-    assert(scanFileCount(orOpaque) == total)
-    assert(orOpaque.count() == 50)
+    val prunes = (k: Int, t: Int) => k < t
+    val keepsAll = (k: Int, t: Int) => k == t
+    val any = (_: Int, _: Int) => true
+    checkPrunes(dir,
+      Prunes(col("id").between(100, 200), prunes, 101),
+      // strings, dates, IN, IsNull all translate and prune/keep right
+      Prunes(col("d") === lit(Date.valueOf("2024-01-15")), prunes, 100),
+      Prunes(col("id").isin(5L, 6L, 9999L), prunes, 3),
+      Prunes(col("nv").isNull, any, 100),
+      // an untranslatable predicate (function of the column) keeps all
+      // files — and still returns exact rows
+      Prunes(abs(col("id") - 150) <= 50, keepsAll, 101),
+      // OR: both arms translate => prunes; one arm opaque => keeps all
+      Prunes(col("id") < 50 || col("id") > 9950, prunes, 99),
+      Prunes(col("id") < 50 || abs(col("id")) > 99999, keepsAll, 50),
+      // prefix LIKE prunes on the string column (UTF-8 prefix bounds):
+      // s is zero-padded so 's00123%' lands in one sorted file
+      Prunes(col("s").startsWith("s00123"), prunes, 1),
+      Prunes(col("s").startsWith("s"), any, 10000))
   }
 
   test("FileIndex: late appends are conservatively kept; no stats = no pruning") {
@@ -363,18 +314,13 @@ class DataSkippingSpec extends GraftSuite {
         date_add(lit(Date.valueOf("2024-01-01")), 3).as("d"),
         col("id").as("nv"))
       .coalesce(1).write.mode(SaveMode.Append).parquet(dir)
-    val got = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("id") >= 90000)
-    assert(got.count() == 100,
-      "rows in an unknown file must survive the prune")
+    // rows in an unknown file must survive the prune
+    checkPrunes(dir, Prunes(col("id") >= 90000, (k, _) => k == 1, 100))
 
     // no committed stats at all: every file listed, reads exact
     val bare = tmpDir("fidx_bare")
     corpus.coalesce(4).write.parquet(bare)
-    val all = graft.io.SkippingFileIndex.read(spark, bare)
-      .where(col("id") < 10)
-    assert(scanFileCount(all) == listDataFiles(spark, bare).size)
-    assert(all.count() == 10)
+    checkPrunes(bare, Prunes(col("id") < 10, (k, t) => k == t, 10))
   }
 
   test("partitioned FileIndex: directory pruning and file-stats pruning compose") {
@@ -387,34 +333,24 @@ class DataSkippingSpec extends GraftSuite {
       .sortWithinPartitions("p", "id")
       .write.partitionBy("p").parquet(dir)
     writeStats(spark, dir, Seq("id"))
-    val total = listDataFiles(spark, dir).size
-    assert(total >= 8, s"want a multi-file-per-partition layout: $total")
-
-    // partition filter alone: directories drop (inherited pruning)
-    val pOnly = graft.io.SkippingFileIndex.readPartitioned(spark, dir)
-      .where(col("p") === 1)
-    val pOnlyFiles = scanFileCount(pOnly)
-    assert(pOnlyFiles < total)
-    assert(pOnly.count() == 2500)
-
-    // partition filter + tracked data column: files drop INSIDE the
-    // kept directory — strictly fewer than the partition prune alone
-    val both = graft.io.SkippingFileIndex.readPartitioned(spark, dir)
-      .where(col("p") === 1 && col("id").between(100, 200))
-    assert(scanFileCount(both) < pOnlyFiles,
-      "stats pruning must compose on top of partition pruning")
-    assert(both.collect().toSet ==
-      spark.read.parquet(dir)
-        .where(col("p") === 1 && col("id").between(100, 200))
-        .collect().toSet)
-
-    // data-column filter alone still prunes files across partitions
-    val idOnly = graft.io.SkippingFileIndex.readPartitioned(spark, dir)
-      .where(col("id") === 9999)
-    assert(scanFileCount(idOnly) < total)
-    assert(idOnly.count() == 1)
+    // partition filter alone: directories drop, no file inside them
+    val Seq(pOnly) = checkPrunes(dir,
+      Prunes(col("p") === 1, (k, t) => k < t, 2500))
+    assert(pOnly.total >= 8,
+      s"want a multi-file-per-partition layout: ${pOnly.total}")
+    assert(pOnly.keptStatic == pOnly.keptPartition)
+    // partition filter + tracked data column: ONE scan's witness shows
+    // files dropping INSIDE the kept directory
+    val Seq(both) = checkPrunes(dir,
+      Prunes(col("p") === 1 && col("id").between(100, 200),
+        (k, _) => k >= 1, 25))
+    assert(both.keptPartition == pOnly.keptPartition)
+    assert(both.keptStatic < both.keptPartition,
+      s"stats pruning must compose on top of partition pruning: $both")
+    // data-column filter alone still prunes files across partitions,
     // and the partition column survives in the output schema
-    assert(idOnly.columns.contains("p"))
+    checkPrunes(dir, Prunes(col("id") === 9999, (k, t) => k < t, 1))
+    assert(skipRead(dir).where(col("id") === 9999).columns.contains("p"))
   }
 
   test("partitioned FileIndex: dynamic partition pruning composes (join-driven)") {
@@ -425,60 +361,29 @@ class DataSkippingSpec extends GraftSuite {
       .sortWithinPartitions("p", "id")
       .write.partitionBy("p").parquet(dir)
     writeStats(spark, dir, Seq("id"))
-    val total = listDataFiles(spark, dir).size
-    // a 1-row dim selects partition 2 at RUNTIME — DPP should inject
-    // the partition filter into the scan via the broadcast result
-    // DPP requires a SELECTIVE predicate on the filtering side (a
-    // bare dim never qualifies) — and the dim must be a REAL
-    // relation: a filtered LocalRelation constant-folds away before
-    // the DPP rule sees the filter. The standard star-join shape:
-    // dim scanned + filtered, fact pruned by the join key at runtime
+    // a 1-row dim selects partition 2 at RUNTIME — DPP delivers the
+    // partition key set to the scan from the broadcast result. DPP
+    // requires a SELECTIVE predicate on the filtering side (a bare dim
+    // never qualifies) — and the dim must be a REAL relation: a
+    // filtered LocalRelation constant-folds away before the DPP rule
+    // sees the filter. The standard star-join shape: dim scanned +
+    // filtered, fact pruned by the join key at runtime
     val dimDir = tmpDir("fidx_dpp_dim")
     Seq((2, "keep"), (3, "drop")).toDF("p", "tag")
       .write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("tag") === "keep")
-    // useStats=false: the benefit heuristic estimates from the
-    // fallback ratio instead of (absent) column stats — this corpus
-    // is KBs, far below any real table the heuristic was tuned for
-    val prev = spark.conf.getOption(
-      "spark.sql.optimizer.dynamicPartitionPruning.useStats")
-      .getOrElse("true")
-    val joined =
-      try {
-        spark.conf.set(
-          "spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-        val j = graft.io.SkippingFileIndex.readPartitioned(spark, dir)
-          .join(dim, "p")
-        // execute FIRST: AQE finalizes the plan (and DPP's runtime
-        // filter fires) only at execution
-        assert(j.collect().length == 2500)
-        j
-      } finally spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.useStats", prev)
-    val plan = joined.queryExecution.executedPlan.toString
+    val (rows, prune, plan) = withDppFallback {
+      val j = skipRead(dir).join(dim, "p")
+      val r = j.collect() // j's OWN QueryExecution: the filter fires
+      (r, pruneOf(j, dir), j.queryExecution.executedPlan.toString)
+    }
+    assert(rows.length == 2500)
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"expected a DPP filter in the plan:\n${plan.take(3000)}")
-    // files actually read (post-execution metric) < the full store:
-    // the runtime partition filter pruned directories through the
-    // inherited InMemoryFileIndex path. AQE hides scan nodes inside
-    // query stages, so the metric check re-runs the same join with
-    // AQE off (DPP is an optimizer rule, independent of AQE).
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val j2 = graft.io.SkippingFileIndex.readPartitioned(spark, dir)
-        .join(dim, "p")
-      assert(j2.collect().length == 2500)
-      val scans = j2.queryExecution.executedPlan.collectWithSubqueries {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.relation.location.isInstanceOf[
-              graft.io.SkippingPartitionedFileIndex] => f
-      }
-      assert(scans.nonEmpty)
-      val filesRead = scans.head.metrics("numFiles").value
-      assert(filesRead > 0 && filesRead < total,
-        s"DPP did not prune: read $filesRead of $total files")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // the runtime partition filter pruned directories: files kept < the
+    // full store, measured on the scan's own witness
+    assert(prune.runtimeFilterSeen && prune.keptRuntime > 0 &&
+      prune.keptRuntime < prune.total, s"DPP did not prune: $prune")
   }
 
   test("VersionStore.latestIndexed: optimizeSorted output serves pruned plans") {
@@ -491,8 +396,9 @@ class DataSkippingSpec extends GraftSuite {
     val pruned = VersionStore.latestIndexed(spark, root)
       .where(col("id").between(100, 200))
     val vdir = s"$root/v=${VersionStore.versions(spark, root).max}"
-    assert(scanFileCount(pruned) < listDataFiles(spark, vdir).size,
-      "pushed range must prune the optimized version's files")
+    val prune = pruneOf(pruned, vdir)
+    assert(prune.keptStatic < prune.total,
+      s"pushed range must prune the optimized version's files: $prune")
     assert(pruned.count() == 101)
   }
 
@@ -512,15 +418,10 @@ class DataSkippingSpec extends GraftSuite {
       writeSortedWithStats(withTs, dir, Seq("id"), 8, Seq("ts"))
     } finally
       spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
-    val pred = RangePred("ts",
-      new java.sql.Timestamp((base + 60) * 1000L),
-      new java.sql.Timestamp((base + 120) * 1000L))
-    val (kept, tot) = skipFiles(spark, dir, pred)
-    assert(kept.size == tot,
-      "MILLIS-annotated timestamps carry no trustworthy micros bound")
-    assert(prunedRead(spark, dir, pred).where(col("ts").between(
+    // MILLIS-annotated timestamps carry no trustworthy micros bound
+    checkPrunes(dir, Prunes(col("ts").between(
       timestamp_seconds(lit(base + 60)),
-      timestamp_seconds(lit(base + 120)))).count() == 61)
+      timestamp_seconds(lit(base + 120))), (k, t) => k == t, 61))
   }
 
   test("TIMESTAMP_NTZ stats decode to LocalDateTime and prune") {
@@ -532,12 +433,8 @@ class DataSkippingSpec extends GraftSuite {
     writeSortedWithStats(withTs, dir, Seq("id"), 8, Seq("ts"))
     def ldt(off: Long) = java.time.LocalDateTime.ofEpochSecond(
       base + off, 0, java.time.ZoneOffset.UTC)
-    val pred = RangePred("ts", ldt(60), ldt(120))
-    val (kept, tot) = skipFiles(spark, dir, pred)
-    assert(kept.size < tot, "NTZ micros must prune")
-    assert(prunedRead(spark, dir, pred)
-      .where(col("ts").between(lit(ldt(60)), lit(ldt(120))))
-      .count() == 61)
+    checkPrunes(dir, Prunes(col("ts").between(lit(ldt(60)), lit(ldt(120))),
+      (k, t) => k < t, 61))
   }
 
   test("NaN bounds keep every file (parquet stats exclude NaN)") {
@@ -546,31 +443,24 @@ class DataSkippingSpec extends GraftSuite {
       when(col("id") === 7, lit(Double.NaN))
         .otherwise(col("id").cast("double")).as("x"))
     writeSortedWithStats(withNaN, dir, Seq("id"), 4, Seq("x"))
-    val (kept, tot) = skipFiles(spark, dir,
-      EqPred("x", Double.NaN))
-    assert(kept.size == tot, "a NaN bound must not prune")
-    // Spark's semantics: NaN = NaN is TRUE — the row must survive
-    assert(prunedRead(spark, dir, EqPred("x", Double.NaN))
-      .where(col("x") === lit(Double.NaN)).count() == 1)
-    // and through the FileIndex the same conjunct keeps all files
-    val viaIdx = graft.io.SkippingFileIndex.read(spark, dir)
-      .where(col("x") === lit(Double.NaN))
-    assert(scanFileCount(viaIdx) == listDataFiles(spark, dir).size)
-    assert(viaIdx.count() == 1)
+    // Spark's semantics: NaN = NaN is TRUE — the row must survive, so
+    // a NaN bound must not prune
+    checkPrunes(dir, Prunes(col("x") === lit(Double.NaN),
+      (k, t) => k == t, 1))
   }
 
   test("newerThanStore: the watermark gate prunes files; NULL watermark passes everything") {
     val dir = tmpDir("wm")
     writeSortedWithStats(corpus.select("id", "nv"), dir, Seq("id"),
       numFiles = 8, statsCols = Seq("id"))
-    val total = listDataFiles(spark, dir).size
     // processed high-water mark: ids <= 8999 seen — the daily
     // increment reads O(new files), not the store
     val processed = spark.range(9000).toDF("id")
     val inc = graft.etl.Snapshot.newerThanStore(spark, dir, "id",
       processed, col("id"))
-    assert(scanFileCount(inc) < total,
-      "watermark literal must prune at-or-before files")
+    val prune = pruneOf(inc, dir)
+    assert(prune.keptStatic < prune.total,
+      s"watermark literal must prune at-or-before files: $prune")
     assert(inc.count() == 1000)
     assert(inc.agg(min("id")).head().getLong(0) == 9000)
     // bootstrap: an empty processed frame aggregates to a NULL
@@ -604,8 +494,9 @@ class DataSkippingSpec extends GraftSuite {
     assert(after == listed,
       "refreshed frame must cover exactly the store's files")
     // and the merged rows read right through a pruned read
-    assert(prunedRead(spark, dir, EqPred("k", 401L))
-      .where(col("k") === 401L).head().getAs[Long]("v") == 99L)
+    checkPrunes(dir, Prunes(col("k") === 401L, (k, t) => k < t, 1))
+    assert(skipRead(dir).where(col("k") === 401L)
+      .head().getAs[Long]("v") == 99L)
   }
 
   test("refreshStats: evolved append recommits the merged schema; tracked type change throws") {
@@ -616,7 +507,7 @@ class DataSkippingSpec extends GraftSuite {
       Seq("id", "v"))
     // an appended file brings a NEW column: refresh must surface it
     // in the committed schema (previously the stale schema dropped
-    // it from every readFiles/FileIndex read forever)
+    // it from every skipping read forever)
     spark.range(20000, 20100).select(col("id"),
         (col("id") / 10.0).as("v"), lit("fresh").as("tag"))
       .coalesce(1).write.mode(SaveMode.Append).parquet(dir)
@@ -624,8 +515,7 @@ class DataSkippingSpec extends GraftSuite {
     val evolved = committedSchema(spark, dir).get
     assert(evolved.fieldNames.contains("tag"),
       "merged schema must carry the appended column")
-    val got = readFiles(spark, dir, listDataFiles(spark, dir))
-      .where(col("tag") === "fresh")
+    val got = skipRead(dir).where(col("tag") === "fresh")
     assert(got.count() == 100)
 
     // a TYPE change in a TRACKED column is loud corruption-prevention
@@ -669,26 +559,18 @@ class DataSkippingSpec extends GraftSuite {
       (xs + 1.0) * (ys + 1.0) }.sum / ranges.length
     assert(meanArea <= 4 * 26 * 26, f"mean tile area $meanArea%.0f")
     // a small 2-D box touches few tiles; the read is exact
-    val box = AndPred(RangePred("x", 10L, 20L), RangePred("y", 80L, 90L))
-    val (kept, total) = skipFiles(spark, dir, box)
-    assert(total == 16 && kept.size <= 6,
-      s"2-D box kept ${kept.size}/$total")
-    val got = readFiles(spark, dir, kept)
-      .where(col("x").between(10, 20) && col("y").between(80, 90))
-    val want = spark.read.parquet(dir)
-      .where(col("x").between(10, 20) && col("y").between(80, 90))
-    assert(got.collect().toSet == want.collect().toSet)
-    assert(got.count() == 11 * 11)
+    checkPrunes(dir, Prunes(
+      col("x").between(10, 20) && col("y").between(80, 90),
+      (k, t) => t == 16 && k <= 6, 11 * 11))
     // the z layout prunes on the NON-lead dimension where the 1-D
     // sort cannot: same corpus sorted by x, y-only predicate
     val dirX = tmpDir("xsorted")
     writeSortedWithStats(grid, dirX, Seq("x"), numFiles = 16,
       statsCols = Seq("x", "y"))
-    val yOnly = RangePred("y", 0L, 10L)
-    assert(skipFiles(spark, dirX, yOnly)._1.size == 16,
-      "x-sorted layout cannot prune a y predicate")
-    assert(skipFiles(spark, dir, yOnly)._1.size < 16,
-      "z-order must prune a y predicate")
+    val yOnly = col("y").between(0, 10)
+    // the x-sorted layout cannot prune a y predicate; z-order must
+    checkPrunes(dirX, Prunes(yOnly, (k, _) => k == 16, 11 * 100))
+    checkPrunes(dir, Prunes(yOnly, (k, _) => k < 16, 11 * 100))
   }
 
   test("z-order: 3 columns (stride-4 spread) and a date column read exactly") {
@@ -699,15 +581,10 @@ class DataSkippingSpec extends GraftSuite {
       date_add(lit(Date.valueOf("2024-01-01")),
         (col("id") / 400).cast("int")).as("d"), col("id"))
     writeZOrderedWithStats(grid, dir, Seq("a", "b", "d"), numFiles = 8)
-    val pred = AndPred(RangePred("a", 0L, 5L),
-      RangePred("d", Date.valueOf("2024-01-01"), Date.valueOf("2024-01-08")))
-    val (kept, total) = skipFiles(spark, dir, pred)
-    assert(kept.size < total, s"3-col z kept ${kept.size}/$total")
-    val got = readFiles(spark, dir, kept)
-      .where(col("a") <= 5 && col("d") <= lit("2024-01-08"))
-    val want = spark.read.parquet(dir)
-      .where(col("a") <= 5 && col("d") <= lit("2024-01-08"))
-    assert(got.collect().toSet == want.collect().toSet)
+    // a in 0..5 of 20, d in the first 8 of 20 days: 6/20 of 3200 rows
+    checkPrunes(dir, Prunes(col("a").between(0, 5) &&
+      col("d").between(lit("2024-01-01"), lit("2024-01-08")),
+      (k, t) => k < t, 960))
   }
 
   test("VersionStore.optimizeSorted: compaction that serves pruned reads") {
@@ -724,21 +601,17 @@ class DataSkippingSpec extends GraftSuite {
     assert(VersionStore.latest(spark, root).collect().toSet ==
       VersionStore.asOf(spark, root, 0).collect().toSet)
     // the compacted version prunes — v0 never could
-    val (kept, total) = skipFiles(spark, vdir, RangePred("id", 0L, 500L))
-    assert(kept.size < total && kept.nonEmpty,
-      s"optimized version kept ${kept.size}/$total")
-    assert(readFiles(spark, vdir, kept)
-      .where(col("id") <= 500).count() == 501)
+    checkPrunes(vdir, Prunes(col("id").between(0, 500),
+      (k, t) => k < t && k > 0, 501))
     // z-order variant tiles two columns
     val v2 = VersionStore.optimizeSorted(spark, root, Seq("id", "d"),
       targetFileMB = 1, zOrder = true, minFiles = 16)
     val v2dir = s"$root/v=$v2"
     assert(statsCommitted(spark, v2dir))
-    val dPred = RangePred("d", Date.valueOf("2024-01-01"),
-      Date.valueOf("2024-01-10"))
-    assert(skipFiles(spark, v2dir, dPred)._1.size <
-      skipFiles(spark, v2dir, dPred)._2,
-      "z-ordered optimize must prune the second column")
+    // z-ordered optimize must prune the second column
+    checkPrunes(v2dir, Prunes(
+      col("d").between(lit("2024-01-01"), lit("2024-01-10")),
+      (k, t) => k < t, 1000))
     assert(VersionStore.latest(spark, root).collect().toSet ==
       VersionStore.asOf(spark, root, 0).collect().toSet)
   }
@@ -787,9 +660,6 @@ class DataSkippingSpec extends GraftSuite {
     }
   }
 
-  private def dfpRead(dir: String): DataFrame =
-    spark.read.format("graft.io.SkipDataSource").load(dir)
-
   /** The prune witness of `df`'s own executed SkipScan over `dir` —
     * r17: records ride the scan INSTANCE (read via the executed
     * plan), so concurrent/interleaved scans never clobber each other. */
@@ -819,7 +689,7 @@ class DataSkippingSpec extends GraftSuite {
     // registry entry), so the record must be read right after the
     // action whose execution it describes
     val (rows, prune, plan) = withDppFallback {
-      val j = dfpRead(dir).join(dim, col("id") === col("dk"))
+      val j = skipRead(dir).join(dim, col("id") === col("dk"))
         .select("id", "v", "batch")
       val r = j.collect() // j's OWN QueryExecution: the filter fires
       (r, pruneOf(j, dir),
@@ -853,7 +723,7 @@ class DataSkippingSpec extends GraftSuite {
       .write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("m") === 7)
     val (rows, prune) = withDppFallback {
-      val j = dfpRead(dir).join(dim, col("id") === col("dk"))
+      val j = skipRead(dir).join(dim, col("id") === col("dk"))
         .select("id", "v")
       val r = j.collect()
       (r, pruneOf(j, dir))
@@ -868,20 +738,20 @@ class DataSkippingSpec extends GraftSuite {
     val dir = tmpDir("dfp_static")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,
       statsCols = Seq("id"))
-    val df = dfpRead(dir).where(col("id").between(1000, 1999))
+    val df = skipRead(dir).where(col("id").between(1000, 1999))
     assert(df.collect().length == 1000) // collect: df's OWN execution
     val prune = pruneOf(df, dir)
     assert(!prune.runtimeFilterSeen)
     assert(prune.keptStatic <= 3,
       s"literal prune too weak: kept ${prune.keptStatic} of 16")
-    assert(dfpRead(dir).where(col("id").between(1000, 1999))
+    assert(skipRead(dir).where(col("id").between(1000, 1999))
       .select(sum("id")).as[Long].head() == (1000L to 1999L).sum)
     // column pruning reaches the inner parquet scan: a 1-col read
-    assert(dfpRead(dir).select("v").where(col("id") < 10)
+    assert(skipRead(dir).select("v").where(col("id") < 10)
       .count() == 10)
   }
 
-  test("VersionStore.latestDynamic: DPP composes with the versioned store") {
+  test("VersionStore.latestIndexed: DPP composes with the versioned store") {
     import graft.etl.VersionStore
     val root = tmpDir("vs_dfp")
     VersionStore.write(corpus.repartition(8), root)
@@ -897,7 +767,7 @@ class DataSkippingSpec extends GraftSuite {
       .write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("batch") === 3)
     val (rows, prune) = withDppFallback {
-      val j = VersionStore.latestDynamic(spark, root)
+      val j = VersionStore.latestIndexed(spark, root)
         .join(dim, col("id") === col("dk")).select("id", "v")
       val r = j.collect()
       (r, pruneOf(j, vdir))
@@ -908,7 +778,7 @@ class DataSkippingSpec extends GraftSuite {
     // a stats-less root falls back to the plain read, no error
     val root2 = tmpDir("vs_dfp_plain")
     VersionStore.write(corpus.limit(100), root2)
-    assert(VersionStore.latestDynamic(spark, root2).count() == 100)
+    assert(VersionStore.latestIndexed(spark, root2).count() == 100)
   }
 
   test("SkipDataSource: a join on an untracked column neither prunes nor breaks") {
@@ -924,7 +794,7 @@ class DataSkippingSpec extends GraftSuite {
       (col("id") % 10).as("m")).write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("m") === 3)
     val (rows, prune) = withDppFallback {
-      val j = dfpRead(dir).join(dim, col("s") === col("ds"))
+      val j = skipRead(dir).join(dim, col("s") === col("ds"))
         .select("id", "s")
       val r = j.collect()
       (r, pruneOf(j, dir))
@@ -944,8 +814,7 @@ class DataSkippingSpec extends GraftSuite {
   test("partitioned store: ONE V2 scan prunes directories, files, then runtime files — by measured count") {
     val dir = tmpDir("dfp_part")
     // 4 hive partitions (p = id / 2500), ~4 range-sorted files inside
-    // each; stats committed at the root (the q181 layout served
-    // through the V2 source instead of readPartitioned)
+    // each; stats committed at the root (the q181 layout)
     corpus.withColumn("p", (col("id") / 2500).cast("int"))
       .repartitionByRange(16, col("p"), col("id"))
       .sortWithinPartitions("p", "id")
@@ -964,7 +833,7 @@ class DataSkippingSpec extends GraftSuite {
     // Spark would otherwise build on the FACT side and
     // reuseBroadcastOnly would silently drop the runtime filter)
     val (rows, prune) = withDppFallback {
-      val j = dfpRead(dir)
+      val j = skipRead(dir)
         .where(col("p") === 2 && col("id") < 6000)
         .join(broadcast(dim), col("id") === col("dk"))
         .select("id", "v", "p")
@@ -999,14 +868,14 @@ class DataSkippingSpec extends GraftSuite {
       (col("id") / 625).cast("long").as("batch")).write.parquet(dimDir)
     val dim = spark.read.parquet(dimDir).where(col("batch") === 5)
     withDppFallback {
-      val joined = dfpRead(dir).join(dim, col("id") === col("dk"))
+      val joined = skipRead(dir).join(dim, col("id") === col("dk"))
         .select("id", "v")
       assert(joined.collect().length == 625)
       // a SECOND scan over the same store, constructed and executed
       // AFTER the first — under the r16 dir-keyed registry its
       // construction reset runtimeFilterSeen for the whole store and
       // clobbered the first scan's witness
-      val literal = dfpRead(dir).where(col("id").between(0, 624))
+      val literal = skipRead(dir).where(col("id").between(0, 624))
       assert(literal.collect().length == 625)
       val pJoin = pruneOf(joined, dir)
       val pLit = pruneOf(literal, dir)
@@ -1033,7 +902,7 @@ class DataSkippingSpec extends GraftSuite {
         Future {
           val dim = spark.read.parquet(dimDir)
             .where(col("batch") === batch)
-          val j = dfpRead(dir).join(dim, col("id") === col("dk"))
+          val j = skipRead(dir).join(dim, col("id") === col("dk"))
             .select("id")
           // blocking{}: the global pool sizes itself to cores and a
           // barrier-parked worker is invisible to it — on a 1-core
@@ -1062,7 +931,7 @@ class DataSkippingSpec extends GraftSuite {
     // keep-unknown — full listing, exact rows, no error
     val bare = tmpDir("dfp_bare")
     corpus.repartition(4).write.parquet(bare)
-    val bareDf = dfpRead(bare).where(col("id") < 100)
+    val bareDf = skipRead(bare).where(col("id") < 100)
     assert(bareDf.collect().length == 100)
     val pBare = pruneOf(bareDf, bare)
     assert(pBare.keptStatic == pBare.total && pBare.total > 0)
@@ -1072,7 +941,7 @@ class DataSkippingSpec extends GraftSuite {
     val dir = tmpDir("dfp_countstar")
     writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 16,
       statsCols = Seq("id"))
-    assert(dfpRead(dir).where(col("id") < 625).count() == 625)
+    assert(skipRead(dir).where(col("id") < 625).count() == 625)
 
     // (c) hive null partition (__HIVE_DEFAULT_PARTITION__): files
     // under it carry NO usable partition bound — a p literal keeps
@@ -1085,15 +954,15 @@ class DataSkippingSpec extends GraftSuite {
           .otherwise(pmod(col("id"), lit(2L))).cast("int"))
       .repartition(4).write.partitionBy("p").parquet(np)
     DataSkipping.writeStats(spark, np, Seq("id"))
-    val nullRows = dfpRead(np).where(col("p").isNull)
+    val nullRows = skipRead(np).where(col("p").isNull)
     assert(nullRows.collect().length == 2000)
     val pNull = pruneOf(nullRows, np)
     assert(pNull.keptStatic < pNull.total,
       s"IS NULL must prune the non-null directories: $pNull")
-    val litRows = dfpRead(np).where(col("p") === 1)
+    val litRows = skipRead(np).where(col("p") === 1)
     assert(litRows.collect().length == 4000)
     // identity against the stock partitioned read, all three shapes
-    assert(dfpRead(np).collect().map(_.toSeq).toSet ==
+    assert(skipRead(np).collect().map(_.toSeq).toSet ==
       spark.read.parquet(np).collect().map(_.toSeq).toSet)
   }
 
@@ -1122,5 +991,97 @@ class DataSkippingSpec extends GraftSuite {
       s"a declined delivery must not prune: $prune")
     assert(rows.map(_.getLong(0)).sorted.toSeq ==
       (3125L until 3750L), "rows must stay exact under the decline")
+  }
+
+  // ---------------------------------------------------------------
+  // One skipping read: the snapshot rule, and stats reads that Spark
+  // does not log as ignored paths.
+  // ---------------------------------------------------------------
+
+  test("a skipping read serves its load()-time snapshot: one stats load per frame, appends wait for a new load") {
+    import graft.etl.VersionStore
+    import graft.obs.Meter
+    val root = tmpDir("snap_vs")
+    VersionStore.write(corpus.repartition(8), root)
+    VersionStore.optimizeSorted(spark, root, Seq("id"), minFiles = 8)
+    // a stats load reads the committed frame through
+    // DataSkipping.statsFrame, whose parquet read runs one job there
+    def statsLoads(c: Meter.Charge): Int = c.stages.values
+      .count(_.name.startsWith("parquet at DataSkipping.scala"))
+    val sc = spark.sparkContext
+    val (df, atLoad) = Meter.measure(sc, "snapshot-load")(
+      VersionStore.latestIndexed(spark, root)
+        .where(col("id").between(100, 200)))
+    val (_, acts) = Meter.measure(sc, "snapshot-actions") {
+      assert(df.collect().length == 101)
+      assert(df.count() == 101) // a derived frame: a second scan
+    }
+    assert(statsLoads(atLoad) + statsLoads(acts) == 1,
+      s"stats loaded ${statsLoads(atLoad)} times at load, " +
+        s"${statsLoads(acts)} times over two actions")
+
+    // a frame held across an append serves the files of its load()
+    val dir = tmpDir("snap_flat")
+    writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 8,
+      statsCols = Seq("id"))
+    val held = skipRead(dir).where(col("id") >= 0)
+    spark.range(20000, 20100).select(
+        col("id"), (col("id") / 10.0).as("v"),
+        format_string("s%05d", col("id")).as("s"),
+        date_add(lit(Date.valueOf("2024-01-01")), 3).as("d"),
+        col("id").as("nv"))
+      .coalesce(1).write.mode(SaveMode.Append).parquet(dir)
+    assert(held.count() == 10000)
+    assert(pruneOf(held, dir).total == 8)
+    // a new load() sees the appended file
+    assert(skipRead(dir).where(col("id") >= 0).count() == 10100)
+  }
+
+  test("stats-frame reads log no ignored-path warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    val ignored = "All paths were ignored"
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[CoreLogger]
+    /** The DataSource log lines `body` emits. */
+    def logged(body: => Unit): Seq[String] = {
+      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val app = new AbstractAppender("graft-datasource-capture", null,
+          null, true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          lines.add(e.getMessage.getFormattedMessage)
+      }
+      app.start()
+      val prev = logger.getLevel
+      logger.addAppender(app)
+      if (!logger.isEnabled(Level.WARN)) logger.setLevel(Level.WARN)
+      try body
+      finally {
+        logger.removeAppender(app)
+        if (logger.getLevel != prev) logger.setLevel(prev)
+        app.stop()
+      }
+      lines.asScala.toSeq
+    }
+    val dir = tmpDir("nowarn")
+    writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 4,
+      statsCols = Seq("id"))
+    val quiet = logged {
+      assert(skipRead(dir).where(col("id") < 100).collect().length == 100)
+      corpus.where(col("id") < 10).coalesce(1)
+        .write.mode(SaveMode.Append).parquet(dir)
+      assert(refreshStats(spark, dir, Seq("id")) == 1)
+      assert(statsFrame(spark, dir).get.count() == 5)
+    }
+    assert(!quiet.exists(_.contains(ignored)), quiet.mkString("\n"))
+    // the capture is live: a read rooted at the underscore directory
+    // itself is the warning's shape
+    val control = logged(spark.read.parquet(s"$dir/_filestats").count())
+    assert(control.exists(_.contains(ignored)),
+      s"the capture saw no $ignored warning: $control")
   }
 }

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One mechanism per job, checked over the sources: knobs are read by
   * the kit alone, the job-group meter is the only Spark listener, every
-  * session is built on graft's profile, and every per-run stamp is bound
-  * as a run constant. Comment lines are skipped, so a doc comment may
+  * session is built on graft's profile, every per-run stamp is bound
+  * as a run constant, and every pruned read is the one skipping read. Comment lines are skipped, so a doc comment may
   * name what the code may not do. */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -83,5 +83,19 @@ class SourceRulesSpec extends AnyFunSuite {
       .findAllMatchIn(entry).map(_.group(1)).toSet
     assert(kinds == Set("merge1", "mergep", "skip", "skipv", "skipz", "skipp",
       "skipd", "skipdp", "bfr", "cms1", "opq1", "res1"))
+  }
+
+  test("one skipping read") {
+    // every pruned read is graft.io.SkipDataSource's scan: no V1
+    // relation built by hand, no second index or prune call
+    val banned = Seq("HadoopFsRelation(", "baseRelationToDataFrame",
+      "SkippingFileIndex", "prunedRead(", "skipFiles(")
+    banned.foreach(b => assert(
+      matching("src/main", java.util.regex.Pattern.quote(b)).isEmpty, b))
+    // the rule is not vacuous: the store reads go through the source
+    val readers = Seq("etl/Backfill.scala", "etl/Snapshot.scala",
+      "etl/VersionStore.scala").map("src/main/scala/graft/" + _)
+    val viaSource = matching("src/main", "\"graft\\.io\\.SkipDataSource\"")
+    readers.foreach(f => assert(viaSource.contains(f), f))
   }
 }
