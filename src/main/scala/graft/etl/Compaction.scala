@@ -27,6 +27,7 @@ object Compaction {
   def compactTo(df: DataFrame, path: String, targetFileMB: Int = 512,
                 approxInputBytes: Long): Unit = {
     val files = math.max(1L, approxInputBytes / (targetFileMB * 1024L * 1024L))
-    df.repartition(files.toInt).write.mode("overwrite").parquet(path)
+    graft.io.StoreWriter(df.repartition(files.toInt)).mode("overwrite")
+      .parquet(path)
   }
 }

@@ -261,7 +261,7 @@ object VersionStore {
         s"directory at $vdir — claim protocol violated")
     val tmp = vdir + ".building"
     graft.io.MarkerCommit.deleteRecursively(tmp)
-    df.write.mode("errorifexists")
+    graft.io.StoreWriter(df).mode("errorifexists")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(tmp)
     info.foreach { case (base, action) =>

@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -58,9 +59,11 @@ object CsvIngest {
     * (ukg_open_census_file_cleanser.py:62, 81-93: decode with charset
     * fallback, repair bare `\n` not preceded by `\r`, quote-aware csv
     * parse, strip quotes/commas *inside* each field, drop the header
-    * row) — but distributed: files load as binary
-    * (one task per file, exactly the reference's per-file unit of
-    * work), decode with `opts.encoding`, get the bare-newline repair
+    * row) — but distributed: files load as binary, packed to the
+    * bytes-per-task floor ([[Tables.tasksFor]] over the drop's listed
+    * bytes; a file is never split, so a drop of a few small files is
+    * one task and one written file), decode with `opts.encoding`, get
+    * the bare-newline repair
     * *before* record splitting (a line-based reader would have
     * already split on the broken newlines — the repair must see the
     * whole file), then split on CRLF/LF, parse with `from_csv`, and
@@ -73,7 +76,13 @@ object CsvIngest {
       if (opts.encoding.equalsIgnoreCase("auto"))
         Cleanser.decodeAuto(col("content"))
       else decode(col("content"), opts.encoding)
-    val raw = spark.read.format("binaryFile").load(path)
+    val files = spark.read.format("binaryFile").load(path)
+    // coalescing never widens: a drop past the floor keeps its scan's
+    // one task per file
+    val raw = files.queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.sizeInBytes }
+      .fold(files)(bytes => files.coalesce(Tables.tasksFor(bytes)))
       .select(dec.as("__raw"))
     val repaired = if (opts.repairBareNewlines)
       raw.select(Cleanser.repairBareNewlines(col("__raw")).as("__raw"))

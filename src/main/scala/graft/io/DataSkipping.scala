@@ -354,7 +354,7 @@ object DataSkipping {
     val out = s"$dir/$StatsDir"
     val tmp = s"$out.tmp"
     MarkerCommit.deleteRecursively(tmp)
-    stats.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    StoreWriter(stats.coalesce(1)).mode(SaveMode.Overwrite).parquet(tmp)
     // the data schema rides the stats commit (the Delta-log move):
     // pruned reads then never footer-infer — with an explicit file
     // list every root would otherwise pay discovery/inference setup,
@@ -465,7 +465,7 @@ object DataSkipping {
         val out = s"$dir/$StatsDir"
         val tmp = s"$out.tmp"
         MarkerCommit.deleteRecursively(tmp)
-        merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+        StoreWriter(merged.coalesce(1)).mode(SaveMode.Overwrite).parquet(tmp)
         // the MERGED schema rides the recommit — an evolved append's
         // new column becomes visible to committedSchema readers here,
         // not silently dropped by the stale pre-append schema
@@ -547,7 +547,7 @@ object DataSkipping {
                   mode: SaveMode = SaveMode.Overwrite): Unit = {
     require(sortCols.nonEmpty && numFiles >= 1,
       "writeSorted needs sort columns and a positive file count")
-    rangeLayout(df, sortCols, numFiles).write.mode(mode).parquet(dir)
+    StoreWriter(rangeLayout(df, sortCols, numFiles)).mode(mode).parquet(dir)
   }
 
   /** Reservoir points per output file for [[rangeLayout]]'s sample:
@@ -715,9 +715,8 @@ object DataSkipping {
     }
     require(!df.columns.contains("__z"), "column name __z is reserved")
     val z = zOrderValue(df, typed)
-    rangeLayout(df.withColumn("__z", z), Seq("__z"), numFiles)
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(dir)
+    StoreWriter(rangeLayout(df.withColumn("__z", z), Seq("__z"), numFiles)
+      .drop("__z")).mode(SaveMode.Overwrite).parquet(dir)
     writeStats(df.sparkSession, dir, (zCols ++ extraStatsCols).distinct)
   }
 }

@@ -5,10 +5,11 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 /** Connector seam for the reference's file-pull control flow: list a
   * remote folder, keep items modified after the last processed
@@ -76,24 +77,40 @@ object FileSync {
     * Empty log ⇒ everything (first run processes the full folder).
     * The comparison is a strict `>` at Spark's microsecond precision,
     * as `Snapshot.newerThan` over the listing would make it; the
-    * result is a local frame of (name, last_modified). */
+    * result is a local frame of (name, last_modified).
+    *
+    * A log the driver already holds costs no job: when the optimized
+    * plan of the `last_modified` cast is a local relation (a frame
+    * built from a local `Seq`, projections of it folded in by the
+    * optimizer), the watermark is read from its rows here. Any other
+    * log (a table, a parquet directory) runs one top-1 job. */
   def newEntries(spark: SparkSession, source: FileSource,
                  processedLog: DataFrame): DataFrame = {
-    // the max as a top-1 (one job; a global aggregate's shuffle is two)
-    val top = processedLog
+    val stamps = processedLog
       .select(col("last_modified").cast(TimestampType).as("wm"))
-      .orderBy(col("wm").desc_nulls_last).limit(1).collect()
-    val wm = top.headOption.flatMap(r => Option(r.get(0))).map {
-      case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
-      case i: Instant            => DateTimeUtils.instantToMicros(i)
-      case o => throw new IllegalStateException(s"unexpected ts type: $o")
+    val wm = stamps.queryExecution.optimizedPlan match {
+      case local: LocalRelation =>
+        local.data.filterNot(_.isNullAt(0)).map(_.getLong(0)).maxOption
+      case _ =>
+        // the max as a top-1 (one job; a global aggregate's shuffle is two)
+        stamps.orderBy(col("wm").desc_nulls_last).limit(1).collect()
+          .headOption.flatMap(r => Option(r.get(0))).map {
+            case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+            case i: Instant            => DateTimeUtils.instantToMicros(i)
+            case o => throw new IllegalStateException(s"unexpected ts type: $o")
+          }
     }
     val kept = source.list()
-      .map(e => (e.name, java.sql.Timestamp.from(e.lastModified)))
-      .filter { case (_, ts) =>
-        wm.forall(DateTimeUtils.fromJavaTimestamp(ts) > _) }
-    spark.createDataFrame(kept).toDF("name", "last_modified")
+      .map(e => Row(e.name, java.sql.Timestamp.from(e.lastModified)))
+      .filter(r => wm.forall(
+        DateTimeUtils.fromJavaTimestamp(r.getAs[java.sql.Timestamp](1)) > _))
+    spark.createDataFrame(kept.asJava, EntrySchema)
   }
+
+  /** [[newEntries]]'s result: the names and nullability a local
+    * `(String, Timestamp)` frame gets. */
+  private val EntrySchema = StructType(Seq(
+    StructField("name", StringType), StructField("last_modified", TimestampType)))
 
   /** Fetch the gated delta: (name, last_modified, content) rows, bytes
     * pulled once per new file via the connector — on executors. Only

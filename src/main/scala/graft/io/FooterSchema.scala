@@ -2,11 +2,14 @@ package graft.io
 
 import scala.util.Try
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Schema-pinned reads of a flat parquet directory, without Spark's
@@ -22,12 +25,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Where only the schema is needed, [[schema]] gives it without
   * building the frame at all.
   *
+  * A footer without that metadata (a non-Spark writer's, such as those
+  * of the tables [[Tables]] reads) is converted on the driver with Spark's own
+  * parquet-to-Spark schema converter, under the session's parquet
+  * flags, which is what inference does with it.
+  *
   * The pin applies only where it provably equals inference: a flat
-  * directory (no visible subdirectory, so no partition columns), no
-  * `_metadata`/`_common_metadata` summary file (inference prefers
-  * those), and a first data file whose footer carries Spark's row
-  * metadata. Anything else — a non-Spark writer's footer, a
-  * partitioned layout — falls back to plain inference. */
+  * directory or a single file (no visible subdirectory, so no
+  * partition columns) and no `_metadata`/`_common_metadata` summary
+  * file (inference prefers those). A partitioned layout falls back to
+  * plain inference. */
 object FooterSchema {
 
   /** Spark's footer key for the written row schema (its
@@ -44,20 +51,28 @@ object FooterSchema {
     listing.filter(s => s.isFile && s.getLen > 0 &&
       !hidden(s.getPath.getName)).sortBy(_.getPath.toString)
 
-  /** The Spark schema recorded in `file`'s footer; None when the
-    * footer has no (parseable) Spark row metadata. */
-  private[graft] def recorded(conf: org.apache.hadoop.conf.Configuration,
-                              file: FileStatus): Option[StructType] = {
+  private def footer(conf: Configuration, file: FileStatus): FileMetaData = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get(RowMetadataKey))
-      .flatMap(js => Try(DataType.fromJson(js)).toOption)
-      .collect { case s: StructType => s }
+    try reader.getFooter.getFileMetaData
     finally reader.close()
   }
 
-  /** The footer-recorded schema of `dir` when the pin applies (see
-    * the object doc), as written; None where inference must run. */
+  private def recordedIn(meta: FileMetaData): Option[StructType] =
+    Option(meta.getKeyValueMetaData.get(RowMetadataKey))
+      .flatMap(js => Try(DataType.fromJson(js)).toOption)
+      .collect { case s: StructType => s }
+
+  /** The Spark schema recorded in `file`'s footer; None when the
+    * footer has no (parseable) Spark row metadata. */
+  private[graft] def recorded(conf: Configuration,
+                              file: FileStatus): Option[StructType] =
+    recordedIn(footer(conf, file))
+
+  /** The schema inference would read from `dir`'s first data file
+    * when the pin applies (see the object doc): the footer's recorded
+    * schema, as written, or else its parquet schema converted with the
+    * flags Spark's parquet inference takes from the session. None
+    * where inference must run. */
   private def pinned(spark: SparkSession,
                      listing: Seq[FileStatus]): Option[StructType] = {
     val flat = !listing.exists { s =>
@@ -66,12 +81,24 @@ object FooterSchema {
         n.startsWith("_metadata") || n.startsWith("_common_metadata")
     }
     if (!flat) None
-    else dataFiles(listing).headOption.flatMap(
-      recorded(spark.sparkContext.hadoopConfiguration, _))
+    else dataFiles(listing).headOption.map { file =>
+      val meta = footer(spark.sparkContext.hadoopConfiguration, file)
+      recordedIn(meta).getOrElse {
+        val sql = spark.sessionState.conf
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sql.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sql.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            sql.parquetReaderRespectUnknownTypeAnnotation)
+          .convert(meta.getSchema)
+      }
+    }
   }
 
   /** The schema of [[read]]`(spark, dir, listing)` without building
-    * the frame: the footer's recorded schema, made nullable throughout
+    * the frame: the pinned footer schema, made nullable throughout
     * as a file source reads it, or Spark's inference where [[read]]
     * falls back to it. Building the frame costs a file-index listing
     * and an analysis, tens of milliseconds for a schema check. */

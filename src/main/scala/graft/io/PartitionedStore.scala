@@ -58,8 +58,8 @@ object PartitionedStore {
             writeParallelism: Int = 1): Unit = {
     require(writeParallelism >= 1, "writeParallelism must be >= 1")
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    df.repartition(parts * writeParallelism, col(partCol))
-      .write.mode(mode).partitionBy(partCol).parquet(path)
+    StoreWriter(df.repartition(parts * writeParallelism, col(partCol)))
+      .mode(mode).partitionBy(partCol).parquet(path)
   }
 
   /** Fold a batch into an existing store: value-aligned append —

@@ -82,26 +82,26 @@ object PqIndexStore {
       "residual codes are defined relative to stored centroids")
     val tmp = dir + ".building"
     MarkerCommit.deleteRecursively(tmp)
-    codebooks.select(col("sub").cast("int"), col("c").cast("int"),
-        col("cv").cast("array<double>"))
-      .write.mode("overwrite").parquet(s"$tmp/codebooks")
+    StoreWriter(codebooks.select(col("sub").cast("int"), col("c").cast("int"),
+        col("cv").cast("array<double>")))
+      .mode("overwrite").parquet(s"$tmp/codebooks")
     rotation.foreach { rot =>
-      rot.zipWithIndex.map { case (row, i) => (i, row) }
+      StoreWriter(rot.zipWithIndex.map { case (row, i) => (i, row) }
         .toDF("i", "row")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$tmp/rotation")
+        .coalesce(1))
+        .mode("overwrite").parquet(s"$tmp/rotation")
     }
     centroids.foreach { c =>
       require(c.columns.contains("c_id") && c.columns.contains("cv"),
         "centroids must carry (c_id, cv)")
       // persisted AS-IS: the routing frame carries derived columns
       // (the precomputed norm `cn`) that must survive the round-trip
-      c.write.mode("overwrite").parquet(s"$tmp/centroids")
+      StoreWriter(c).mode("overwrite").parquet(s"$tmp/centroids")
     }
     if (centroids.isDefined)
       PartitionedStore.write(codes, s"$tmp/codes", "c_id")
     else
-      codes.write.mode("overwrite").parquet(s"$tmp/codes")
+      StoreWriter(codes).mode("overwrite").parquet(s"$tmp/codes")
     if (residual)
       MarkerCommit.touch(s"$tmp/$ResidualMarker", "residual\n")
     // commit: the shared MarkerCommit swap — recover a stranded

@@ -51,7 +51,7 @@ object SketchStore {
   def write(dir: String, frame: DataFrame): Unit = {
     val tmp = dir + ".building"
     MarkerCommit.deleteRecursively(tmp)
-    frame.coalesce(1).write.mode("overwrite").parquet(tmp)
+    StoreWriter(frame.coalesce(1)).mode("overwrite").parquet(tmp)
     // shared crash-safe swap: recover a stranded `.old`, rename the
     // predecessor aside, move the successor in, marker last
     MarkerCommit.commitSwap(dir, tmp, Marker)

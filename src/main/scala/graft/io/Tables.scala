@@ -6,12 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference reads Delta tables by name (`spark.read.format("delta")
   * .table("ukg.ukg_dept_bus_strctr")`, ukg_wrkload_dtl.py:29); here the
-  * catalog is path-based parquet. Readers are plain `spark.read.parquet`
-  * so Catalyst keeps full pushdown/pruning into the scan.
+  * catalog is path-based parquet. Readers are parquet reads with the
+  * schema pinned from one footer on the driver ([[FooterSchema.read]]),
+  * so building a frame starts no schema-inference job, and Catalyst
+  * keeps full pushdown/pruning into the scan.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    FooterSchema.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame    = t("region")
   def nation: DataFrame    = t("nation")
@@ -119,12 +121,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     // task's scheduling cost. Production layouts are unaffected twice
     // over — the est<cores gate already no-ops there, and any input
     // past cores×64 KB (a few MB) still widens to all cores.
-    val minTaskBytes = Tables.wideTaskBytes
     val bytes = files.map(_.getLen).sum
     if (est > 0 && est < cores) {
-      val width = math.max(est,
-        math.min(cores.toLong, (bytes + minTaskBytes - 1) / minTaskBytes))
-        .toInt
+      val width = math.max(est, math.min(cores, Tables.tasksFor(bytes))).toInt
       if (width > est) df.repartition(width) else df
     } else df
   }
@@ -132,10 +131,17 @@ final case class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
 
-  /** The `*Wide` accessors' bytes-per-task floor:
-    * `SPARK_GRAFT_WIDE_TASK_BYTES`, default 64 KB. A malformed or
-    * non-positive value fails here, naming the variable, instead of
-    * as a `NumberFormatException` inside a read path. */
+  /** graft's one bytes-per-task floor: `SPARK_GRAFT_WIDE_TASK_BYTES`,
+    * default 64 KB. Through [[tasksFor]] it both widens an under-split
+    * scan (the `*Wide` accessors) and narrows a scan of many small
+    * files (`CsvIngest.readCleansed`). A malformed or non-positive
+    * value fails here, naming the variable, instead of as a
+    * `NumberFormatException` inside a read path. */
   private[graft] def wideTaskBytes: Long =
     graft.Harness.positiveLong("SPARK_GRAFT_WIDE_TASK_BYTES", 65536L)
+
+  /** The task count `bytes` of input is worth at the [[wideTaskBytes]]
+    * floor: ceil(bytes / floor), at least one. */
+  private[graft] def tasksFor(bytes: Long): Int =
+    math.min(Int.MaxValue.toLong, math.max(bytes - 1, 0L) / wideTaskBytes + 1).toInt
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.io.{FileSource, FileSync, XlsxIngest}
+import graft.obs.Meter
 
 /** Top-level (not an inner class: closures over a spec instance don't
   * serialize) counting source for the executor-side-fetch proof: every
@@ -81,6 +82,12 @@ class FileSyncSpec extends GraftSuite {
     assert(FileSync.fetchNew(spark, src, log2).isEmpty)
   }
 
+  private def onDisk(log: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("synclog").resolve("log").toString
+    log.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   test("newEntries matches the Snapshot.newerThan gate it replaced") {
     // the gate newEntries used to build: a broadcast join of the
     // listing against the log's max last_modified
@@ -90,14 +97,17 @@ class FileSyncSpec extends GraftSuite {
           (e.name, java.sql.Timestamp.from(e.lastModified))))
           .toDF("name", "last_modified"),
         col("last_modified"), log, col("last_modified"))
-    def check(src: FileSource, log: DataFrame, expect: Seq[String]): Unit = {
-      val got = FileSync.newEntries(spark, src, log)
-      val ref = reference(src, log)
-      assert(got.schema == ref.schema)
-      assert(got.collect().map(_.toString).sorted.toSeq ==
-        ref.collect().map(_.toString).sorted.toSeq)
-      assert(got.select("name").as[String].collect().sorted.toSeq == expect)
-    }
+    // each log as the driver holds it (the job-free watermark) and
+    // read back from parquet (the top-1 job)
+    def check(src: FileSource, log: DataFrame, expect: Seq[String]): Unit =
+      Seq(log, onDisk(log)).foreach { l =>
+        val got = FileSync.newEntries(spark, src, l)
+        val ref = reference(src, l)
+        assert(got.schema == ref.schema)
+        assert(got.collect().map(_.toString).sorted.toSeq ==
+          ref.collect().map(_.toString).sorted.toSeq)
+        assert(got.select("name").as[String].collect().sorted.toSeq == expect)
+      }
     def logAt(ts: Instant*) = ts.zipWithIndex
       .map { case (t, i) => (s"old$i", java.sql.Timestamp.from(t)) }
       .toDF("name", "last_modified")
@@ -127,6 +137,22 @@ class FileSyncSpec extends GraftSuite {
       check(src, instantLog, Seq("later", "sub_milli"))
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     check(src, instantLog, Seq("later", "sub_milli"))
+  }
+
+  test("a driver-held log's watermark costs no job, a parquet log's one") {
+    val src = new ListedSource(Seq("a" -> at(1), "b" -> at(2), "c" -> at(3)))
+    // the log as a daily job keeps it: a local Seq, renamed by toDF
+    val held = spark.createDataFrame(Seq(
+        ("a", java.sql.Timestamp.from(at(1))), ("b", java.sql.Timestamp.from(at(2)))))
+      .toDF("name", "last_modified")
+    val stored = onDisk(held)
+    Seq(held -> 0, stored -> 1).foreach { case (log, jobs) =>
+      val (names, c) = Meter.measure(spark.sparkContext,
+        s"sync-${java.util.UUID.randomUUID()}")(
+        FileSync.newEntries(spark, src, log).collect().map(_.getString(0)).toSeq)
+      assert(names == Seq("c"))
+      assert(c.jobs == jobs, s"expected $jobs jobs, saw ${c.jobs}")
+    }
   }
 
   test("payload fetch runs on executors, never the driver") {

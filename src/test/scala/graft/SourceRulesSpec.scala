@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One mechanism per job, checked over the sources: knobs are read by
   * the kit alone, the job-group meter is the only Spark listener, every
   * session is built on graft's profile, every per-run stamp is bound
-  * as a run constant, and every pruned read is the one skipping read. Comment lines are skipped, so a doc comment may
+  * as a run constant, every pruned read is the one skipping read, every
+  * store write is the one store writer, and task widths come from one
+  * bytes-per-task rule. Comment lines are skipped, so a doc comment may
   * name what the code may not do. */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -97,5 +99,57 @@ class SourceRulesSpec extends AnyFunSuite {
       "etl/VersionStore.scala").map("src/main/scala/graft/" + _)
     val viaSource = matching("src/main", "\"graft\\.io\\.SkipDataSource\"")
     readers.foreach(f => assert(viaSource.contains(f), f))
+  }
+
+  /** The code of the `def name` in `code`: up to the next line indented
+    * no deeper than the def (its closing brace, or the next member). */
+  private def body(code: String, name: String): String = {
+    val at = code.indexOf(s"def $name(")
+    assert(at >= 0, s"no def $name")
+    val line = code.lastIndexOf('\n', at) + 1
+    val indent = code.substring(line, at).takeWhile(_ == ' ').length
+    val rest = code.substring(at)
+    rest.take(s"\\n {0,$indent}\\S".r.findFirstMatchIn(rest)
+      .fold(rest.length)(_.start))
+  }
+
+  private def code(file: String): String =
+    sources("src/main").collectFirst { case (f, c) if f.endsWith(file) => c }
+      .getOrElse(fail(s"no $file"))
+
+  test("one store writer") {
+    // a DataFrame writer (`.write` followed by a call) in the store
+    // code appears only in the helper, which names the no-fork local
+    // filesystem. Bucketing's catalog table is the one exception: a
+    // saveAsTable keeps writer options as table properties
+    val writer = """(?m)\.write(?:\s*\.|\s*$)"""
+    val writers = Seq("src/main/scala/graft/etl", "src/main/scala/graft/io")
+      .flatMap(matching(_, writer))
+    assert(writers == Seq("src/main/scala/graft/io/Bucketing.scala",
+      "src/main/scala/graft/io/StoreWriter.scala"))
+    val helper = body(code("/io/StoreWriter.scala"), "apply")
+    assert(helper.contains("classOf[NoForkLocalFileSystem]") &&
+      helper.contains("\"fs.file.impl\"") &&
+      helper.contains("\"fs.file.impl.disable.cache\""))
+    // the rule is not vacuous: every store writes through the helper
+    val stores = Seq("etl/VersionStore.scala", "etl/Compaction.scala",
+      "io/DataSkipping.scala", "io/PqIndexStore.scala", "io/SketchStore.scala",
+      "io/PartitionedStore.scala").map("src/main/scala/graft/" + _)
+    val viaHelper = matching("src/main", """\bStoreWriter\(""")
+    stores.foreach(f => assert(viaHelper.contains(f), f))
+  }
+
+  test("one width rule") {
+    // the bytes-per-task floor is divided in one function, which the
+    // widening and the narrowing read both call
+    val tables = code("/io/Tables.scala")
+    assert(matching("src/main", """\bwideTaskBytes\b""") ==
+      Seq("src/main/scala/graft/io/Tables.scala"))
+    assert(body(tables, "tasksFor").contains("wideTaskBytes"))
+    assert("""\bwideTaskBytes\b""".r.findAllIn(tables).size == 2)
+    // the rule is not vacuous: both callers name it
+    Seq(body(tables, "parallelized"),
+      body(code("/io/CsvIngest.scala"), "readCleansed")).foreach(b =>
+      assert(b.contains("Tables.tasksFor("), b.take(60)))
   }
 }

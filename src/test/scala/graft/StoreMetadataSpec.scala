@@ -142,6 +142,29 @@ class StoreMetadataSpec extends GraftSuite {
       Seq(1L -> "a", 2L -> "b"))
   }
 
+  test("testdata footers pin the inferred schema; a Tables frame starts no job") {
+    val names = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    // the testdata writer records no Spark row metadata: the footer's
+    // parquet schema is converted, not read back
+    val orders = s"$sfDir/orders.parquet"
+    assert(FooterSchema.recorded(spark.sparkContext.hadoopConfiguration,
+      fs(orders).getFileStatus(new Path(orders))).isEmpty)
+    val key = "spark.sql.parquet.binaryAsString"
+    val saved = spark.conf.getOption(key)
+    try Seq("false", "true").foreach { flag =>
+      spark.conf.set(key, flag)
+      names.foreach { t =>
+        val p = s"$sfDir/$t.parquet"
+        assert(FooterSchema.schema(spark, p) == spark.read.parquet(p).schema,
+          s"$t with binaryAsString=$flag")
+      }
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val (df, jobs) = jobsIn(graft.io.Tables(spark, sfDir).orders)
+    assert(jobs == 0, s"building the orders frame started $jobs jobs")
+    assert(df.schema == spark.read.parquet(orders).schema)
+  }
+
   test("a partitioned directory falls back to inference, partition columns kept") {
     val dir = Files.createTempDirectory("fsparts").toString + "/t"
     Seq((1L, "a", 7), (2L, "b", 8)).toDF("id", "x", "k")
