@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Where only the schema is needed, [[schema]] gives it without
   * building the frame at all.
   *
-  * A footer without that metadata (a non-Spark writer's, such as those
-  * of the tables [[Tables]] reads) is converted on the driver with Spark's own
-  * parquet-to-Spark schema converter, under the session's parquet
-  * flags, which is what inference does with it.
+  * A footer without that metadata (a non-Spark writer's, such as
+  * those of the tables [[Tables]] reads) is converted on the driver
+  * with Spark's own parquet-to-Spark schema converter, under the
+  * session's parquet flags, which is what inference does with it.
   *
   * The pin applies only where it provably equals inference: a flat
   * directory or a single file (no visible subdirectory, so no

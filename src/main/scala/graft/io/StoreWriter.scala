@@ -1,13 +1,10 @@
 package graft.io
 
 import java.nio.file.{FileSystems, Files}
-import java.nio.file.attribute.PosixFilePermission
-import java.nio.file.attribute.PosixFilePermission._
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
 /** The one parquet writer of graft's stores (`VersionStore`,
@@ -15,11 +12,11 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
   * `Compaction`).
   *
   * Without libhadoop, Hadoop's local filesystem sets every file's and
-  * directory's mode by starting a `chmod` process: a four-file version
-  * started 16 of them, data files, `.crc` sidecars and task
-  * directories alike. The writer resolves `file://` paths through
-  * [[NoForkLocalFileSystem]] instead, which sets the same mode bits
-  * through java.nio. It is passed as Hadoop options of the one write
+  * directory's mode by starting a `chmod` process: one per data file,
+  * `.crc` sidecar and directory a write creates. The writer resolves
+  * `file://` paths through [[NoForkLocalFileSystem]] instead, which
+  * sets the same mode bits through java.nio. It is passed as Hadoop
+  * options of the one write
   * (`fs.file.impl`, with the filesystem cache off so the option is not
   * answered by a cached instance): other schemes and the session's own
   * configuration are untouched.
@@ -41,29 +38,19 @@ object StoreWriter {
 class NoForkLocalFileSystem extends LocalFileSystem(new NoForkRawLocalFileSystem)
 
 /** Hadoop's raw local filesystem whose `setPermission` sets the POSIX
-  * mode through java.nio rather than a `chmod` process. It falls back
-  * to Hadoop's own on a filesystem without POSIX attributes and for a
-  * mode with the sticky bit, which java.nio cannot set. */
+  * mode through java.nio rather than a `chmod` process (the same
+  * `rwxr-xr-x` bits). It falls back to Hadoop's own on a filesystem
+  * without POSIX attributes and for a mode with the sticky bit, which
+  * java.nio cannot set. */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
-  import NoForkRawLocalFileSystem._
-
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (permission.getStickyBit || !posix) super.setPermission(p, permission)
-    else Files.setPosixFilePermissions(pathToFile(p).toPath, bits(permission))
+    if (permission.getStickyBit || !NoForkRawLocalFileSystem.posix)
+      super.setPermission(p, permission)
+    else Files.setPosixFilePermissions(pathToFile(p).toPath,
+      PosixFilePermissions.fromString(permission.toString))
 }
 
 object NoForkRawLocalFileSystem {
   private lazy val posix =
     FileSystems.getDefault.supportedFileAttributeViews.contains("posix")
-
-  private def bits(p: FsPermission): java.util.Set[PosixFilePermission] = {
-    def of(a: FsAction, r: PosixFilePermission, w: PosixFilePermission,
-           x: PosixFilePermission) =
-      Seq(a.implies(FsAction.READ) -> r, a.implies(FsAction.WRITE) -> w,
-        a.implies(FsAction.EXECUTE) -> x).collect { case (true, b) => b }
-    (of(p.getUserAction, OWNER_READ, OWNER_WRITE, OWNER_EXECUTE) ++
-      of(p.getGroupAction, GROUP_READ, GROUP_WRITE, GROUP_EXECUTE) ++
-      of(p.getOtherAction, OTHERS_READ, OTHERS_WRITE, OTHERS_EXECUTE))
-      .toSet.asJava
-  }
 }

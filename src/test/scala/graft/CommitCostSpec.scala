@@ -5,9 +5,8 @@ import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 import graft.etl.VersionStore
@@ -90,29 +89,13 @@ class CommitCostSpec extends GraftSuite {
       .rdd.getNumPartitions == 4)
   }
 
-  /** `body` with the session's `file` scheme on [[FailingChmodFileSystem]]. */
-  private def withFailingChmod[T](body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq(
-      "fs.file.impl" -> classOf[FailingChmodFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
-    SparkSession.setActiveSession(spark)
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("store writes start no chmod process and keep Hadoop's modes") {
     val root = Files.createTempDirectory("nofork").toString
     val frame = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     // the daily commit is to an existing store: its root was made by
     // the first commit
     VersionStore.write(frame, s"$root/store")
-    withFailingChmod {
+    NoShellLocalFileSystem.during(spark) {
       // the failing filesystem is really in force for the session
       val conf = spark.sparkContext.hadoopConfiguration
       intercept[UnsupportedOperationException](
@@ -143,11 +126,3 @@ class CommitCostSpec extends GraftSuite {
     files.foreach(f => assert(modeOf(f) == mode(FsPermission.getFileDefault), f))
   }
 }
-
-/** A local filesystem whose every mode change fails, the raw layer's
-  * included: each call that starts a `chmod` process without
-  * libhadoop. */
-class FailingChmodFileSystem extends LocalFileSystem(new RawLocalFileSystem {
-  override def setPermission(p: Path, permission: FsPermission): Unit =
-    throw new UnsupportedOperationException(s"setPermission($p)")
-})

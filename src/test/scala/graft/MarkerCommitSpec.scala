@@ -5,19 +5,41 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, FileContext, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, FileContext, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 import graft.io.MarkerCommit
 
-/** A local filesystem whose permission and link calls fail: the calls
-  * that start `chmod` and `readlink` processes without libhadoop. */
-class NoShellLocalFileSystem extends LocalFileSystem {
+/** A local filesystem whose permission and link calls fail, the raw
+  * layer's included (a create or mkdirs sets its mode there): the
+  * calls that start `chmod` and `readlink` processes without
+  * libhadoop. */
+class NoShellLocalFileSystem extends LocalFileSystem(new RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
     throw new UnsupportedOperationException(s"setPermission($p)")
   override def getFileLinkStatus(p: Path): FileStatus =
     throw new UnsupportedOperationException(s"getFileLinkStatus($p)")
+})
+
+object NoShellLocalFileSystem {
+  /** `body` with Hadoop's `file` scheme on the failing filesystems, in
+    * the session configuration that graft's writes resolve through. */
+  def during[T](spark: SparkSession)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq(
+      "fs.file.impl" -> classOf[NoShellLocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.file.impl" -> classOf[NoShellLocalFs].getName)
+    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
+    SparkSession.setActiveSession(spark)
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }
 
 /** [[NoShellLocalFileSystem]] behind `FileContext`. */
@@ -41,31 +63,13 @@ class MarkerCommitSpec extends GraftSuite {
   private def read(path: String): String =
     new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
 
-  /** `body` with Hadoop's `file` scheme on the failing filesystems,
-    * in the session's configuration that the commit resolves through. */
-  private def withNoShellFs[T](body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq(
-      "fs.file.impl" -> classOf[NoShellLocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true",
-      "fs.AbstractFileSystem.file.impl" -> classOf[NoShellLocalFs].getName)
-    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
-    SparkSession.setActiveSession(spark)
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("the file:// marker path never calls Hadoop's local filesystem") {
     val root = tmp("noshell")
     val dir = s"$root/a"
     write(s"$dir/data", "v1")
     write(s"$dir/_READY", "ready\n")
     write(s"$root/a.tmp/data", "v2")
-    withNoShellFs {
+    NoShellLocalFileSystem.during(spark) {
       // the failing filesystem is really in force for Hadoop callers
       val conf = spark.sparkContext.hadoopConfiguration
       intercept[UnsupportedOperationException](
