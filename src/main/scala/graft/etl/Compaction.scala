@@ -25,9 +25,15 @@ object Compaction {
   /** OPTIMIZE analog: rewrite `df` to `path` targeting
     * `targetFileMB`-sized parquet files (estimate via input size). */
   def compactTo(df: DataFrame, path: String, targetFileMB: Int = 512,
-                approxInputBytes: Long): Unit = {
-    val files = math.max(1L, approxInputBytes / (targetFileMB * 1024L * 1024L))
-    graft.io.StoreWriter(df.repartition(files.toInt)).mode("overwrite")
+                approxInputBytes: Long): Unit =
+    graft.io.StoreWriter(df.repartition(
+      filesFor(approxInputBytes, targetFileMB))).mode("overwrite")
       .parquet(path)
+
+  /** The one file-count rule of a size-targeted rewrite: ceil(bytes /
+    * target), at least one — 1023 MB at 512 MB is 2 files, not 1. */
+  private[graft] def filesFor(bytes: Long, targetFileMB: Int): Int = {
+    val target = targetFileMB * 1024L * 1024L
+    math.max(1L, (bytes + target - 1) / target).toInt
   }
 }

@@ -317,15 +317,8 @@ object Merge {
     try {
       val present = merged.select(col(partCol).cast("string"))
         .distinct().collect().map(_.getString(0)).toSet
-      val prevMode = spark.conf.getOption(
-        "spark.sql.sources.partitionOverwriteMode").getOrElse("STATIC")
-      try {
-        spark.conf.set(
-          "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        PartitionedStore.write(merged, path, partCol,
-          org.apache.spark.sql.SaveMode.Overwrite, writeParallelism)
-      } finally spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", prevMode)
+      PartitionedStore.overwritePartitions(merged, path, partCol,
+        writeParallelism)
       if (deleteFlag.isDefined)
         (touched.toSet -- present).toSeq.sorted.foreach(v =>
           MarkerCommit.deleteRecursively(s"$path/$partCol=$v"))

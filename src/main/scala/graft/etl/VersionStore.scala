@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -76,33 +76,22 @@ object VersionStore {
                       v: Long): Seq[org.apache.hadoop.fs.FileStatus] =
     f.listStatus(new Path(dir(root, v))).toSeq
 
-  /** Whether version `v` holds any data file. An external writer's
-    * empty commit holds only `_SUCCESS` — no parquet footers — so it
-    * has no schema; schema-sensitive paths must skip such versions. */
-  private def hasData(f: org.apache.hadoop.fs.FileSystem, root: String,
-                      v: Long): Boolean =
-    FooterSchema.dataFiles(listing(f, root, v)).nonEmpty
-
-  /** Version `v` read with its schema pinned from one footer (no
-    * inference job; the directory is listed once); None for a
-    * footerless version. */
-  private def footered(spark: SparkSession,
-                       f: org.apache.hadoop.fs.FileSystem, root: String,
-                       v: Long): Option[DataFrame] = {
+  /** `read` of version `v`'s listing when the version holds any data
+    * file. An external writer's empty commit holds only `_SUCCESS` — no
+    * parquet footers — so it has no schema; schema-sensitive paths must
+    * skip such versions (None). */
+  private def withData[T](f: org.apache.hadoop.fs.FileSystem, root: String,
+                          v: Long)(read: Seq[FileStatus] => T): Option[T] = {
     val ls = listing(f, root, v)
-    if (FooterSchema.dataFiles(ls).isEmpty) None
-    else Some(FooterSchema.read(spark, dir(root, v), ls))
+    if (FooterSchema.dataFiles(ls).isEmpty) None else Some(read(ls))
   }
 
-  /** The schema [[footered]] would read version `v` with, from the
-    * footer alone (no frame is built); None for a footerless version. */
+  /** The schema version `v` reads with, from one footer (no frame is
+    * built); None for a footerless version. */
   private def footeredSchema(spark: SparkSession,
                              f: org.apache.hadoop.fs.FileSystem,
-                             root: String, v: Long): Option[StructType] = {
-    val ls = listing(f, root, v)
-    if (FooterSchema.dataFiles(ls).isEmpty) None
-    else Some(FooterSchema.schema(spark, dir(root, v), ls))
-  }
+                             root: String, v: Long): Option[StructType] =
+    withData(f, root, v)(FooterSchema.schema(spark, dir(root, v), _))
 
   /** Append `df` as the next version; returns its number.
     *
@@ -136,7 +125,7 @@ object VersionStore {
             claims: ClaimStore = ClaimStore.ExclusiveCreate): Long = {
     val spark = df.sparkSession
     val f = fs(spark, root)
-    f.mkdirs(new Path(root))
+    graft.io.MarkerCommit.mkdirs(root)
     val committed = versions(spark, root)
     validateSchema(spark, f, root, committed, df, evolve, "write")
     var next = committed.lastOption.fold(0L)(_ + 1)
@@ -353,7 +342,7 @@ object VersionStore {
       s"unknown commit action '$action' (append|rewrite)")
     val spark = df.sparkSession
     val f = fs(spark, root)
-    f.mkdirs(new Path(root))
+    graft.io.MarkerCommit.mkdirs(root)
     val committed = versions(spark, root)
     require(base == -1L && committed.isEmpty || committed.contains(base),
       s"base $base is not a committed version of $root " +
@@ -379,26 +368,16 @@ object VersionStore {
     * for legacy [[write]] commits (treated as appends by the
     * conflict matrix). */
   def commitInfo(spark: SparkSession, root: String,
-                 version: Long): Option[(Long, String)] = {
-    val p = new Path(dir(root, version), InfoFile)
-    val f = fs(spark, root)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 4096, false)
-        val s = new String(bytes.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8)
+                 version: Long): Option[(Long, String)] =
+    graft.io.MarkerCommit.read(s"${dir(root, version)}/$InfoFile")
+      .flatMap { s =>
         val Base = """.*"base"\s*:\s*(-?\d+).*""".r
         val Act = """.*"action"\s*:\s*"(\w+)".*""".r
         for {
           b <- Base.findFirstMatchIn(s).map(_.group(1).toLong)
           a <- Act.findFirstMatchIn(s).map(_.group(1))
         } yield (b, a)
-      } finally in.close()
-    }
-  }
+      }
 
   /** Optimistically commit `compute(latestState)` — the multi-writer
     * read-modify-write loop. Reads the newest committed version,
@@ -556,7 +535,9 @@ object VersionStore {
   private def readVersion(spark: SparkSession, root: String,
                           version: Long): DataFrame = {
     val f = fs(spark, root)
-    footered(spark, f, root, version).getOrElse {
+    // the schema pinned from one footer: no inference job, one listing
+    withData(f, root, version)(
+      FooterSchema.read(spark, dir(root, version), _)).getOrElse {
       val donor = versions(spark, root).filter(_ < version).reverse
         .iterator.flatMap(footeredSchema(spark, f, root, _)).nextOption()
         .getOrElse(throw new IllegalStateException(
@@ -593,7 +574,7 @@ object VersionStore {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"no versions under $root")
     val vdir = dir(root, vs.last)
-    if (hasData(fs(spark, root), root, vs.last) &&
+    if (withData(fs(spark, root), root, vs.last)(_ => ()).isDefined &&
         graft.io.DataSkipping.statsCommitted(spark, vdir))
       spark.read.format("graft.io.SkipDataSource").load(vdir)
     else readVersion(spark, root, vs.last)
@@ -677,6 +658,12 @@ object VersionStore {
     drop
   }
 
+  /** [[Compaction.filesFor]] the bytes of version `v`'s files. */
+  private def filesFor(f: org.apache.hadoop.fs.FileSystem, root: String,
+                       v: Long, targetFileMB: Int): Int =
+    Compaction.filesFor(listing(f, root, v).filter(_.isFile)
+      .map(_.getLen).sum, targetFileMB)
+
   /** OPTIMIZE analog: rewrite the latest version's data as a NEW
     * compacted version targeting `targetFileMB` files (readers of the
     * old version are untouched; vacuum reclaims it later). Returns
@@ -689,14 +676,9 @@ object VersionStore {
     // OCC rewrite: rebases onto concurrent APPENDS (re-optimizing the
     // appended state is correct and picks up the new rows); a racing
     // second OPTIMIZE fails loudly (ConcurrentRewriteException)
-    commitRetry(spark, root, (base, st) => {
-      val bytes = f.listStatus(new Path(dir(root, base)))
-        .filter(_.isFile).map(_.getLen).sum
-      // ceiling: 1023 MB at target 512 → 2 files of ~512, not one ~1 GB
-      val target = targetFileMB * 1024L * 1024L
-      val files = math.max(1L, (bytes + target - 1) / target).toInt
-      st.repartition(files)
-    }, action = "rewrite")
+    commitRetry(spark, root, (base, st) =>
+      st.repartition(filesFor(f, root, base, targetFileMB)),
+      action = "rewrite")
   }
 
   /** OPTIMIZE with LAYOUT — the Delta `OPTIMIZE ... ZORDER BY`
@@ -731,21 +713,12 @@ object VersionStore {
     // (the layout/bounds recompute on the appended state), fail
     // loudly against a concurrent rewrite
     commitRetry(spark, root, (base, src) => {
-      val bytes = f.listStatus(new Path(dir(root, base)))
-        .filter(_.isFile).map(_.getLen).sum
-      val target = targetFileMB * 1024L * 1024L
       // minFiles: a parallelism/selectivity floor — a small table still
       // wants enough files that a range predicate can skip some
-      val files = math.max(minFiles.toLong,
-        (bytes + target - 1) / target).toInt
-      if (zOrder && layoutCols.size >= 2) {
-        require(!src.columns.contains("__z"),
-          "column name __z is reserved")
-        val typed = layoutCols.map(c => c -> src.schema(c).dataType)
-        graft.io.DataSkipping.rangeLayout(src.withColumn("__z",
-            graft.io.DataSkipping.zOrderValue(src, typed)), Seq("__z"), files)
-          .drop("__z")
-      } else graft.io.DataSkipping.rangeLayout(src, layoutCols, files)
+      val files = math.max(minFiles, filesFor(f, root, base, targetFileMB))
+      if (zOrder && layoutCols.size >= 2)
+        graft.io.DataSkipping.zOrderLayout(src, layoutCols, files)
+      else graft.io.DataSkipping.rangeLayout(src, layoutCols, files)
     }, action = "rewrite",
       onBuilt = Some((tmp, fin) =>
         graft.io.DataSkipping.writeStatsRelocated(spark, tmp, fin,

@@ -114,11 +114,10 @@ object Bucketing {
     val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, table))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketId = "_([0-9]{5})\\.".r
-    fs.listStatus(loc).iterator
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+    FooterSchema.dataFiles(fs.listStatus(loc).toSeq)
       .flatMap(s => bucketId.findFirstMatchIn(s.getPath.getName)
         .map(_.group(1).toInt))
-      .toSeq.groupBy(identity).map { case (b, xs) => b -> xs.size }
+      .groupBy(identity).map { case (b, xs) => b -> xs.size }
   }
 
   /** Rewrite the store to `writeParallelism` files per bucket IF any

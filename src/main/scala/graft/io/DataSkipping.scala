@@ -3,9 +3,12 @@ package graft.io
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -30,14 +33,17 @@ import org.apache.spark.util.SerializableConfiguration
   * skipped file is opened.
   *
   * Three pieces:
-  *   - [[collectStats]]/[[writeStats]] — per-file `min/max/nullCount`
-  *     for a declared column set, computed from the parquet FOOTERS
-  *     (row-group statistics merged per file): METADATA-ONLY, no data
-  *     pages are read, so attaching stats to a just-committed batch
-  *     costs one footer read per file — the same footers the first
-  *     query would read anyway. The frame commits marker-last under
-  *     `dir/_filestats` (underscore prefix: invisible to Spark data
-  *     reads of `dir`).
+  *   - [[writeStats]]/[[refreshStats]] — per-file `min/max/nullCount`
+  *     for a declared column set, from the parquet FOOTERS (row-group
+  *     statistics merged per file): METADATA-ONLY, no data pages are
+  *     read. One executor pass opens each new footer once for its row
+  *     count, bounds and Spark schema, inside the job that writes the
+  *     frame; a refresh opens only the footers the committed frame has
+  *     never seen. One commit ([[commitStats]]) lands the frame and
+  *     the data schema marker-last under `dir/_filestats` (underscore
+  *     prefix: invisible to Spark data reads of `dir`), and
+  *     [[statsFrame]] reads it back with its schema pinned from the
+  *     stats file's footer, so no read or refresh starts a schema job.
   *   - [[SkipDataSource]] — the read: `spark.read.format(
   *     "graft.io.SkipDataSource").load(dir)` pushes the query's
   *     literal filters (and Spark's runtime join filters) into a scan
@@ -49,13 +55,17 @@ import org.apache.spark.util.SerializableConfiguration
   *     writer), a column whose footer carries no usable statistics, or
   *     a null min/max all KEEP the file. Stats can only remove work,
   *     never rows.
-  *   - [[writeSorted]] — the layout half: range-repartition + sort on
-  *     the skipping columns before the write, so per-file value
+  *   - [[writeSorted]] / [[zOrderLayout]] — the layout half:
+  *     range-repartition + sort on the skipping columns (or on their
+  *     interleaved z value) before the write, so per-file value
   *     ranges are near-disjoint and a point/range predicate keeps
   *     O(matching) files instead of all of them. The same layout
   *     makes parquet's own ROW-GROUP stats selective inside each
   *     surviving file — Spark's scan skips row groups for free once
-  *     the data is sorted (the ZORDER-lite single-dimension form).
+  *     the data is sorted.
+  *
+  * Which files are data is [[FooterSchema.dataFiles]]'s rule, here as
+  * everywhere in graft's stores.
   *
   * Scale shape at 100 TB: the stats frame is one row per data file
   * (a 100 TB table at 256 MB files ≈ 400k rows — megabytes), read
@@ -77,30 +87,14 @@ object DataSkipping {
   private val StatsMarker = "_STATS_OK"
   private val SchemaFile = "_DATA_SCHEMA.json"
 
-  private def isDataFile(p: Path): Boolean = {
-    val n = p.getName
-    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-  }
-
-  /** Recursive data-file listing under `dir` (skips `_`/`.` names at
-    * every level, so `_filestats` and markers are invisible).
-    * Plain `listStatus` recursion — `fs.listFiles(recursive)` fetches
-    * BLOCK LOCATIONS per file, which on the local fs cost ~4 ms/file
-    * and dominated the whole skip decision (profiled: 0.55 s of a
-    * 0.9 s pruned read at 128 files); the prune needs names only. */
+  /** The data files under `dir` by path, at every level a partitioned
+    * layout adds ([[FooterSchema.dataFilesUnder]]): `_filestats` and
+    * the markers are hidden names, so they never list. */
   def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = Seq.newBuilder[String]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
-      val n = s.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) {
-        if (s.isDirectory) walk(s.getPath)
-        else if (isDataFile(s.getPath)) out += s.getPath.toString
-      }
-    }
-    walk(root)
-    out.result().sorted
+    FooterSchema.dataFilesUnder(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+      .map(_.getPath.toString)
   }
 
   private def statsColType(dt: DataType): Boolean = dt match {
@@ -110,13 +104,15 @@ object DataSkipping {
     case _ => false
   }
 
-  /** Per-file stats row: (min, max, nulls) per tracked column, from
-    * the file's row-group footers. None min/max = no usable stats
+  /** One file's footer, opened once: its row count, (min, max, nulls)
+    * per tracked column merged over its row groups, and the footer's
+    * file metadata (its schema). None min/max = no usable stats
     * (absent, INT96, all-null, or unsupported physical type) — the
     * pruner keeps such files. */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
                           file: String, cols: Seq[(String, DataType)])
-  : (Long, Map[String, (Option[Any], Option[Any], Option[Long])]) = {
+  : (Long, Map[String, (Option[Any], Option[Any], Option[Long])],
+     FileMetaData) = {
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(file), conf))
     try {
@@ -162,7 +158,7 @@ object DataSkipping {
         if (!ok) name -> (None, None, None)
         else name -> (mn, mx, nulls)
       }.toMap
-      (rows, byCol)
+      (rows, byCol, reader.getFooter.getFileMetaData)
     } finally reader.close()
   }
 
@@ -271,32 +267,26 @@ object DataSkipping {
     case _ => None // INT96 / MILLIS / NANOS land here: no bound, keep
   }
 
-  /** The stats frame for `dir`'s data files: one row per file —
-    * `file, rows` + per tracked column `min_<c>, max_<c>, nulls_<c>`
-    * (min/max in the column's own type). Footer-only: executors read
-    * parquet FOOTERS of the listed files, never data pages. Columns
-    * must exist in the data schema with a supported flat type. */
-  def collectStats(spark: SparkSession, dir: String,
-                   cols: Seq[String]): DataFrame = {
+  /** `cols` typed from `schema`; each must be a supported flat type. */
+  private def statsTypes(schema: StructType,
+                         cols: Seq[String]): Seq[(String, DataType)] = {
     require(cols.nonEmpty, "declare at least one stats column")
-    val dataSchema = FooterSchema.schema(spark, dir)
-    val typed = cols.map { c =>
-      val f = dataSchema.find(_.name == c).getOrElse(
+    cols.map { c =>
+      val f = schema.find(_.name == c).getOrElse(
         sys.error(s"stats column '$c' not in data schema " +
-          dataSchema.fieldNames.mkString("[", ", ", "]")))
+          schema.fieldNames.mkString("[", ", ", "]")))
       require(statsColType(f.dataType),
         s"stats column '$c' has unsupported type ${f.dataType} — " +
           "declare a double/long/string/date surface column instead")
       c -> f.dataType
     }
-    val files = listDataFiles(spark, dir)
-    require(files.nonEmpty, s"no data files under $dir")
-    val confB = spark.sparkContext.broadcast(
-      new SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    val slices = math.min(files.size,
-      spark.sparkContext.defaultParallelism).max(1)
-    val statsSchema = StructType(
+  }
+
+  /** The stats frame's layout: one row per file — `file, rows` + per
+    * tracked column `min_<c>, max_<c>, nulls_<c>` (min/max in the
+    * column's own type). */
+  private def statsSchema(typed: Seq[(String, DataType)]): StructType =
+    StructType(
       StructField("file", StringType, nullable = false) +:
         StructField("rows", LongType, nullable = false) +:
         typed.flatMap { case (c, dt) => Seq(
@@ -304,64 +294,87 @@ object DataSkipping {
           StructField(s"max_$c", dt, nullable = true),
           StructField(s"nulls_$c", LongType, nullable = true))
         })
+
+  /** The tracked columns of a stats frame's schema, typed. */
+  private[io] def tracked(stats: StructType): Seq[(String, DataType)] =
+    stats.fields.toSeq.collect { case f if f.name.startsWith("min_") =>
+      f.name.stripPrefix("min_") -> f.dataType }
+
+  /** The one stats commit: `kept` rows of a committed frame plus a row
+    * per `fresh` file, written under `dir/_filestats` with the data
+    * schema and committed marker-last ([[MarkerCommit]]: a crash
+    * leaves a marker-less frame that readers ignore, so the store
+    * degrades to unpruned reads, never to wrong ones). The fresh rows
+    * come from one executor pass, inside the write's job, that opens
+    * each footer once for its row count, `typed` bounds and Spark
+    * schema. `dataSchema` makes the recorded data schema from those
+    * schemas (by file; None where one does not convert); a throw there
+    * commits nothing. A fresh file is recorded by its listed path, or,
+    * when `dir` is about to be renamed to `recordUnder`, by the path
+    * the rename gives it — else no lookup would hit after the move. */
+  private def commitStats(spark: SparkSession, dir: String,
+                          typed: Seq[(String, DataType)], fresh: Seq[String],
+                          kept: Seq[Row],
+                          dataSchema: Seq[(String, Option[StructType])] => StructType,
+                          recordUnder: Option[String] = None): Unit = {
+    val sc = spark.sparkContext
+    val recorded = recordUnder.fold(fresh.map(f => f -> f)) { to =>
+      val fs = new Path(dir).getFileSystem(sc.hadoopConfiguration)
+      val from = fs.makeQualified(new Path(dir)).toString
+      val dst = fs.makeQualified(new Path(to)).toString
+      fresh.map(f => f -> (dst + f.stripPrefix(from)))
+    }
+    val schemas = sc.collectionAccumulator[(String, Option[StructType])]
+    val confB = sc.broadcast(
+      new SerializableConfiguration(sc.hadoopConfiguration))
+    val flags = FooterSchema.flags(spark)
     val typedLocal = typed // avoid closing over the outer frame
-    val rows = spark.sparkContext.parallelize(files, slices).map { f =>
-      val (n, byCol) = footerStats(confB.value.value, f, typedLocal)
-      Row.fromSeq(
-        f +: (n: java.lang.Long) +: typedLocal.flatMap { case (c, _) =>
-          val (mn, mx, nulls) = byCol(c)
-          Seq(mn.orNull, mx.orNull,
-            nulls.map(Long.box).orNull)
+    val pass = sc.parallelize(recorded,
+      math.min(recorded.size, sc.defaultParallelism).max(1)).map {
+      case (f, as) =>
+        val (n, byCol, meta) = footerStats(confB.value.value, f, typedLocal)
+        schemas.add(as -> Try(FooterSchema.sparkSchema(meta, flags)).toOption)
+        Row.fromSeq(as +: (n: java.lang.Long) +: typedLocal.flatMap {
+          case (c, _) =>
+            val (mn, mx, nulls) = byCol(c)
+            Seq(mn.orNull, mx.orNull, nulls.map(Long.box).orNull)
         })
     }
-    spark.createDataFrame(rows, statsSchema)
+    val frame = spark.createDataFrame(
+      sc.parallelize(kept, 1).union(pass), statsSchema(typed))
+    val out = s"$dir/$StatsDir"
+    val tmp = s"$out.tmp"
+    MarkerCommit.deleteRecursively(tmp)
+    try {
+      StoreWriter(frame.coalesce(1)).mode(SaveMode.Overwrite).parquet(tmp)
+      MarkerCommit.touch(s"$tmp/$SchemaFile", dataSchema(
+        schemas.value.asScala.toSeq.distinct.sortBy(_._1)).json)
+    } catch { case NonFatal(e) =>
+      MarkerCommit.deleteRecursively(tmp)
+      throw e
+    }
+    MarkerCommit.commitSwap(out, tmp, StatsMarker)
   }
 
-  /** Collect and COMMIT the stats frame under `dir/_filestats`,
-    * marker-last ([[MarkerCommit]] discipline): a crash mid-write
-    * leaves a marker-less frame that readers ignore — the store
-    * degrades to unpruned reads, never to wrong ones. Call after the
+  /** Collect and commit the stats frame of every data file under
+    * `dir` for `cols`, with the schema `dir` reads with. Call after the
     * data commit; stats are derived metadata, so losing them is a
     * performance event, not a correctness one. */
   def writeStats(spark: SparkSession, dir: String,
                  cols: Seq[String]): Unit =
-    commitStatsFrame(spark, dir, collectStats(spark, dir, cols))
+    writeStatsRelocated(spark, dir, dir, cols)
 
   /** [[writeStats]] for a directory that is ABOUT TO MOVE — the
     * version-commit path: the data sits in a `.building` temp that an
-    * atomic rename will turn into `finalDir`, and the stats must ride
-    * that rename. Footers are read under `dataDir`, but the frame's
-    * `file` column records the paths the files WILL have after the
-    * move (rename preserves names, so it is a root-prefix swap) —
-    * otherwise every post-move lookup would miss and the structural
-    * keep-unknown conservatism would silently disable pruning
-    * forever. Paths are compared fully qualified (the form
-    * `listStatus` returns and [[SkipDataSource]] looks up). */
+    * atomic rename will turn into `finalDir`, and the stats ride that
+    * rename, recording each file by its path under `finalDir`. */
   def writeStatsRelocated(spark: SparkSession, dataDir: String,
                           finalDir: String, cols: Seq[String]): Unit = {
-    val fs = new Path(dataDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val qSrc = fs.makeQualified(new Path(dataDir)).toString
-    val qDst = fs.makeQualified(new Path(finalDir)).toString
-    val relocated = collectStats(spark, dataDir, cols)
-      .withColumn("file", concat(lit(qDst),
-        col("file").substr(lit(qSrc.length + 1), lit(Int.MaxValue))))
-    commitStatsFrame(spark, dataDir, relocated)
-  }
-
-  private def commitStatsFrame(spark: SparkSession, dir: String,
-                               stats: DataFrame): Unit = {
-    val out = s"$dir/$StatsDir"
-    val tmp = s"$out.tmp"
-    MarkerCommit.deleteRecursively(tmp)
-    StoreWriter(stats.coalesce(1)).mode(SaveMode.Overwrite).parquet(tmp)
-    // the data schema rides the stats commit (the Delta-log move):
-    // pruned reads then never footer-infer — with an explicit file
-    // list every root would otherwise pay discovery/inference setup,
-    // which measurably rivaled the prune's win on small tables
-    MarkerCommit.touch(s"$tmp/$SchemaFile",
-      FooterSchema.schema(spark, dir).json)
-    MarkerCommit.commitSwap(out, tmp, StatsMarker)
+    val schema = FooterSchema.schema(spark, dataDir)
+    val files = listDataFiles(spark, dataDir)
+    require(files.nonEmpty, s"no data files under $dataDir")
+    commitStats(spark, dataDir, statsTypes(schema, cols), files, Nil,
+      _ => schema, Some(finalDir).filter(_ != dataDir))
   }
 
   /** Incremental stats upkeep after appends — the daily-ingest path:
@@ -388,91 +401,48 @@ object DataSkipping {
         val known = knownRows.map(_.getString(fileIdx)).toSet
         val fresh = all.filterNot(known)
         if (fresh.isEmpty && knownRows.length == old.length) return 0
-        val cols = sf.schema.fieldNames.toSeq
-          .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        // SCHEMA-EVOLUTION enforcement (the committedSchema contract
-        // was previously advisory): union the committed schema with
-        // the FRESH files' footer schemas — an appended file with a
-        // NEW column would otherwise read as absent forever through
-        // the stale committed schema. Only the fresh footers are
-        // opened (the O(new files) contract; the committed schema
-        // stands in for every already-seen file). A TYPE change in
-        // ANY shared column is rejected loudly — for a tracked
-        // column the kept stats rows hold the old type (mixing is
-        // corruption), and for a data column a silent type fork
-        // corrupts every unioning reader.
-        val baseSchema = committedSchema(spark, dir)
+        val typed = tracked(sf.schema)
+        val base = committedSchema(spark, dir)
           .getOrElse(FooterSchema.schema(spark, dir))
-        val mergedSchema =
-          if (fresh.isEmpty) baseSchema
-          else {
-            val freshSchema =
-              try spark.read.option("mergeSchema", "true")
-                .parquet(fresh: _*).schema
-              catch {
-                case e: Exception => throw new IllegalArgumentException(
-                  s"refreshStats: appended footer schemas under $dir " +
-                    "do not merge (a column changed type between " +
-                    s"appends?): ${e.getMessage}", e)
-              }
-            val baseT = baseSchema.fields.map(f => f.name -> f.dataType)
-              .toMap
-            freshSchema.fields.foreach { f =>
-              baseT.get(f.name).foreach(t => require(t == f.dataType,
-                s"refreshStats: column '${f.name}' changed type " +
-                  s"($t -> ${f.dataType}) in an appended file — " +
-                  "recommit stats with writeStats after a deliberate " +
-                  "schema migration"))
-            }
-            StructType(baseSchema.fields ++
-              freshSchema.fields.filterNot(f =>
-                baseT.contains(f.name)))
-          }
-        cols.foreach { c =>
-          val committed = sf.schema(s"min_$c").dataType
-          val now = mergedSchema.find(_.name == c).map(_.dataType)
-          require(now.contains(committed),
-            s"refreshStats: tracked column '$c' changed type " +
-              s"($committed -> ${now.fold("absent")(_.toString)}) — " +
-              "recommit stats with writeStats after a deliberate " +
-              "schema migration")
-        }
-        val freshFrame =
-          if (fresh.isEmpty) None
-          else {
-            val dataSchema = mergedSchema
-            val typed = cols.map(c => c -> dataSchema(c).dataType)
-            val confB = spark.sparkContext.broadcast(
-              new SerializableConfiguration(
-                spark.sparkContext.hadoopConfiguration))
-            val slices = math.min(fresh.size,
-              spark.sparkContext.defaultParallelism).max(1)
-            val rows = spark.sparkContext.parallelize(fresh, slices)
-              .map { f =>
-                val (n, byCol) = footerStats(confB.value.value, f, typed)
-                Row.fromSeq(f +: (n: java.lang.Long) +:
-                  typed.flatMap { case (c, _) =>
-                    val (mn, mx, nulls) = byCol(c)
-                    Seq(mn.orNull, mx.orNull,
-                      nulls.map(Long.box).orNull)
-                  })
-              }
-            Some(spark.createDataFrame(rows, sf.schema))
-          }
-        val keptOld = spark.createDataFrame(
-          spark.sparkContext.parallelize(knownRows.toSeq, 1), sf.schema)
-        val merged = freshFrame.fold(keptOld)(keptOld.unionByName(_))
-        val out = s"$dir/$StatsDir"
-        val tmp = s"$out.tmp"
-        MarkerCommit.deleteRecursively(tmp)
-        StoreWriter(merged.coalesce(1)).mode(SaveMode.Overwrite).parquet(tmp)
-        // the MERGED schema rides the recommit — an evolved append's
-        // new column becomes visible to committedSchema readers here,
-        // not silently dropped by the stale pre-append schema
-        MarkerCommit.touch(s"$tmp/$SchemaFile", mergedSchema.json)
-        MarkerCommit.commitSwap(out, tmp, StatsMarker)
+        commitStats(spark, dir, typed, fresh, knownRows.toSeq,
+          evolved(dir, base, typed, _))
         fresh.size
     }
+  }
+
+  /** SCHEMA-EVOLUTION enforcement for [[refreshStats]]: the committed
+    * schema `base` (standing in for every already-seen file) unioned
+    * with the FRESH files' footer schemas, so an appended file's NEW
+    * column becomes readable. A TYPE change in ANY shared column is
+    * rejected loudly — for a tracked column the kept stats rows hold
+    * the old type, and for a data column a silent type fork corrupts
+    * every unioning reader. */
+  private def evolved(dir: String, base: StructType,
+                      typed: Seq[(String, DataType)],
+                      fresh: Seq[(String, Option[StructType])]): StructType = {
+    val merged = fresh.foldLeft(base) { case (acc, (file, schema)) =>
+      val s = schema.getOrElse(throw new IllegalArgumentException(
+        s"refreshStats: the footer schema of $file does not convert " +
+          "to a Spark schema"))
+      val accT = acc.fields.map(f => f.name -> f.dataType).toMap
+      val fields = FooterSchema.nullable(s).asInstanceOf[StructType].fields
+      fields.foreach(f => accT.get(f.name).foreach(t => require(
+        t == f.dataType,
+        s"refreshStats: column '${f.name}' changed type " +
+          s"($t -> ${f.dataType}) in appended file $file under $dir — " +
+          "recommit stats with writeStats after a deliberate schema " +
+          "migration")))
+      StructType(acc.fields ++ fields.filterNot(f => accT.contains(f.name)))
+    }
+    typed.foreach { case (c, committed) =>
+      val now = merged.find(_.name == c).map(_.dataType)
+      require(now.contains(committed),
+        s"refreshStats: tracked column '$c' changed type " +
+          s"($committed -> ${now.fold("absent")(_.toString)}) — " +
+          "recommit stats with writeStats after a deliberate " +
+          "schema migration")
+    }
+    merged
   }
 
   /** The data schema recorded at stats-commit time, if present.
@@ -480,23 +450,10 @@ object DataSkipping {
     * they don't CHANGE columns (standard parquet missing-column =
     * null semantics); schema evolution should recommit stats. */
   def committedSchema(spark: SparkSession,
-                      dir: String): Option[StructType] = {
-    val p = s"$dir/$StatsDir/$SchemaFile"
-    if (!MarkerCommit.markerExists(s"$dir/$StatsDir", StatsMarker) ||
-        !MarkerCommit.fileExists(p)) None
-    else {
-      val path = new Path(p)
-      val in = path.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).open(path)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bytes, 65536, false)
-        Some(DataType.fromJson(
-          new String(bytes.toByteArray, StandardCharsets.UTF_8))
-          .asInstanceOf[StructType])
-      } finally in.close()
-    }
-  }
+                      dir: String): Option[StructType] =
+    if (!statsCommitted(spark, dir)) None
+    else MarkerCommit.read(s"$dir/$StatsDir/$SchemaFile")
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Whether `dir` carries a committed stats frame — the cheap
     * (one-marker) bootstrap gate; the marker lands LAST in
@@ -505,17 +462,22 @@ object DataSkipping {
   def statsCommitted(spark: SparkSession, dir: String): Boolean =
     MarkerCommit.markerExists(s"$dir/$StatsDir", StatsMarker)
 
-  /** The committed stats frame, if one exists (marker-gated). Read
-    * through its data files: Spark ignores a read root whose leaf
-    * name starts with `_` and logs a warning for every such read. */
+  /** The committed stats frame, if one exists (marker-gated), with its
+    * schema pinned from the stats file's footer ([[FooterSchema]]), so
+    * building it starts no job. Read through its data files: Spark
+    * ignores a read root whose leaf name starts with `_` and logs a
+    * warning for every such read. */
   def statsFrame(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val out = new Path(s"$dir/$StatsDir")
-    if (!MarkerCommit.markerExists(out.toString, StatsMarker)) None
+    val out = s"$dir/$StatsDir"
+    if (!MarkerCommit.markerExists(out, StatsMarker)) None
     else {
-      val files = FooterSchema.dataFiles(out.getFileSystem(
-        spark.sparkContext.hadoopConfiguration).listStatus(out).toSeq)
+      val p = new Path(out)
+      val listing = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).toSeq
+      val files = FooterSchema.dataFiles(listing)
       if (files.isEmpty) None
-      else Some(spark.read.parquet(files.map(_.getPath.toString): _*))
+      else Some(spark.read.schema(FooterSchema.schema(spark, out, listing))
+        .parquet(files.map(_.getPath.toString): _*))
     }
   }
 
@@ -673,8 +635,8 @@ object DataSkipping {
     * monotone form to 16 bits against its OWN min/max (computed in
     * one pass over `df` — a write-time cost). 2 columns → 32-bit z,
     * 3–4 columns → 48/64-bit. */
-  private[graft] def zOrderValue(df: DataFrame,
-                                 cols: Seq[(String, DataType)]): Column = {
+  private def zOrderValue(df: DataFrame,
+                          cols: Seq[(String, DataType)]): Column = {
     require(cols.size >= 2 && cols.size <= 4,
       "z-order wants 2-4 columns; one column is writeSorted's job")
     val mono = cols.map { case (c, dt) => c -> monotoneDouble(c, dt) }
@@ -699,24 +661,34 @@ object DataSkipping {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Z-ordered write + committed stats: range-partition and sort on
-    * the interleaved key, drop it, commit stats on the clustered
-    * columns (plus `extraStatsCols`). Files tile k-space, so
-    * predicates on ANY clustered column prune — the multi-column
-    * counterpart of [[writeSortedWithStats]]. */
-  def writeZOrderedWithStats(df: DataFrame, dir: String,
-                             zCols: Seq[String], numFiles: Int,
-                             extraStatsCols: Seq[String] = Nil): Unit = {
-    val schema = df.schema
+  /** `df` laid out in `numFiles` partitions by the interleaved z value
+    * of `zCols` ([[rangeLayout]] on it, then dropped): each partition
+    * a near-rectangular tile of k-space, data columns untouched. The
+    * one z-order layout, for [[writeZOrderedWithStats]] and
+    * [[graft.etl.VersionStore.optimizeSorted]]. */
+  private[graft] def zOrderLayout(df: DataFrame, zCols: Seq[String],
+                                  numFiles: Int): DataFrame = {
     val typed = zCols.map { c =>
-      val f = schema.find(_.name == c).getOrElse(
+      val f = df.schema.find(_.name == c).getOrElse(
         sys.error(s"z-order column '$c' not in schema"))
       c -> f.dataType
     }
-    require(!df.columns.contains("__z"), "column name __z is reserved")
-    val z = zOrderValue(df, typed)
-    StoreWriter(rangeLayout(df.withColumn("__z", z), Seq("__z"), numFiles)
-      .drop("__z")).mode(SaveMode.Overwrite).parquet(dir)
+    require(!df.columns.contains(ZCol), s"column name $ZCol is reserved")
+    rangeLayout(df.withColumn(ZCol, zOrderValue(df, typed)), Seq(ZCol),
+      numFiles).drop(ZCol)
+  }
+
+  private val ZCol = "__z"
+
+  /** Z-ordered write + committed stats: [[zOrderLayout]], then stats
+    * on the clustered columns (plus `extraStatsCols`). Files tile
+    * k-space, so predicates on ANY clustered column prune — the
+    * multi-column counterpart of [[writeSortedWithStats]]. */
+  def writeZOrderedWithStats(df: DataFrame, dir: String,
+                             zCols: Seq[String], numFiles: Int,
+                             extraStatsCols: Seq[String] = Nil): Unit = {
+    StoreWriter(zOrderLayout(df, zCols, numFiles))
+      .mode(SaveMode.Overwrite).parquet(dir)
     writeStats(df.sparkSession, dir, (zCols ++ extraStatsCols).distinct)
   }
 }

@@ -6,6 +6,7 @@ import java.nio.file.attribute.BasicFileAttributes
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 
 import org.apache.spark.sql.SparkSession
 
@@ -34,8 +35,8 @@ import org.apache.spark.sql.SparkSession
   * on the driver-local disk while the frames went to HDFS/ABFS would
   * leave every other reader host an uncommitted artifact forever.
   *
-  * Two implementations of the four operations (exists, move, touch,
-  * delete), chosen by the resolved scheme:
+  * Two implementations of the six operations (exists, move, touch,
+  * read, mkdirs, delete), chosen by the resolved scheme:
   *   - `file://` goes through java.nio. Hadoop's local filesystem
   *     starts a `chmod` process on every create and a `readlink`
   *     process on every rename when libhadoop is absent (about 25 ms
@@ -116,6 +117,30 @@ private[graft] object MarkerCommit {
           Options.CreateOpts.createParent())
         try out.write(bytes)
         finally out.close()
+    }
+  }
+
+  /** The content of the small file at `path`; None if it is absent. */
+  def read(path: String): Option[String] = {
+    val p = new Path(path)
+    try Some(new String(local(p) match {
+      case Some(l) => Files.readAllBytes(l)
+      case None =>
+        val in = ctx(p).open(p)
+        try in.readAllBytes() finally in.close()
+    }, StandardCharsets.UTF_8))
+    catch {
+      case _: java.io.FileNotFoundException |
+           _: java.nio.file.NoSuchFileException => None
+    }
+  }
+
+  /** Create `dir` and any missing parent; a no-op if it exists. */
+  def mkdirs(dir: String): Unit = {
+    val p = new Path(dir)
+    local(p) match {
+      case Some(l) => Files.createDirectories(l)
+      case None => ctx(p).mkdir(p, FsPermission.getDirDefault, true)
     }
   }
 

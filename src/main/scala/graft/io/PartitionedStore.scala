@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Directory-partitioned store maintenance — the sibling of
@@ -49,17 +49,30 @@ object PartitionedStore {
     * is the canonical case — writes a SUCCESSOR directory and swaps
     * readers over, [[graft.etl.VersionStore]]'s discipline; that also
     * keeps in-flight readers of the old layout isolated during a
-    * corpus-sized rewrite. ([[compactIfFragmented]] is exempt: its
-    * dynamic partition overwrite stages output in `_temporary` and
-    * the slice is read fully into the shuffle before any commit
-    * replaces a directory.) */
+    * corpus-sized rewrite. ([[overwritePartitions]] is exempt: dynamic
+    * partition overwrite stages output in a staging directory and the
+    * slice is read fully into the shuffle before any commit replaces a
+    * directory.) */
   def write(df: DataFrame, path: String, partCol: String,
             mode: SaveMode = SaveMode.Overwrite,
-            writeParallelism: Int = 1): Unit = {
+            writeParallelism: Int = 1): Unit =
+    writer(df, partCol, writeParallelism).mode(mode).parquet(path)
+
+  /** [[write]] replacing only the partition directories `df` holds:
+    * dynamic partition overwrite as an option of this write alone, so
+    * no other overwrite planned meanwhile gets dynamic semantics. */
+  private[graft] def overwritePartitions(df: DataFrame, path: String,
+                                         partCol: String,
+                                         writeParallelism: Int): Unit =
+    writer(df, partCol, writeParallelism).mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
+
+  private def writer(df: DataFrame, partCol: String,
+                     writeParallelism: Int): DataFrameWriter[Row] = {
     require(writeParallelism >= 1, "writeParallelism must be >= 1")
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     StoreWriter(df.repartition(parts * writeParallelism, col(partCol)))
-      .mode(mode).partitionBy(partCol).parquet(path)
+      .partitionBy(partCol)
   }
 
   /** Fold a batch into an existing store: value-aligned append —
@@ -82,10 +95,8 @@ object PartitionedStore {
     fs.listStatus(root).iterator
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .map { d =>
-        val n = fs.listStatus(d.getPath)
-          .count(f => f.isFile && !f.getPath.getName.startsWith("_")
-            && !f.getPath.getName.startsWith("."))
-        d.getPath.getName.stripPrefix(prefix) -> n
+        d.getPath.getName.stripPrefix(prefix) ->
+          FooterSchema.dataFiles(fs.listStatus(d.getPath).toSeq).size
       }.toMap
   }
 
@@ -106,17 +117,11 @@ object PartitionedStore {
       .filter(_._2 > maxFragments).keys.toSeq.sorted
     if (frag.isEmpty) Seq.empty
     else {
-      val prevMode = spark.conf.getOption(
-        "spark.sql.sources.partitionOverwriteMode").getOrElse("STATIC")
-      try {
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        // read through the partition column's parquet-inferred type:
-        // the isin prunes statically, so only fragmented dirs are read
-        val slice = spark.read.parquet(path)
-          .where(col(partCol).cast("string").isin(frag: _*))
-        write(slice, path, partCol, SaveMode.Overwrite, writeParallelism)
-      } finally
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+      // read through the partition column's parquet-inferred type:
+      // the isin prunes statically, so only fragmented dirs are read
+      overwritePartitions(spark.read.parquet(path)
+        .where(col(partCol).cast("string").isin(frag: _*)),
+        path, partCol, writeParallelism)
       frag
     }
   }

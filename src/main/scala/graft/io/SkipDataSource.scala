@@ -87,10 +87,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * in-memory pass with an O(log |keys|) probe per file; no data scan.
   *
   * Usage: `spark.read.format("graft.io.SkipDataSource").load(dir)`
-  * over a [[DataSkipping.writeSortedWithStats]] /
-  * `writeZOrderedWithStats` store (flat or `partitionBy` hive layout
-  * + root-committed stats). The measured-suppression witness RIDES
-  * THE SCAN INSTANCE: read it with [[SkipScan.prunesIn]]. */
+  * over a store whose stats [[DataSkipping.writeStats]] (or
+  * `writeSortedWithStats`, `writeZOrderedWithStats`,
+  * `VersionStore.optimizeSorted`) committed and
+  * [[DataSkipping.refreshStats]] keeps current (flat or `partitionBy`
+  * hive layout + root-committed stats). A `load()` takes its schema
+  * from the committed data schema and collects the stats frame once:
+  * one job, no schema inference. The measured-suppression witness
+  * RIDES THE SCAN INSTANCE: read it with [[SkipScan.prunesIn]]. */
 final class SkipDataSource extends TableProvider {
 
   private def dirOf(options: CaseInsensitiveStringMap): String = {
@@ -104,7 +108,7 @@ final class SkipDataSource extends TableProvider {
     val spark = SparkSession.active
     val dir = dirOf(options)
     DataSkipping.committedSchema(spark, dir)
-      .getOrElse(spark.read.parquet(dir).schema)
+      .getOrElse(FooterSchema.schema(spark, dir))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -146,12 +150,14 @@ private[io] final class SkipSnapshot(
   val rootPaths: Seq[Path] = listing.rootPaths
   val partitionSpec: PartitionSpec = listing.partitionSpec()
 
-  /** The listing, partition values attached; only parquet data files
-    * participate (markers and sidecars are already hidden-path
-    * filtered by the index, this is belt + braces). */
+  /** The listing, partition values attached; only data files
+    * ([[FooterSchema.dataFiles]]) participate, in the index's order. */
   val dirs: Seq[PartitionDirectory] =
-    listing.listFiles(Nil, Nil).map(pd => pd.copy(files =
-      pd.files.filter(_.getPath.getName.endsWith(".parquet"))))
+    listing.listFiles(Nil, Nil).map { pd =>
+      val data = FooterSchema.dataFiles(pd.files.map(_.fileStatus))
+        .map(_.getPath).toSet
+      pd.copy(files = pd.files.filter(f => data(f.getPath)))
+    }
 
   val files: Seq[FileStatus] = dirs.flatMap(_.files.map(_.fileStatus))
 
@@ -435,23 +441,16 @@ object SkipScan {
     DataSkipping.statsFrame(spark, dir) match {
       case None => (Map.empty, Map.empty)
       case Some(sf) =>
-        val cols = sf.schema.fieldNames.toSeq
-          .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        val types = cols.map(c =>
-          c -> sf.schema(s"min_$c").dataType).toMap
-        val fileIdx = sf.schema.fieldIndex("file")
-        val rowsIdx = sf.schema.fieldIndex("rows")
+        val typed = DataSkipping.tracked(sf.schema)
         val stats = sf.collect().map { r =>
-          val byCol = cols.map { c =>
-            val mn = r.get(sf.schema.fieldIndex(s"min_$c"))
-            val mx = r.get(sf.schema.fieldIndex(s"max_$c"))
-            val nl = r.get(sf.schema.fieldIndex(s"nulls_$c"))
-            c -> (Option(mn), Option(mx),
-              Option(nl).map(_.asInstanceOf[Long]))
+          val byCol = typed.map { case (c, _) =>
+            c -> (Option(r.getAs[Any](s"min_$c")),
+              Option(r.getAs[Any](s"max_$c")),
+              Option(r.getAs[Any](s"nulls_$c")).map(_.asInstanceOf[Long]))
           }.toMap
-          r.getString(fileIdx) -> FileStats(r.getLong(rowsIdx), byCol)
+          r.getAs[String]("file") -> FileStats(r.getAs[Long]("rows"), byCol)
         }.toMap
-        (stats, types)
+        (stats, typed.toMap)
     }
 
   /** The driver-side keep-verdict algebra, run at plan time (and at

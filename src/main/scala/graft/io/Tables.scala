@@ -98,15 +98,10 @@ final case class Tables(spark: SparkSession, dir: String) {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = p.getFileSystem(sc.hadoopConfiguration)
+    // a file lists as itself
     val files =
-      try {
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory)
-          fs.listStatus(p).toSeq.filter(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-        else Seq(st)
-      } catch { case _: java.io.FileNotFoundException => Seq.empty }
+      try FooterSchema.dataFiles(fs.listStatus(p).toSeq)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
     val est = files.map(f =>
       math.max(1L, (f.getLen + maxSplit - 1) / maxSplit)).sum
     // Width is sized to WORK, not to cores (r18 verdict #4):

@@ -125,4 +125,15 @@ class CommitCostSpec extends GraftSuite {
       files.size / 2 && files.size >= 8, files)
     files.foreach(f => assert(modeOf(f) == mode(FsPermission.getFileDefault), f))
   }
+
+  test("a first commit creates the store root without a chmod process") {
+    val root = Files.createTempDirectory("nofork_root").toString
+    val frame = (1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    NoShellLocalFileSystem.during(spark) {
+      assert(VersionStore.write(frame, s"$root/store") == 0L)
+      assert(VersionStore.tryCommit(frame, s"$root/occ", -1L) == Right(0L))
+    }
+    assert(rows(VersionStore.latest(spark, s"$root/store")) == rows(frame))
+    assert(rows(VersionStore.latest(spark, s"$root/occ")) == rows(frame))
+  }
 }

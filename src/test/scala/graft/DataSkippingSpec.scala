@@ -1004,10 +1004,10 @@ class DataSkippingSpec extends GraftSuite {
     val root = tmpDir("snap_vs")
     VersionStore.write(corpus.repartition(8), root)
     VersionStore.optimizeSorted(spark, root, Seq("id"), minFiles = 8)
-    // a stats load reads the committed frame through
-    // DataSkipping.statsFrame, whose parquet read runs one job there
+    // a stats load collects the committed frame (SkipScan.loadStats),
+    // one job and one stage; building the frame runs none
     def statsLoads(c: Meter.Charge): Int = c.stages.values
-      .count(_.name.startsWith("parquet at DataSkipping.scala"))
+      .count(_.name.startsWith("collect at SkipDataSource.scala"))
     val sc = spark.sparkContext
     val (df, atLoad) = Meter.measure(sc, "snapshot-load")(
       VersionStore.latestIndexed(spark, root)
@@ -1035,6 +1035,32 @@ class DataSkippingSpec extends GraftSuite {
     assert(pruneOf(held, dir).total == 8)
     // a new load() sees the appended file
     assert(skipRead(dir).where(col("id") >= 0).count() == 10100)
+  }
+
+  test("stats reads and refreshes start no schema job") {
+    import graft.obs.Meter
+    val dir = tmpDir("stats_jobs")
+    writeSortedWithStats(corpus, dir, Seq("id"), numFiles = 8,
+      statsCols = Seq("id", "s"))
+    val sc = spark.sparkContext
+    def jobs(name: String)(body: => Unit): Int =
+      Meter.measure(sc, s"stats-jobs-$name")(body)._2.jobs
+    // a load() collects the committed frame once: its schema comes
+    // from the stats file's footer
+    assert(jobs("statsFrame")(statsFrame(spark, dir).get) == 0)
+    assert(jobs("load")(skipRead(dir)) == 1)
+    // a one-file append: the committed frame's collect, then the one
+    // write whose task opens the new footer once
+    corpus.where(col("id") < 10).coalesce(1)
+      .write.mode(SaveMode.Append).parquet(dir)
+    assert(jobs("refresh")(
+      assert(refreshStats(spark, dir, Seq("id")) == 1)) == 2)
+    assert(jobs("no-change")(
+      assert(refreshStats(spark, dir, Seq("id")) == 0)) == 1)
+    // the refreshed frame covers the appended file and prunes on it
+    assert(statsFrame(spark, dir).get.count() == 9)
+    checkPrunes(dir,
+      Prunes(col("id").between(9000, 9100), (k, t) => t == 9 && k == 1, 101))
   }
 
   test("stats-frame reads log no ignored-path warning") {

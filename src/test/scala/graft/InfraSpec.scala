@@ -261,6 +261,18 @@ class InfraSpec extends GraftSuite {
     assert(spark.read.parquet(out).count() == 1000)
   }
 
+  test("compactTo rounds a part-file's worth of input up to one more file") {
+    val out = Files.createTempDirectory("graft_compact_ceil")
+      .resolve("t").toString
+    // 4.5 target-files of input: 5 files, as VersionStore.optimize sizes
+    Compaction.compactTo(spark.range(1000).toDF("id"), out,
+      targetFileMB = 1, approxInputBytes = 9L * 512 * 1024)
+    val files = new java.io.File(out).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files == 5)
+    assert(spark.read.parquet(out).count() == 1000)
+  }
+
   test("batchedByHash is deterministic and bounded") {
     val df = Batching.batchedByHash(
       spark.range(500).toDF("id"), Seq(col("id")), numBatches = 7)

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the kit alone, the job-group meter is the only Spark listener, every
   * session is built on graft's profile, every per-run stamp is bound
   * as a run constant, every pruned read is the one skipping read, every
-  * store write is the one store writer, and task widths come from one
-  * bytes-per-task rule. Comment lines are skipped, so a doc comment may
-  * name what the code may not do. */
+  * store write is the one store writer, data-skipping stats take one
+  * path, a partition overwrite sets its mode on its own write, and task
+  * widths come from one bytes-per-task rule. Comment lines are skipped,
+  * so a doc comment may name what the code may not do. */
 class SourceRulesSpec extends AnyFunSuite {
 
   /** (path from the repo root, code lines) of every Scala file under `dir`. */
@@ -137,6 +138,36 @@ class SourceRulesSpec extends AnyFunSuite {
       "io/PartitionedStore.scala").map("src/main/scala/graft/" + _)
     val viaHelper = matching("src/main", """\bStoreWriter\(""")
     stores.foreach(f => assert(viaHelper.contains(f), f))
+  }
+
+  test("one stats path") {
+    // one stats commit, no schema-merging read, one z-order layout, one
+    // rule for which files are data
+    val skipping = code("/io/DataSkipping.scala")
+    assert("""\bcommitSwap\(""".r.findAllIn(skipping).size == 1)
+    assert(matching("src/main", "mergeSchema").isEmpty)
+    assert(matching("src/main", "\"__z\"") ==
+      Seq("src/main/scala/graft/io/DataSkipping.scala"))
+    assert(matching("src/main", """startsWith\("_"\)""") ==
+      Seq("src/main/scala/graft/io/FooterSchema.scala"))
+    // the rule is not vacuous: the stats pass reads each footer's
+    // schema, and every data-file count names the rule
+    assert(skipping.contains("FooterSchema.sparkSchema("))
+    Seq("io/Tables.scala", "io/PartitionedStore.scala", "io/Bucketing.scala",
+      "io/SkipDataSource.scala").foreach(f =>
+      assert(code(s"/$f").contains("FooterSchema.dataFiles("), f))
+  }
+
+  test("no session-level overwrite mode") {
+    val setMode = java.util.regex.Pattern.quote(
+      "spark.conf.set(\"spark.sql.sources.partitionOverwriteMode\"")
+    assert(matching("src/main", setMode).isEmpty)
+    // the rule is not vacuous: the mode rides one write's options, and
+    // both partition rewrites go through it
+    assert(body(code("/io/PartitionedStore.scala"), "overwritePartitions")
+      .contains(""".option("partitionOverwriteMode", "dynamic")"""))
+    Seq("/io/PartitionedStore.scala", "/etl/Merge.scala").foreach(f =>
+      assert("""\boverwritePartitions\(""".r.findAllIn(code(f)).nonEmpty, f))
   }
 
   test("one width rule") {
